@@ -344,10 +344,10 @@ class Collection:
         (``partitioned.ivf_handle_for`` + ``search_one`` per query)
         instead of the batch ``ivf_replica_serve`` — same index, same
         ranking (handle/batch parity is test-asserted), but the
-        per-request GIL-held plumbing drops ~1.8 ms → ~0.05 ms, which is
-        what lets the ThreadingHTTPServer's 8 concurrent handler threads
-        actually scale (the batch path convoyed them below single-stream
-        throughput). Freshness contract unchanged: the handle refreshes
+        per-request GIL-held plumbing drops ~1.8 ms → ~0.05 ms (under the
+        earlier thread-per-connection server the batch path convoyed 8
+        handler threads below single-stream throughput). Freshness
+        contract unchanged: the handle refreshes
         on any shard (path, mtime, size) change."""
         import numpy as np
 

@@ -614,8 +614,9 @@ def ivf_handle_for(
     """Stat-checked LRU of pre-resolved :class:`IvfReplicaHandle`s — the
     REST serving path's resolver (r12, VERDICT r11 task 7). The batch
     :func:`ivf_replica_serve` costs ~1.8 ms/call of GIL-held pandas/stat
-    plumbing, which convoys ThreadingHTTPServer's 8 handler threads into
-    LOWER throughput than one stream (measured 311 → 48 q/s); this path
+    plumbing, which convoyed the earlier thread-per-connection server's 8
+    handler threads into LOWER throughput than one stream (measured
+    311 → 48 q/s); this path
     keeps the per-request Python down to one stat pass (~0.05 ms) and
     serves from ``search_one`` (GIL-releasing BLAS). Freshness contract
     is identical to the batch path: the handle refreshes whenever any

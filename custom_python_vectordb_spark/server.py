@@ -47,19 +47,50 @@ library ships in this runtime.
 Serving is driver-side by construction (queries are collect()ed to JSON) —
 the engine behind it is the same cluster-scale plans; a production
 deployment would put this behind Spark Connect instead of one driver.
+
+Each worker process serves every connection from one ``selectors`` loop
+(:class:`LoopServer`), the single-threaded shape of the reference's
+uvicorn server; ``--workers N`` runs N such processes on one port.
 """
 
 from __future__ import annotations
 
+import io
 import json
 import os
 import queue as _queue
+import selectors
+import socket
 import threading
 import time
+import traceback
 from collections import deque
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from concurrent.futures import ThreadPoolExecutor
+from http.server import BaseHTTPRequestHandler
 
 from custom_python_vectordb_spark.api import VectorDB
+
+# Request threads of a Spark-backed worker. A plan-backed route holds its
+# thread in py4j for up to seconds; the other threads keep /health and the
+# replica routes answering meanwhile.
+POOL_THREADS = 8
+# Framing limits: the most of one request the loop will buffer.
+MAX_HEADER_BYTES = 64 * 1024
+MAX_BODY_BYTES = 64 * 1024 * 1024
+
+
+# /collections/<name>/<route> routes that run a Spark plan ("info" is
+# GET /collections/<name>, whose count is a plan); the replica routes
+# (query, keyword, phrase, hybrid) serve without one
+_SPARK_ROUTES = frozenset({
+    "info", "count", "peek", "get", "add", "upsert", "update", "delete",
+    "delete_by_filter", "merge", "diff", "optimize", "clone",
+})
+
+
+class SparkUnavailable(RuntimeError):
+    """A route that runs a Spark plan, asked of a worker started without a
+    session (``--serving-only``); the server answers 503."""
 
 
 class EventBus:
@@ -281,8 +312,12 @@ class GraphStore:
         column (first-non-null type, reserved names skipped) — the shape
         `plans/cypher.cypher` binds `{prop: value}` patterns and
         `var.prop` projections against."""
+        if self.spark is None:
+            raise SparkUnavailable(
+                "graph reads run Spark operators; this worker has no Spark session"
+            )
         # ONE lock acquisition snapshots everything (copied labels/props):
-        # ThreadingHTTPServer handles requests concurrently, so re-acquiring
+        # pool threads handle requests concurrently, so re-acquiring
         # the lock later and dereferencing self._nodes for previously-seen
         # ids raced a concurrent delete_node into KeyError, and key/type
         # inference iterated live props dicts unlocked (round-4 ADVICE #3)
@@ -393,6 +428,13 @@ def _routes(
         ann_geometries = frozenset({(64, 2)})
     ivfpq_cells = frozenset(g[0] for g in ann_geometries)
 
+    def need_spark(route: str) -> None:
+        if db.spark is None:
+            raise SparkUnavailable(
+                f"the {route!r} route runs a Spark plan; this worker was started "
+                "--serving-only and has no Spark session"
+            )
+
     def publish(collection: str, event_type: str, **data):
         if bus is not None:
             bus.publish({"collection": collection, "event_type": event_type, **data})
@@ -485,6 +527,7 @@ def _routes(
             if method == "GET":
                 return 200, {"collections": db.list_collections()}
             if method == "POST":
+                need_spark("create")
                 db.create_collection(body["name"], int(body.get("dimensions", 64)))
                 publish(body["name"], "create_collection")
                 return 201, {"created": body["name"]}
@@ -494,9 +537,13 @@ def _routes(
                 deleted = db.delete_collection(name)
                 publish(name, "drop_collection")
                 return 200, {"deleted": deleted}
-            if not db.warehouse.exists(name):
+            try:
+                coll = db.get_collection(name)
+            except FileNotFoundError:
                 return 404, {"error": f"collection {name!r} not found"}
-            coll = db.get_collection(name)
+            route = parts[2] if len(parts) > 2 else "info"
+            if route in _SPARK_ROUTES:
+                need_spark(route)
             if len(parts) == 2 and method == "GET":
                 # collection info (server_full.py:259-272)
                 return 200, {
@@ -879,6 +926,371 @@ def _graph_routes(graph: GraphStore, method: str, parts: list[str], body: dict, 
     return 404, {"error": f"no route {method} /" + "/".join(parts)}
 
 
+def _stream_route(path: str) -> str | None:
+    """Which push stream a GET of `path` opens: "sse", "ws" or None."""
+    parts = [p for p in path.split("?")[0].split("/") if p]
+    scoped = len(parts) == 3 and parts[0] == "collections"
+    if parts == ["events"] or (scoped and parts[2] == "events"):
+        return "sse"
+    if parts == ["ws"] or (scoped and parts[2] == "ws"):
+        return "ws"
+    return None
+
+
+def _header_end(buf: bytearray) -> int:
+    """Offset just past the blank line that ends a request's header block,
+    or -1 if none is within the first MAX_HEADER_BYTES (the search is
+    bounded, so a large body arriving in pieces is not rescanned). Lines
+    may end in CRLF or bare LF, as the stdlib parser allows."""
+    ends = [
+        i + n
+        for i, n in ((buf.find(b"\n\r\n", 0, MAX_HEADER_BYTES), 3),
+                     (buf.find(b"\n\n", 0, MAX_HEADER_BYTES), 2))
+        if i >= 0
+    ]
+    return min(ends) if ends else -1
+
+
+def _json_reply(status: int, payload: dict) -> bytes:
+    """A complete JSON reply that closes the connection, for requests the
+    loop answers without the handler (framing refusals, handler faults)."""
+    body = json.dumps(payload).encode()
+    reason = BaseHTTPRequestHandler.responses[status][0]
+    return (
+        f"HTTP/1.1 {status} {reason}\r\nContent-Type: application/json\r\n"
+        f"Content-Length: {len(body)}\r\nX-Worker: {os.getpid()}\r\n"
+        "Connection: close\r\n\r\n"
+    ).encode() + body
+
+
+class _Conn:
+    """One client connection as the loop sees it."""
+
+    __slots__ = ("sock", "addr", "inbuf", "outbuf", "busy", "closing", "eof", "discard",
+                 "mask")
+
+    def __init__(self, sock: socket.socket, addr):
+        self.sock: socket.socket | None = sock  # None once closed or detached
+        self.addr = addr
+        self.inbuf = bytearray()
+        self.outbuf = bytearray()
+        self.busy = False  # a request is running on the pool
+        self.closing = False  # close once outbuf has drained
+        self.eof = False  # the client sent FIN: answer what is buffered, then close
+        self.discard: int | None = None  # after a refusal: input bytes to drop, then close
+        self.mask = 0  # events registered with the selector
+
+
+class _Prefixed(io.RawIOBase):
+    """Blocking reader over a socket that first returns the bytes the loop
+    had already read from it."""
+
+    def __init__(self, sock: socket.socket, head: bytes):
+        self._sock = sock
+        self._head = memoryview(head)
+
+    def readable(self) -> bool:
+        return True
+
+    def readinto(self, b) -> int:
+        if self._head:
+            n = min(len(b), len(self._head))
+            b[:n] = self._head[:n]
+            self._head = self._head[n:]
+            return n
+        return self._sock.recv_into(b)
+
+
+class LoopServer:
+    """One worker's HTTP/1.1 server: a single ``selectors`` loop accepts
+    connections, frames keep-alive and pipelined requests, and writes
+    replies without blocking. A partial write waits in its connection's
+    buffer, so a client that stops reading stalls no other connection.
+
+    Each framed request runs through ``handler_cls`` (a
+    ``BaseHTTPRequestHandler`` whose ``setup`` takes ``(rfile, wfile)``)
+    over in-memory files: inline on the loop when ``pool_threads`` is 0,
+    else on a thread pool that hands the reply bytes back to the loop.
+    A connection has one request in flight; the next pipelined one runs
+    once the reply before it has been written, so replies keep request
+    order. SSE and WebSocket requests take their socket off the loop and
+    stream from a thread of their own.
+
+    The framing layer bounds what it buffers: a header block over
+    ``MAX_HEADER_BYTES`` gets 431, a ``Content-Length`` over
+    ``MAX_BODY_BYTES`` 413 (the body is not buffered), a malformed one 400
+    and any ``Transfer-Encoding`` 411; each then ends the connection."""
+
+    def __init__(self, address, handler_cls, *, reuse_port: bool = False,
+                 pool_threads: int = 0):
+        self.RequestHandlerClass = handler_cls
+        self.socket = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+        try:
+            self.socket.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+            if reuse_port:
+                self.socket.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEPORT, 1)
+            self.socket.bind(address)
+            self.socket.listen(128)
+        except OSError:
+            self.socket.close()
+            raise
+        self.socket.setblocking(False)
+        self.server_address = self.socket.getsockname()[:2]
+        # pool threads post finished replies on _done and write one byte to
+        # the wake socket, which the loop selects on with the connections
+        self._wake_r, self._wake_w = socket.socketpair()
+        self._wake_r.setblocking(False)
+        self._wake_w.setblocking(False)
+        self._sel = selectors.DefaultSelector()
+        self._sel.register(self.socket, selectors.EVENT_READ)
+        self._sel.register(self._wake_r, selectors.EVENT_READ)
+        self._pool = ThreadPoolExecutor(pool_threads) if pool_threads else None
+        self._done: deque = deque()  # (conn, reply bytes, close after)
+        self._conns: set[_Conn] = set()
+        self._stop = False
+        self._stopped = threading.Event()
+        self._stopped.set()
+
+    # ------------------------------------------------------------ lifecycle
+    def serve_forever(self) -> None:
+        self._stopped.clear()
+        try:
+            while not self._stop:
+                for key, events in self._sel.select():
+                    if key.fileobj is self.socket:
+                        self._accept()
+                    elif key.fileobj is self._wake_r:
+                        self._collect()
+                    else:
+                        self._service(key.data, events)
+        finally:
+            self._stop = False
+            self._stopped.set()
+
+    def shutdown(self) -> None:
+        """Stop serve_forever and wait until it has returned."""
+        self._stop = True
+        self._wake()
+        self._stopped.wait()
+
+    def server_close(self) -> None:
+        for conn in list(self._conns):
+            self._close(conn)
+        self._sel.close()
+        self.socket.close()
+        self._wake_r.close()
+        self._wake_w.close()
+        if self._pool is not None:
+            self._pool.shutdown(wait=False)
+
+    # ------------------------------------------------------------ the loop
+    def _accept(self) -> None:
+        while True:
+            try:
+                sock, addr = self.socket.accept()
+            except (BlockingIOError, InterruptedError):
+                return
+            except OSError:  # e.g. out of file descriptors: retry next event
+                return
+            sock.setblocking(False)
+            # headers and body may leave as separate segments; with Nagle
+            # on, the second waits for the peer's delayed ACK (~40 ms)
+            sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+            conn = _Conn(sock, addr)
+            self._conns.add(conn)
+            self._advance(conn)
+
+    def _service(self, conn: _Conn, events: int) -> None:
+        if events & selectors.EVENT_WRITE:
+            self._flush(conn)
+        elif events & selectors.EVENT_READ:
+            try:
+                data = conn.sock.recv(1 << 16)
+            except (BlockingIOError, InterruptedError):
+                return
+            except OSError:
+                self._close(conn)
+                return
+            if conn.discard is not None:
+                conn.discard -= len(data)
+                if not data or conn.discard < 0:
+                    self._close(conn)
+                return
+            if data:
+                conn.inbuf += data
+            else:
+                conn.eof = True
+        self._advance(conn)
+
+    def _advance(self, conn: _Conn) -> None:
+        """Run the buffered requests the connection may run now, then
+        register the events it waits for."""
+        while conn.sock is not None and conn.discard is None and not (
+                conn.busy or conn.outbuf or conn.closing):
+            framed = self._frame(conn)
+            if framed is None:
+                break
+            req, request_line = framed
+            words = request_line.split()
+            if len(words) >= 2 and words[0] == b"GET" and _stream_route(words[1].decode("latin-1")):
+                self._detach(conn, req)
+                return
+            if self._pool is None:
+                self._send(conn, *self._run(req, conn.addr))
+            else:
+                conn.busy = True
+                self._pool.submit(self._run_pooled, conn, req)
+        if conn.sock is None:
+            return
+        if conn.eof and not (conn.busy or conn.outbuf):
+            self._close(conn)
+            return
+        if conn.outbuf:
+            mask = selectors.EVENT_WRITE
+        elif conn.busy or conn.closing or conn.eof:
+            mask = 0
+        else:
+            mask = selectors.EVENT_READ
+        if mask != conn.mask:
+            if not conn.mask:
+                self._sel.register(conn.sock, mask, conn)
+            elif not mask:
+                self._sel.unregister(conn.sock)
+            else:
+                self._sel.modify(conn.sock, mask, conn)
+            conn.mask = mask
+
+    def _frame(self, conn: _Conn) -> tuple[bytes, bytes] | None:
+        """Split the next complete request off the input buffer: (request
+        bytes, request line), or None while it is incomplete. A request the
+        limits refuse is answered here and ends the connection."""
+        buf = conn.inbuf
+        end = _header_end(buf)
+        if end < 0:
+            if len(buf) >= MAX_HEADER_BYTES:
+                self._refuse(conn, 431, f"request header block exceeds {MAX_HEADER_BYTES} bytes")
+            return None
+        lines = bytes(buf[:end]).split(b"\n")
+        lengths = set()
+        for line in lines[1:]:
+            name, _, value = line.partition(b":")
+            name = name.strip().lower()
+            if name == b"content-length":
+                lengths.add(value.strip())
+            elif name == b"transfer-encoding":
+                self._refuse(conn, 411, "request bodies need a Content-Length; "
+                                        "Transfer-Encoding is not supported")
+                return None
+        if len(lengths) > 1 or not all(v.isdigit() for v in lengths):
+            self._refuse(conn, 400, f"malformed Content-Length {sorted(lengths)!r}")
+            return None
+        n = int(lengths.pop()) if lengths else 0
+        if n > MAX_BODY_BYTES:
+            self._refuse(conn, 413, f"request body of {n} bytes exceeds {MAX_BODY_BYTES}")
+            return None
+        if len(buf) < end + n:
+            return None
+        req = bytes(buf[:end + n])
+        del buf[:end + n]
+        return req, lines[0]
+
+    def _refuse(self, conn: _Conn, status: int, message: str) -> None:
+        """Answer a refused request, then half-close and drop the client's
+        input (up to MAX_BODY_BYTES) until it closes: closing with its
+        unread bytes queued would reset the connection, and the client
+        could lose the reply."""
+        conn.inbuf.clear()
+        conn.discard = MAX_BODY_BYTES
+        self._send(conn, _json_reply(status, {"error": message}), False)
+
+    def _run(self, req: bytes, addr) -> tuple[bytes, bool]:
+        """One request through the handler over in-memory files: (reply
+        bytes, whether the connection closes after it)."""
+        out = io.BytesIO()
+        try:
+            h = self.RequestHandlerClass((io.BytesIO(req), out), addr, self)
+        except Exception as e:  # the worker boundary: a fault is a 500, never a dead loop
+            traceback.print_exc()
+            return _json_reply(500, {"error": str(e), "type": type(e).__name__}), True
+        return out.getvalue(), h.close_connection
+
+    def _run_pooled(self, conn: _Conn, req: bytes) -> None:
+        self._done.append((conn, *self._run(req, conn.addr)))
+        self._wake()
+
+    def _wake(self) -> None:
+        try:
+            self._wake_w.send(b"\0")
+        except OSError:  # buffer full (a wake-up is pending) or server closed
+            pass
+
+    def _collect(self) -> None:
+        """Hand replies finished on the pool to their connections."""
+        try:
+            while self._wake_r.recv(4096):
+                pass
+        except (BlockingIOError, InterruptedError):
+            pass
+        while self._done:
+            conn, reply, close = self._done.popleft()
+            conn.busy = False
+            if conn.sock is not None:
+                self._send(conn, reply, close)
+                self._advance(conn)
+
+    def _send(self, conn: _Conn, data: bytes, close: bool) -> None:
+        conn.outbuf += data
+        conn.closing = conn.closing or close
+        self._flush(conn)
+
+    def _flush(self, conn: _Conn) -> None:
+        try:
+            while conn.outbuf:
+                del conn.outbuf[:conn.sock.send(conn.outbuf)]
+            if conn.discard is not None:
+                conn.sock.shutdown(socket.SHUT_WR)
+        except (BlockingIOError, InterruptedError):
+            return
+        except OSError:
+            self._close(conn)
+            return
+        if conn.closing:
+            self._close(conn)
+
+    def _close(self, conn: _Conn) -> None:
+        if conn.sock is None:
+            return
+        if conn.mask:
+            self._sel.unregister(conn.sock)
+        conn.mask = 0
+        conn.sock.close()
+        conn.sock = None
+        self._conns.discard(conn)
+
+    # ------------------------------------------------------------ streams
+    def _detach(self, conn: _Conn, req: bytes) -> None:
+        """Take a push-stream connection off the loop; a thread of its own
+        runs the handler on the blocking socket, with the bytes the loop
+        had already read in front."""
+        sock, head = conn.sock, req + bytes(conn.inbuf)
+        if conn.mask:
+            self._sel.unregister(sock)
+        conn.mask = 0
+        conn.sock = None
+        self._conns.discard(conn)
+        threading.Thread(target=self._stream, args=(sock, conn.addr, head), daemon=True).start()
+
+    def _stream(self, sock: socket.socket, addr, head: bytes) -> None:
+        sock.setblocking(True)
+        try:
+            with sock, sock.makefile("wb") as wfile:
+                self.RequestHandlerClass(
+                    (io.BufferedReader(_Prefixed(sock, head)), wfile), addr, self
+                )
+        except OSError:
+            pass  # client went away
+
+
 def make_server(
     db: VectorDB,
     port: int = 0,
@@ -886,18 +1298,27 @@ def make_server(
     reuse_port: bool = False,
     ann_geometries: frozenset | set | None = None,
     snapshots: dict | None = None,
-) -> ThreadingHTTPServer:
-    """Build (not start) the server; port 0 picks a free port. The server
-    carries an EventBus (`srv.bus`) publishing every mutation route.
+) -> LoopServer:
+    """Build (not start) one worker's server; port 0 picks a free port. The
+    server carries an EventBus (`srv.bus`) publishing every mutation route
+    and the graph store (`srv.graph`).
 
-    ``reuse_port=True`` binds with SO_REUSEPORT so N independent WORKER
-    PROCESSES can share one port, kernel-load-balanced per connection —
-    the share-nothing scale-out answer to CPython's GIL: one process
-    serves ~1 stream of this workload at full speed (the per-request
-    Python — HTTP parse, route, JSON — serializes on the GIL, and 8
-    concurrent streams measured LOWER aggregate q/s than 1), N processes
-    serve ~N (r12 soak; the gunicorn/uvicorn-workers deployment model,
-    which is also what the reference's uvicorn benchmark runs)."""
+    A worker is one :class:`LoopServer`: one selector loop serves all of
+    the process's connections. Without a Spark session (``VectorDB(None,
+    ...)``, ``--serving-only``) each request runs inline on the loop, so no
+    two requests trade the GIL. That includes a cold IVF build or refresh:
+    it stalls the worker's other connections, as ``_IVF_HANDLE_LOCK``
+    already stalls all its ANN requests, until index builds move off the
+    request path (ROADMAP.md, the shard-resident tier primitive). A
+    Spark-backed worker runs requests on ``POOL_THREADS`` pool threads, so
+    a plan blocked in py4j leaves /health and the replica routes
+    answering.
+
+    ``reuse_port=True`` binds with SO_REUSEPORT so N worker processes can
+    share one port, kernel-balanced per connection: one loop runs on one
+    core, and more processes use more cores (the gunicorn/uvicorn-workers
+    deployment model, which is also what the reference's uvicorn
+    benchmark runs)."""
     bus = EventBus()
     graph = GraphStore(db.spark)
     handle = _routes(
@@ -910,20 +1331,33 @@ def make_server(
         # WS clients reject a "HTTP/1.0 101" status line; every JSON route
         # sends Content-Length, so 1.1 keep-alive semantics are safe.
         protocol_version = "HTTP/1.1"
-        # TCP_NODELAY: headers and body leave as two small writes; with
-        # Nagle on, the body write stalls behind the peer's delayed ACK
-        # (~40 ms floor per request, measured in the r12 keep-alive soak —
-        # 48 ms/req REST vs 1.8 ms in-process before this line)
-        disable_nagle_algorithm = True
+
+        # LoopServer runs one request per instance over the (rfile, wfile)
+        # pair it passes as `request`, then reads the reply and
+        # close_connection back
+        def setup(self):
+            self.rfile, self.wfile = self.request
+
+        def handle(self):
+            self.handle_one_request()
+
+        def finish(self):
+            self.wfile.flush()
 
         def _reply(self, method):
             try:
                 length = int(self.headers.get("Content-Length") or 0)
                 body = json.loads(self.rfile.read(length) or b"{}") if length else {}
                 status, payload = handle(method, self.path, body)
-            except (KeyError, ValueError, json.JSONDecodeError) as e:
-                status, payload = 400, {"error": str(e)}
-            data = json.dumps(payload).encode()
+                data = json.dumps(payload).encode()
+            except SparkUnavailable as e:
+                status, data = 503, json.dumps({"error": str(e)}).encode()
+            except (KeyError, ValueError) as e:
+                status, data = 400, json.dumps({"error": str(e)}).encode()
+            except Exception as e:  # a route bug answers 500; the connection lives on
+                traceback.print_exc()
+                status = 500
+                data = json.dumps({"error": str(e), "type": type(e).__name__}).encode()
             self.send_response(status)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(data)))
@@ -1023,7 +1457,9 @@ def make_server(
             replay = int(sub.get("replay", 0))
             # live filter state, replaceable mid-stream by a later subscribe
             # frame (the reference's update_subscription,
-            # realtime.py:171-183); dict assignment is atomic under the GIL
+            # realtime.py:171-183). The reader queues the frame and the push
+            # loop applies it in queue order, so an event published before
+            # the frame arrived still meets the old filter.
             state = {
                 "collection": sub.get("collection", name),
                 "types": types,
@@ -1037,9 +1473,9 @@ def make_server(
             _close = {"__close__": True}
 
             def reader():
-                """Drain client frames: pong the pings, apply re-subscribe
-                frames (filter update mid-stream), turn close/EOF into a
-                queue sentinel so the push loop exits."""
+                """Drain client frames: pong the pings, queue re-subscribe
+                frames (filter update mid-stream) for the push loop, turn
+                close/EOF into a queue sentinel so the push loop exits."""
                 try:
                     while True:
                         f = ws_read_frame(self.rfile)
@@ -1053,10 +1489,7 @@ def make_server(
                             except json.JSONDecodeError:
                                 continue
                             if upd.get("action") == "subscribe":
-                                state["collection"] = upd.get("collection", state["collection"])
-                                state["types"] = set(upd["types"]) if upd.get("types") else None
-                                state["meta"] = upd.get("filter")
-                                send(json.dumps({"subscribed": state["collection"]}).encode())
+                                q.put(("subscribe", upd))
                 except (OSError, ValueError):
                     pass
                 q.put(_close)
@@ -1075,6 +1508,13 @@ def make_server(
                         continue
                     if ev is _close:
                         break
+                    if isinstance(ev, tuple):  # ("subscribe", frame) from the reader
+                        upd = ev[1]
+                        state["collection"] = upd.get("collection", state["collection"])
+                        state["types"] = set(upd["types"]) if upd.get("types") else None
+                        state["meta"] = upd.get("filter")
+                        send(json.dumps({"subscribed": state["collection"]}).encode())
+                        continue
                     if wanted(ev):
                         send(json.dumps(ev).encode())
                 send(b"", opcode=0x8)  # close handshake reply
@@ -1091,20 +1531,13 @@ def make_server(
             self.wfile.flush()
 
         def do_GET(self):
-            parts = [p for p in self.path.split("?")[0].split("/") if p]
-            if len(parts) == 3 and parts[0] == "collections" and parts[2] == "events":
-                self._sse()
-                return
-            if parts == ["events"]:
-                self._sse()  # all-collections stream (?collection= optional)
-                return
-            if len(parts) == 3 and parts[0] == "collections" and parts[2] == "ws":
-                self._ws()
-                return
-            if parts == ["ws"]:
-                self._ws()  # all-collections stream
-                return
-            self._reply("GET")
+            stream = _stream_route(self.path)
+            if stream == "sse":
+                self._sse()  # /events is the all-collections stream
+            elif stream == "ws":
+                self._ws()  # /ws is the all-collections stream
+            else:
+                self._reply("GET")
 
         def do_POST(self):
             self._reply("POST")
@@ -1115,12 +1548,10 @@ def make_server(
         def log_message(self, *a):  # keep test output quiet
             pass
 
-    server_cls = ThreadingHTTPServer
-    if reuse_port:
-        class server_cls(ThreadingHTTPServer):  # noqa: N801 — local subclass
-            allow_reuse_port = True
-
-    srv = server_cls(("127.0.0.1", port), Handler)
+    srv = LoopServer(
+        ("127.0.0.1", port), Handler, reuse_port=reuse_port,
+        pool_threads=0 if db.spark is None else POOL_THREADS,
+    )
     srv.bus = bus  # exposed for embedding/tests
     srv.graph = graph
     return srv
@@ -1129,10 +1560,9 @@ def make_server(
 def serve_background(
     db: VectorDB, port: int = 0, *, ann_geometries: frozenset | set | None = None,
     snapshots: dict | None = None,
-) -> tuple[ThreadingHTTPServer, int]:
+) -> tuple[LoopServer, int]:
     """Start serving on a daemon thread; returns (server, bound_port)."""
     srv = make_server(db, port, ann_geometries=ann_geometries, snapshots=snapshots)
-    srv.daemon_threads = True  # SSE handler threads must not block shutdown
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     return srv, srv.server_address[1]
@@ -1142,15 +1572,19 @@ def main() -> None:
     """CLI: python -m custom_python_vectordb_spark.server <warehouse_dir> [port]
     [--workers N] [--serving-only] [--index-cache DIR]
 
+    Each worker process serves all its connections from one selector
+    loop (see make_server), so one worker uses about one core however
+    many connections it holds.
+
     --workers N (N > 1): spawn N share-nothing worker processes all bound
       to the SAME port via SO_REUSEPORT (kernel per-connection load
-      balancing) — the GIL-scaling deployment shape, see make_server.
-      Each worker owns its replica caches; Parquet shards are the shared
-      truth, so coherence is the same stat-key contract as one process.
+      balancing), to use N cores. Each worker owns its replica caches;
+      Parquet shards are the shared truth, so coherence is the same
+      stat-key contract as one process.
     --serving-only: skip the Spark session. The in-process replica routes
-      (ann/ivfpq/bq/exact query_serve, health, events) work; plan-backed
-      routes (count, peek, exact declarative fallbacks) need Spark and
-      fail loudly. This is the hot-tier worker shape — front workers
+      (ann/ivfpq/bq/exact query_serve, health, events) work and run
+      inline on the loop; plan-backed routes (count, peek, add, ...)
+      answer 503. This is the hot-tier worker shape — front workers
       serve vectors, one Spark-backed instance handles analytics."""
     import argparse
     import subprocess
@@ -1159,7 +1593,12 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("root")
     ap.add_argument("port", nargs="?", type=int, default=8765)
-    ap.add_argument("--workers", type=int, default=1)
+    ap.add_argument(
+        "--workers", type=int, default=1,
+        help="worker processes sharing the port via SO_REUSEPORT; each "
+             "serves its connections from one selector loop on about one "
+             "core, so N workers use up to N cores",
+    )
     ap.add_argument("--serving-only", action="store_true")
     ap.add_argument("--reuse-port", action="store_true")
     ap.add_argument(

@@ -37,6 +37,11 @@ def get_spark(app_name: str = "custom_python_vectordb_spark") -> SparkSession:
         .config("spark.sql.files.openCostInBytes",
                 os.environ.get("SPARK_GRAFT_OPEN_COST", str(128 * 1024)))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # ORDER BY ... LIMIT k runs as an in-memory top-k that allocates 2k
+        # slots up front (Spark's default threshold is ~2^31); a "take all"
+        # k such as 10**9 needs ~8 GB of heap. Above 1M rows, sort globally
+        # (spillable) and take the limit instead.
+        .config("spark.sql.execution.topKSortFallbackThreshold", str(1_000_000))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import stat
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,18 +30,41 @@ class Warehouse:
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # name -> ((st_ino, st_mtime_ns) of the collection dir, shard paths)
+        self._listings: dict[str, tuple[tuple[int, int], tuple[str, ...]]] = {}
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
     def shard_paths(self, name: str) -> list[str]:
         """Parquet shard files of a collection's CURRENT data (for direct
-        shard access, e.g. the serving replica)."""
-        import glob
+        shard access, e.g. the serving replica).
 
-        if not self.exists(name):
+        One stat of the collection directory per call: the sorted listing
+        is cached on the directory's (inode, mtime), which an added,
+        removed or renamed shard changes, and so does a save's directory
+        swap. A listing taken less than a second after the directory's
+        mtime is not cached: a shard added later within the same
+        timestamp tick would leave the key unchanged."""
+        path = self._path(name)
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            st = None
+        if st is None or not stat.S_ISDIR(st.st_mode):
             raise FileNotFoundError(f"collection {name!r} does not exist")
-        return sorted(glob.glob(os.path.join(self._path(name), "*.parquet")))
+        key = (st.st_ino, st.st_mtime_ns)
+        hit = self._listings.get(name)
+        if hit is not None and hit[0] == key:
+            return list(hit[1])
+        # same selection as glob("*.parquet"): no hidden files
+        paths = tuple(sorted(
+            e.path for e in os.scandir(path)
+            if e.name.endswith(".parquet") and not e.name.startswith(".")
+        ))
+        if time.time_ns() - st.st_mtime_ns >= 1_000_000_000:
+            self._listings[name] = (key, paths)
+        return list(paths)
 
     def list_collections(self) -> list[str]:
         return sorted(
@@ -119,6 +144,7 @@ class Warehouse:
         return self.spark.table(f"wh_{name}")
 
     def drop(self, name: str) -> bool:
+        self._listings.pop(name, None)
         if not self.exists(name):
             return False
         shutil.rmtree(self._path(name))

@@ -7,8 +7,8 @@ comparable is its FastAPI/uvicorn benchmark (8,498 q/s,
 notes_benchmark.txt:32), also measured with an external client.
 
 Each worker thread holds ONE persistent HTTP/1.1 keep-alive connection
-(the server is ThreadingHTTPServer + protocol_version HTTP/1.1, so each
-connection gets a dedicated handler thread) and fires `n` sequential
+(each server worker serves all its connections from one selector loop)
+and fires `n` sequential
 POST /collections/<name>/query requests routed to the requested serving
 tier. Latency is the full client-observed round trip (encode + socket +
 handler + decode).
