@@ -246,6 +246,7 @@ class Collection:
             ReplicaCapacityError,
             knn_replica_serve,
             replica_metadata,
+            resolve_replica,
         )
 
         if (query_texts is None) == (query_embeddings is None):
@@ -294,14 +295,8 @@ class Collection:
         try:
             mask = None
             if filt is not None:
-                from custom_python_vectordb_spark.operators.knn import _REPLICA_CACHE
-
-                # ensure the replica block exists before asking for aligned
-                # metadata (first call decodes; mutation invalidates both)
-                knn_replica_serve(
-                    paths, qpd.iloc[:0], k=1, metric=metric, id_col="id", max_bytes=max_bytes
-                )
-                n_rows = len(_REPLICA_CACHE[(tuple(sorted(paths)), "float64")][1])
+                rep = resolve_replica(paths, id_col="id", max_bytes=max_bytes)
+                n_rows = 0 if rep is None else len(rep.ids)
                 cols = replica_metadata(paths, sorted(filt.fields()), id_col="id")
                 # absent columns map to None → dropped → leaf sees missing ⇒ False
                 cols = {c: v for c, v in cols.items() if v is not None}
@@ -340,7 +335,7 @@ class Collection:
         while deletion vectors are active (raw shards would resurrect
         deleted rows) — approximate must never also mean stale.
 
-        r12: serves through the stat-checked handle LRU
+        r12: serves through the stat-checked shard tier
         (``partitioned.ivf_handle_for`` + ``search_one`` per query)
         instead of the batch ``ivf_replica_serve`` — same index, same
         ranking (handle/batch parity is test-asserted), but the

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from custom_python_vectordb_spark.functions.distances import distance_expr
 from custom_python_vectordb_spark.functions.text import tokenize, tokenize_py
 from custom_python_vectordb_spark.functions.local_relation import local_df
+from custom_python_vectordb_spark.operators import shard_tier
 
 K1 = 1.5
 B = 0.75
@@ -393,8 +394,59 @@ def weights_to_alpha(vector_weight: float, keyword_weight: float) -> float:
 
 # ------------------------------------------------- in-process keyword replica
 
-# serving-node keyword replica: {tuple(paths): (stat_key, ids, inv, dl, avgdl)}
-_KEYWORD_REPLICA_CACHE: dict = {}
+def _load_texts(paths, id_col: str, text_col: str, max_bytes: int, plan: str):
+    """(ids, texts) decoded from the shard files; raw text above
+    `max_bytes` raises ReplicaCapacityError toward the declarative `plan`."""
+    import pyarrow.parquet as _pq
+
+    ids: list = []
+    texts: list = []
+    for p in paths:
+        if text_col not in _pq.read_schema(p).names:
+            raise ValueError(f"shard {p} has no {text_col!r} column")
+        tbl = _pq.read_table(p, columns=[id_col, text_col])
+        if tbl.num_rows == 0:
+            continue
+        ids.extend(tbl.column(id_col).to_pylist())
+        texts.extend(tbl.column(text_col).to_pylist())
+    if sum(len(t or "") for t in texts) > max_bytes:
+        from custom_python_vectordb_spark.operators.knn import ReplicaCapacityError
+
+        raise ReplicaCapacityError(
+            f"decoded corpus text exceeds max_bytes {max_bytes >> 20} MiB: "
+            f"serve from the declarative plan ({plan})"
+        )
+    return ids, texts
+
+
+def _keyword_index(shard_paths, id_col: str, text_col: str, max_bytes: int):
+    """The BM25 replica of a shard set through the shard tier: (ids,
+    {term: (doc positions, tf)}, doc lengths, avgdl)."""
+
+    def build(paths, _sk):
+        import numpy as np
+
+        ids, texts = _load_texts(paths, id_col, text_col, max_bytes, "bm25_topk")
+        dl = np.zeros(len(ids), dtype=np.float64)
+        acc: dict[str, dict[int, int]] = {}
+        for idx, text in enumerate(texts):
+            toks = tokenize_py(text or "")
+            dl[idx] = len(toks)
+            counts: dict[str, int] = {}
+            for t in toks:
+                counts[t] = counts.get(t, 0) + 1
+            for t, tf in counts.items():
+                acc.setdefault(t, {})[idx] = tf
+        inv = {
+            t: (
+                np.fromiter(d.keys(), dtype=np.int64, count=len(d)),
+                np.fromiter(d.values(), dtype=np.float64, count=len(d)),
+            )
+            for t, d in acc.items()
+        }
+        return (ids, inv, dl, float(dl.mean()) if len(ids) else 0.0)
+
+    return shard_tier.resolve("keyword", shard_paths, (id_col, text_col), build)
 
 
 def keyword_replica_serve(
@@ -415,76 +467,15 @@ def keyword_replica_serve(
     to low milliseconds, no Spark job on the hot path. Tokenization uses
     ``tokenize_py``, the exact driver-side twin of the JVM tokenizer;
     identical ranking and (to float tolerance) scores vs `bm25_topk` are
-    asserted in tests. Cache re-keys on shard (path, mtime, size) like the
-    vector replica; raw-text bytes above `max_bytes` raise toward the
-    declarative plan instead of OOM-ing the serving node."""
-    import math
-    import os as _os
-
+    asserted in tests. The index is a shard-tier entry, rebuilt on any
+    shard (path, mtime, size) change like the vector replica; raw-text
+    bytes above `max_bytes` raise toward the declarative plan instead of
+    OOM-ing the serving node."""
     import numpy as np
-    import pyarrow.parquet as _pq
 
-    paths = tuple(sorted(shard_paths))
-    cache_key = (paths, id_col, text_col)
-    stat_key = tuple((p, st.st_mtime_ns, st.st_size) for p, st in ((p, _os.stat(p)) for p in paths))
-    entry = _KEYWORD_REPLICA_CACHE.get(cache_key)
-    if entry is None or entry[0] != stat_key:
-        ids: list = []
-        texts: list = []
-        for p in paths:
-            names = _pq.read_schema(p).names
-            if text_col not in names:
-                raise ValueError(f"shard {p} has no {text_col!r} column")
-            tbl = _pq.read_table(p, columns=[id_col, text_col])
-            if tbl.num_rows == 0:
-                continue
-            ids.extend(tbl.column(id_col).to_pylist())
-            texts.extend(tbl.column(text_col).to_pylist())
-        if sum(len(t or "") for t in texts) > max_bytes:
-            from custom_python_vectordb_spark.operators.knn import ReplicaCapacityError
-
-            raise ReplicaCapacityError(
-                f"decoded corpus text exceeds max_bytes {max_bytes >> 20} MiB: "
-                "serve keyword search from the declarative plan (bm25_topk)"
-            )
-        dl = np.zeros(len(ids), dtype=np.float64)
-        acc: dict[str, dict[int, int]] = {}
-        for idx, text in enumerate(texts):
-            toks = tokenize_py(text or "")
-            dl[idx] = len(toks)
-            counts: dict[str, int] = {}
-            for t in toks:
-                counts[t] = counts.get(t, 0) + 1
-            for t, tf in counts.items():
-                acc.setdefault(t, {})[idx] = tf
-        inv = {
-            t: (
-                np.fromiter(d.keys(), dtype=np.int64, count=len(d)),
-                np.fromiter(d.values(), dtype=np.float64, count=len(d)),
-            )
-            for t, d in acc.items()
-        }
-        avgdl = float(dl.mean()) if len(ids) else 0.0
-        entry = (stat_key, ids, inv, dl, avgdl)
-        _KEYWORD_REPLICA_CACHE[cache_key] = entry
-    _, ids, inv, dl, avgdl = entry
-    n_docs = len(ids)
-    if n_docs == 0:
-        return []
-    qcounts: dict[str, int] = {}
-    for t in tokenize_py(query):
-        qcounts[t] = qcounts.get(t, 0) + 1
-    if not qcounts:
-        return []
-    scores = np.zeros(n_docs, dtype=np.float64)
-    for t, qn in qcounts.items():
-        hit = inv.get(t)
-        if hit is None:
-            continue
-        idxs, tf = hit
-        df = len(idxs)
-        idf = math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-        scores[idxs] += qn * idf * tf * (K1 + 1) / (tf + K1 * (1 - B + B * dl[idxs] / avgdl))
+    ids, scores = keyword_score_vector(
+        shard_paths, query, id_col=id_col, text_col=text_col, max_bytes=max_bytes
+    )
     cand = np.flatnonzero(scores > 0)
     if len(cand) == 0:
         return []
@@ -512,18 +503,13 @@ def keyword_score_vector(
 ):
     """(ids, scores) for ONE query over every replica row (0.0 for docs
     with no query term) — the full-vector form hybrid fusion needs for its
-    corpus-wide max normalizer. Shares the inverted-index cache with
+    corpus-wide max normalizer, and the scoring behind
     :func:`keyword_replica_serve`."""
     import math
-    import os as _os
 
     import numpy as np
 
-    # build/refresh the cache through the main entry
-    keyword_replica_serve(shard_paths, query, k=1, id_col=id_col,
-                          text_col=text_col, max_bytes=max_bytes)
-    paths = tuple(sorted(shard_paths))
-    _, ids, inv, dl, avgdl = _KEYWORD_REPLICA_CACHE[(paths, id_col, text_col)]
+    ids, inv, dl, avgdl = _keyword_index(shard_paths, id_col, text_col, max_bytes)
     n_docs = len(ids)
     scores = np.zeros(n_docs, dtype=np.float64)
     qcounts: dict[str, int] = {}
@@ -590,10 +576,6 @@ def phrase_search(
     )
 
 
-# {(paths, id_col, text_col): (stat_key, ids, pos_index, maxlen)}
-_PHRASE_REPLICA_CACHE: dict = {}
-
-
 def phrase_replica_serve(
     shard_paths: list[str],
     phrase: str,
@@ -609,37 +591,12 @@ def phrase_replica_serve(
     term_i shifted by −i must all contain the same (doc, start) key, so
     the phrase match set is m−1 intersect1d calls over presorted arrays,
     and per-doc counts one bincount. Identical results to the
-    declarative plan (asserted in tests); same (path, mtime, size) cache
-    coherence and capacity behavior as the keyword replica."""
-    import math  # noqa: F401  (parity with keyword_replica_serve imports)
-    import os as _os
-
+    declarative plan (asserted in tests); same shard-tier coherence and
+    capacity behavior as the keyword replica."""
     import numpy as np
-    import pyarrow.parquet as _pq
 
-    paths = tuple(sorted(shard_paths))
-    cache_key = (paths, id_col, text_col)
-    stat_key = tuple((p, st.st_mtime_ns, st.st_size) for p, st in ((p, _os.stat(p)) for p in paths))
-    entry = _PHRASE_REPLICA_CACHE.get(cache_key)
-    if entry is None or entry[0] != stat_key:
-        ids: list = []
-        texts: list = []
-        for p in paths:
-            names = _pq.read_schema(p).names
-            if text_col not in names:
-                raise ValueError(f"shard {p} has no {text_col!r} column")
-            tbl = _pq.read_table(p, columns=[id_col, text_col])
-            if tbl.num_rows == 0:
-                continue
-            ids.extend(tbl.column(id_col).to_pylist())
-            texts.extend(tbl.column(text_col).to_pylist())
-        if sum(len(t or "") for t in texts) > max_bytes:
-            from custom_python_vectordb_spark.operators.knn import ReplicaCapacityError
-
-            raise ReplicaCapacityError(
-                f"decoded corpus text exceeds max_bytes {max_bytes >> 20} MiB: "
-                "serve phrase search from the declarative plan (phrase_search)"
-            )
+    def build(paths, _sk):
+        ids, texts = _load_texts(paths, id_col, text_col, max_bytes, "phrase_search")
         maxlen = 1
         tok_lists = [tokenize_py(t or "") for t in texts]
         for toks in tok_lists:
@@ -653,9 +610,11 @@ def phrase_replica_serve(
             t: np.array(v, dtype=np.int64) for t, v in acc.items()  # built sorted
         }
         doc_lens = np.array([len(t) for t in tok_lists], dtype=np.int64)
-        entry = (stat_key, ids, index, maxlen, doc_lens)
-        _PHRASE_REPLICA_CACHE[cache_key] = entry
-    _, ids, index, maxlen, doc_lens = entry
+        return (ids, index, maxlen, doc_lens)
+
+    ids, index, maxlen, doc_lens = shard_tier.resolve(
+        "phrase", shard_paths, (id_col, text_col), build
+    )
     terms = tokenize_py(phrase)
     if not terms or not ids:
         return []

@@ -89,22 +89,23 @@ def mmr_replica_serve(
     dtype: str = "float64",
 ) -> list[tuple]:
     """Serving twin of :func:`mmr_rerank` — both stages in-process against
-    the shard replica (``knn.knn_replica_serve``'s cached block): the
+    the shard replica (``knn.resolve_replica``'s resident block): the
     relevance vector is one GEMM row, the top-``fetch_k`` candidate cut a
     partition+tie-pool (identical selection rule to the distributed
     path's knn tie-break), and the greedy argmax the same loop
     `mmr_rerank` runs — but with zero Spark jobs on the hot path.
     Same return shape, values equal to float tolerance (asserted in
     tests)."""
-    from custom_python_vectordb_spark.operators.knn import replica_distance_vector
+    from custom_python_vectordb_spark.operators.knn import (
+        replica_distance_vector,
+        resolve_replica,
+    )
 
     if fetch_k > 10_000:
         raise ValueError(
             f"fetch_k={fetch_k} exceeds the 10k driver-side candidate cap; "
             "MMR reranks a bounded top-fetch_k candidate set, not the corpus"
         )
-    from custom_python_vectordb_spark.operators.knn import _REPLICA_CACHE
-
     ids_all, dists = replica_distance_vector(
         shard_paths, query_vec, "cosine", id_col=id_col, dtype=dtype
     )
@@ -117,8 +118,7 @@ def mmr_replica_serve(
     pool = np.flatnonzero(dists <= kth)
     cand = sorted(pool, key=lambda i: (dists[i], ids_all[i]))[:kk]
 
-    entry = _REPLICA_CACHE[(tuple(sorted(shard_paths)), dtype)]
-    _, _ids, mat_all, _norms, _sq, _meta = entry
+    mat_all = resolve_replica(shard_paths, id_col=id_col, dtype=dtype).mat
     mat = np.array(mat_all[cand], dtype=np.float64)
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     mat = mat / np.where(norms == 0, 1.0, norms)

@@ -32,12 +32,14 @@ happens once at write time, not per job.
 
 from __future__ import annotations
 
-import threading as _threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from custom_python_vectordb_spark.operators.quantization import _topk_tie_aware
+from custom_python_vectordb_spark.operators import shard_tier
+from custom_python_vectordb_spark.operators.quantization import (
+    _load_snapshot,
+    _topk_tie_aware,
+)
 from custom_python_vectordb_spark.operators.topk import top_k_per_group
 
 
@@ -178,42 +180,6 @@ def knn_partitioned(
 
 # -------------------------------------------------- in-process IVF replica
 
-# {(paths, dtype, n_cells, assign_r, metric):
-#   (stat_key, centroids, [cell ids], [cell matrices])}
-# Bounded LRU (insertion-ordered dict, hit = pop+reinsert) since r12: the
-# REST ann route accepts per-request n_cells/nprobe, so distinct build
-# keys are request-controlled — each entry pins a cell-layout float copy
-# of its corpus, and unbounded growth would be a memory DoS.
-_IVF_CACHE_CAP = 4
-_IVF_REPLICA_CACHE: dict = {}
-
-
-def _load_shards_id_sorted(paths, id_col: str, dtype: str):
-    """(ids, mat) id-sorted from a shard set, or None when empty — the
-    shared loader for every in-process index build (IVF, IVF-PQ)."""
-    import numpy as np
-    import pyarrow.parquet as _pq
-
-    ids_parts, mat_parts = [], []
-    for p in paths:
-        names = _pq.read_schema(p).names
-        vec_field = "embedding" if "embedding" in names else names[1]
-        tbl = _pq.read_table(p, columns=[id_col, vec_field])
-        if tbl.num_rows == 0:
-            continue
-        ids_parts.append(tbl.column(id_col).to_numpy(zero_copy_only=False))
-        flat = np.concatenate(
-            [c.flatten().to_numpy(zero_copy_only=False) for c in tbl.column(vec_field).chunks]
-        )
-        mat_parts.append(flat.reshape(len(ids_parts[-1]), -1).astype(dtype, copy=False))
-    if not ids_parts:
-        return None
-    ids = np.concatenate(ids_parts)
-    mat = np.concatenate(mat_parts)
-    order = np.argsort(ids, kind="stable")  # centroid seeding by lowest id
-    return ids[order], mat[order]
-
-
 def _train_assign_cells(np, mat, n_cells: int, assign_r: int,
                         train_sample_cap: int, train_iters: int):
     """(cent, multi): sampled Lloyd + one chunked full-corpus
@@ -278,36 +244,53 @@ def _group_rows_by_cell(np, multi, c: int):
     return rowlists
 
 
-def _ivf_resolve(
-    shard_paths: list[str],
-    *,
-    id_col: str,
-    dtype: str,
-    metric: str,
-    n_cells: int,
-    assign_r: int,
-    train_sample_cap: int = 131_072,
-    train_iters: int = 5,
-):
-    """Resolve (building if stale/absent) the cached IVF index for a shard
-    set: (stat_key, centroids, [cell ids], [cell matrices]), or None when
-    the shards hold no rows. Staleness is detected by (path, mtime_ns,
-    size) — the cache-coherence contract the chaos test exercises. Build
-    is linear in the corpus: see :func:`_train_assign_cells`."""
+# the build parameters of an IVF index, in the order of its params tuple
+_IVF_KW = ("id_col", "dtype", "metric", "n_cells", "assign_r", "train_sample_cap", "train_iters")
+
+
+def _ivf_resolve(shard_paths: list[str], params: tuple, index_dir=None, nprobe=None):
+    """The IVF index built with ``params`` (ordered as ``_IVF_KW``) over a
+    shard set, resolved through the shard tier:
+    (stat_key, centroids, [cell ids], [cell matrices], [cell row
+    positions], centroid square norms, [cell row square norms] for l2
+    else None, cell sizes, the flat arrays), or None when the shards hold
+    no rows. Build is linear in the corpus: see :func:`_train_assign_cells`.
+
+    ``index_dir`` adds the DISK warm-start tier under the in-process one:
+    a build first loads the snapshot saved for this (shards, geometry)
+    when its build-time stat key matches the live shards, else builds from
+    parquet and saves a snapshot (recording ``nprobe`` as the loader's
+    default) for the next booting worker. N share-nothing serving workers
+    pay ONE k-means, not N."""
+    # index_dir is part of the key: an entry built without it has no
+    # snapshot on disk for the next booting worker
+    return shard_tier.resolve(
+        "ivf", shard_paths, (*params, index_dir),
+        lambda paths, sk: _ivf_build(paths, sk, params, index_dir, nprobe),
+    )
+
+
+def _ivf_build(paths, stat_key, params, index_dir, nprobe):
+    import hashlib
     import os as _os
 
     import numpy as np
 
     from custom_python_vectordb_spark.operators.knn import _blas_threads
 
-    paths = tuple(sorted(shard_paths))
-    stat_key = tuple((p, st.st_mtime_ns, st.st_size) for p, st in ((p, _os.stat(p)) for p in paths))
-    ck = (paths, dtype, n_cells, assign_r, metric, train_sample_cap, train_iters)
-    entry = _IVF_REPLICA_CACHE.pop(ck, None)  # pop → reinsert = LRU touch
-    if entry is not None and entry[0] == stat_key:
-        _IVF_REPLICA_CACHE[ck] = entry
-        return entry
-    loaded = _load_shards_id_sorted(paths, id_col, dtype)
+    id_col, dtype, metric, n_cells, assign_r, cap, iters = params
+    snap_dir = None
+    if index_dir is not None:
+        # one snapshot per (shards, build-geometry); nprobe is query-time
+        # and deliberately NOT part of the tag
+        tag = hashlib.md5(
+            repr((paths, n_cells, assign_r, metric, id_col, dtype)).encode()
+        ).hexdigest()[:16]
+        snap_dir = _os.path.join(index_dir, f"ivf_{tag}")
+        got = shard_tier.load(snap_dir, "ivf_index")
+        if got is not None and got[1]["stat_key"] == stat_key:
+            return _ivf_snap(np, stat_key, got[0], metric)
+    loaded = shard_tier.load_vectors(paths, id_col, dtype, sort_ids=True)
     if loaded is None:
         return None
     ids, mat = loaded
@@ -315,25 +298,99 @@ def _ivf_resolve(
         mn = np.linalg.norm(mat, axis=1, keepdims=True)
         mat = mat / np.where(mn == 0, 1.0, mn)
     with _blas_threads(16):
-        cent, multi = _train_assign_cells(
-            np, mat, n_cells, assign_r, train_sample_cap, train_iters
-        )
+        cent, multi = _train_assign_cells(np, mat, n_cells, assign_r, cap, iters)
     rowlists = _group_rows_by_cell(np, multi, len(cent))
-    cell_ids = [ids[rows] for rows in rowlists]
-    cell_mats = [np.ascontiguousarray(mat[rows]) for rows in rowlists]
-    # int64 corpus-row positions per cell: the handle's assign_r dedup
-    # keys on these instead of id VALUES — an object-dtype (string-id)
-    # lexsort over the probed rows measured 9 ms/query (r12 soak)
-    cell_rows = [np.asarray(rows, dtype=np.int64) for rows in rowlists]
-    entry = (stat_key, cent, cell_ids, cell_mats, cell_rows)
-    # bounded LRU like _IVFPQ_REPLICA_CACHE: each entry pins a full float
-    # copy of its corpus in cell layout, and the REST ann route (r12)
-    # accepts per-request n_cells/nprobe-derived build keys — eviction
-    # must be by age, not clear-on-rebuild
-    while len(_IVF_REPLICA_CACHE) >= _IVF_CACHE_CAP:
-        _IVF_REPLICA_CACHE.pop(next(iter(_IVF_REPLICA_CACHE)))
-    _IVF_REPLICA_CACHE[ck] = entry
-    return entry
+    # cell-major flat layout: each cell's rows back-to-back. The int64
+    # corpus-row positions are what the handle's assign_r dedup keys on
+    # instead of id VALUES — an object-dtype (string-id) lexsort over the
+    # probed rows measured 9 ms/query (r12 soak)
+    rows = np.concatenate(rowlists)
+    arrays = {
+        "cent": cent, "cell_lens": np.array([len(r) for r in rowlists], dtype=np.int64),
+        "cell_rows": rows, "cell_ids": ids[rows], "cell_mats": mat[rows],
+    }
+    snap = _ivf_snap(np, stat_key, arrays, metric)
+    if snap_dir is not None:
+        _ivf_save(snap_dir, snap, params, nprobe)
+    return snap
+
+
+def _ivf_snap(np, stat_key, arrays, metric):
+    """The resolved IVF index over its flat cell-major ``arrays`` (the
+    snapshot's contents): per-cell views split at the cell lengths — axis-0
+    splits of a C-order matrix are contiguous, GEMV-ready blocks — plus
+    the derived square norms, and ``arrays`` itself last, for saving."""
+    lens = arrays["cell_lens"]
+    bounds = np.cumsum(lens)[:-1]
+    cent = arrays["cent"]
+    cell_mats = np.split(arrays["cell_mats"], bounds)
+    cell_sq = [(m * m).sum(1) for m in cell_mats] if metric == "l2" else None
+    return (stat_key, cent, np.split(arrays["cell_ids"], bounds), cell_mats,
+            np.split(arrays["cell_rows"], bounds), (cent * cent).sum(1), cell_sq, lens, arrays)
+
+
+def _ivf_save(out_dir, snap, params, nprobe) -> None:
+    shard_tier.save(out_dir, "ivf_index", snap[-1],
+                    {"stat_key": snap[0], "kw": dict(zip(_IVF_KW, params)), "nprobe": nprobe})
+
+
+def _ivf_probe(np, snap, metric: str, assign_r: int, q, probes):
+    """(ids, dists) of every row in the `probes` cells for one prepared
+    query (multi-assigned rows once, at their smaller distance)."""
+    _sk, _cent, cell_ids, cell_mats, cell_rows, _csq, cell_sq, _len, _arrays = snap
+    # r11: per-probe GEMVs emit raw dots; the dist transform runs ONCE
+    # over the concatenated result. Elementwise ops are grouping-
+    # independent, so values are bit-identical to the per-cell form
+    # (parity-asserted vs the batch path in tests), but the nprobe-1
+    # extra temporaries + passes disappear — ~8% off the measured p50.
+    id_parts, row_parts, d_parts, sq_parts = [], [], [], []
+    for j in probes:
+        sids = cell_ids[j]
+        if not len(sids):
+            continue
+        id_parts.append(sids)
+        row_parts.append(cell_rows[j])
+        d_parts.append(cell_mats[j] @ q)
+        if cell_sq is not None:
+            sq_parts.append(cell_sq[j])
+    if not id_parts:
+        return np.empty(0, dtype=np.int64), np.empty(0)
+    ids = np.concatenate(id_parts)
+    dots = np.concatenate(d_parts)
+    if metric == "cosine":
+        d = 1.0 - dots
+    elif metric == "l2":
+        d = np.sqrt(np.maximum(np.concatenate(sq_parts) - 2.0 * dots + q @ q, 0.0))
+    else:  # ip
+        d = -dots
+    if assign_r > 1:
+        # same keep-the-smaller dedup rule as the batch path (per-cell
+        # GEMV copies can differ in the last ulp), but keyed on int64
+        # corpus-row positions instead of id values: row ↔ id is a
+        # bijection within one corpus, and an object-dtype string-id
+        # lexsort over the probed rows measured 9 ms/query (r12 soak)
+        # vs ~50 µs on int rows
+        rows = np.concatenate(row_parts)
+        order = np.lexsort((d, rows))
+        ids, d, rows = ids[order], d[order], rows[order]
+        keep = np.r_[True, rows[1:] != rows[:-1]]
+        ids, d = ids[keep], d[keep]
+    return ids, d
+
+
+def _widened_probes(np, score, cell_rows, p: int, k: int):
+    """The probe set for a query whose `p` nearest cells hold fewer than k
+    distinct rows (with assign_r=1 a query far from every cluster can land
+    on empty cells): cells in nearest-first order (stable on ties), at
+    least p of them, until they hold k distinct rows or run out. Shared by
+    the handle and the batch path so both probe the same cells."""
+    order = np.argsort(score, kind="stable")
+    seen: set = set()
+    for m, j in enumerate(order, 1):
+        seen.update(cell_rows[j].tolist())
+        if m >= p and len(seen) >= k:
+            break
+    return order[:m]
 
 
 class IvfReplicaHandle:
@@ -343,7 +400,7 @@ class IvfReplicaHandle:
     top of ~0.15 ms of arithmetic; hnswlib's comparable `knn_query` is a
     bare in-process call on a pre-opened index).
 
-    The handle pins one resolved cache entry: `search_one(qvec, k)`
+    The handle pins one resolved index: `search_one(qvec, k)`
     takes a bare ndarray and returns (ids, dists) ndarrays sorted by
     (dist, id). Shard-file staleness is NOT re-checked per call — a
     caller serving a mutating collection calls `refresh()` on its
@@ -351,11 +408,7 @@ class IvfReplicaHandle:
     test drives through :func:`ivf_replica_serve`, which keeps its
     per-call stat check)."""
 
-    __slots__ = (
-        "_paths", "_kw", "_np", "metric", "nprobe", "assign_r",
-        "cent", "cell_ids", "cell_mats", "cell_rows", "_cent_sq", "_cell_sq",
-        "_snap",
-    )
+    __slots__ = ("_paths", "_params", "_np", "metric", "nprobe", "assign_r", "_snap")
 
     def __init__(
         self,
@@ -369,156 +422,71 @@ class IvfReplicaHandle:
         dtype: str = "float64",
         train_sample_cap: int = 131_072,
     ):
+        params = (id_col, dtype, metric, n_cells, assign_r, train_sample_cap, 5)
+        self._adopt(shard_paths, params, nprobe, None)
+        self.refresh()
+
+    def _adopt(self, paths, params: tuple, nprobe: int, snap) -> "IvfReplicaHandle":
         import numpy as np
 
         self._np = np
-        self._paths = list(shard_paths)
-        self._kw = dict(
-            id_col=id_col, dtype=dtype, metric=metric,
-            n_cells=n_cells, assign_r=assign_r,
-            train_sample_cap=train_sample_cap,
-        )
-        self.metric = metric
-        self.nprobe = nprobe
-        self.assign_r = assign_r
-        self.refresh()
+        self._paths = list(paths)
+        self._params = params
+        self.metric, self.assign_r, self.nprobe = params[2], params[4], nprobe
+        self._snap = snap
+        return self
 
     def refresh(self) -> None:
         """Re-resolve against the shard files (stat check + rebuild if
         changed) — the write-visibility boundary for mutating callers.
 
-        Concurrency: REST handler threads share one handle, so the new
-        state is built entirely in locals and published as ONE tuple
-        assignment (``self._snap = …``, atomic under the GIL); a racing
+        Concurrency: REST handler threads share one handle, so the
+        resolved index is published as ONE tuple assignment
+        (``self._snap = …``, atomic under the GIL); a racing
         ``search_one`` sees either the whole old index or the whole new
         one, never a torn mix of new cell_ids with old cell_mats (r13,
         ADVICE high)."""
-        entry = _ivf_resolve(self._paths, **self._kw)
-        if entry is None:
+        snap = _ivf_resolve(self._paths, self._params)
+        if snap is None:
             raise ValueError("empty shard set")
-        _, cent, cell_ids, cell_mats, cell_rows = entry
-        cent_sq = (cent * cent).sum(1)
-        cell_sq = (
-            [(m * m).sum(1) for m in cell_mats] if self.metric == "l2" else None
-        )
-        # legacy per-field views (single-threaded callers/tests); readers
-        # on the serving path use only the atomic snapshot below
-        self.cent, self.cell_ids, self.cell_mats = cent, cell_ids, cell_mats
-        self.cell_rows, self._cent_sq, self._cell_sq = cell_rows, cent_sq, cell_sq
-        self._snap = (cent, cell_ids, cell_mats, cell_rows, cent_sq, cell_sq)
+        self._snap = snap
 
     def save_index(self, out_dir: str) -> None:
         """Persist the resolved cell layout (centroids + cell-major ids /
-        rows / float blocks) plus the shard stat key and build config as
-        one ``ivf_index.npz`` — the warm-start tier for the REST serving
-        fleet: N share-nothing workers boot by LOADING one worker's build
-        instead of each re-running k-means over the corpus (at 100k rows
-        a build is ~1 s; a 1000-worker boot storm re-training 1000× is
-        the cluster-scale failure this removes). Staleness carries the
-        SAME (path, mtime_ns, size) contract as the in-process LRU:
-        :func:`ivf_handle_for` only loads a snapshot whose recorded stat
-        key matches the live shards. Cosine matrices are stored already
-        row-normalized (the resolved form), never re-normalized at load."""
-        import json
-        import os as _os
-
-        np = self._np
-        _os.makedirs(out_dir, exist_ok=True)
-        cent, cell_ids, cell_mats, cell_rows, _csq, _clsq = self._snap
-        paths = tuple(sorted(self._paths))
-        stat_key = [
-            [p, _os.stat(p).st_mtime_ns, _os.stat(p).st_size] for p in paths
-        ]
-        lens = np.array([len(i) for i in cell_ids], dtype=np.int64)
-        meta = {"stat_key": stat_key, "kw": dict(self._kw),
-                "nprobe": int(self.nprobe)}
-        # unique tmp per process: concurrent savers (a 32-worker pool's
-        # first-request storm all building the same geometry) must not
-        # share one tmp path — the loser's os.replace would raise ENOENT
-        # after the winner consumed it. Last atomic replace wins; every
-        # writer produces identical bytes for one (stat_key, kw).
-        tmp = _os.path.join(out_dir, f"ivf_index.npz.tmp.{_os.getpid()}")
-        with open(tmp, "wb") as fh:
-            np.savez(
-                fh, cent=cent, cell_lens=lens,
-                cell_ids=(np.concatenate(cell_ids) if lens.sum()
-                          else np.empty(0, dtype=np.int64)),
-                cell_rows=(np.concatenate(cell_rows) if lens.sum()
-                           else np.empty(0, dtype=np.int64)),
-                cell_mats=(np.concatenate(cell_mats) if lens.sum()
-                           else np.empty((0, cent.shape[1]), dtype=cent.dtype)),
-                meta=np.frombuffer(json.dumps(meta).encode(), dtype=np.uint8),
-            )
-        _os.replace(tmp, _os.path.join(out_dir, "ivf_index.npz"))
+        rows / float blocks), its build-time shard stat key and the build
+        config as ``ivf_index.npz`` (:func:`shard_tier.save`) — the
+        warm-start tier for the REST serving fleet: N share-nothing
+        workers boot by LOADING one worker's build instead of each
+        re-running k-means over the corpus. :func:`ivf_handle_for` only
+        loads a snapshot whose stat key matches the live shards. Cosine
+        matrices are stored already row-normalized (the resolved form),
+        never re-normalized at load."""
+        _ivf_save(out_dir, self._snap, self._params, self.nprobe)
 
     @classmethod
     def load_index(cls, in_dir: str, *, nprobe: int | None = None):
         """Reconstitute a handle from :meth:`save_index` output without
-        touching the source parquet. Unlike the IVF-PQ snapshot, the
-        loaded handle keeps its shard set and config, so ``refresh()``
-        still works as the write-visibility boundary (it re-stats and
-        rebuilds from parquet if the shards changed). Freshness checking
-        against live shards is the CALLER's job (see
-        :func:`ivf_handle_for`) — this loads unconditionally."""
-        import json
-        import os as _os
-
+        touching the source parquet. The loaded handle keeps its shard
+        set and config, so ``refresh()`` still works as the
+        write-visibility boundary (it re-stats and rebuilds from parquet
+        if the shards changed). Freshness checking against live shards is
+        the CALLER's job (see :func:`ivf_handle_for`) — this loads
+        unconditionally."""
         import numpy as np
 
-        with np.load(
-            _os.path.join(in_dir, "ivf_index.npz"), allow_pickle=True
-        ) as z:
-            meta = json.loads(bytes(z["meta"].tobytes()).decode())
-            cent = z["cent"]
-            lens = z["cell_lens"]
-            ids_flat = z["cell_ids"]
-            rows_flat = z["cell_rows"]
-            mats_flat = z["cell_mats"]
-        self = object.__new__(cls)
-        self._np = np
-        self._paths = [p for p, _m, _s in meta["stat_key"]]
-        self._kw = meta["kw"]
-        self.metric = self._kw["metric"]
-        self.nprobe = int(nprobe if nprobe is not None else meta["nprobe"])
-        self.assign_r = self._kw["assign_r"]
-        bounds = np.cumsum(lens)[:-1]
-        cell_ids = np.split(ids_flat, bounds)
-        cell_rows = np.split(rows_flat, bounds)
-        # axis-0 splits of a C-order matrix are contiguous views — same
-        # GEMV-ready layout the resolver builds
-        cell_mats = np.split(mats_flat, bounds)
-        cent_sq = (cent * cent).sum(1)
-        cell_sq = (
-            [(m * m).sum(1) for m in cell_mats] if self.metric == "l2" else None
+        arrays, meta = _load_snapshot(in_dir, "ivf_index")
+        params = tuple(meta["kw"][k] for k in _IVF_KW)
+        snap = _ivf_snap(np, meta["stat_key"], arrays, params[2])
+        return object.__new__(cls)._adopt(
+            [p for p, _m, _s in meta["stat_key"]], params,
+            nprobe if nprobe is not None else meta["nprobe"], snap,
         )
-        self.cent, self.cell_ids, self.cell_mats = cent, cell_ids, cell_mats
-        self.cell_rows, self._cent_sq, self._cell_sq = cell_rows, cent_sq, cell_sq
-        self._snap = (cent, cell_ids, cell_mats, cell_rows, cent_sq, cell_sq)
-        return self
-
-    @staticmethod
-    def saved_stat_key(in_dir: str):
-        """The shard stat key recorded at save time (list of [path,
-        mtime_ns, size]), or None if no snapshot exists — the freshness
-        probe :func:`ivf_handle_for` compares against live shards before
-        trusting a snapshot."""
-        import json
-        import os as _os
-
-        import numpy as np
-
-        p = _os.path.join(in_dir, "ivf_index.npz")
-        if not _os.path.exists(p):
-            return None
-        try:
-            with np.load(p, allow_pickle=True) as z:
-                return json.loads(bytes(z["meta"].tobytes()).decode())["stat_key"]
-        except (OSError, ValueError, KeyError, json.JSONDecodeError):
-            return None
 
     def search_one(self, qvec, k: int = 10):
         """Exact-within-probed-cells top-k for ONE query vector: (ids,
-        dists) sorted by (dist, id). All-numpy, no pandas, no stat.
+        dists) sorted by (dist, id). All-numpy, no pandas, no stat. When
+        the `nprobe` nearest cells hold fewer than k rows, the probe
+        widens nearest-first until k are seen (:func:`_widened_probes`).
 
         Latency anatomy (measured, 100K×128 f32, 384 cells / nprobe 3):
         ~85 % of the call is the centroid + probed-cell GEMVs, which run
@@ -534,7 +502,8 @@ class IvfReplicaHandle:
         np = self._np
         # one atomic snapshot read: a concurrent refresh() can swap the
         # whole index mid-call but can never hand this call a torn mix
-        cent, cell_ids, cell_mats, cell_rows, cent_sq, cell_sq = self._snap
+        snap = self._snap
+        cent, cent_sq = snap[1], snap[5]
         q = np.asarray(qvec, dtype=cent.dtype)
         if self.metric == "cosine":
             # q @ q + sqrt beats np.linalg.norm's dispatch on the hot path
@@ -544,60 +513,18 @@ class IvfReplicaHandle:
         # probe selection: |q|^2 is rank-invariant, omit it
         cscore = cent_sq - 2.0 * (cent @ q)
         p = min(self.nprobe, len(cscore))
-        probes = cscore.argpartition(p - 1)[:p]
-        # r11: per-probe GEMVs emit raw dots; the dist transform runs ONCE
-        # over the concatenated result. Elementwise ops are grouping-
-        # independent, so values are bit-identical to the per-cell form
-        # (parity-asserted vs the batch path in tests), but the nprobe-1
-        # extra temporaries + passes disappear — ~8% off the measured p50.
-        id_parts, row_parts, d_parts, sq_parts = [], [], [], []
-        for j in probes:
-            sids = cell_ids[j]
-            if not len(sids):
-                continue
-            id_parts.append(sids)
-            row_parts.append(cell_rows[j])
-            d_parts.append(cell_mats[j] @ q)
-            if cell_sq is not None:
-                sq_parts.append(cell_sq[j])
-        if not id_parts:
-            return np.empty(0, dtype=np.int64), np.empty(0)
-        ids = np.concatenate(id_parts)
-        dots = np.concatenate(d_parts)
-        if self.metric == "cosine":
-            d = 1.0 - dots
-        elif self.metric == "l2":
-            d = np.sqrt(
-                np.maximum(np.concatenate(sq_parts) - 2.0 * dots + q @ q, 0.0)
+        ids, d = _ivf_probe(
+            np, snap, self.metric, self.assign_r, q, cscore.argpartition(p - 1)[:p]
+        )
+        if len(ids) < k and p < len(cscore):
+            ids, d = _ivf_probe(
+                np, snap, self.metric, self.assign_r, q,
+                _widened_probes(np, cscore, snap[4], p, k),
             )
-        else:  # ip
-            d = -dots
-        if self.assign_r > 1:
-            # same keep-the-smaller dedup rule as the batch path (per-cell
-            # GEMV copies can differ in the last ulp), but keyed on int64
-            # corpus-row positions instead of id values: row ↔ id is a
-            # bijection within one corpus, and an object-dtype string-id
-            # lexsort over the probed rows measured 9 ms/query (r12 soak)
-            # vs ~50 µs on int rows
-            rows = np.concatenate(row_parts)
-            order = np.lexsort((d, rows))
-            ids, d, rows = ids[order], d[order], rows[order]
-            keep = np.r_[True, rows[1:] != rows[:-1]]
-            ids, d = ids[keep], d[keep]
         # tie-aware (dist, id) truncation — same rank rule as
         # ivf_replica_serve and the SQ/PQ/BQ handles (_topk_tie_aware);
         # a bare argpartition broke k-th-boundary ties arbitrarily
         return _topk_tie_aware(np, ids, d, k)
-
-
-# {(paths, n_cells, nprobe, assign_r, metric, id_col, dtype):
-#   (stat_key, IvfReplicaHandle)} — bounded LRU like the resolve caches.
-# All mutations (and refresh-on-stale) run under _IVF_HANDLE_LOCK so two
-# REST threads can't interleave a build/refresh (r13, ADVICE high);
-# search_one itself never takes the lock — it reads one atomic snapshot.
-_IVF_HANDLE_CAP = 4
-_IVF_HANDLE_CACHE: dict = {}
-_IVF_HANDLE_LOCK = _threading.Lock()
 
 
 def ivf_handle_for(
@@ -611,72 +538,26 @@ def ivf_handle_for(
     dtype: str = "float64",
     index_dir: str | None = None,
 ) -> IvfReplicaHandle:
-    """Stat-checked LRU of pre-resolved :class:`IvfReplicaHandle`s — the
-    REST serving path's resolver (r12, VERDICT r11 task 7). The batch
-    :func:`ivf_replica_serve` costs ~1.8 ms/call of GIL-held pandas/stat
-    plumbing, which convoyed the earlier thread-per-connection server's 8
-    handler threads into LOWER throughput than one stream (measured
-    311 → 48 q/s); this path
-    keeps the per-request Python down to one stat pass (~0.05 ms) and
-    serves from ``search_one`` (GIL-releasing BLAS). Freshness contract
-    is identical to the batch path: the handle refreshes whenever any
-    shard's (path, mtime_ns, size) changes.
+    """A :class:`IvfReplicaHandle` over the shard tier's current IVF index
+    for a shard set — the REST serving path's resolver (r12, VERDICT r11
+    task 7). The batch :func:`ivf_replica_serve` costs ~1.8 ms/call of
+    GIL-held pandas/stat plumbing; this path keeps the per-request Python
+    down to one stat pass and one dict hit and serves from ``search_one``
+    (GIL-releasing BLAS). The index is keyed on its build geometry;
+    ``nprobe`` is query-time and only set on the returned handle.
+    Freshness contract is identical to the batch path: the index rebuilds
+    whenever any shard's (path, mtime_ns, size) changes; concurrent first
+    requests build once.
 
-    r13: ``index_dir`` adds the DISK warm-start tier between the LRU and
-    a cold build — on LRU miss the resolver loads a persisted snapshot
-    (:meth:`IvfReplicaHandle.load_index`) iff its recorded shard stat
-    key matches the live shards, else builds from parquet and persists
-    for the next booting worker. N share-nothing serving workers pay ONE
-    k-means, not N (the write is atomic-rename, so two workers racing
-    the first build at worst both build — never read a torn file)."""
-    import hashlib
-    import os as _os
-
-    paths = tuple(sorted(shard_paths))
-    stat_key = tuple(
-        (p, st.st_mtime_ns, st.st_size) for p, st in ((p, _os.stat(p)) for p in paths)
-    )
-    ck = (paths, n_cells, nprobe, assign_r, metric, id_col, dtype)
-    snap_dir = None
-    if index_dir is not None:
-        # one snapshot per (shards, build-geometry); nprobe is query-time
-        # and deliberately NOT part of the tag
-        tag = hashlib.md5(
-            repr((paths, n_cells, assign_r, metric, id_col, dtype)).encode()
-        ).hexdigest()[:16]
-        snap_dir = _os.path.join(index_dir, f"ivf_{tag}")
-    # one lock around lookup + build/refresh + reinsert: concurrent REST
-    # threads can't double-build one geometry or interleave two refreshes
-    # of the same handle (r13, ADVICE high). Builds serialize, which is
-    # the point — a k-means retrain must happen once, not per thread.
-    with _IVF_HANDLE_LOCK:
-        ent = _IVF_HANDLE_CACHE.pop(ck, None)  # pop → reinsert = LRU touch
-        if ent is not None:
-            sk, handle = ent
-            if sk != stat_key:
-                handle.refresh()
-                if snap_dir is not None:
-                    # keep the disk tier coherent with the refresh, so the
-                    # NEXT booting worker warm-starts instead of paying a
-                    # cold rebuild against the new shard generation
-                    handle.save_index(snap_dir)
-        else:
-            handle = None
-            if snap_dir is not None:
-                saved = IvfReplicaHandle.saved_stat_key(snap_dir)
-                if saved is not None and [list(t) for t in stat_key] == saved:
-                    handle = IvfReplicaHandle.load_index(snap_dir, nprobe=nprobe)
-            if handle is None:
-                handle = IvfReplicaHandle(
-                    list(paths), n_cells=n_cells, nprobe=nprobe, assign_r=assign_r,
-                    metric=metric, id_col=id_col, dtype=dtype,
-                )
-                if snap_dir is not None:
-                    handle.save_index(snap_dir)
-        while len(_IVF_HANDLE_CACHE) >= _IVF_HANDLE_CAP:
-            _IVF_HANDLE_CACHE.pop(next(iter(_IVF_HANDLE_CACHE)))
-        _IVF_HANDLE_CACHE[ck] = (stat_key, handle)
-    return handle
+    r13: ``index_dir`` adds the DISK warm-start tier between the
+    in-process tier and a cold build (see :func:`_ivf_resolve`); the
+    write is atomic-rename, so two workers racing the first build at
+    worst both build — never read a torn file."""
+    params = (id_col, dtype, metric, n_cells, assign_r, 131_072, 5)
+    snap = _ivf_resolve(shard_paths, params, index_dir, nprobe)
+    if snap is None:
+        raise ValueError("empty shard set")
+    return object.__new__(IvfReplicaHandle)._adopt(shard_paths, params, nprobe, snap)
 
 
 def ivf_replica_serve(
@@ -718,12 +599,11 @@ def ivf_replica_serve(
     from custom_python_vectordb_spark.operators.knn import _blas_threads
 
     entry = _ivf_resolve(
-        shard_paths, id_col=id_col, dtype=dtype, metric=metric,
-        n_cells=n_cells, assign_r=assign_r, train_sample_cap=train_sample_cap,
+        shard_paths, (id_col, dtype, metric, n_cells, assign_r, train_sample_cap, 5)
     )
     if entry is None:
         return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
-    _, cent, cell_ids, cell_mats, _cell_rows = entry
+    _sk, cent, cell_ids, cell_mats, cell_rows, cent_sq, _cell_sq, cell_len, _arrays = entry
     c = len(cell_ids)
 
     qids = queries_pd["qid"].to_numpy()
@@ -732,21 +612,40 @@ def ivf_replica_serve(
         qn = np.linalg.norm(qmat, axis=1, keepdims=True)
         qmat = qmat / np.where(qn == 0, 1.0, qn)
     with _blas_threads(16):
-        qd2 = (qmat * qmat).sum(1)[:, None] + (cent * cent).sum(1)[None, :] - 2.0 * (
-            qmat @ cent.T
-        )
+        qd2 = (qmat * qmat).sum(1)[:, None] + cent_sq[None, :] - 2.0 * (qmat @ cent.T)
         p = min(nprobe, c)
         probe_cells = np.argpartition(qd2, p - 1, axis=1)[:, :p]
+        pair_q = np.repeat(np.arange(len(qids)), p)
+        pair_c = probe_cells.ravel()
+        if p < c:
+            # queries whose probed cells hold fewer than k distinct rows
+            # take the handle's widened probe set instead (each row sits
+            # in min(assign_r, c) cells, so k·r probed slots guarantee k)
+            r = min(assign_r, c)
+            short = [
+                i for i in np.flatnonzero(cell_len[probe_cells].sum(1) < k * r)
+                if r == 1
+                or len(np.unique(np.concatenate([cell_rows[j] for j in probe_cells[i]]))) < k
+            ]
+            if short:
+                wide = [
+                    _widened_probes(np, cent_sq - 2.0 * (cent @ qmat[i]), cell_rows, p, k)
+                    for i in short
+                ]
+                keep = ~np.isin(pair_q, short)
+                pair_q = np.concatenate(
+                    [pair_q[keep], *(np.full(len(w), i) for i, w in zip(short, wide))]
+                )
+                pair_c = np.concatenate([pair_c[keep], *wide])
         # iterate PROBED cells only (round 6): the previous dense
         # `for j in range(n_cells)` membership scan cost ~20 µs × n_cells
         # per call regardless of batch size — 5 ms of pure loop overhead
         # for a single query at 256 cells, dwarfing the actual probe. A
-        # sort-and-group over the (Q × p) probe list touches exactly the
-        # cells queries asked for: single-query p50 3.1 -> ~0.25 ms.
-        flat = probe_cells.ravel()
-        gorder = np.argsort(flat, kind="stable")
-        gcells = flat[gorder]
-        gq = gorder // p
+        # sort-and-group over the (query, cell) probe list touches exactly
+        # the cells queries asked for: single-query p50 3.1 -> ~0.25 ms.
+        gorder = np.argsort(pair_c, kind="stable")
+        gcells = pair_c[gorder]
+        gq = pair_q[gorder]
         bounds = np.flatnonzero(np.r_[True, gcells[1:] != gcells[:-1], True])
         frames = []
         for b in range(len(bounds) - 1):
@@ -921,17 +820,73 @@ def _auto_pq_subspaces(
             break
     return best
 
-# {(paths, id_col, n_cells, assign_r, M, K, cap, iters):
-#   (stat_key, cent, books, [cell ids], [cell fused-code arrays], mmap pos)}
-# Bounded LRU (insertion-ordered dict, hit = pop+reinsert): the r11
-# `.clear()`-on-rebuild policy meant one live index per process, so the
-# REST path alternating two collections (or two build-param sets on one
-# collection) re-trained Lloyd + re-encoded residual PQ on EVERY request
-# — a serving-latency cliff of seconds at 1M rows. Codes are 32×
-# compressed, so a few resident entries are cheap; stale entries for the
-# SAME key are still replaced in place on mtime change.
-_IVFPQ_REPLICA_CACHE: dict = {}
-_IVFPQ_CACHE_CAP = 4
+
+def _ivfpq_build(paths, stat_key, params, nprobe):
+    """The IVF-PQ code tier of a shard set: (stat_key, cent, books,
+    [cell ids], [cell offset codes], chosen M, probe recall, centroid
+    square norms, book square norms), or None when the shards hold no
+    rows. Only codes stay resident; the float matrix is released."""
+    import numpy as np
+
+    from custom_python_vectordb_spark.operators.knn import _blas_threads
+    from custom_python_vectordb_spark.operators.quantization import (
+        _pq_encode,
+        _train_pq_books,
+    )
+
+    id_col, n_cells, assign_r, m_req, kc, cap, iters, target_recall = params
+    loaded = shard_tier.load_vectors(paths, id_col, "float32", sort_ids=True)
+    if loaded is None:
+        return None
+    ids, mat = loaded
+    with _blas_threads(16):
+        cent, multi = _train_assign_cells(np, mat, n_cells, assign_r, cap, iters)
+        cent = cent.astype(np.float32, copy=False)
+        # RESIDUAL encoding (the FAISS IVFPQ design): books are
+        # trained on x − cent[first_assigned_cell] over the same
+        # evenly-spaced sample as the cell trainer, and each cell
+        # stores codes of ITS residuals. Residual spread is the
+        # cell radius, not the corpus spread, so ADC separates
+        # within-cell neighbours that plain-vector PQ quantizes
+        # together — measured at 1M (this corpus, M=16,
+        # fetch_k=300): recall@10 0.63 plain → see bench/probe
+        # rows for the residual numbers.
+        n = len(ids)
+        if n > cap:
+            tsel = np.linspace(0, n - 1, cap).astype(np.int64)
+        else:
+            tsel = np.arange(n, dtype=np.int64)
+        res_sample = mat[tsel] - cent[multi[tsel, 0]]
+        rowlists = _group_rows_by_cell(np, multi, len(cent))
+        if m_req == "auto":
+            # density-adaptive resolution (r13): probe candidate M
+            # values at FULL corpus density and keep the smallest
+            # one whose rerank recall@10 reaches target_recall —
+            # the 10M finding is that this trade moves with the
+            # data and a hand-tuned M silently under-resolves a
+            # denser corpus (SCALING.md VEC10M)
+            m_used, books, probe_rec = _auto_pq_subspaces(
+                np, mat, cent, rowlists, res_sample,
+                target_recall=target_recall, num_centroids=kc, nprobe=nprobe,
+            )
+        else:
+            m_used, probe_rec = m_req, None
+            books, _ = _train_pq_books(np, res_sample, m_used, kc)
+        # subspace-major OFFSET codes per cell: code[mi] + mi·K,
+        # so the per-cell ADC is ONE gather from that cell's
+        # flattened (M·K)-entry LUT + one axis-0 sum (per-subspace
+        # gather loops measured ~4× the arithmetic in numpy call
+        # overhead). K is the TRAINED book size (min(K, sample))
+        # — the flattened-LUT stride. M·K ≤ 4096 fits uint16.
+        off = (np.arange(m_used, dtype=np.uint16) * np.uint16(books.shape[1]))[:, None]
+        cell_codes = [
+            np.ascontiguousarray(
+                _pq_encode(np, mat[rows] - cent[j], books).T.astype(np.uint16) + off
+            )
+            for j, rows in enumerate(rowlists)
+        ]
+    return (stat_key, cent, books, [ids[rows] for rows in rowlists], cell_codes,
+            m_used, probe_rec, (cent * cent).sum(1), (books * books).sum(2))
 
 
 class IvfPqReplicaHandle:
@@ -952,8 +907,8 @@ class IvfPqReplicaHandle:
     bench-shaped corpus plain codes needed fetch_k≈4000 for recall 1.0
     where residual codes need ~300 (measured, probe rows). After build
     only centroids, books, per-cell ids and per-cell uint8 codes are
-    resident; the float matrix is released (this class deliberately does
-    NOT share ``_IVF_REPLICA_CACHE``, which pins float cell matrices).
+    resident; the float matrix is released (a shard-tier entry of its
+    own: the IVF entry pins float cell matrices).
 
     Coarse ADC recall on a clustered corpus is PQ-bounded (~0.2-0.3
     @10 at M=16 — within-cluster detail quantizes away), so serving
@@ -965,11 +920,9 @@ class IvfPqReplicaHandle:
     Same ``refresh()`` staleness contract as the sibling handles."""
 
     __slots__ = (
-        "_paths", "_np", "nprobe", "metric",
-        "_n_cells", "_assign_r", "_m", "_kc", "_cap", "_iters", "_id_col",
-        "_target_recall", "chosen_m", "probe_recall",
-        "cent", "books", "books_sq", "cell_ids", "cell_codes",
-        "_cent_sq", "_mmap_dir", "_mmap_dtype", "_mmap_mat", "_mmap_pos",
+        "_paths", "_np", "nprobe", "metric", "_params", "_stat_key",
+        "chosen_m", "probe_recall", "cent", "books", "books_sq", "cell_ids",
+        "cell_codes", "_cent_sq", "_mmap_dir", "_mmap_dtype", "_mmap_mat", "_mmap_pos",
     )
 
     def __init__(
@@ -1002,11 +955,8 @@ class IvfPqReplicaHandle:
         self._paths = list(shard_paths)
         self.nprobe = nprobe
         self.metric = "l2"  # ADC approximates L2; cosine callers pre-normalize
-        self._n_cells, self._assign_r = n_cells, assign_r
-        self._m, self._kc = num_subspaces, num_centroids
-        self._target_recall = target_recall
-        self._cap, self._iters = train_sample_cap, train_iters
-        self._id_col = id_col
+        self._params = (id_col, n_cells, assign_r, num_subspaces, num_centroids,
+                        train_sample_cap, train_iters, target_recall)
         self._mmap_dir = rerank_mmap_dir
         # float32 rerank halves the disk tier and its gather bandwidth
         # (the 100 TB knob: exactness to f32 resolution is the contract
@@ -1015,15 +965,14 @@ class IvfPqReplicaHandle:
         self._mmap_dtype = rerank_dtype
         self.refresh()
 
-    def refresh(self) -> None:
-        import os as _os
+    def _adopt(self, entry) -> None:
+        (self._stat_key, self.cent, self.books, self.cell_ids, self.cell_codes,
+         self.chosen_m, self.probe_recall, self._cent_sq, self.books_sq) = entry
 
-        np = self._np
-        from custom_python_vectordb_spark.operators.knn import (
-            _blas_threads,
-            _build_mmap_replica,
-        )
-        from custom_python_vectordb_spark.operators.quantization import _train_pq_books
+    def refresh(self) -> None:
+        """Re-resolve the code tier (and the mmap rerank tier, when
+        configured) against the shard files through the shard tier."""
+        from custom_python_vectordb_spark.operators.knn import resolve_replica
 
         if self._paths is None:
             raise RuntimeError(
@@ -1031,161 +980,59 @@ class IvfPqReplicaHandle:
                 "set — rebuild from parquet (IvfPqReplicaHandle(shard_paths, "
                 "...)) to pick up new rows"
             )
-        paths = tuple(sorted(self._paths))
-        stat_key = tuple(
-            (p, st.st_mtime_ns, st.st_size) for p, st in ((p, _os.stat(p)) for p in paths)
+        params, nprobe = self._params, self.nprobe
+        entry = shard_tier.resolve(
+            "ivfpq", self._paths, params,
+            lambda paths, sk: _ivfpq_build(paths, sk, params, nprobe),
         )
-        ck = (paths, self._id_col, self._n_cells, self._assign_r,
-              self._m, self._kc, self._cap, self._iters, self._target_recall)
-        entry = _IVFPQ_REPLICA_CACHE.pop(ck, None)  # pop → reinsert = LRU touch
-        if entry is not None and entry[0] == stat_key:
-            _IVFPQ_REPLICA_CACHE[ck] = entry
-        else:
-            from custom_python_vectordb_spark.operators.quantization import (
-                _pq_encode,
-            )
-
-            loaded = _load_shards_id_sorted(paths, self._id_col, "float32")
-            if loaded is None:
-                raise ValueError("empty shard set")
-            ids, mat = loaded
-            with _blas_threads(16):
-                cent, multi = _train_assign_cells(
-                    np, mat, self._n_cells, self._assign_r, self._cap, self._iters
-                )
-                cent = cent.astype(np.float32, copy=False)
-                # RESIDUAL encoding (the FAISS IVFPQ design): books are
-                # trained on x − cent[first_assigned_cell] over the same
-                # evenly-spaced sample as the cell trainer, and each cell
-                # stores codes of ITS residuals. Residual spread is the
-                # cell radius, not the corpus spread, so ADC separates
-                # within-cell neighbours that plain-vector PQ quantizes
-                # together — measured at 1M (this corpus, M=16,
-                # fetch_k=300): recall@10 0.63 plain → see bench/probe
-                # rows for the residual numbers.
-                n = len(ids)
-                if n > self._cap:
-                    tsel = np.linspace(0, n - 1, self._cap).astype(np.int64)
-                else:
-                    tsel = np.arange(n, dtype=np.int64)
-                res_sample = mat[tsel] - cent[multi[tsel, 0]]
-                rowlists = _group_rows_by_cell(np, multi, len(cent))
-                if self._m == "auto":
-                    # density-adaptive resolution (r13): probe candidate M
-                    # values at FULL corpus density and keep the smallest
-                    # one whose rerank recall@10 reaches target_recall —
-                    # the 10M finding is that this trade moves with the
-                    # data and a hand-tuned M silently under-resolves a
-                    # denser corpus (SCALING.md VEC10M)
-                    m_used, books, probe_rec = _auto_pq_subspaces(
-                        np, mat, cent, rowlists, res_sample,
-                        target_recall=self._target_recall,
-                        num_centroids=self._kc, nprobe=self.nprobe,
-                    )
-                else:
-                    m_used, probe_rec = self._m, None
-                    books, _ = _train_pq_books(np, res_sample, m_used, self._kc)
-                cell_ids = [ids[rows] for rows in rowlists]
-                # subspace-major OFFSET codes per cell: code[mi] + mi·K,
-                # so the per-cell ADC is ONE gather from that cell's
-                # flattened (M·K)-entry LUT + one axis-0 sum (per-subspace
-                # gather loops measured ~4× the arithmetic in numpy call
-                # overhead). K is the TRAINED book size (min(K, sample))
-                # — the flattened-LUT stride. M·K ≤ 4096 fits uint16.
-                off = (
-                    np.arange(m_used, dtype=np.uint16) * np.uint16(books.shape[1])
-                )[:, None]
-                cell_codes = [
-                    np.ascontiguousarray(
-                        _pq_encode(np, mat[rows] - cent[j], books).T.astype(np.uint16)
-                        + off
-                    )
-                    for j, rows in enumerate(rowlists)
-                ]
-            del mat  # only codes stay resident — the 32× claim
-            entry = (stat_key, cent, books, cell_ids, cell_codes, m_used, probe_rec)
-            while len(_IVFPQ_REPLICA_CACHE) >= _IVFPQ_CACHE_CAP:
-                _IVFPQ_REPLICA_CACHE.pop(next(iter(_IVFPQ_REPLICA_CACHE)))
-            _IVFPQ_REPLICA_CACHE[ck] = entry
-        (_, self.cent, self.books, self.cell_ids, self.cell_codes,
-         self.chosen_m, self.probe_recall) = entry
-        self._cent_sq = (self.cent * self.cent).sum(1)
-        self.books_sq = (self.books * self.books).sum(2)
+        if entry is None:
+            raise ValueError("empty shard set")
+        self._adopt(entry)
+        self._mmap_mat = self._mmap_pos = None
         if self._mmap_dir is not None:
-            built = _build_mmap_replica(
-                paths, stat_key, self._mmap_dir, self._id_col, self._mmap_dtype
+            rep = resolve_replica(
+                self._paths, id_col=params[0], dtype=self._mmap_dtype,
+                mmap_dir=self._mmap_dir,
             )
-            m_ids, self._mmap_mat, _n, _s = built
-            # vectorized id→row lookup (sorted ids + searchsorted): a
-            # 300-entry python dict-comp per call measured ~40 µs of the
-            # rerank, and the fancy gather wants an ndarray index anyway
-            m_ids = np.asarray(m_ids)
-            sorter = np.argsort(m_ids, kind="stable")
-            self._mmap_pos = (m_ids[sorter], sorter)
-        else:
-            self._mmap_mat = self._mmap_pos = None
+            self._mmap_mat, self._mmap_pos = rep.mat, rep.pos
 
     def save_index(self, out_dir: str) -> None:
         """Persist the RESIDENT index tier (centroids, PQ books, per-cell
-        ids and codes) as one ``ivfpq_index.npz`` — the ``faiss
+        ids and codes) and its build-time shard stat key as
+        ``ivfpq_index.npz`` (:func:`shard_tier.save`) — the ``faiss
         write_index`` role; the reference persists its accelerator the
-        same way (``/root/reference/binary_persistence.py:196-209``
-        ``save_hnsw_index``/``load_hnsw_index`` — serialize the built
-        index next to the binary vector store, reload without rebuild).
-        The mmap rerank tier is ALREADY durable (``rerank_mmap_dir``
-        holds the float rows); this call makes the code tier durable
-        too, so a serving worker — or a resumed 100M-scale build —
-        can :meth:`load_index` without the source parquet and without
-        re-running k-means/PQ training.
+        same way (``binary_persistence.py:196-209``
+        ``save_hnsw_index``/``load_hnsw_index``). The mmap rerank tier is
+        ALREADY durable (``rerank_mmap_dir`` holds the float rows); this
+        call makes the code tier durable too, so a serving worker — or a
+        resumed 100M-scale build — can :meth:`load_index` without the
+        source parquet and without re-running k-means/PQ training.
 
         Codes are stored offset-free as uint8 (the trained book size is
         ≤ 256 by construction); the subspace offsets are re-baked at
         load. Ragged per-cell arrays are stored flat + lengths."""
-        import json
-        import os as _os
-
         np = self._np
-        _os.makedirs(out_dir, exist_ok=True)
+        id_col, n_cells, assign_r, _m, kc = self._params[:5]
         m, kc_t, _sub_d = self.books.shape
         off = (np.arange(m, dtype=np.uint16) * np.uint16(kc_t))[:, None]
-        lens = np.array([len(ids) for ids in self.cell_ids], dtype=np.int64)
-        ids_flat = (
-            np.concatenate(self.cell_ids)
-            if len(lens) and lens.sum()
-            else np.empty(0, dtype=np.int64)
+        shard_tier.save(
+            out_dir, "ivfpq_index",
+            {
+                "cent": self.cent, "books": self.books,
+                "cell_lens": np.array([len(ids) for ids in self.cell_ids], dtype=np.int64),
+                "cell_ids": np.concatenate(self.cell_ids),
+                "cell_codes": np.concatenate(
+                    [(c - off).astype(np.uint8) for c in self.cell_codes], axis=1
+                ),
+            },
+            {
+                "nprobe": int(self.nprobe), "assign_r": int(assign_r),
+                "n_cells": int(n_cells), "num_centroids": int(kc),
+                "chosen_m": int(self.chosen_m),
+                "probe_recall": None if self.probe_recall is None else float(self.probe_recall),
+                "mmap_dtype": self._mmap_dtype, "id_col": id_col, "stat_key": self._stat_key,
+            },
         )
-        codes_flat = (
-            np.concatenate(
-                [(c - off).astype(np.uint8) for c in self.cell_codes if c.size],
-                axis=1,
-            )
-            if lens.sum()
-            else np.empty((m, 0), dtype=np.uint8)
-        )
-        cfg = {
-            "nprobe": int(self.nprobe), "assign_r": int(self._assign_r),
-            "n_cells": int(self._n_cells), "num_centroids": int(self._kc),
-            "chosen_m": int(self.chosen_m),
-            "probe_recall": None if self.probe_recall is None else float(self.probe_recall),
-            "mmap_dtype": self._mmap_dtype, "id_col": self._id_col,
-            # shard stat key at save time — lets a warm-start caller apply
-            # the same (path, mtime_ns, size) freshness contract as
-            # ivf_handle_for before trusting this snapshot
-            "stat_key": [
-                [p, _os.stat(p).st_mtime_ns, _os.stat(p).st_size]
-                for p in sorted(self._paths)
-            ] if self._paths else None,
-        }
-        # unique tmp per process: concurrent savers must not share one
-        # tmp path (see IvfReplicaHandle.save_index)
-        tmp = _os.path.join(out_dir, f"ivfpq_index.npz.tmp.{_os.getpid()}")
-        with open(tmp, "wb") as fh:
-            np.savez(
-                fh, cent=self.cent, books=self.books, cell_lens=lens,
-                cell_ids=ids_flat, cell_codes=codes_flat,
-                cfg=np.frombuffer(json.dumps(cfg).encode(), dtype=np.uint8),
-            )
-        _os.replace(tmp, _os.path.join(out_dir, "ivfpq_index.npz"))
 
     @classmethod
     def load_index(
@@ -1203,44 +1050,32 @@ class IvfPqReplicaHandle:
         the saved query-time probe width (it is query-time-free, same
         contract as the REST route)."""
         import glob as _glob
-        import json
         import os as _os
 
         import numpy as np
 
-        with np.load(
-            _os.path.join(in_dir, "ivfpq_index.npz"), allow_pickle=True
-        ) as z:
-            cfg = json.loads(bytes(z["cfg"].tobytes()).decode())
-            cent = z["cent"]
-            books = z["books"]
-            lens = z["cell_lens"]
-            ids_flat = z["cell_ids"]
-            codes_flat = z["cell_codes"]
+        from custom_python_vectordb_spark.operators.knn import _open_mmap_replica
+
+        arrays, cfg = _load_snapshot(in_dir, "ivfpq_index")
         self = object.__new__(cls)
         self._np = np
         self._paths = None  # snapshot — no shard set, refresh() refuses
         self.nprobe = int(nprobe if nprobe is not None else cfg["nprobe"])
         self.metric = "l2"
-        self._n_cells, self._assign_r = cfg["n_cells"], cfg["assign_r"]
-        self._m = self.chosen_m = cfg["chosen_m"]
-        self._kc = cfg["num_centroids"]
-        self.probe_recall = cfg["probe_recall"]
-        self._target_recall, self._cap, self._iters = 0.99, 0, 0
-        self._id_col = cfg["id_col"]
+        self._params = (cfg["id_col"], cfg["n_cells"], cfg["assign_r"], cfg["chosen_m"],
+                        cfg["num_centroids"], 0, 0, 0.99)
         self._mmap_dir, self._mmap_dtype = rerank_mmap_dir, cfg["mmap_dtype"]
-        self.cent = cent
-        self.books = books
-        self._cent_sq = (cent * cent).sum(1)
-        self.books_sq = (books * books).sum(2)
+        cent, books = arrays["cent"], arrays["books"]
         m, kc_t, _sub_d = books.shape
         off = (np.arange(m, dtype=np.uint16) * np.uint16(kc_t))[:, None]
-        bounds = np.cumsum(lens)[:-1]
-        self.cell_ids = np.split(ids_flat, bounds)
-        self.cell_codes = [
-            np.ascontiguousarray(c.astype(np.uint16) + off)
-            for c in np.split(codes_flat, bounds, axis=1)
-        ]
+        bounds = np.cumsum(arrays["cell_lens"])[:-1]
+        self._adopt((
+            cfg["stat_key"], cent, books, np.split(arrays["cell_ids"], bounds),
+            [np.ascontiguousarray(c.astype(np.uint16) + off)
+             for c in np.split(arrays["cell_codes"], bounds, axis=1)],
+            cfg["chosen_m"], cfg["probe_recall"], (cent * cent).sum(1), (books * books).sum(2),
+        ))
+        self._mmap_mat = self._mmap_pos = None
         if rerank_mmap_dir is not None:
             mats = sorted(_glob.glob(_os.path.join(rerank_mmap_dir, "replica_*.mat.npy")))
             if len(mats) != 1:
@@ -1248,13 +1083,10 @@ class IvfPqReplicaHandle:
                     f"expected exactly one replica_*.mat.npy in {rerank_mmap_dir}, "
                     f"found {len(mats)}"
                 )
-            self._mmap_mat = np.load(mats[0], mmap_mode="r")
-            m_ids = np.load(mats[0][: -len(".mat.npy")] + ".ids.npy", allow_pickle=True)
-            m_ids = np.asarray(m_ids)
-            sorter = np.argsort(m_ids, kind="stable")
-            self._mmap_pos = (m_ids[sorter], sorter)
-        else:
-            self._mmap_mat = self._mmap_pos = None
+            rep = _open_mmap_replica(mats[0][: -len(".mat.npy")])
+            if rep is None:
+                raise FileNotFoundError(f"unreadable mmap replica under {rerank_mmap_dir}")
+            self._mmap_mat, self._mmap_pos = rep[0].mat, rep[0].pos
         return self
 
     def search_one(self, qvec, k: int = 10, fetch_k: int | None = None):
@@ -1289,7 +1121,7 @@ class IvfPqReplicaHandle:
         d = np.concatenate(d_parts)
         np.maximum(d, 0.0, out=d)
         np.sqrt(d, out=d)
-        if self._assign_r > 1:
+        if self._params[2] > 1:
             # same (id)-keyed dedup rule as IvfReplicaHandle, but under
             # residual encoding a multi-assigned row has a DIFFERENT code
             # and LUT per cell, so the two estimates genuinely differ:
@@ -1347,8 +1179,6 @@ class ShardedIvfPqIndex:
             raise ValueError("empty snapshot dir list")
         self.shards = []
         for d in dirs:
-            if not _os.path.exists(_os.path.join(d, "ivfpq_index.npz")):
-                raise FileNotFoundError(f"no ivfpq_index.npz under {d}")
             has_mmap = bool(_glob.glob(_os.path.join(d, "replica_*.mat.npy")))
             self.shards.append(
                 IvfPqReplicaHandle.load_index(

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from custom_python_vectordb_spark.functions.distances import distance_expr
 from custom_python_vectordb_spark.functions.distances import _ref as _sqlref
+from custom_python_vectordb_spark.operators import shard_tier
 from custom_python_vectordb_spark.operators.topk import top_k_per_group
 from custom_python_vectordb_spark.functions.local_relation import local_df
 
@@ -382,10 +383,111 @@ def quantized_rerank(
 
 # --------------------------------------------- in-process quantized replica
 
-# {(paths, id_col): (stat_key, ids, codes uint8 (N,D), minv, s, wa2)}
-_SQ_REPLICA_CACHE: dict = {}
-# {(paths, mmap_dir, stat_key): {id: mmap row}} for the rerank gather
-_SQ_POS_CACHE: dict = {}
+def _load_snapshot(in_dir: str, name: str):
+    """:func:`shard_tier.load` for a handle's ``load_index``, which has no
+    shards to rebuild from: an absent or unreadable snapshot raises."""
+    got = shard_tier.load(in_dir, name)
+    if got is None:
+        raise FileNotFoundError(f"no readable {name}.npz under {in_dir}")
+    return got
+
+
+class _ArraySnapshot:
+    """``save_index``/``load_index`` for the SQ/BQ/PQ handles, whose state
+    is the arrays named in ``_SNAP_ARRAYS`` plus the JSON fields in
+    ``_SNAP_FIELDS``: one :func:`shard_tier.save` snapshot
+    ``<_SNAP_NAME>.npz`` with the build-time shard stat key — the
+    warm-start family contract of ``IvfReplicaHandle.save_index`` (the
+    build's expensive part at scale is the full-corpus decode + encode,
+    which N booting serving workers should pay once). ``load_index``
+    reads no parquet and keeps the shard set, so ``refresh()`` still
+    works; freshness vs live shards is the caller's job (compare
+    ``meta['stat_key']``). Derived fields are recomputed at load by the
+    same ``_finish_derived`` refresh() uses."""
+
+    __slots__ = ()
+
+    def save_index(self, out_dir: str) -> None:
+        shard_tier.save(
+            out_dir, self._SNAP_NAME,
+            {a: getattr(self, a) for a in self._SNAP_ARRAYS},
+            {"stat_key": self._stat_key, **{f: getattr(self, f) for f in self._SNAP_FIELDS}},
+        )
+
+    @classmethod
+    def load_index(cls, in_dir: str):
+        import numpy as np
+
+        arrays, meta = _load_snapshot(in_dir, cls._SNAP_NAME)
+        self = object.__new__(cls)
+        self._np = np
+        self._stat_key = meta.pop("stat_key")
+        self._paths = [p for p, _m, _s in self._stat_key]
+        for name, value in {**arrays, **meta}.items():
+            setattr(self, name, value)
+        self._finish_derived()
+        return self
+
+    def _finish_derived(self) -> None:
+        pass
+
+
+def _sq_resolve(shard_paths: list[str], id_col: str):
+    """The SQ code tier of a shard set through the shard tier: (stat_key,
+    ids, codes uint8 (N, D), minv, per-dim step s, per-row Σ s²a²), or
+    None when the shards hold no rows."""
+
+    def build(paths, stat_key):
+        import numpy as np
+
+        loaded = shard_tier.load_vectors(paths, id_col, "float64")
+        if loaded is None:
+            return None
+        ids, mat = loaded
+        minv = mat.min(axis=0)
+        maxv = mat.max(axis=0)
+        scale = np.where(maxv - minv == 0.0, 1.0, maxv - minv)
+        codes = np.floor(
+            np.clip((mat - minv) / scale * 255.0, 0.0, 255.0)
+        ).astype(np.uint8)
+        s = scale / 255.0  # per-dim code→value step
+        s2 = (s * s).astype(np.float64)
+        cf = codes.astype(np.float64)
+        wa2 = (cf * cf * s2).sum(axis=1)  # Σ s² a² per row
+        return (stat_key, ids, codes, minv, s, wa2)
+
+    return shard_tier.resolve("sq", shard_paths, (id_col,), build)
+
+
+def _mmap_rerank(shard_paths, id_col, mmap_dir, ids, coarse, qids, qmat, k, fetch_k, dist_col):
+    """K5 exact rerank shared by the SQ/BQ/PQ serves: each query's
+    top-``fetch_k`` coarse candidates (``coarse`` is (Q, N), aligned with
+    ``ids``) are re-scored with exact L2 against their float rows,
+    gathered from the memory-mapped replica under ``mmap_dir``
+    (``knn.resolve_replica`` — RAM holds codes, DISK holds floats), and
+    the k nearest by (dist, id) are kept."""
+    import numpy as np
+    import pandas as pd
+
+    from custom_python_vectordb_spark.operators.knn import resolve_replica
+
+    rep = resolve_replica(shard_paths, id_col=id_col, dtype="float64", mmap_dir=mmap_dir)
+    sorted_ids, sorter = rep.pos
+    ck2 = min(fetch_k, coarse.shape[1])
+    cidx = np.argpartition(coarse, ck2 - 1, axis=1)[:, :ck2]
+    rows = []
+    for qi in range(len(qids)):
+        cand = cidx[qi]
+        gathered = np.asarray(
+            rep.mat[sorter[np.searchsorted(sorted_ids, ids[cand])]], dtype=np.float64
+        )
+        diff = gathered - qmat[qi][None, :]
+        ed = np.sqrt((diff * diff).sum(axis=1))
+        kk2 = min(k, len(cand))
+        order_q = sorted(range(len(cand)), key=lambda i: (ed[i], ids[cand[i]]))[:kk2]
+        for i in order_q:
+            rows.append((qids[qi], ids[cand[i]], float(ed[i])))
+    return pd.DataFrame(rows, columns=["qid", id_col, dist_col])
 
 
 def sq_replica_serve(
@@ -425,7 +527,7 @@ def sq_replica_serve(
     ``fetch_k`` + ``rerank_mmap_dir`` (K5 at serving speed): the coarse
     uint8 scan keeps its top-``fetch_k`` candidates per query, then the
     EXACT vectors of just those candidates are gathered from the
-    memory-mapped float replica (``knn._build_mmap_replica`` — RAM holds
+    memory-mapped float replica (``knn.resolve_replica`` — RAM holds
     codes, DISK holds floats, the rerank touches fetch_k rows per query
     as page reads) and exact L2 decides the final top-k. This is the
     reference's quantized-rerank architecture with the float tier
@@ -433,45 +535,12 @@ def sq_replica_serve(
     recall@10 goes 0.98 (coarse codes only) → 1.00 at fetch_k=50, at
     ~3.3 ms/q for a 20-query batch (the float64 chunked GEMM trades ~2×
     the float replica's latency for 4× its capacity)."""
-    import os as _os
-
     import numpy as np
     import pandas as pd
-    import pyarrow.parquet as _pq
 
-    paths = tuple(sorted(shard_paths))
-    stat_key = tuple((p, st.st_mtime_ns, st.st_size) for p, st in ((p, _os.stat(p)) for p in paths))
-    ck = (paths, id_col)
-    entry = _SQ_REPLICA_CACHE.get(ck)
-    if entry is None or entry[0] != stat_key:
-        ids_parts, mat_parts = [], []
-        for p in paths:
-            names = _pq.read_schema(p).names
-            vec_field = "embedding" if "embedding" in names else names[1]
-            tbl = _pq.read_table(p, columns=[id_col, vec_field])
-            if tbl.num_rows == 0:
-                continue
-            ids_parts.append(tbl.column(id_col).to_numpy(zero_copy_only=False))
-            flat = np.concatenate(
-                [c.flatten().to_numpy(zero_copy_only=False) for c in tbl.column(vec_field).chunks]
-            )
-            mat_parts.append(flat.reshape(len(ids_parts[-1]), -1).astype(np.float64))
-        if not ids_parts:
-            return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
-        ids = np.concatenate(ids_parts)
-        mat = np.concatenate(mat_parts)
-        minv = mat.min(axis=0)
-        maxv = mat.max(axis=0)
-        scale = np.where(maxv - minv == 0.0, 1.0, maxv - minv)
-        codes = np.floor(
-            np.clip((mat - minv) / scale * 255.0, 0.0, 255.0)
-        ).astype(np.uint8)
-        s = scale / 255.0  # per-dim code→value step
-        s2 = (s * s).astype(np.float64)
-        cf = codes.astype(np.float64)
-        wa2 = (cf * cf * s2).sum(axis=1)  # Σ s² a² per row
-        entry = (stat_key, ids, codes, minv, s, wa2)
-        _SQ_REPLICA_CACHE[ck] = entry
+    entry = _sq_resolve(shard_paths, id_col)
+    if entry is None:
+        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
     _, ids, codes, minv, s, wa2 = entry
     if len(queries_pd) == 0:
         return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
@@ -499,44 +568,9 @@ def sq_replica_serve(
     np.maximum(d2, 0.0, out=d2)
     np.sqrt(d2, out=d2)
     if fetch_k is not None and rerank_mmap_dir is not None:
-        from custom_python_vectordb_spark.operators.knn import _build_mmap_replica
-
-        import os as _os
-
-        paths2 = tuple(sorted(shard_paths))
-        stat_key2 = tuple(
-            (p, st.st_mtime_ns, st.st_size) for p, st in ((p, _os.stat(p)) for p in paths2)
+        return _mmap_rerank(
+            shard_paths, id_col, rerank_mmap_dir, ids, d2, qids, qmat, k, fetch_k, dist_col
         )
-        built = _build_mmap_replica(paths2, stat_key2, rerank_mmap_dir, id_col, "float64")
-        m_ids, m_mat, _n, _s = built
-        # id → mmap row index, memoized with the replica (building the
-        # 100k-entry dict per call measured ~1.5 ms/q — half the rerank)
-        pk = (paths2, rerank_mmap_dir, stat_key2)
-        pos = _SQ_POS_CACHE.get(pk)
-        if pos is None:
-            _SQ_POS_CACHE.clear()  # one live replica per (paths, dir)
-            pos = {
-                int(v) if isinstance(v, np.integer) else v: i
-                for i, v in enumerate(m_ids)
-            }
-            _SQ_POS_CACHE[pk] = pos
-        ck2 = min(fetch_k, n)
-        cidx = np.argpartition(d2, ck2 - 1, axis=1)[:, :ck2]
-        rows = []
-        for qi in range(len(qids)):
-            cand = cidx[qi]
-            gathered = np.asarray(
-                m_mat[[pos[int(ids[c]) if isinstance(ids[c], np.integer) else ids[c]] for c in cand]],
-                dtype=np.float64,
-            )
-            qv = qmat[qi]
-            diff = gathered - qv[None, :]
-            ed = np.sqrt((diff * diff).sum(axis=1))
-            kk2 = min(k, len(cand))
-            order_q = sorted(range(len(cand)), key=lambda i: (ed[i], ids[cand[i]]))[:kk2]
-            for i in order_q:
-                rows.append((qids[qi], ids[cand[i]], float(ed[i])))
-        return pd.DataFrame(rows, columns=["qid", id_col, dist_col])
     kk = min(k, n)
     sidx = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
     sel = np.take_along_axis(d2, sidx, axis=1)
@@ -551,9 +585,6 @@ def sq_replica_serve(
         (parts[id_col].to_numpy(), parts[dist_col].to_numpy(), parts["qid"].to_numpy())
     )
     return parts.iloc[order].reset_index(drop=True)
-
-
-_BQ_REPLICA_CACHE: dict = {}
 
 
 def _popcount64(x, t):
@@ -579,53 +610,32 @@ def _popcount64(x, t):
 
 
 def _bq_resolve(shard_paths: list[str], *, id_col: str):
-    """Resolve (building if stale/absent) the cached BQ tier for a shard
-    set: (stat_key, ids, packed uint64 words, per-dim medians, byte pad),
-    or None when the shards hold no rows. Same (path, mtime_ns, size)
-    coherence contract as the other replica caches."""
-    import os as _os
+    """The BQ tier of a shard set through the shard tier: (stat_key, ids,
+    packed uint64 words, per-dim medians, byte pad), or None when the
+    shards hold no rows."""
 
-    import numpy as np
-    import pyarrow.parquet as _pq
+    def build(paths, stat_key):
+        import numpy as np
 
-    paths = tuple(sorted(shard_paths))
-    stat_key = tuple((p, st.st_mtime_ns, st.st_size) for p, st in ((p, _os.stat(p)) for p in paths))
-    ck = (paths, id_col)
-    entry = _BQ_REPLICA_CACHE.get(ck)
-    if entry is not None and entry[0] == stat_key:
-        return entry
-    ids_parts, mat_parts = [], []
-    for p in paths:
-        names = _pq.read_schema(p).names
-        vec_field = "embedding" if "embedding" in names else names[1]
-        tbl = _pq.read_table(p, columns=[id_col, vec_field])
-        if tbl.num_rows == 0:
-            continue
-        ids_parts.append(tbl.column(id_col).to_numpy(zero_copy_only=False))
-        flat = np.concatenate(
-            [c.flatten().to_numpy(zero_copy_only=False) for c in tbl.column(vec_field).chunks]
-        )
-        mat_parts.append(flat.reshape(len(ids_parts[-1]), -1).astype(np.float64))
-    if not ids_parts:
-        return None
-    ids = np.concatenate(ids_parts)
-    mat = np.concatenate(mat_parts)
-    med = np.median(mat, axis=0)
-    packed = np.packbits((mat > med[None, :]).astype(np.uint8), axis=1)
-    # pad the byte dim to a multiple of 8 and view as uint64 words for
-    # the SWAR popcount scan; resident bytes stay D/8 per row (+pad)
-    pad = (-packed.shape[1]) % 8
-    if pad:
-        packed = np.concatenate(
-            [packed, np.zeros((len(packed), pad), dtype=np.uint8)], axis=1
-        )
-    words = np.ascontiguousarray(packed).view(np.uint64)
-    entry = (stat_key, ids, words, med, pad)
-    _BQ_REPLICA_CACHE[ck] = entry
-    return entry
+        loaded = shard_tier.load_vectors(paths, id_col, "float64")
+        if loaded is None:
+            return None
+        ids, mat = loaded
+        med = np.median(mat, axis=0)
+        packed = np.packbits((mat > med[None, :]).astype(np.uint8), axis=1)
+        # pad the byte dim to a multiple of 8 and view as uint64 words for
+        # the SWAR popcount scan; resident bytes stay D/8 per row (+pad)
+        pad = (-packed.shape[1]) % 8
+        if pad:
+            packed = np.concatenate(
+                [packed, np.zeros((len(packed), pad), dtype=np.uint8)], axis=1
+            )
+        return (stat_key, ids, np.ascontiguousarray(packed).view(np.uint64), med, pad)
+
+    return shard_tier.resolve("bq", shard_paths, (id_col,), build)
 
 
-class BqReplicaHandle:
+class BqReplicaHandle(_ArraySnapshot):
     """Pre-resolved single-query fast path over the packed BQ tier — the
     quantized sibling of ``partitioned.IvfReplicaHandle`` (same rationale:
     hnswlib-style bare in-process call on a pre-opened index, no per-call
@@ -633,7 +643,8 @@ class BqReplicaHandle:
     ``refresh()`` boundary while :func:`bq_replica_serve` keeps its
     per-call stat check)."""
 
-    __slots__ = ("_paths", "_id_col", "_np", "ids", "words", "med", "pad")
+    __slots__ = ("_paths", "_id_col", "_np", "_stat_key", "ids", "words", "med", "pad")
+    _SNAP_NAME, _SNAP_ARRAYS, _SNAP_FIELDS = "bq_index", ("ids", "words", "med"), ("_id_col", "pad")
 
     def __init__(self, shard_paths: list[str], *, id_col: str = "vec_id"):
         import numpy as np
@@ -647,57 +658,7 @@ class BqReplicaHandle:
         entry = _bq_resolve(self._paths, id_col=self._id_col)
         if entry is None:
             raise ValueError("empty shard set")
-        _, self.ids, self.words, self.med, self.pad = entry
-
-    def save_index(self, out_dir: str) -> None:
-        """Persist the packed-word tier (ids + uint64 codes + per-dim
-        median thresholds) as ``bq_index.npz`` — same warm-start family
-        contract as ``IvfReplicaHandle.save_index``: the build's expensive
-        part at scale is the full-corpus decode+binarize pass, which N
-        booting serving workers should pay once, not N times. The shard
-        stat key rides along for the caller's freshness check."""
-        import json
-        import os as _os
-
-        np = self._np
-        _os.makedirs(out_dir, exist_ok=True)
-        meta = {
-            "id_col": self._id_col, "pad": int(self.pad),
-            "stat_key": [
-                [p, _os.stat(p).st_mtime_ns, _os.stat(p).st_size]
-                for p in sorted(self._paths)
-            ],
-        }
-        # unique tmp per process: concurrent savers must not share one
-        # tmp path (see IvfReplicaHandle.save_index)
-        tmp = _os.path.join(out_dir, f"bq_index.npz.tmp.{_os.getpid()}")
-        with open(tmp, "wb") as fh:
-            np.savez(fh, ids=self.ids, words=self.words, med=self.med,
-                     meta=np.frombuffer(json.dumps(meta).encode(), dtype=np.uint8))
-        _os.replace(tmp, _os.path.join(out_dir, "bq_index.npz"))
-
-    @classmethod
-    def load_index(cls, in_dir: str):
-        """Reconstitute from :meth:`save_index` output without reading
-        parquet. The shard set is preserved, so ``refresh()`` remains the
-        write-visibility boundary; freshness checking against live shards
-        is the caller's job (compare ``meta['stat_key']``)."""
-        import json
-        import os as _os
-
-        import numpy as np
-
-        with np.load(
-            _os.path.join(in_dir, "bq_index.npz"), allow_pickle=True
-        ) as z:
-            meta = json.loads(bytes(z["meta"].tobytes()).decode())
-            ids, words, med = z["ids"], z["words"], z["med"]
-        self = object.__new__(cls)
-        self._np = np
-        self._paths = [p for p, _m, _s in meta["stat_key"]]
-        self._id_col = meta["id_col"]
-        self.ids, self.words, self.med, self.pad = ids, words, med, meta["pad"]
-        return self
+        self._stat_key, self.ids, self.words, self.med, self.pad = entry
 
     def search_one(self, qvec, k: int = 10):
         """Coarse Hamming top-k for ONE query: (ids, hamming) sorted by
@@ -788,8 +749,7 @@ def bq_replica_serve(
     entry = _bq_resolve(shard_paths, id_col=id_col)
     if entry is None:
         return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
-    paths = tuple(sorted(shard_paths))
-    stat_key, ids, words, med, pad = entry
+    _, ids, words, med, pad = entry
     if len(queries_pd) == 0:
         return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
 
@@ -843,35 +803,9 @@ def bq_replica_serve(
         with ThreadPoolExecutor(n_threads) as ex:
             list(ex.map(_scan, range(n_threads)))
     if fetch_k is not None and rerank_mmap_dir is not None:
-        from custom_python_vectordb_spark.operators.knn import _build_mmap_replica
-
-        built = _build_mmap_replica(paths, stat_key, rerank_mmap_dir, id_col, "float64")
-        m_ids, m_mat, _n, _s = built
-        pk = (paths, rerank_mmap_dir, stat_key)
-        pos = _SQ_POS_CACHE.get(pk)
-        if pos is None:
-            _SQ_POS_CACHE.clear()
-            pos = {
-                int(v) if isinstance(v, np.integer) else v: i
-                for i, v in enumerate(m_ids)
-            }
-            _SQ_POS_CACHE[pk] = pos
-        ck2 = min(fetch_k, n)
-        cidx = np.argpartition(dh, ck2 - 1, axis=1)[:, :ck2]
-        rows = []
-        for qi in range(len(qids)):
-            cand = cidx[qi]
-            gathered = np.asarray(
-                m_mat[[pos[int(ids[c]) if isinstance(ids[c], np.integer) else ids[c]] for c in cand]],
-                dtype=np.float64,
-            )
-            diff = gathered - qmat[qi][None, :]
-            ed = np.sqrt((diff * diff).sum(axis=1))
-            kk2 = min(k, len(cand))
-            order_q = sorted(range(len(cand)), key=lambda i: (ed[i], ids[cand[i]]))[:kk2]
-            for i in order_q:
-                rows.append((qids[qi], ids[cand[i]], float(ed[i])))
-        return pd.DataFrame(rows, columns=["qid", id_col, dist_col])
+        return _mmap_rerank(
+            shard_paths, id_col, rerank_mmap_dir, ids, dh, qids, qmat, k, fetch_k, dist_col
+        )
     kk = min(k, n)
     # Hamming distances live in [0, D]: one bincount pass finds the k-th
     # smallest value per query, a boolean gather takes the <= threshold
@@ -888,9 +822,6 @@ def bq_replica_serve(
         out_i.extend(ids[c] for c in order_q)
         out_d.extend(float(row[c]) for c in order_q)
     return pd.DataFrame({"qid": out_q, id_col: out_i, dist_col: out_d})
-
-
-_PQ_REPLICA_CACHE: dict = {}
 
 
 def _train_pq_books(np, mat, num_subspaces: int, num_centroids: int,
@@ -967,6 +898,32 @@ def _pq_encode(np, mat, books):
     return codes
 
 
+def _pq_resolve(shard_paths: list[str], num_subspaces: int, num_centroids: int, id_col: str):
+    """The PQ code tier of a shard set through the shard tier: (stat_key,
+    id-sorted ids, codes uint8 (N, M), books), or None when the shards
+    hold no rows."""
+    if num_centroids > 256:
+        # codes are stored uint8; a larger codebook would silently wrap
+        # modulo 256 and produce wrong ADC distances (round-6 ADVICE)
+        raise ValueError(
+            f"num_centroids={num_centroids} exceeds the uint8 code range (max 256)"
+        )
+
+    def build(paths, stat_key):
+        import numpy as np
+
+        loaded = shard_tier.load_vectors(paths, id_col, "float32", sort_ids=True)
+        if loaded is None:
+            return None
+        ids, mat = loaded
+        books, codes = _train_pq_books(np, mat, num_subspaces, num_centroids)
+        return (stat_key, ids, codes, books)
+
+    return shard_tier.resolve(
+        "pq", shard_paths, (id_col, num_subspaces, num_centroids), build
+    )
+
+
 def pq_replica_serve(
     shard_paths: list[str],
     queries_pd,
@@ -1001,44 +958,12 @@ def pq_replica_serve(
 
     Distances are sqrt(ADC sums) — the asymmetric approximation of true
     L2 (quantization error on the corpus side only); ties break by id."""
-    import os as _os
-
     import numpy as np
     import pandas as pd
-    import pyarrow.parquet as _pq
 
-    if num_centroids > 256:
-        # codes are stored uint8; a larger codebook would silently wrap
-        # modulo 256 and produce wrong ADC distances (round-6 ADVICE)
-        raise ValueError(
-            f"num_centroids={num_centroids} exceeds the uint8 code range (max 256)"
-        )
-    paths = tuple(sorted(shard_paths))
-    stat_key = tuple((p, st.st_mtime_ns, st.st_size) for p, st in ((p, _os.stat(p)) for p in paths))
-    ck = (paths, id_col, num_subspaces, num_centroids)
-    entry = _PQ_REPLICA_CACHE.get(ck)
-    if entry is None or entry[0] != stat_key:
-        ids_parts, mat_parts = [], []
-        for p in paths:
-            names = _pq.read_schema(p).names
-            vec_field = "embedding" if "embedding" in names else names[1]
-            tbl = _pq.read_table(p, columns=[id_col, vec_field])
-            if tbl.num_rows == 0:
-                continue
-            ids_parts.append(tbl.column(id_col).to_numpy(zero_copy_only=False))
-            flat = np.concatenate(
-                [c.flatten().to_numpy(zero_copy_only=False) for c in tbl.column(vec_field).chunks]
-            )
-            mat_parts.append(flat.reshape(len(ids_parts[-1]), -1).astype(np.float32))
-        if not ids_parts:
-            return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
-        ids = np.concatenate(ids_parts)
-        mat = np.concatenate(mat_parts)
-        order = np.argsort(ids, kind="stable")
-        ids, mat = ids[order], mat[order]
-        books, codes = _train_pq_books(np, mat, num_subspaces, num_centroids)
-        entry = (stat_key, ids, codes, books)
-        _PQ_REPLICA_CACHE[ck] = entry
+    entry = _pq_resolve(shard_paths, num_subspaces, num_centroids, id_col)
+    if entry is None:
+        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
     _, ids, codes, books = entry
     if len(queries_pd) == 0:
         return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
@@ -1083,36 +1008,10 @@ def pq_replica_serve(
     np.sqrt(d2, out=d2)
 
     if fetch_k is not None and rerank_mmap_dir is not None:
-        from custom_python_vectordb_spark.operators.knn import _build_mmap_replica
-
-        built = _build_mmap_replica(paths, stat_key, rerank_mmap_dir, id_col, "float64")
-        m_ids, m_mat, _n, _s = built
-        pk = (paths, rerank_mmap_dir, stat_key)
-        pos = _SQ_POS_CACHE.get(pk)
-        if pos is None:
-            _SQ_POS_CACHE.clear()
-            pos = {
-                int(v) if isinstance(v, np.integer) else v: i
-                for i, v in enumerate(m_ids)
-            }
-            _SQ_POS_CACHE[pk] = pos
-        ck2 = min(fetch_k, n)
-        cidx = np.argpartition(d2, ck2 - 1, axis=1)[:, :ck2]
-        rows = []
-        qmat64 = qmat.astype(np.float64)
-        for qi in range(nq):
-            cand = cidx[qi]
-            gathered = np.asarray(
-                m_mat[[pos[int(ids[c]) if isinstance(ids[c], np.integer) else ids[c]] for c in cand]],
-                dtype=np.float64,
-            )
-            diff = gathered - qmat64[qi][None, :]
-            ed = np.sqrt((diff * diff).sum(axis=1))
-            kk2 = min(k, len(cand))
-            order_q = sorted(range(len(cand)), key=lambda i: (ed[i], ids[cand[i]]))[:kk2]
-            for i in order_q:
-                rows.append((qids[qi], ids[cand[i]], float(ed[i])))
-        return pd.DataFrame(rows, columns=["qid", id_col, dist_col])
+        return _mmap_rerank(
+            shard_paths, id_col, rerank_mmap_dir, ids, d2, qids,
+            qmat.astype(np.float64), k, fetch_k, dist_col,
+        )
     kk = min(k, n)
     sidx = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
     sel = np.take_along_axis(d2, sidx, axis=1)
@@ -1164,11 +1063,11 @@ def _topk_tie_aware(np, ids, d, k: int):
     return ids[order], d[order].astype(np.float64)
 
 
-class SqReplicaHandle:
+class SqReplicaHandle(_ArraySnapshot):
     """Pre-resolved single-query path over the SQ uint8 tier (the
     quantized sibling of ``IvfReplicaHandle``/``BqReplicaHandle``; same
-    refresh() staleness contract). Resolution goes through
-    :func:`sq_replica_serve`'s own cache, so the code tier and model are
+    refresh() staleness contract). It resolves the same shard-tier entry
+    as :func:`sq_replica_serve`, so the code tier and model are
     bit-identical to the batch path's.
 
     r12 two-phase scan: the coarse pass widens uint8→float32 (half the
@@ -1190,9 +1089,11 @@ class SqReplicaHandle:
     (~1.2 ms), with this tier serving batched/offline reads."""
 
     __slots__ = (
-        "_paths", "_id_col", "_np", "_chunk", "ids", "codes", "minv", "s",
-        "s2", "wa2", "_wa2_32", "_err32",
+        "_paths", "_id_col", "_np", "_chunk", "_stat_key", "ids", "codes", "minv",
+        "s", "s2", "wa2", "_wa2_32", "_err32",
     )
+    _SNAP_NAME, _SNAP_ARRAYS = "sq_index", ("ids", "codes", "minv", "s", "wa2")
+    _SNAP_FIELDS = ("_id_col", "_chunk")
 
     def __init__(self, shard_paths: list[str], *, id_col: str = "vec_id", chunk_rows: int = 1024):
         import numpy as np
@@ -1208,14 +1109,10 @@ class SqReplicaHandle:
         self.refresh()
 
     def refresh(self) -> None:
-        import pandas as pd
-
-        np = self._np
-        sq_replica_serve(
-            self._paths, pd.DataFrame({"qid": [], "qvec": []}), k=1, id_col=self._id_col
-        )
-        entry = _SQ_REPLICA_CACHE[(tuple(sorted(self._paths)), self._id_col)]
-        _, self.ids, self.codes, self.minv, self.s, self.wa2 = entry
+        entry = _sq_resolve(self._paths, self._id_col)
+        if entry is None:
+            raise ValueError("empty shard set")
+        self._stat_key, self.ids, self.codes, self.minv, self.s, self.wa2 = entry
         self._finish_derived()
 
     def _finish_derived(self) -> None:
@@ -1228,56 +1125,6 @@ class SqReplicaHandle:
         # dimension-dependent certified coefficient (see _SQ_F32_MARGIN)
         d_dim = int(self.codes.shape[1]) if self.codes.ndim == 2 else 0
         self._err32 = np.float32(_SQ_F32_MARGIN * (d_dim + 8) * 2.0 ** -24)
-
-    def save_index(self, out_dir: str) -> None:
-        """Persist the SQ tier (ids, uint8 codes, per-dim min/scale, row
-        norms) as ``sq_index.npz`` — warm-start family contract (see
-        ``IvfReplicaHandle.save_index``); derived certified-scan fields
-        are recomputed at load through the same helper refresh() uses."""
-        import json
-        import os as _os
-
-        np = self._np
-        _os.makedirs(out_dir, exist_ok=True)
-        meta = {
-            "id_col": self._id_col, "chunk": int(self._chunk),
-            "stat_key": [
-                [p, _os.stat(p).st_mtime_ns, _os.stat(p).st_size]
-                for p in sorted(self._paths)
-            ],
-        }
-        # unique tmp per process: concurrent savers must not share one
-        # tmp path (see IvfReplicaHandle.save_index)
-        tmp = _os.path.join(out_dir, f"sq_index.npz.tmp.{_os.getpid()}")
-        with open(tmp, "wb") as fh:
-            np.savez(fh, ids=self.ids, codes=self.codes, minv=self.minv,
-                     s=self.s, wa2=self.wa2,
-                     meta=np.frombuffer(json.dumps(meta).encode(), dtype=np.uint8))
-        _os.replace(tmp, _os.path.join(out_dir, "sq_index.npz"))
-
-    @classmethod
-    def load_index(cls, in_dir: str):
-        """Reconstitute from :meth:`save_index` output without reading
-        parquet; ``refresh()`` still works (shard set preserved).
-        Freshness vs live shards is the caller's job (``meta['stat_key']``)."""
-        import json
-        import os as _os
-
-        import numpy as np
-
-        with np.load(
-            _os.path.join(in_dir, "sq_index.npz"), allow_pickle=True
-        ) as z:
-            meta = json.loads(bytes(z["meta"].tobytes()).decode())
-            ids, codes, minv, s, wa2 = z["ids"], z["codes"], z["minv"], z["s"], z["wa2"]
-        self = object.__new__(cls)
-        self._np = np
-        self._paths = [p for p, _m, _s in meta["stat_key"]]
-        self._id_col = meta["id_col"]
-        self._chunk = meta["chunk"]
-        self.ids, self.codes, self.minv, self.s, self.wa2 = ids, codes, minv, s, wa2
-        self._finish_derived()
-        return self
 
     def _exact_rows(self, rows, qw, wb2: float):
         """Float64 L2-expansion distances for a row subset, recomputed IN
@@ -1379,11 +1226,11 @@ class SqReplicaHandle:
         return _topk_tie_aware(np, self.ids[cand], self._exact_rows(cand, qw, wb2), k)
 
 
-class PqReplicaHandle:
+class PqReplicaHandle(_ArraySnapshot):
     """Pre-resolved single-query path over the PQ code tier (ADC:
-    per-subspace LUT + code gathers). Same refresh() contract; resolution
-    through :func:`pq_replica_serve`'s cache so codebooks/codes match the
-    batch path bit-for-bit.
+    per-subspace LUT + code gathers). Same refresh() contract; it resolves
+    the same shard-tier entry as :func:`pq_replica_serve`, so
+    codebooks/codes match the batch path bit-for-bit.
 
     Latency economics (measured at 100K×128, M=16): ~4 ms/query — M/2
     fancy-index gathers over FUSED uint16 pair codes per call (r11: two
@@ -1396,8 +1243,9 @@ class PqReplicaHandle:
     this is a capacity tier; bench publishes its batch row only."""
 
     __slots__ = (
-        "_paths", "_kw", "_np", "ids", "codes_t", "books", "books_sq", "_fused",
+        "_paths", "_kw", "_np", "_stat_key", "ids", "codes_t", "books", "books_sq", "_fused",
     )
+    _SNAP_NAME, _SNAP_ARRAYS, _SNAP_FIELDS = "pq_index", ("ids", "codes_t", "books"), ("_kw",)
 
     def __init__(
         self,
@@ -1415,17 +1263,11 @@ class PqReplicaHandle:
         self.refresh()
 
     def refresh(self) -> None:
-        import pandas as pd
-
-        pq_replica_serve(
-            self._paths, pd.DataFrame({"qid": [], "qvec": []}), k=1, **self._kw
-        )
-        ck = (
-            tuple(sorted(self._paths)), self._kw["id_col"],
-            self._kw["num_subspaces"], self._kw["num_centroids"],
-        )
         np = self._np
-        _, self.ids, codes, self.books = _PQ_REPLICA_CACHE[ck]
+        entry = _pq_resolve(self._paths, **self._kw)
+        if entry is None:
+            raise ValueError("empty shard set")
+        self._stat_key, self.ids, codes, self.books = entry
         # subspace-major contiguous copy: the ADC loop gathers one
         # subspace's column per pass, and a strided (n, M) column walk
         # measured 4-5× slower than contiguous rows
@@ -1448,55 +1290,6 @@ class PqReplicaHandle:
             )
         else:
             self._fused = None
-
-    def save_index(self, out_dir: str) -> None:
-        """Persist the PQ code tier (ids, subspace-major uint8 codes,
-        codebooks) as ``pq_index.npz`` — completing the warm-start family
-        contract across every serving handle (IVF / IVF-PQ / SQ / BQ /
-        PQ; see ``IvfReplicaHandle.save_index``). The shard stat key
-        rides along for the caller's freshness check."""
-        import json
-        import os as _os
-
-        np = self._np
-        _os.makedirs(out_dir, exist_ok=True)
-        meta = {
-            "kw": dict(self._kw),
-            "stat_key": [
-                [p, _os.stat(p).st_mtime_ns, _os.stat(p).st_size]
-                for p in sorted(self._paths)
-            ],
-        }
-        # unique tmp per process: concurrent savers must not share one
-        # tmp path (see IvfReplicaHandle.save_index)
-        tmp = _os.path.join(out_dir, f"pq_index.npz.tmp.{_os.getpid()}")
-        with open(tmp, "wb") as fh:
-            np.savez(fh, ids=self.ids, codes_t=self.codes_t, books=self.books,
-                     meta=np.frombuffer(json.dumps(meta).encode(), dtype=np.uint8))
-        _os.replace(tmp, _os.path.join(out_dir, "pq_index.npz"))
-
-    @classmethod
-    def load_index(cls, in_dir: str):
-        """Reconstitute from :meth:`save_index` output without reading
-        parquet; ``refresh()`` still works (shard set preserved).
-        Freshness vs live shards is the caller's job (``meta['stat_key']``)."""
-        import json
-        import os as _os
-
-        import numpy as np
-
-        with np.load(
-            _os.path.join(in_dir, "pq_index.npz"), allow_pickle=True
-        ) as z:
-            meta = json.loads(bytes(z["meta"].tobytes()).decode())
-            ids, codes_t, books = z["ids"], z["codes_t"], z["books"]
-        self = object.__new__(cls)
-        self._np = np
-        self._paths = [p for p, _m, _s in meta["stat_key"]]
-        self._kw = meta["kw"]
-        self.ids, self.codes_t, self.books = ids, codes_t, books
-        self._finish_derived()
-        return self
 
     def search_one(self, qvec, k: int = 10):
         """Coarse ADC top-k for ONE query: one (M, K) LUT, then M/2

@@ -422,7 +422,8 @@ def _routes(
     # query-time knob (free within bounds, like hnswlib's ef); n_cells and
     # assign_r key a k-means retrain + corpus re-layout, so an arbitrary
     # request-supplied value lets a client force unbounded rebuild CPU
-    # (the 4-entry LRU caps memory, not retrains — r13, ADVICE low).
+    # (the shard tier's byte budget caps memory, not retrains — r13,
+    # ADVICE low).
     # Operators extend the set at make_server(ann_geometries=...).
     if ann_geometries is None:
         ann_geometries = frozenset({(64, 2)})
@@ -1578,7 +1579,7 @@ def main() -> None:
 
     --workers N (N > 1): spawn N share-nothing worker processes all bound
       to the SAME port via SO_REUSEPORT (kernel per-connection load
-      balancing), to use N cores. Each worker owns its replica caches;
+      balancing), to use N cores. Each worker owns its shard tier;
       Parquet shards are the shared truth, so coherence is the same
       stat-key contract as one process.
     --serving-only: skip the Spark session. The in-process replica routes

@@ -335,3 +335,45 @@ def test_replica_cache_coherence_same_size_rewrite(tmp_path):
     # touching the shard restores coherence
     os.utime(shard)
     assert top1() == 10
+
+
+def test_replica_mmap_rebuild_leaves_live_map_on_old_rows(tmp_path):
+    """An mmap-tier rebuild after a shard mutation writes new files under
+    tmp names and renames them into place: an array mapped before the
+    rebuild (a live handle, or another worker sharing the directory)
+    keeps reading the old rows instead of a file rewritten under it."""
+    import glob
+    import os
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from custom_python_vectordb_spark.operators.knn import knn_replica_serve
+
+    shard = str(tmp_path / "s.parquet")
+
+    def write(mat):
+        pq.write_table(
+            pa.table({"vec_id": np.arange(len(mat)), "embedding": list(mat)}),
+            shard, compression="none",
+        )
+
+    old = np.random.default_rng(1).standard_normal((50, 4))
+    write(old)
+    mm = str(tmp_path / "mm")
+    qpd = pd.DataFrame({"qid": [0], "qvec": [old[3]]})
+
+    def top1():
+        out = knn_replica_serve([shard], qpd, k=1, metric="l2", mmap_dir=mm)
+        return int(out["vec_id"].iloc[0])
+
+    assert top1() == 3
+    (mat_file,) = glob.glob(os.path.join(mm, "replica_*.mat.npy"))
+    live = np.load(mat_file, mmap_mode="r")
+    write(old[::-1].copy())
+    st = os.stat(shard)
+    os.utime(shard, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert top1() == 46  # the rebuild serves the new rows
+    assert np.array_equal(np.asarray(live), old)

@@ -297,11 +297,9 @@ def test_ivf_resolve_grouping_matches_boolean_scan(tmp_path):
                 pa.array(mat.reshape(-1).astype(np.float64)), d
             ),
         }), p)
-        entry = _ivf_resolve(
-            [p], id_col="vec_id", dtype="float64", metric="l2",
-            n_cells=n_cells, assign_r=assign_r, train_sample_cap=cap,
-        )
-        _, cent, cell_ids, cell_mats, cell_rows = entry
+        # params ordered as partitioned._IVF_KW
+        entry = _ivf_resolve([p], ("vec_id", "float64", "l2", n_cells, assign_r, cap, 5))
+        _, cent, cell_ids, cell_mats, cell_rows, *_ = entry
         c = len(cell_ids)
         # reconstruct the id-sorted matrix the builder worked from
         order = np.argsort(ids, kind="stable")
@@ -392,12 +390,10 @@ def test_ivfpq_handle_coarse_parity_and_rerank(tmp_path):
         assert np.allclose(d, ex["dist"].to_numpy(), atol=1e-6)
 
     # (c) determinism across fresh builds — force a genuine retrain by
-    # emptying the LRU cache first (entries are otherwise shared by key)
-    from custom_python_vectordb_spark.operators.partitioned import (
-        _IVFPQ_REPLICA_CACHE,
-    )
+    # emptying the shard tier first (entries are otherwise shared by key)
+    from custom_python_vectordb_spark.operators import shard_tier
 
-    _IVFPQ_REPLICA_CACHE.clear()
+    shard_tier.clear()
     h2 = IvfPqReplicaHandle([shard], **kw)
     for q in qv[:2]:
         a_ids, a_d = h.search_one(q, 10)
@@ -405,33 +401,53 @@ def test_ivfpq_handle_coarse_parity_and_rerank(tmp_path):
         assert np.array_equal(a_ids, b_ids) and np.array_equal(a_d, b_d)
 
 
-def test_ivfpq_cache_bounded_lru():
+def test_ivfpq_cache_bounded_lru(monkeypatch):
     """r12 (ADVICE r11): the IVF-PQ replica cache holds SEVERAL live
     indexes — alternating handles over two collections (or two build-param
-    sets) must NOT retrain per construction. Eviction is bounded-LRU, not
-    clear-the-world."""
+    sets) must NOT retrain per construction. Eviction is least-recently-
+    used under the shard tier's byte budget, not clear-the-world."""
     from custom_python_vectordb_spark.operators import partitioned as P
+    from custom_python_vectordb_spark.operators import shard_tier
 
     shard = "/root/testdata/sf0.001/embeddings.parquet"
-    P._IVFPQ_REPLICA_CACHE.clear()
+    size = {}
+    for nc in (4, 8, 12, 16, 20):
+        shard_tier.clear()
+        P.IvfPqReplicaHandle([shard], n_cells=nc, nprobe=2, num_subspaces=8)
+        size[nc] = shard_tier._resident
+    # room for four entries, not for all five
+    budget = max(sum(size[nc] for nc in (4, 8, 12, 16)),
+                 sum(size[nc] for nc in (8, 12, 16, 20)))
+    assert budget < sum(size.values())
+    monkeypatch.setattr(shard_tier, "BUDGET_BYTES", budget)
+    builds = []
+    real_load = shard_tier.load_vectors
+
+    def counting_load(*a, **kw):
+        builds.append(a)
+        return real_load(*a, **kw)
+
+    monkeypatch.setattr(shard_tier, "load_vectors", counting_load)
+    shard_tier.clear()
     P.IvfPqReplicaHandle([shard], n_cells=4, nprobe=2, num_subspaces=8)
     P.IvfPqReplicaHandle([shard], n_cells=8, nprobe=2, num_subspaces=8)
-    assert len(P._IVFPQ_REPLICA_CACHE) == 2
-    entries = {k: id(v) for k, v in P._IVFPQ_REPLICA_CACHE.items()}
+    assert len(builds) == 2
     # re-constructing either handle reuses the cached entry (no retrain)
     P.IvfPqReplicaHandle([shard], n_cells=4, nprobe=2, num_subspaces=8)
     P.IvfPqReplicaHandle([shard], n_cells=8, nprobe=2, num_subspaces=8)
-    assert {k: id(v) for k, v in P._IVFPQ_REPLICA_CACHE.items()} == entries
-    # filling past the cap evicts the LEAST-recently-used key only
-    first_key = next(iter(P._IVFPQ_REPLICA_CACHE))  # oldest touch = n_cells=4
+    assert len(builds) == 2
+    # filling past the budget evicts the LEAST-recently-used key only
     for nc in (12, 16, 20):
         P.IvfPqReplicaHandle([shard], n_cells=nc, nprobe=2, num_subspaces=8)
-    assert len(P._IVFPQ_REPLICA_CACHE) == P._IVFPQ_CACHE_CAP
-    assert first_key not in P._IVFPQ_REPLICA_CACHE
+    assert len(builds) == 5
     # the most-recent keys survive
-    live_ncells = {k[2] for k in P._IVFPQ_REPLICA_CACHE}
-    assert live_ncells == {8, 12, 16, 20}
-    P._IVFPQ_REPLICA_CACHE.clear()
+    for nc in (8, 12, 16, 20):
+        P.IvfPqReplicaHandle([shard], n_cells=nc, nprobe=2, num_subspaces=8)
+    assert len(builds) == 5
+    # the oldest touch (n_cells=4) was evicted: it retrains
+    P.IvfPqReplicaHandle([shard], n_cells=4, nprobe=2, num_subspaces=8)
+    assert len(builds) == 6
+    shard_tier.clear()
 
 
 def test_ivf_handle_concurrent_refresh_never_tears(tmp_path):
@@ -679,6 +695,7 @@ def test_ivf_handle_warm_start_and_staleness(tmp_path, monkeypatch):
     import pyarrow.parquet as pq
 
     import custom_python_vectordb_spark.operators.partitioned as P
+    from custom_python_vectordb_spark.operators import shard_tier
 
     shard = str(tmp_path / "emb.parquet")
     shutil.copyfile("/root/testdata/sf0.01/embeddings.parquet", shard)
@@ -694,13 +711,12 @@ def test_ivf_handle_warm_start_and_staleness(tmp_path, monkeypatch):
         os.path.join(idx, snaps[0], "ivf_index.npz"))
 
     # "new worker boots": in-process caches emptied, parquet reads banned
-    P._IVF_HANDLE_CACHE.clear()
-    P._IVF_REPLICA_CACHE.clear()
+    shard_tier.clear()
 
     def _no_parquet(*a, **k):
         raise AssertionError("warm start must not read parquet")
 
-    monkeypatch.setattr(P, "_load_shards_id_sorted", _no_parquet)
+    monkeypatch.setattr(shard_tier, "load_vectors", _no_parquet)
     h2 = P.ivf_handle_for([shard], **kw)
     for q, (wi, wd) in zip(qv, want):
         gi, gd = h2.search_one(q, 10)
@@ -708,8 +724,7 @@ def test_ivf_handle_warm_start_and_staleness(tmp_path, monkeypatch):
 
     # stale shards: snapshot stat key no longer matches → loader must NOT
     # trust it (here the banned parquet read proves the rebuild attempt)
-    P._IVF_HANDLE_CACHE.clear()
-    P._IVF_REPLICA_CACHE.clear()
+    shard_tier.clear()
     st = os.stat(shard)
     os.utime(shard, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
     import pytest as _pytest
@@ -836,3 +851,36 @@ def test_snapshot_rest_route(spark, tmp_path):
             assert e.code == 404
     finally:
         srv.shutdown()
+
+
+def test_ivf_probe_of_empty_cells_widens_to_k(tmp_path):
+    """With assign_r=1, k-means can leave cells empty: the first rows are
+    one repeated vector, so the duplicate seed centroids never win a row
+    and stay where a query at that vector probes them first. search_one
+    (and the batch path, same rule) must keep probing nearest-first until
+    k rows are seen instead of returning fewer than k."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from custom_python_vectordb_spark.operators.partitioned import (
+        IvfReplicaHandle,
+        ivf_replica_serve,
+    )
+
+    rng = np.random.default_rng(5)
+    far = np.zeros(8)
+    far[0] = 10.0
+    mat = np.vstack([np.tile(far, (16, 1)), rng.standard_normal((400, 8))])
+    p = str(tmp_path / "c.parquet")
+    pq.write_table(pa.table({"vec_id": np.arange(len(mat)), "embedding": list(mat)}), p)
+    kw = dict(n_cells=16, nprobe=2, assign_r=1, metric="l2")
+    h = IvfReplicaHandle([p], **kw)
+    ids, dists = h.search_one(far, k=20)
+    assert len(ids) == 20
+    assert set(range(16)) <= set(int(i) for i in ids)
+    assert list(dists) == sorted(dists)
+    batch = ivf_replica_serve([p], pd.DataFrame({"qid": [0], "qvec": [far]}), k=20, **kw)
+    assert list(batch["vec_id"]) == list(ids)
+    assert np.allclose(batch["dist"].to_numpy(), dists)

@@ -319,8 +319,9 @@ def test_pq_replica_build_deterministic_and_rerank_exact(spark, sf_small, tmp_pa
     import numpy as np
 
     from custom_python_vectordb_spark.operators.knn import knn_replica_serve
+    from custom_python_vectordb_spark.operators import shard_tier
     from custom_python_vectordb_spark.operators.quantization import (
-        _PQ_REPLICA_CACHE,
+        PqReplicaHandle,
         pq_replica_serve,
     )
     from custom_python_vectordb_spark.sources.catalog import load_table
@@ -330,10 +331,10 @@ def test_pq_replica_build_deterministic_and_rerank_exact(spark, sf_small, tmp_pa
     paths = [f"{sf_small}/embeddings.parquet"]
 
     first = pq_replica_serve(paths, qpd, k=10, num_subspaces=8)
-    codes_a = next(iter(_PQ_REPLICA_CACHE.values()))[2].copy()
-    _PQ_REPLICA_CACHE.clear()
+    codes_a = PqReplicaHandle(paths, num_subspaces=8).codes_t.copy()
+    shard_tier.clear()
     second = pq_replica_serve(paths, qpd, k=10, num_subspaces=8)
-    codes_b = next(iter(_PQ_REPLICA_CACHE.values()))[2]
+    codes_b = PqReplicaHandle(paths, num_subspaces=8).codes_t
     assert np.array_equal(codes_a, codes_b)
     assert first.equals(second)
     for qid, grp in first.groupby("qid"):
@@ -610,8 +611,6 @@ def test_bq_sq_handle_save_load_parity(tmp_path):
     the warm-start family contract. Loaded snapshots must return
     bit-identical results (the SQ certified two-phase scan included),
     record the shard stat key, and keep refresh() working."""
-    import json
-
     import numpy as np
     import pyarrow.parquet as pq
 
@@ -662,8 +661,8 @@ def test_bq_sq_handle_save_load_parity(tmp_path):
         assert np.array_equal(a_i, b_i) and np.array_equal(a_d, b_d)
 
     # all three snapshots carry the stat-key freshness handle
-    for f, key in ((db, "bq_index.npz"), (ds, "sq_index.npz"),
-                   (dp, "pq_index.npz")):
-        with np.load(f"{f}/{key}", allow_pickle=True) as z:
-            meta = json.loads(bytes(z["meta"].tobytes()).decode())
+    from custom_python_vectordb_spark.operators import shard_tier
+
+    for f, key in ((db, "bq_index"), (ds, "sq_index"), (dp, "pq_index")):
+        _arrays, meta = shard_tier.load(f, key)
         assert meta["stat_key"][0][0] == shard

@@ -597,7 +597,7 @@ def test_ann_route_warm_start_index_cache(spark, tmp_path):
     IVF index; a 'rebooted worker' (fresh server process state simulated
     by emptying the in-process handle caches) serves the SAME results
     from the snapshot without re-reading parquet."""
-    import custom_python_vectordb_spark.operators.partitioned as P
+    from custom_python_vectordb_spark.operators import shard_tier
 
     idx = str(tmp_path / "idxcache")
     srv, port = serve_background(
@@ -622,18 +622,17 @@ def test_ann_route_warm_start_index_cache(spark, tmp_path):
 
         # worker reboot: caches empty, parquet reads banned — the snapshot
         # must carry the whole serve
-        P._IVF_HANDLE_CACHE.clear()
-        P._IVF_REPLICA_CACHE.clear()
-        real_loader = P._load_shards_id_sorted
+        shard_tier.clear()
+        real_loader = shard_tier.load_vectors
 
         def _no_parquet(*a, **k):
             raise AssertionError("warm start must not read parquet")
 
-        P._load_shards_id_sorted = _no_parquet
+        shard_tier.load_vectors = _no_parquet
         try:
             status, again = call(port, "POST", "/collections/kb/query", body)
         finally:
-            P._load_shards_id_sorted = real_loader
+            shard_tier.load_vectors = real_loader
         assert status == 200 and again["results"] == first["results"]
     finally:
         srv.shutdown()

@@ -152,9 +152,9 @@ def probe_10m() -> int:
     for q, v in zip(exact["qid"], exact["vec_id"]):
         truth.setdefault(q, set()).add(v)
     # release the 5 GB float replica before the IVF-PQ build peaks
-    from custom_python_vectordb_spark.operators.knn import _REPLICA_CACHE
+    from custom_python_vectordb_spark.operators import shard_tier
 
-    _REPLICA_CACHE.clear()
+    shard_tier.clear()
 
     # 1M residual IVF-PQ build, SAME process — the build-alpha anchor
     # same recipe at 1M (M=32, default cap) so the decade exponent
