@@ -22,7 +22,8 @@ from custom_python_vectordb_spark.functions.embeddings import embed_column, mock
 from custom_python_vectordb_spark.functions.filters import Filter
 from custom_python_vectordb_spark.operators import mutations
 from custom_python_vectordb_spark.operators.bm25 import bm25_topk, hybrid_search
-from custom_python_vectordb_spark.operators.knn import knn
+from custom_python_vectordb_spark.operators.knn import ReplicaCapacityError, knn
+from custom_python_vectordb_spark.operators.shard_tier import EmptyShardSetError
 from custom_python_vectordb_spark.sources.warehouse import Warehouse
 from custom_python_vectordb_spark.functions.local_relation import local_df
 
@@ -216,6 +217,37 @@ class Collection:
             filter_cond=cond, payload_cols=payload,
         )
 
+    def _embeddings(self, query_texts, query_embeddings) -> list:
+        """The query vectors of a texts-XOR-embeddings call; texts are
+        embedded with the mock provider at the collection's dimension."""
+        if (query_texts is None) == (query_embeddings is None):
+            raise ValueError("provide exactly one of query_texts / query_embeddings")
+        if query_embeddings is None:
+            return [mock_embed_one(t, self.dimensions).tolist() for t in query_texts]
+        return query_embeddings
+
+    def _serve(self, serve, fallback, empty):
+        """The one preamble of every ``*_serve`` method: ``serve(paths)``
+        over the collection's shard files, except that
+        - active deletion vectors (raw shards would resurrect the deleted
+          rows) and a replica above its byte budget
+          (``ReplicaCapacityError``) answer with ``fallback()``, a plan or
+          path that is correct at any size (round-4 ADVICE #2);
+        - a collection with no shard files, or whose files hold no rows
+          (``EmptyShardSetError``), answers ``empty``."""
+        try:
+            paths = self.db.warehouse.shard_paths(self.name)
+        except RuntimeError:
+            return fallback()
+        if not paths:
+            return empty
+        try:
+            return serve(paths)
+        except ReplicaCapacityError:
+            return fallback()
+        except EmptyShardSetError:
+            return empty
+
     def query_serve(
         self,
         query_texts: list[str] | None = None,
@@ -226,8 +258,10 @@ class Collection:
         where: dict[str, Any] | Filter | None = None,
     ) -> list[list[dict]]:
         """Serving twin of :meth:`query`: same (texts XOR embeddings, k,
-        metric, where) contract and IDENTICAL results (asserted in tests),
-        but answered by the in-process shard replica
+        metric, where) contract and the same (dist, id) rank rule, so the
+        same ids in the same order wherever the two engines' distances
+        agree (asserted in tests, boundary ties included), but answered by
+        the in-process shard replica
         (``operators/knn.knn_replica_serve``) instead of a scheduled plan —
         milliseconds instead of a job round-trip, for collections whose
         decoded vectors fit ``max_bytes``. ``where`` (a dict or a
@@ -243,18 +277,12 @@ class Collection:
         import pandas as pd
 
         from custom_python_vectordb_spark.operators.knn import (
-            ReplicaCapacityError,
             knn_replica_serve,
             replica_metadata,
             resolve_replica,
         )
 
-        if (query_texts is None) == (query_embeddings is None):
-            raise ValueError("provide exactly one of query_texts / query_embeddings")
-        if query_embeddings is None:
-            query_embeddings = [
-                mock_embed_one(t, self.dimensions).tolist() for t in query_texts
-            ]
+        embs = self._embeddings(query_texts, query_embeddings)
         filt: Filter | None = None
         if where is not None:
             filt = where if isinstance(where, Filter) else Filter.from_dict(where)
@@ -264,35 +292,21 @@ class Collection:
                     "from_dict / combinators); raw-Column filters need query()"
                 )
         qpd = pd.DataFrame(
-            {
-                "qid": range(len(query_embeddings)),
-                "qvec": [[float(x) for x in v] for v in query_embeddings],
-            }
+            {"qid": range(len(embs)), "qvec": [[float(x) for x in v] for v in embs]}
         )
-        def _declarative() -> list[list[dict]]:
+
+        def declarative() -> list[list[dict]]:
             rows = (
-                self.query(
-                    query_embeddings=query_embeddings, n_results=n_results,
-                    metric=metric, where=where,
-                )
+                self.query(query_embeddings=embs, n_results=n_results, metric=metric, where=where)
                 .select("qid", "id", "dist")
                 .collect()
             )
-            out = [[] for _ in query_embeddings]
+            out = [[] for _ in embs]
             for r in rows:
                 out[int(r["qid"])].append({"id": r["id"], "dist": float(r["dist"])})
             return out
 
-        try:
-            paths = self.db.warehouse.shard_paths(self.name)
-        except RuntimeError:
-            # active deletion vectors: raw shard files would resurrect the
-            # deleted rows, so serve this batch from the declarative exact
-            # plan (correct, one scheduled job) until a write materializes
-            return _declarative()
-        if not paths:  # created-but-empty collection
-            return [[] for _ in query_embeddings]
-        try:
+        def serve(paths) -> list[list[dict]]:
             mask = None
             if filt is not None:
                 rep = resolve_replica(paths, id_col="id", max_bytes=max_bytes)
@@ -305,15 +319,12 @@ class Collection:
                 paths, qpd, k=n_results, metric=metric, id_col="id", max_bytes=max_bytes,
                 mask=mask,
             )
-        except ReplicaCapacityError:
-            # corpus too large for the in-process replica: the declarative
-            # plan works at any size (round-4 ADVICE #2) — mirror the
-            # deletion-vector fallback instead of surfacing HTTP 400
-            return _declarative()
-        out: list[list[dict]] = [[] for _ in query_embeddings]
-        for qid, vid, dist in zip(res["qid"], res["id"], res["dist"]):
-            out[int(qid)].append({"id": vid, "dist": float(dist)})
-        return out
+            out: list[list[dict]] = [[] for _ in embs]
+            for qid, vid, dist in zip(res["qid"], res["id"], res["dist"]):
+                out[int(qid)].append({"id": vid, "dist": float(dist)})
+            return out
+
+        return self._serve(serve, declarative, [[] for _ in embs])
 
     def ann_serve(
         self,
@@ -338,8 +349,8 @@ class Collection:
         r12: serves through the stat-checked shard tier
         (``partitioned.ivf_handle_for`` + ``search_one`` per query)
         instead of the batch ``ivf_replica_serve`` — same index, same
-        ranking (handle/batch parity is test-asserted), but the
-        per-request GIL-held plumbing drops ~1.8 ms → ~0.05 ms (under the
+        probe and rank rules, but the per-request GIL-held plumbing drops
+        ~1.8 ms → ~0.05 ms (under the
         earlier thread-per-connection server the batch path convoyed 8
         handler threads below single-stream throughput). Freshness
         contract unchanged: the handle refreshes
@@ -350,21 +361,9 @@ class Collection:
             ivf_handle_for,
         )
 
-        if (query_texts is None) == (query_embeddings is None):
-            raise ValueError("provide exactly one of query_texts / query_embeddings")
-        if query_embeddings is None:
-            query_embeddings = [
-                mock_embed_one(t, self.dimensions).tolist() for t in query_texts
-            ]
-        try:
-            paths = self.db.warehouse.shard_paths(self.name)
-        except RuntimeError:
-            return self.query_serve(
-                query_embeddings=query_embeddings, n_results=n_results, metric=metric
-            )
-        if not paths:
-            return [[] for _ in query_embeddings]
-        try:
+        embs = self._embeddings(query_texts, query_embeddings)
+
+        def serve(paths) -> list[list[dict]]:
             # float32 tier: the reference's serving dtype (hnswlib stores
             # float32) and half the probe traffic of float64 — recall at
             # this geometry is measured in bench (knn_ivf_replica rows)
@@ -373,19 +372,17 @@ class Collection:
                 metric=metric, id_col="id", dtype="float32",
                 index_dir=self.db.index_cache_dir,
             )
-        except ValueError:
-            # paths exist but hold zero rows (Spark writes empty part
-            # files): same empty-result contract as the sibling tiers
-            return [[] for _ in query_embeddings]
-        out: list[list[dict]] = []
-        for v in query_embeddings:
-            ids, dists = handle.search_one(
-                np.asarray(v, dtype=np.float64), n_results
-            )
-            out.append(
-                [{"id": str(i), "dist": float(d)} for i, d in zip(ids, dists)]
-            )
-        return out
+            out: list[list[dict]] = []
+            for v in embs:
+                ids, dists = handle.search_one(np.asarray(v, dtype=np.float64), n_results)
+                out.append([{"id": str(i), "dist": float(d)} for i, d in zip(ids, dists)])
+            return out
+
+        return self._serve(
+            serve,
+            lambda: self.query_serve(query_embeddings=embs, n_results=n_results, metric=metric),
+            [[] for _ in embs],
+        )
 
     def bq_serve(
         self,
@@ -403,47 +400,39 @@ class Collection:
         add the mmap exact-L2 rerank over the coarse candidates. Falls
         back to the exact serving path while deletion vectors are active,
         like :meth:`ann_serve`."""
+        import os
+
         import pandas as pd
 
         from custom_python_vectordb_spark.operators.quantization import (
             bq_replica_serve,
         )
 
-        if (query_texts is None) == (query_embeddings is None):
-            raise ValueError("provide exactly one of query_texts / query_embeddings")
-        if query_embeddings is None:
-            query_embeddings = [
-                mock_embed_one(t, self.dimensions).tolist() for t in query_texts
-            ]
-        try:
-            paths = self.db.warehouse.shard_paths(self.name)
-        except RuntimeError:
-            return self.query_serve(
-                query_embeddings=query_embeddings, n_results=n_results, metric="l2"
-            )
-        if not paths:
-            return [[] for _ in query_embeddings]
-        qpd = pd.DataFrame(
-            {
-                "qid": range(len(query_embeddings)),
-                "qvec": [[float(x) for x in v] for v in query_embeddings],
-            }
-        )
+        embs = self._embeddings(query_texts, query_embeddings)
         kw: dict[str, Any] = {}
         if fetch_k is not None:
-            import os
-
             kw = {
                 "fetch_k": int(fetch_k),
                 "rerank_mmap_dir": os.path.join(
                     self.db.warehouse.root, ".bq_rerank_cache", self.name
                 ),
             }
-        res = bq_replica_serve(paths, qpd, k=n_results, id_col="id", **kw)
-        out: list[list[dict]] = [[] for _ in query_embeddings]
-        for qid, vid, dist in zip(res["qid"], res["id"], res["dist"]):
-            out[int(qid)].append({"id": vid, "dist": float(dist)})
-        return out
+
+        def serve(paths) -> list[list[dict]]:
+            qpd = pd.DataFrame(
+                {"qid": range(len(embs)), "qvec": [[float(x) for x in v] for v in embs]}
+            )
+            res = bq_replica_serve(paths, qpd, k=n_results, id_col="id", **kw)
+            out: list[list[dict]] = [[] for _ in embs]
+            for qid, vid, dist in zip(res["qid"], res["id"], res["dist"]):
+                out[int(qid)].append({"id": vid, "dist": float(dist)})
+            return out
+
+        return self._serve(
+            serve,
+            lambda: self.query_serve(query_embeddings=embs, n_results=n_results, metric="l2"),
+            [[] for _ in embs],
+        )
 
     def ivfpq_serve(
         self,
@@ -470,51 +459,36 @@ class Collection:
         corpus density — the 10M probe showed the right M doubles per
         density decade, so a hand-tuned default silently under-resolves
         denser corpora (SCALING.md VEC10M)."""
+        import os
+
         from custom_python_vectordb_spark.operators.partitioned import (
             IvfPqReplicaHandle,
         )
 
-        if (query_texts is None) == (query_embeddings is None):
-            raise ValueError("provide exactly one of query_texts / query_embeddings")
-        if query_embeddings is None:
-            query_embeddings = [
-                mock_embed_one(t, self.dimensions).tolist() for t in query_texts
-            ]
-        try:
-            paths = self.db.warehouse.shard_paths(self.name)
-        except RuntimeError:
-            return self.query_serve(
-                query_embeddings=query_embeddings, n_results=n_results, metric="l2"
-            )
-        if not paths:
-            return [[] for _ in query_embeddings]
+        embs = self._embeddings(query_texts, query_embeddings)
         kw: dict[str, Any] = {}
         if fetch_k is not None:
-            import os
-
             kw["rerank_mmap_dir"] = os.path.join(
                 self.db.warehouse.root, ".bq_rerank_cache", self.name
             )
-        try:
+        fk = {} if fetch_k is None else {"fetch_k": int(fetch_k)}
+
+        def serve(paths) -> list[list[dict]]:
             handle = IvfPqReplicaHandle(
                 paths, n_cells=n_cells, nprobe=nprobe, id_col="id",
                 num_subspaces=num_subspaces, target_recall=target_recall, **kw
             )
-        except ValueError as e:
-            # shard paths can be non-empty while every parquet file holds
-            # zero rows (Spark writes empty part files); match the
-            # bq_serve/ann_serve contract and return empty result lists
-            if "empty shard set" in str(e):
-                return [[] for _ in query_embeddings]
-            raise
-        out: list[list[dict]] = []
-        for v in query_embeddings:
-            ids, dists = handle.search_one(
-                [float(x) for x in v], k=n_results,
-                **({"fetch_k": int(fetch_k)} if fetch_k is not None else {}),
-            )
-            out.append([{"id": i, "dist": float(d)} for i, d in zip(ids, dists)])
-        return out
+            out: list[list[dict]] = []
+            for v in embs:
+                ids, dists = handle.search_one([float(x) for x in v], k=n_results, **fk)
+                out.append([{"id": i, "dist": float(d)} for i, d in zip(ids, dists)])
+            return out
+
+        return self._serve(
+            serve,
+            lambda: self.query_serve(query_embeddings=embs, n_results=n_results, metric="l2"),
+            [[] for _ in embs],
+        )
 
     def keyword_search(self, query: str, k: int = 10) -> DataFrame:
         return bm25_topk(self.df(), query, k=k, id_col="id", text_col="_document")
@@ -522,29 +496,24 @@ class Collection:
     def keyword_serve(self, query: str, k: int = 10) -> list[dict]:
         """Serving twin of :meth:`keyword_search` — the in-process BM25
         replica (``operators/bm25.keyword_replica_serve``, mirroring the
-        reference's in-RAM ``BM25Index``): identical ranking, no Spark job
-        on the hot path. Falls back to the declarative plan while deletion
-        vectors are active (raw shards would resurrect deleted rows)."""
+        reference's in-RAM ``BM25Index``): the same (score desc, id)
+        ranking, no Spark job on the hot path. Falls back to the
+        declarative plan while deletion vectors are active (raw shards
+        would resurrect deleted rows) or above the replica's text budget."""
         from custom_python_vectordb_spark.operators.bm25 import keyword_replica_serve
-        from custom_python_vectordb_spark.operators.knn import ReplicaCapacityError
 
-        def _declarative() -> list[dict]:
+        def declarative() -> list[dict]:
             rows = self.keyword_search(query, k=k).collect()
             return [{"id": r["id"], "score": float(r["score"])} for r in rows]
 
-        try:
-            paths = self.db.warehouse.shard_paths(self.name)
-        except RuntimeError:
-            return _declarative()
-        if not paths:
-            return []
-        try:
-            hits = keyword_replica_serve(paths, query, k=k, id_col="id")
-        except ReplicaCapacityError:
-            # text corpus above the replica budget: declarative BM25 works
-            # at any size (round-4 ADVICE #2)
-            return _declarative()
-        return [{"id": i, "score": s} for i, s in hits]
+        return self._serve(
+            lambda paths: [
+                {"id": i, "score": s}
+                for i, s in keyword_replica_serve(paths, query, k=k, id_col="id")
+            ],
+            declarative,
+            [],
+        )
 
     def phrase_search(self, phrase: str, k: int = 10) -> DataFrame:
         from custom_python_vectordb_spark.operators.bm25 import phrase_search
@@ -558,42 +527,37 @@ class Collection:
         (declarative plan under deletion vectors or above the replica's
         text budget)."""
         from custom_python_vectordb_spark.operators.bm25 import phrase_replica_serve
-        from custom_python_vectordb_spark.operators.knn import ReplicaCapacityError
 
-        def _declarative() -> list[dict]:
+        def declarative() -> list[dict]:
             rows = self.phrase_search(phrase, k=k).collect()
             return [{"id": r["id"], "n_matches": int(r["n_matches"])} for r in rows]
 
-        try:
-            paths = self.db.warehouse.shard_paths(self.name)
-        except RuntimeError:
-            return _declarative()
-        if not paths:
-            return []
-        try:
-            hits = phrase_replica_serve(paths, phrase, k=k, id_col="id")
-        except ReplicaCapacityError:
-            return _declarative()
-        return [{"id": i, "n_matches": int(n)} for i, n in hits]
+        return self._serve(
+            lambda paths: [
+                {"id": i, "n_matches": int(n)}
+                for i, n in phrase_replica_serve(paths, phrase, k=k, id_col="id")
+            ],
+            declarative,
+            [],
+        )
 
     def hybrid_serve(self, query_text: str, k: int = 10, alpha: float = 0.5) -> list[dict]:
         """Serving twin of :meth:`hybrid` — full in-process fusion (the
         reference's own architecture, ``hybrid_search.py:360-477``, runs
         exactly this in RAM): the vector replica yields the full distance
         vector, the keyword replica the full BM25 score vector, and the
-        fusion (corpus-max normalizers, α-weighted sum, top-k desc with id
-        tie-break) is a few numpy array ops. Results match :meth:`hybrid`
-        to float tolerance (asserted in tests). Falls back to the
-        declarative plan while deletion vectors are active."""
+        fusion (corpus-max normalizers, α-weighted sum, top-k by (score
+        desc, id) through the shared top-k) is a few numpy array ops.
+        Results match :meth:`hybrid` to float tolerance (asserted in
+        tests). Falls back to the declarative plan while deletion vectors
+        are active or above either replica's budget."""
         import numpy as np
 
         from custom_python_vectordb_spark.operators.bm25 import keyword_score_vector
-        from custom_python_vectordb_spark.operators.knn import (
-            ReplicaCapacityError,
-            replica_distance_vector,
-        )
+        from custom_python_vectordb_spark.operators.knn import replica_distance_vector
+        from custom_python_vectordb_spark.operators.topk import topk_positions
 
-        def _declarative() -> list[dict]:
+        def declarative() -> list[dict]:
             rows = self.hybrid(query_text, k=k, alpha=alpha).collect()
             return [
                 {
@@ -604,42 +568,27 @@ class Collection:
                 for r in rows
             ]
 
-        try:
-            paths = self.db.warehouse.shard_paths(self.name)
-        except RuntimeError:
-            return _declarative()
-        if not paths:
-            return []
-        qvec = mock_embed_one(query_text, self.dimensions).tolist()
-        try:
+        def serve(paths) -> list[dict]:
+            qvec = mock_embed_one(query_text, self.dimensions).tolist()
             ids_v, dists = replica_distance_vector(paths, qvec, "cosine", id_col="id")
             ids_k, kscores = keyword_score_vector(paths, query_text, id_col="id")
-        except ReplicaCapacityError:
-            # either replica above its budget: the declarative fusion plan
-            # works at any size (round-4 ADVICE #2)
-            return _declarative()
-        # both replicas decode the SAME shard files in the same sorted order,
-        # so the row alignment is structural; assert it anyway (cheap)
-        assert len(ids_v) == len(ids_k)
-        vmax = float(dists.max()) if len(dists) else 0.0
-        vscore = (1.0 - dists / vmax) if vmax > 0 else np.ones_like(dists)
-        kmax = float(kscores.max()) if len(kscores) else 0.0
-        kscore = kscores / kmax if kmax > 0 else np.zeros_like(kscores)
-        combined = alpha * vscore + (1 - alpha) * kscore
-        kk = min(k, len(combined))
-        if kk == 0:
-            return []
-        top = np.argpartition(-combined, kk - 1)[:kk]
-        kth = combined[top].min()
-        pool = np.flatnonzero(combined >= kth)
-        order = sorted(pool, key=lambda i: (-combined[i], ids_v[i]))[:kk]
-        return [
-            {
-                "id": ids_v[i], "score": float(combined[i]),
-                "vector_score": float(vscore[i]), "keyword_score": float(kscore[i]),
-            }
-            for i in order
-        ]
+            # both replicas decode the SAME shard files in the same sorted
+            # order, so the row alignment is structural; assert it anyway
+            assert len(ids_v) == len(ids_k)
+            vmax = float(dists.max()) if len(dists) else 0.0
+            vscore = (1.0 - dists / vmax) if vmax > 0 else np.ones_like(dists)
+            kmax = float(kscores.max()) if len(kscores) else 0.0
+            kscore = kscores / kmax if kmax > 0 else np.zeros_like(kscores)
+            combined = alpha * vscore + (1 - alpha) * kscore
+            return [
+                {
+                    "id": ids_v[i], "score": float(combined[i]),
+                    "vector_score": float(vscore[i]), "keyword_score": float(kscore[i]),
+                }
+                for i in topk_positions(np, ids_v, -combined, k)
+            ]
+
+        return self._serve(serve, declarative, [])
 
     def hybrid(self, query_text: str, k: int = 10, alpha: float = 0.5) -> DataFrame:
         qv = local_df(

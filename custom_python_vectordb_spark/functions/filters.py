@@ -214,7 +214,3 @@ _DUCK_OPS = {
     FilterOp.CONTAINS: lambda f, v: f"({f} IS NOT NULL AND contains({f}, {v}))",
     FilterOp.REGEX: lambda f, v: f"({f} IS NOT NULL AND regexp_matches({f}, {v}))",
 }
-
-
-def duck_leaf(field: str, op: FilterOp | str, value_sql: str) -> str:
-    return _DUCK_OPS[FilterOp(op)](field, value_sql)

@@ -2,8 +2,8 @@
 
 MinHash/SimHash/fingerprinting need a 64-bit-ish integer hash that Spark and
 the DuckDB oracle compute identically. Native hash functions differ
-(murmur3 vs duckdb-hash), so the canonical hash is the top 60 bits of
-md5 (both engines ship md5): h(s) = int(hex(md5(s))[0:15], 16) ∈ [0, 2^60).
+(murmur3 vs duckdb-hash), so the canonical hash is the top 48 bits of
+md5 (both engines ship md5): h(s) = int(hex(md5(s))[0:12], 16) ∈ [0, 2^48).
 
 Seeded families: h_i(s) = h(i || '|' || s).
 """
@@ -12,23 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def hash60(col: Column) -> Column:
-    """60-bit integer hash of a string column (lowercase-hex md5 prefix)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def seeded_hash60(col: Column, seed: int) -> Column:
-    return hash60(F.concat(F.lit(f"{seed}|"), col))
-
-
-def duck_hash60(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def duck_seeded_hash60(expr: str, seed: int) -> str:
-    return duck_hash60(f"'{seed}|' || {expr}")
 
 
 def hash48(col: Column) -> Column:

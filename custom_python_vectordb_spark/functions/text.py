@@ -82,17 +82,6 @@ def _stopword_hits(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
 
 
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are `lang` stopwords (0 for empty docs)."""
-    return let_once(
-        tokenize(col),
-        lambda toks: F.when(
-            F.size(toks) > 0,
-            _stopword_hits(toks, lang).cast("double") / F.size(toks),
-        ).otherwise(F.lit(0.0)),
-    )
-
-
 def quality_score(col: Column | str) -> Column:
     """Deterministic doc-quality heuristic in [0, 1]:
     0.4·min(n_tokens/100, 1) + 0.3·en-stopword-ratio·3 (capped at 0.3)
@@ -115,14 +104,6 @@ def quality_score(col: Column | str) -> Column:
         return length_part + sw_part + punct_part
 
     return let_once(tokenize(c), _score)
-
-
-def langid_scores(col: Column | str) -> list[tuple[str, Column]]:
-    """(lang, stopword-hit-count) per language — the n-gram/function-word
-    voting heuristic. Each entry tokenizes independently; prefer
-    :func:`langid_predict` (single tokenize) when you need the argmax."""
-    toks = tokenize(col)
-    return [(lang, _stopword_hits(toks, lang)) for lang in STOPWORDS]
 
 
 def langid_predict(col: Column | str) -> Column:

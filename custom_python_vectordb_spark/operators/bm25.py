@@ -34,6 +34,7 @@ from custom_python_vectordb_spark.functions.distances import distance_expr
 from custom_python_vectordb_spark.functions.text import tokenize, tokenize_py
 from custom_python_vectordb_spark.functions.local_relation import local_df
 from custom_python_vectordb_spark.operators import shard_tier
+from custom_python_vectordb_spark.operators.topk import topk_positions
 
 K1 = 1.5
 B = 0.75
@@ -420,8 +421,8 @@ def _load_texts(paths, id_col: str, text_col: str, max_bytes: int, plan: str):
 
 
 def _keyword_index(shard_paths, id_col: str, text_col: str, max_bytes: int):
-    """The BM25 replica of a shard set through the shard tier: (ids,
-    {term: (doc positions, tf)}, doc lengths, avgdl)."""
+    """The BM25 replica of a shard set through the shard tier: (ids as an
+    object array, {term: (doc positions, tf)}, doc lengths, avgdl)."""
 
     def build(paths, _sk):
         import numpy as np
@@ -444,6 +445,9 @@ def _keyword_index(shard_paths, id_col: str, text_col: str, max_bytes: int):
             )
             for t, d in acc.items()
         }
+        # object array: fancy-indexable for the top-k, and its elements
+        # stay the decoded Python ids (JSON-ready)
+        ids = np.array(ids, dtype=object)
         return (ids, inv, dl, float(dl.mean()) if len(ids) else 0.0)
 
     return shard_tier.resolve("keyword", shard_paths, (id_col, text_col), build)
@@ -477,20 +481,10 @@ def keyword_replica_serve(
         shard_paths, query, id_col=id_col, text_col=text_col, max_bytes=max_bytes
     )
     cand = np.flatnonzero(scores > 0)
-    if len(cand) == 0:
-        return []
-    if len(cand) > k:
-        # exact top-k without a full python sort over every scored doc:
-        # argpartition narrows to k by score, then the tie pool (score ==
-        # kth, bit-identical accumulations tie exactly) is re-admitted so
-        # the id tie-break stays deterministic across the boundary
-        top = cand[np.argpartition(-scores[cand], k - 1)[:k]]
-        kth = scores[top].min()
-        pool = cand[scores[cand] >= kth]
-    else:
-        pool = cand
-    order = sorted(pool, key=lambda i: (-scores[i], ids[i]))[:k]
-    return [(ids[i], float(scores[i])) for i in order]
+    # (score desc, id) top-k among the scored docs; bit-identical
+    # accumulations tie exactly and break by id across the k-th boundary
+    top = cand[topk_positions(np, ids[cand], -scores[cand], k)]
+    return [(ids[i], float(scores[i])) for i in top]
 
 
 def keyword_score_vector(

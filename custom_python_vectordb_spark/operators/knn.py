@@ -40,7 +40,12 @@ from custom_python_vectordb_spark.functions.distances import (
     l2_norm,
 )
 from custom_python_vectordb_spark.operators import shard_tier
-from custom_python_vectordb_spark.operators.topk import top_k_per_group
+from custom_python_vectordb_spark.operators.topk import (
+    top_k_per_group,
+    topk_frame,
+    topk_positions,
+    topk_tie_aware,
+)
 
 
 def knn(
@@ -187,25 +192,6 @@ def knn_batch_gemm(
     )
 
 
-
-
-def _driver_merge_topk(parts, k: int, id_col: str, dist_col: str):
-    """Exact global top-k per qid over collected per-shard partials:
-    vectorized lexsort by (qid, dist, id) + grouped rank — the driver-side
-    twin of operators/topk.top_k_per_group on O(shards·Q·k) rows."""
-    import numpy as np
-    import pandas as pd
-
-    if parts.empty:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
-    order = np.lexsort(
-        (parts[id_col].to_numpy(), parts[dist_col].to_numpy(), parts["qid"].to_numpy())
-    )
-    parts = parts.iloc[order].reset_index(drop=True)
-    rank = parts.groupby("qid").cumcount()
-    return parts[rank < k].reset_index(drop=True)
-
-
 def knn_shard_gemm_serve(
     spark,
     shard_paths: list[str],
@@ -241,13 +227,15 @@ def knn_shard_gemm_serve(
        Memory: each worker accumulates the shards it has served, bounded
        by corpus size per executor (51 MB here); at cluster scale
        locality-sticky scheduling bounds it to ~1/executors of the table.
-    3. **Driver merge, one stage.** Partial top-ks (O(shards·Q·k) rows)
-       return as array<struct> column values and merge on the driver — no
-       exchange, no window stage. The shuffled plan moves the same rows to
-       one reducer anyway.
+    3. **Driver merge, one stage.** Partial top-ks (O(tasks·Q·k) rows)
+       return as packed bytes and merge on the driver — no exchange, no
+       window stage. The shuffled plan moves the same rows to one reducer
+       anyway. Every partial and the merge rank by (dist, id)
+       (``topk.topk_positions``, shipped by value), so the merge is exact
+       even when distances tie across the k-th boundary.
 
-    Exactness: identical results to knn()/knn_batch_gemm (asserted in
-    tests). Floor: ANY job with a Python stage costs ~140 ms in-session
+    Exactness: identical results to knn() (asserted in tests, boundary
+    ties included). Floor: ANY job with a Python stage costs ~140 ms in-session
     regardless of payload (measured round 5: a no-op scalar pandas_udf job
     over spark.range(1) is 141 ms at every task count, vs 32 ms JVM-only —
     the cost is the per-job Python-runner protocol, not ser/de), so a
@@ -285,6 +273,7 @@ def knn_shard_gemm_serve(
     else:
         n_tasks = max(1, min(len(paths), len(qids) // 4 or 1))
     nq = len(qids)
+    topk = topk_positions  # by-value pickle (factory-made, see topk._make_topk)
 
     @pandas_udf("binary")
     def serve(idx: pd.Series) -> pd.Series:
@@ -339,8 +328,7 @@ def knn_shard_gemm_serve(
                 _np.sqrt(dists, out=dists)
             else:  # ip
                 _np.negative(dists, out=dists)
-            kk = min(k, n)
-            sidx = _np.argpartition(dists, kk - 1, axis=1)[:, :kk]
+            sidx = topk(_np, ids, dists, k)
             sel_parts.append(_np.take_along_axis(dists, sidx, axis=1))
             id_parts.append(ids[sidx])
         out = [None] * len(idx)
@@ -350,42 +338,33 @@ def knn_shard_gemm_serve(
             # the collect payload is bytes, not Rows
             D = _np.concatenate(sel_parts, axis=1)
             I = _np.concatenate(id_parts, axis=1)
-            kk = min(k, D.shape[1])
-            ti = _np.argpartition(D, kk - 1, axis=1)[:, :kk]
-            Dk = _np.take_along_axis(D, ti, axis=1)
-            Ik = _np.take_along_axis(I, ti, axis=1)
+            ti = topk(_np, I, D, k)
             out[0] = b"".join(
                 (
-                    _np.int64(kk).tobytes(),
-                    _np.repeat(qids, kk).astype("<i8").tobytes(),
-                    Ik.ravel().astype("<i8").tobytes(),
-                    Dk.ravel().astype("<f8").tobytes(),
+                    _np.int64(ti.shape[1]).tobytes(),
+                    _np.take_along_axis(I, ti, axis=1).astype("<i8").tobytes(),
+                    _np.take_along_axis(D, ti, axis=1).astype("<f8").tobytes(),
                 )
             )
         return pd.Series(out, dtype=object)
 
     manifest = spark.range(len(paths)).coalesce(n_tasks)
     rows = manifest.select(serve(col("id")).alias("r")).collect()
-    qs_, ids_, ds_ = [], [], []
+    ids_, ds_ = [], []
     for r in rows:
         b = r["r"]
         if not b:
             continue
         kk = int(np.frombuffer(b, "<i8", 1)[0])
         n = kk * nq
-        qs_.append(np.frombuffer(b, "<i8", n, 8))
-        ids_.append(np.frombuffer(b, "<i8", n, 8 + 8 * n))
-        ds_.append(np.frombuffer(b, "<f8", n, 8 + 16 * n))
-    if not qs_:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
-    parts = pd.DataFrame(
-        {
-            "qid": np.concatenate(qs_),
-            id_col: np.concatenate(ids_),
-            dist_col: np.concatenate(ds_),
-        }
+        ids_.append(np.frombuffer(b, "<i8", n, 8).reshape(nq, kk))
+        ds_.append(np.frombuffer(b, "<f8", n, 8 + 8 * n).reshape(nq, kk))
+    if not ids_:
+        return topk_frame(id_col, dist_col)
+    return topk_frame(
+        id_col, dist_col, qids,
+        *topk_tie_aware(np, np.concatenate(ids_, axis=1), np.concatenate(ds_, axis=1), k),
     )
-    return _driver_merge_topk(parts, k, id_col, dist_col)
 
 
 class ReplicaCapacityError(ValueError):
@@ -766,11 +745,9 @@ def knn_replica_serve(
     rep = resolve_replica(
         shard_paths, id_col=id_col, dtype=dtype, max_bytes=max_bytes, mmap_dir=mmap_dir
     )
-    if rep is None:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
+    if rep is None or len(queries_pd) == 0:  # empty shards / cache-warm call
+        return topk_frame(id_col, dist_col)
     ids = rep.ids
-    if len(queries_pd) == 0:  # cache-warm call
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
 
     qids = queries_pd["qid"].to_numpy()
     qmat = np.asarray([np.asarray(v, dtype=dtype) for v in queries_pd["qvec"]])
@@ -781,16 +758,6 @@ def knn_replica_serve(
             raise ValueError(f"mask length {len(mask)} != replica rows {len(ids)}")
         n_live = int(mask.sum())
         if n_live == 0:
-            return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
+            return topk_frame(id_col, dist_col)
         dists[:, ~mask] = np.inf
-    kk = min(k, n_live)
-    sidx = np.argpartition(dists, kk - 1, axis=1)[:, :kk]
-    sel = np.take_along_axis(dists, sidx, axis=1)
-    parts = pd.DataFrame(
-        {
-            "qid": np.repeat(qids, kk),
-            id_col: ids[sidx.ravel()],
-            dist_col: sel.ravel().astype("float64"),
-        }
-    )
-    return _driver_merge_topk(parts, k, id_col, dist_col)
+    return topk_frame(id_col, dist_col, qids, *topk_tie_aware(np, ids, dists, min(k, n_live)))

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from custom_python_vectordb_spark.operators.knn import knn
+from custom_python_vectordb_spark.operators.topk import topk_positions
 from custom_python_vectordb_spark.functions.local_relation import local_df
 
 
@@ -90,10 +91,10 @@ def mmr_replica_serve(
 ) -> list[tuple]:
     """Serving twin of :func:`mmr_rerank` — both stages in-process against
     the shard replica (``knn.resolve_replica``'s resident block): the
-    relevance vector is one GEMM row, the top-``fetch_k`` candidate cut a
-    partition+tie-pool (identical selection rule to the distributed
-    path's knn tie-break), and the greedy argmax the same loop
-    `mmr_rerank` runs — but with zero Spark jobs on the hot path.
+    relevance vector is one GEMM row, the top-``fetch_k`` candidate cut
+    the shared (dist, id) top-k (the distributed path's knn tie-break),
+    and the greedy argmax the same loop `mmr_rerank` runs — but with zero
+    Spark jobs on the hot path.
     Same return shape, values equal to float tolerance (asserted in
     tests)."""
     from custom_python_vectordb_spark.operators.knn import (
@@ -109,14 +110,9 @@ def mmr_replica_serve(
     ids_all, dists = replica_distance_vector(
         shard_paths, query_vec, "cosine", id_col=id_col, dtype=dtype
     )
-    n = len(ids_all)
-    if n == 0:
+    if len(ids_all) == 0:
         return []
-    kk = min(fetch_k, n)
-    top = np.argpartition(dists, kk - 1)[:kk]
-    kth = dists[top].max()
-    pool = np.flatnonzero(dists <= kth)
-    cand = sorted(pool, key=lambda i: (dists[i], ids_all[i]))[:kk]
+    cand = topk_positions(np, ids_all, dists, fetch_k)
 
     mat_all = resolve_replica(shard_paths, id_col=id_col, dtype=dtype).mat
     mat = np.array(mat_all[cand], dtype=np.float64)

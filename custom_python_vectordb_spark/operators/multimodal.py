@@ -2129,12 +2129,6 @@ def media_metadata(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def fake_decode_dims(n_bytes: int) -> tuple[int, int, int]:
-    """Deterministic fake decode: dims derived from payload length. The
-    stand-in for a real `PIL.Image.open` — same signature, fake content."""
-    return (n_bytes % 640 + 1, (n_bytes * 7) % 480 + 1, 3)
-
-
 def decode_media(media: DataFrame, id_col: str = "doc_id", codec: str = "fake") -> DataFrame:
     """Arrow-batched decode → (id, width, height, channels).
 

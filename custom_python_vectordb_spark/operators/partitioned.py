@@ -36,11 +36,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from custom_python_vectordb_spark.operators import shard_tier
-from custom_python_vectordb_spark.operators.quantization import (
-    _load_snapshot,
-    _topk_tie_aware,
+from custom_python_vectordb_spark.operators.quantization import _load_snapshot
+from custom_python_vectordb_spark.operators.topk import (
+    top_k_per_group,
+    topk_by_group,
+    topk_frame,
+    topk_positions,
+    topk_tie_aware,
 )
-from custom_python_vectordb_spark.operators.topk import top_k_per_group
 
 
 def knn_partitioned(
@@ -378,16 +381,27 @@ def _ivf_probe(np, snap, metric: str, assign_r: int, q, probes):
     return ids, d
 
 
-def _widened_probes(np, score, cell_rows, p: int, k: int):
-    """The probe set for a query whose `p` nearest cells hold fewer than k
-    distinct rows (with assign_r=1 a query far from every cluster can land
-    on empty cells): cells in nearest-first order (stable on ties), at
-    least p of them, until they hold k distinct rows or run out. Shared by
-    the handle and the batch path so both probe the same cells."""
-    order = np.argsort(score, kind="stable")
+def _probe_cells(np, cscore, cells, nprobe: int, k: int, r: int):
+    """The cells one query probes: the ``nprobe`` nearest by ``cscore``,
+    widened nearest-first (stable on ties) until they hold k distinct rows
+    or run out. ``cells[j]`` lists cell j's rows (row positions or ids);
+    each row sits in ``r`` cells, so k·r probed slots already hold k rows
+    and the common case costs one argpartition over the centroid scores.
+    With assign_r=1 a query far from every cluster can land on empty
+    cells; the widening keeps every IVF path (both handles, the batch
+    serve, the IVF-PQ auto-M probe) at k rows whenever the corpus has
+    them."""
+    c = len(cscore)
+    p = min(nprobe, c)
+    probes = cscore.argpartition(p - 1)[:p]
+    if p == c or sum([len(cells[j]) for j in probes.tolist()]) >= k * r:
+        return probes
+    if r > 1 and len(np.unique(np.concatenate([cells[j] for j in probes]))) >= k:
+        return probes
+    order = np.argsort(cscore, kind="stable")
     seen: set = set()
     for m, j in enumerate(order, 1):
-        seen.update(cell_rows[j].tolist())
+        seen.update(cells[j].tolist())
         if m >= p and len(seen) >= k:
             break
     return order[:m]
@@ -448,7 +462,7 @@ class IvfReplicaHandle:
         ADVICE high)."""
         snap = _ivf_resolve(self._paths, self._params)
         if snap is None:
-            raise ValueError("empty shard set")
+            raise shard_tier.EmptyShardSetError("empty shard set")
         self._snap = snap
 
     def save_index(self, out_dir: str) -> None:
@@ -486,7 +500,7 @@ class IvfReplicaHandle:
         """Exact-within-probed-cells top-k for ONE query vector: (ids,
         dists) sorted by (dist, id). All-numpy, no pandas, no stat. When
         the `nprobe` nearest cells hold fewer than k rows, the probe
-        widens nearest-first until k are seen (:func:`_widened_probes`).
+        widens nearest-first until k are seen (:func:`_probe_cells`).
 
         Latency anatomy (measured, 100K×128 f32, 384 cells / nprobe 3):
         ~85 % of the call is the centroid + probed-cell GEMVs, which run
@@ -512,19 +526,11 @@ class IvfReplicaHandle:
                 q = q / qn
         # probe selection: |q|^2 is rank-invariant, omit it
         cscore = cent_sq - 2.0 * (cent @ q)
-        p = min(self.nprobe, len(cscore))
-        ids, d = _ivf_probe(
-            np, snap, self.metric, self.assign_r, q, cscore.argpartition(p - 1)[:p]
+        probes = _probe_cells(
+            np, cscore, snap[4], self.nprobe, k, min(self.assign_r, len(cscore))
         )
-        if len(ids) < k and p < len(cscore):
-            ids, d = _ivf_probe(
-                np, snap, self.metric, self.assign_r, q,
-                _widened_probes(np, cscore, snap[4], p, k),
-            )
-        # tie-aware (dist, id) truncation — same rank rule as
-        # ivf_replica_serve and the SQ/PQ/BQ handles (_topk_tie_aware);
-        # a bare argpartition broke k-th-boundary ties arbitrarily
-        return _topk_tie_aware(np, ids, d, k)
+        ids, d = _ivf_probe(np, snap, self.metric, self.assign_r, q, probes)
+        return topk_tie_aware(np, ids, d, k)
 
 
 def ivf_handle_for(
@@ -556,7 +562,7 @@ def ivf_handle_for(
     params = (id_col, dtype, metric, n_cells, assign_r, 131_072, 5)
     snap = _ivf_resolve(shard_paths, params, index_dir, nprobe)
     if snap is None:
-        raise ValueError("empty shard set")
+        raise shard_tier.EmptyShardSetError("empty shard set")
     return object.__new__(IvfReplicaHandle)._adopt(shard_paths, params, nprobe, snap)
 
 
@@ -601,9 +607,9 @@ def ivf_replica_serve(
     entry = _ivf_resolve(
         shard_paths, (id_col, dtype, metric, n_cells, assign_r, train_sample_cap, 5)
     )
-    if entry is None:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
-    _sk, cent, cell_ids, cell_mats, cell_rows, cent_sq, _cell_sq, cell_len, _arrays = entry
+    if entry is None or len(queries_pd) == 0:
+        return topk_frame(id_col, dist_col)
+    _sk, cent, cell_ids, cell_mats, cell_rows, cent_sq, _cell_sq, _lens, _arrays = entry
     c = len(cell_ids)
 
     qids = queries_pd["qid"].to_numpy()
@@ -612,31 +618,12 @@ def ivf_replica_serve(
         qn = np.linalg.norm(qmat, axis=1, keepdims=True)
         qmat = qmat / np.where(qn == 0, 1.0, qn)
     with _blas_threads(16):
-        qd2 = (qmat * qmat).sum(1)[:, None] + cent_sq[None, :] - 2.0 * (qmat @ cent.T)
-        p = min(nprobe, c)
-        probe_cells = np.argpartition(qd2, p - 1, axis=1)[:, :p]
-        pair_q = np.repeat(np.arange(len(qids)), p)
-        pair_c = probe_cells.ravel()
-        if p < c:
-            # queries whose probed cells hold fewer than k distinct rows
-            # take the handle's widened probe set instead (each row sits
-            # in min(assign_r, c) cells, so k·r probed slots guarantee k)
-            r = min(assign_r, c)
-            short = [
-                i for i in np.flatnonzero(cell_len[probe_cells].sum(1) < k * r)
-                if r == 1
-                or len(np.unique(np.concatenate([cell_rows[j] for j in probe_cells[i]]))) < k
-            ]
-            if short:
-                wide = [
-                    _widened_probes(np, cent_sq - 2.0 * (cent @ qmat[i]), cell_rows, p, k)
-                    for i in short
-                ]
-                keep = ~np.isin(pair_q, short)
-                pair_q = np.concatenate(
-                    [pair_q[keep], *(np.full(len(w), i) for i, w in zip(short, wide))]
-                )
-                pair_c = np.concatenate([pair_c[keep], *wide])
+        # the handle's probe rule, query by query (|q|^2 is rank-invariant)
+        cscore = cent_sq[None, :] - 2.0 * (qmat @ cent.T)
+        r = min(assign_r, c)
+        probes = [_probe_cells(np, row, cell_rows, nprobe, k, r) for row in cscore]
+        pair_q = np.repeat(np.arange(len(qids)), [len(p) for p in probes])
+        pair_c = np.concatenate(probes)
         # iterate PROBED cells only (round 6): the previous dense
         # `for j in range(n_cells)` membership scan cost ~20 µs × n_cells
         # per call regardless of batch size — 5 ms of pure loop overhead
@@ -667,17 +654,18 @@ def ivf_replica_serve(
                 )
             else:  # ip
                 dmat = -(sub @ qsub.T)
-            m = min(k, len(sids))
-            idx = np.argpartition(dmat, m - 1, axis=0)[:m]
+            # per-cell partial top-k by (dist, id): the merge below is
+            # exact only because every partial ranks by its order
+            pos = topk_positions(np, sids, dmat.T, k)
             frames.append(
                 (
-                    np.broadcast_to(qids[qsel], (m, len(qsel))).ravel(),
-                    sids[idx].ravel(),
-                    np.take_along_axis(dmat, idx, axis=0).ravel(),
+                    np.repeat(qids[qsel], pos.shape[1]),
+                    sids[pos].ravel(),
+                    np.take_along_axis(dmat.T, pos, 1).ravel(),
                 )
             )
     if not frames:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
+        return topk_frame(id_col, dist_col)
     # numpy merge (round 6): the pandas concat + drop_duplicates + groupby
     # rank tail cost ~1.5 ms of fixed per-call plumbing — nothing for a
     # 1000-query batch, 15x the arithmetic for a single query. Duplicate
@@ -686,8 +674,8 @@ def ivf_replica_serve(
     # differ in the last ulp — so dedup on (qid, id) alone, sorted with
     # dist as the tie-break so the first occurrence keeps the smaller
     # copy (round-6 ADVICE: dist-adjacency is not guaranteed under an
-    # exact tie with a third vector). Then re-sort by (qid, dist, id) and
-    # take per-query rank < k via group-start subtraction, vectorized.
+    # exact tie with a third vector). Then keep each query's k smallest
+    # by (dist, id).
     qa = np.concatenate([f[0] for f in frames])
     ia = np.concatenate([f[1] for f in frames])
     da = np.concatenate([f[2] for f in frames])
@@ -696,11 +684,7 @@ def ivf_replica_serve(
         qa, ia, da = qa[order], ia[order], da[order]
         keep = np.r_[True, (qa[1:] != qa[:-1]) | (ia[1:] != ia[:-1])]
         qa, ia, da = qa[keep], ia[keep], da[keep]
-    order = np.lexsort((ia, da, qa))
-    qa, ia, da = qa[order], ia[order], da[order]
-    grp_start = np.r_[0, np.flatnonzero(qa[1:] != qa[:-1]) + 1]
-    starts = np.repeat(grp_start, np.diff(np.r_[grp_start, len(qa)]))
-    sel = (np.arange(len(qa)) - starts) < k
+    sel = topk_by_group(np, qa, ia, da, k)
     return pd.DataFrame({"qid": qa[sel], id_col: ia[sel], dist_col: da[sel]})
 
 
@@ -716,7 +700,7 @@ def _auto_pq_subspaces(
     *,
     target_recall: float,
     num_centroids: int,
-    nprobe: int,
+    assign_r: int,
     fetch_k: int = 300,
     n_queries: int = 64,
     k: int = 10,
@@ -739,7 +723,9 @@ def _auto_pq_subspaces(
     union (probing loss is nprobe's knob, not M's — ground truth uses the
     same union), so per candidate M only the probed cells' rows are
     encoded, not the corpus; the final full encode runs once, with the
-    winner."""
+    winner. Every query probes at the fixed width ``_AUTO_M_NPROBE``, not
+    a caller's serving ``nprobe``: M is part of the built index, whose
+    tier key holds only the build parameters."""
     from custom_python_vectordb_spark.operators.quantization import (
         _pq_encode,
         _train_pq_books,
@@ -751,12 +737,11 @@ def _auto_pq_subspaces(
         raise ValueError(f"no usable subspace count divides dim {d_dim}")
     qidx = np.unique(np.linspace(0, n - 1, min(n_queries, n)).astype(np.int64))
     cent_sq = (cent * cent).sum(1)
-    probe_sets = []
-    for qi in qidx:
-        q = mat[qi]
-        cscore = cent_sq - 2.0 * (cent @ q)
-        p = min(nprobe, len(cscore))
-        probe_sets.append(cscore.argpartition(p - 1)[:p])
+    r = min(assign_r, len(cent))
+    probe_sets = [
+        _probe_cells(np, cent_sq - 2.0 * (cent @ mat[qi]), rowlists, _AUTO_M_NPROBE, k, r)
+        for qi in qidx
+    ]
     union_cells = sorted({int(j) for s in probe_sets for j in s})
     # ground truth per query: exact L2 within ITS probed cells (row
     # indices are identities; multi-assignment duplicates dedup below)
@@ -769,8 +754,7 @@ def _auto_pq_subspaces(
         rsel = np.unique(np.concatenate(live))
         diff = mat[rsel] - mat[qi]
         ex = np.einsum("ij,ij->i", diff, diff)
-        order = np.argsort(ex, kind="stable")[: k]
-        gts.append(set(int(r) for r in rsel[order]))
+        gts.append(set(int(r) for r in rsel[topk_positions(np, rsel, ex, k)]))
     best = None
     for m in candidates:
         books, _ = _train_pq_books(np, res_sample, m, num_centroids)
@@ -805,13 +789,10 @@ def _auto_pq_subspaces(
                 d_parts.append(lut.ravel()[codes[j]].sum(0, dtype=np.float64))
             rsel = np.concatenate(id_parts)
             d = np.concatenate(d_parts)
-            fk = min(fetch_k, len(rsel))
-            cand = np.unique(
-                rsel[np.argpartition(d, fk - 1)[:fk]] if fk < len(rsel) else rsel
-            )
+            cand = np.unique(rsel[topk_positions(np, rsel, d, fetch_k)])
             diff = mat[cand] - q
             ex = np.einsum("ij,ij->i", diff, diff)
-            top = cand[np.argsort(ex, kind="stable")[: k]]
+            top = cand[topk_positions(np, cand, ex, k)]
             hits += len(set(int(r) for r in top) & gt)
             tot += len(gt)
         rec = hits / max(tot, 1)
@@ -821,7 +802,14 @@ def _auto_pq_subspaces(
     return best
 
 
-def _ivfpq_build(paths, stat_key, params, nprobe):
+# The probe width of the num_subspaces="auto" recall probe. Fixed, so the
+# chosen M depends only on the shards and the build parameters (the tier
+# key) and never on the nprobe of whichever request built the index first;
+# wide, so M is fine enough for any serving width up to it.
+_AUTO_M_NPROBE = 16
+
+
+def _ivfpq_build(paths, stat_key, params):
     """The IVF-PQ code tier of a shard set: (stat_key, cent, books,
     [cell ids], [cell offset codes], chosen M, probe recall, centroid
     square norms, book square norms), or None when the shards hold no
@@ -867,7 +855,7 @@ def _ivfpq_build(paths, stat_key, params, nprobe):
             # denser corpus (SCALING.md VEC10M)
             m_used, books, probe_rec = _auto_pq_subspaces(
                 np, mat, cent, rowlists, res_sample,
-                target_recall=target_recall, num_centroids=kc, nprobe=nprobe,
+                target_recall=target_recall, num_centroids=kc, assign_r=assign_r,
             )
         else:
             m_used, probe_rec = m_req, None
@@ -980,13 +968,12 @@ class IvfPqReplicaHandle:
                 "set — rebuild from parquet (IvfPqReplicaHandle(shard_paths, "
                 "...)) to pick up new rows"
             )
-        params, nprobe = self._params, self.nprobe
+        params = self._params
         entry = shard_tier.resolve(
-            "ivfpq", self._paths, params,
-            lambda paths, sk: _ivfpq_build(paths, sk, params, nprobe),
+            "ivfpq", self._paths, params, lambda paths, sk: _ivfpq_build(paths, sk, params)
         )
         if entry is None:
-            raise ValueError("empty shard set")
+            raise shard_tier.EmptyShardSetError("empty shard set")
         self._adopt(entry)
         self._mmap_mat = self._mmap_pos = None
         if self._mmap_dir is not None:
@@ -1030,6 +1017,7 @@ class IvfPqReplicaHandle:
                 "n_cells": int(n_cells), "num_centroids": int(kc),
                 "chosen_m": int(self.chosen_m),
                 "probe_recall": None if self.probe_recall is None else float(self.probe_recall),
+                "probe_nprobe": None if self.probe_recall is None else _AUTO_M_NPROBE,
                 "mmap_dtype": self._mmap_dtype, "id_col": id_col, "stat_key": self._stat_key,
             },
         )
@@ -1098,8 +1086,9 @@ class IvfPqReplicaHandle:
         q = np.asarray(qvec, dtype=np.float32)
         # probe selection: |q|^2 is rank-invariant, omit it
         cscore = self._cent_sq - 2.0 * (self.cent @ q)
-        p = min(self.nprobe, len(cscore))
-        probes = cscore.argpartition(p - 1)[:p]
+        probes = _probe_cells(
+            np, cscore, self.cell_ids, self.nprobe, k, min(self._params[2], len(cscore))
+        )
         m, kc, sub_d = self.books.shape
         # residual ADC: each probed cell gets its OWN LUT from the query
         # residual q − cent[j] (nprobe small einsums), then one flattened-
@@ -1132,15 +1121,14 @@ class IvfPqReplicaHandle:
             keep = np.r_[True, ids[1:] != ids[:-1]]
             ids, d = ids[keep], d[keep]
         if self._mmap_pos is not None:
-            fk = min(fetch_k or 8 * k, len(ids))
-            cand = ids[np.argpartition(d, fk - 1)[:fk]] if fk < len(ids) else ids
+            cand = ids[topk_positions(np, ids, d, fetch_k or 8 * k)]
             sorted_ids, sorter = self._mmap_pos
             rowidx = sorter[np.searchsorted(sorted_ids, cand)]
             rows = self._mmap_mat[rowidx]
             diff = np.asarray(rows, dtype=np.float64) - q.astype(np.float64)
             ex = np.sqrt(np.maximum((diff * diff).sum(1), 0.0))
-            return _topk_tie_aware(np, cand, ex, k)
-        return _topk_tie_aware(np, ids, d, k)
+            return topk_tie_aware(np, cand, ex, k)
+        return topk_tie_aware(np, ids, d, k)
 
 
 class ShardedIvfPqIndex:
@@ -1207,15 +1195,12 @@ class ShardedIvfPqIndex:
 
     def search_one(self, qvec, k: int = 10, fetch_k: int | None = None):
         """Global top-k across every shard: (ids, dists) sorted by
-        (dist, id) — per-shard ``search_one`` then one concatenate +
-        lexsort truncation, identical to the probe's driver merge."""
+        (dist, id) — per-shard ``search_one`` then the same (dist, id)
+        top-k over their union, the probe's driver merge."""
         np = self._np
         parts_i, parts_d = [], []
         for h in self.shards:
             ids_s, d_s = h.search_one(qvec, k, fetch_k=fetch_k)
             parts_i.append(ids_s)
             parts_d.append(d_s)
-        ids = np.concatenate(parts_i)
-        d = np.concatenate(parts_d)
-        order = np.lexsort((ids, d))[:k]
-        return ids[order], d[order]
+        return topk_tie_aware(np, np.concatenate(parts_i), np.concatenate(parts_d), k)

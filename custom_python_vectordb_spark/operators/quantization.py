@@ -36,7 +36,12 @@ from pyspark.sql import functions as F
 from custom_python_vectordb_spark.functions.distances import distance_expr
 from custom_python_vectordb_spark.functions.distances import _ref as _sqlref
 from custom_python_vectordb_spark.operators import shard_tier
-from custom_python_vectordb_spark.operators.topk import top_k_per_group
+from custom_python_vectordb_spark.operators.topk import (
+    top_k_per_group,
+    topk_frame,
+    topk_positions,
+    topk_tie_aware,
+)
 from custom_python_vectordb_spark.functions.local_relation import local_df
 
 ColumnOrName = Column | str
@@ -461,33 +466,24 @@ def _sq_resolve(shard_paths: list[str], id_col: str):
 
 def _mmap_rerank(shard_paths, id_col, mmap_dir, ids, coarse, qids, qmat, k, fetch_k, dist_col):
     """K5 exact rerank shared by the SQ/BQ/PQ serves: each query's
-    top-``fetch_k`` coarse candidates (``coarse`` is (Q, N), aligned with
-    ``ids``) are re-scored with exact L2 against their float rows,
-    gathered from the memory-mapped replica under ``mmap_dir``
+    top-``fetch_k`` coarse candidates by (dist, id) (``coarse`` is (Q, N),
+    aligned with ``ids``) are re-scored with exact L2 against their float
+    rows, gathered from the memory-mapped replica under ``mmap_dir``
     (``knn.resolve_replica`` — RAM holds codes, DISK holds floats), and
     the k nearest by (dist, id) are kept."""
     import numpy as np
-    import pandas as pd
 
     from custom_python_vectordb_spark.operators.knn import resolve_replica
 
     rep = resolve_replica(shard_paths, id_col=id_col, dtype="float64", mmap_dir=mmap_dir)
     sorted_ids, sorter = rep.pos
-    ck2 = min(fetch_k, coarse.shape[1])
-    cidx = np.argpartition(coarse, ck2 - 1, axis=1)[:, :ck2]
-    rows = []
-    for qi in range(len(qids)):
-        cand = cidx[qi]
-        gathered = np.asarray(
-            rep.mat[sorter[np.searchsorted(sorted_ids, ids[cand])]], dtype=np.float64
-        )
+    cand = ids[topk_positions(np, ids, coarse, fetch_k)]
+    ed = np.empty(cand.shape)
+    for qi, row in enumerate(cand):
+        gathered = np.asarray(rep.mat[sorter[np.searchsorted(sorted_ids, row)]], dtype=np.float64)
         diff = gathered - qmat[qi][None, :]
-        ed = np.sqrt((diff * diff).sum(axis=1))
-        kk2 = min(k, len(cand))
-        order_q = sorted(range(len(cand)), key=lambda i: (ed[i], ids[cand[i]]))[:kk2]
-        for i in order_q:
-            rows.append((qids[qi], ids[cand[i]], float(ed[i])))
-    return pd.DataFrame(rows, columns=["qid", id_col, dist_col])
+        ed[qi] = np.sqrt((diff * diff).sum(axis=1))
+    return topk_frame(id_col, dist_col, qids, *topk_tie_aware(np, cand, ed, k))
 
 
 def sq_replica_serve(
@@ -536,14 +532,11 @@ def sq_replica_serve(
     ~3.3 ms/q for a 20-query batch (the float64 chunked GEMM trades ~2×
     the float replica's latency for 4× its capacity)."""
     import numpy as np
-    import pandas as pd
 
     entry = _sq_resolve(shard_paths, id_col)
-    if entry is None:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
+    if entry is None or len(queries_pd) == 0:
+        return topk_frame(id_col, dist_col)
     _, ids, codes, minv, s, wa2 = entry
-    if len(queries_pd) == 0:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
 
     qids = queries_pd["qid"].to_numpy()
     qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in queries_pd["qvec"]])
@@ -571,20 +564,7 @@ def sq_replica_serve(
         return _mmap_rerank(
             shard_paths, id_col, rerank_mmap_dir, ids, d2, qids, qmat, k, fetch_k, dist_col
         )
-    kk = min(k, n)
-    sidx = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-    sel = np.take_along_axis(d2, sidx, axis=1)
-    parts = pd.DataFrame(
-        {
-            "qid": np.repeat(qids, kk),
-            id_col: ids[sidx.ravel()],
-            dist_col: sel.ravel(),
-        }
-    )
-    order = np.lexsort(
-        (parts[id_col].to_numpy(), parts[dist_col].to_numpy(), parts["qid"].to_numpy())
-    )
-    return parts.iloc[order].reset_index(drop=True)
+    return topk_frame(id_col, dist_col, qids, *topk_tie_aware(np, ids, d2, k))
 
 
 def _popcount64(x, t):
@@ -657,7 +637,7 @@ class BqReplicaHandle(_ArraySnapshot):
     def refresh(self) -> None:
         entry = _bq_resolve(self._paths, id_col=self._id_col)
         if entry is None:
-            raise ValueError("empty shard set")
+            raise shard_tier.EmptyShardSetError("empty shard set")
         self._stat_key, self.ids, self.words, self.med, self.pad = entry
 
     def search_one(self, qvec, k: int = 10):
@@ -693,21 +673,8 @@ class BqReplicaHandle(_ArraySnapshot):
             for w in range(1, n_words):
                 np.bitwise_xor(qw[w], words[lo:hi, w], out=xx)
                 np.add(a, _popcount64(xx, tt), out=a, casting="unsafe")
-        m = min(k, n)
-        if m < n:
-            # Hamming lives in [0, bits]: a bincount gives the exact k-th
-            # boundary value in one cheap pass (no argpartition), and the
-            # (dist, id) lexsort over everything at or below it applies
-            # the id tie-break exactly like the batch path (uint16 feeds
-            # bincount directly — no widening pass)
-            hist = np.bincount(acc)
-            thr = int(np.searchsorted(np.cumsum(hist), m))
-            cand = np.nonzero(acc <= thr)[0]
-            ids, d = self.ids[cand], acc[cand]
-        else:
-            ids, d = self.ids, acc
-        order = np.lexsort((ids, d))[:m]
-        return ids[order], d[order].astype(np.float64)
+        # uint16 Hamming counts take the shared top-k's bincount boundary
+        return topk_tie_aware(np, self.ids, acc, k)
 
 
 def bq_replica_serve(
@@ -742,16 +709,13 @@ def bq_replica_serve(
 
     Ties (equal Hamming) break by id ascending, like every top-k here."""
     import numpy as np
-    import pandas as pd
 
     _popcount64_ = _popcount64
 
     entry = _bq_resolve(shard_paths, id_col=id_col)
-    if entry is None:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
+    if entry is None or len(queries_pd) == 0:
+        return topk_frame(id_col, dist_col)
     _, ids, words, med, pad = entry
-    if len(queries_pd) == 0:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
 
     qids = queries_pd["qid"].to_numpy()
     qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in queries_pd["qvec"]])
@@ -806,22 +770,9 @@ def bq_replica_serve(
         return _mmap_rerank(
             shard_paths, id_col, rerank_mmap_dir, ids, dh, qids, qmat, k, fetch_k, dist_col
         )
-    kk = min(k, n)
-    # Hamming distances live in [0, D]: one bincount pass finds the k-th
-    # smallest value per query, a boolean gather takes the <= threshold
-    # candidates (a hair more than k on ties), and only those few sort —
-    # measured faster than a full introselect argpartition over N
-    out_q, out_i, out_d = [], [], []
-    for qi in range(len(qids)):
-        row = dh[qi]
-        counts = np.bincount(row, minlength=1)
-        thresh = int(np.searchsorted(np.cumsum(counts), kk))
-        cand = np.flatnonzero(row <= thresh)
-        order_q = sorted(cand, key=lambda c: (row[c], ids[c]))[:kk]
-        out_q.extend([qids[qi]] * len(order_q))
-        out_i.extend(ids[c] for c in order_q)
-        out_d.extend(float(row[c]) for c in order_q)
-    return pd.DataFrame({"qid": out_q, id_col: out_i, dist_col: out_d})
+    # uint16 Hamming rows: the shared top-k finds each row's k-th boundary
+    # by one bincount pass, not an introselect over N
+    return topk_frame(id_col, dist_col, qids, *topk_tie_aware(np, ids, dh, k))
 
 
 def _train_pq_books(np, mat, num_subspaces: int, num_centroids: int,
@@ -959,14 +910,11 @@ def pq_replica_serve(
     Distances are sqrt(ADC sums) — the asymmetric approximation of true
     L2 (quantization error on the corpus side only); ties break by id."""
     import numpy as np
-    import pandas as pd
 
     entry = _pq_resolve(shard_paths, num_subspaces, num_centroids, id_col)
-    if entry is None:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
+    if entry is None or len(queries_pd) == 0:
+        return topk_frame(id_col, dist_col)
     _, ids, codes, books = entry
-    if len(queries_pd) == 0:
-        return pd.DataFrame({"qid": [], id_col: [], dist_col: []})
 
     m, kc, sub_d = books.shape
     n = len(ids)
@@ -988,9 +936,7 @@ def pq_replica_serve(
 
     d2 = np.zeros((nq, n), dtype=np.float32)
     n_threads = 8 if n >= 65536 else 1
-    import numpy as _np
-
-    bounds = _np.linspace(0, n, n_threads + 1, dtype=_np.int64)
+    bounds = np.linspace(0, n, n_threads + 1, dtype=np.int64)
 
     def _scan(slot):
         lo, hi = int(bounds[slot]), int(bounds[slot + 1])
@@ -1012,20 +958,7 @@ def pq_replica_serve(
             shard_paths, id_col, rerank_mmap_dir, ids, d2, qids,
             qmat.astype(np.float64), k, fetch_k, dist_col,
         )
-    kk = min(k, n)
-    sidx = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-    sel = np.take_along_axis(d2, sidx, axis=1)
-    parts = pd.DataFrame(
-        {
-            "qid": np.repeat(qids, kk),
-            id_col: ids[sidx.ravel()],
-            dist_col: sel.ravel().astype(np.float64),
-        }
-    )
-    order = np.lexsort(
-        (parts[id_col].to_numpy(), parts[dist_col].to_numpy(), parts["qid"].to_numpy())
-    )
-    return parts.iloc[order].reset_index(drop=True)
+    return topk_frame(id_col, dist_col, qids, *topk_tie_aware(np, ids, d2, k))
 
 
 # Margin multiplier for the certified float32 coarse-scan error bound.
@@ -1037,30 +970,6 @@ def pq_replica_serve(
 # undersizes the envelope at 2048/4096-d and can silently drop true
 # top-k rows). 12× matches the margin the old D=128 constant carried.
 _SQ_F32_MARGIN = 12.0
-
-
-def _topk_tie_aware(np, ids, d, k: int):
-    """(ids, dists) of the k smallest by (dist, id): distance ties break
-    by id deterministically. Partitioning at both m-1 and m puts the k-th
-    and (k+1)-th order statistics in sorted position, so the common
-    no-boundary-tie case needs only an m-element lexsort; only when the
-    boundary actually ties does the full widening pass
-    (``d <= kth`` scan) run."""
-    n = len(ids)
-    m = min(k, n)
-    if m < n:
-        # ONE introselect pass at m: positions [:m] hold the m smallest,
-        # position m is the (m+1)-th order statistic in sorted place
-        idx = d.argpartition(m)
-        head = idx[:m]
-        kth = d[head].max()
-        if d[idx[m]] > kth:
-            sel = head
-        else:
-            sel = np.nonzero(d <= kth)[0]
-        ids, d = ids[sel], d[sel]
-    order = np.lexsort((ids, d))[:m]
-    return ids[order], d[order].astype(np.float64)
 
 
 class SqReplicaHandle(_ArraySnapshot):
@@ -1111,7 +1020,7 @@ class SqReplicaHandle(_ArraySnapshot):
     def refresh(self) -> None:
         entry = _sq_resolve(self._paths, self._id_col)
         if entry is None:
-            raise ValueError("empty shard set")
+            raise shard_tier.EmptyShardSetError("empty shard set")
         self._stat_key, self.ids, self.codes, self.minv, self.s, self.wa2 = entry
         self._finish_derived()
 
@@ -1175,10 +1084,10 @@ class SqReplicaHandle(_ArraySnapshot):
         n = len(self.ids)
         m = min(k, n)
         if m == 0:
-            return _topk_tie_aware(np, self.ids[:0], np.empty(0, np.float64), k)
+            return topk_tie_aware(np, self.ids[:0], np.empty(0, np.float64), k)
         if n <= 4 * k or n <= 2048:
             # tiny tier: phase-1 bookkeeping costs more than the scan
-            return _topk_tie_aware(
+            return topk_tie_aware(
                 np, self.ids, self._exact_rows(slice(None), qw, wb2), k
             )
         # phase 1: float32 coarse scan. einsum with a cast-dtype FUSES the
@@ -1223,7 +1132,7 @@ class SqReplicaHandle(_ArraySnapshot):
         np.subtract(d2c, env, out=upper)  # reuse: now the lower bounds
         cand = np.flatnonzero(upper <= tau)
         # phase 2: exact float64 recompute of the candidates only
-        return _topk_tie_aware(np, self.ids[cand], self._exact_rows(cand, qw, wb2), k)
+        return topk_tie_aware(np, self.ids[cand], self._exact_rows(cand, qw, wb2), k)
 
 
 class PqReplicaHandle(_ArraySnapshot):
@@ -1266,7 +1175,7 @@ class PqReplicaHandle(_ArraySnapshot):
         np = self._np
         entry = _pq_resolve(self._paths, **self._kw)
         if entry is None:
-            raise ValueError("empty shard set")
+            raise shard_tier.EmptyShardSetError("empty shard set")
         self._stat_key, self.ids, codes, self.books = entry
         # subspace-major contiguous copy: the ADC loop gathers one
         # subspace's column per pass, and a strided (n, M) column walk
@@ -1316,4 +1225,4 @@ class PqReplicaHandle(_ArraySnapshot):
                 acc += lut[mi][self.codes_t[mi]]
         np.maximum(acc, 0.0, out=acc)
         np.sqrt(acc, out=acc)
-        return _topk_tie_aware(np, self.ids, acc, k)
+        return topk_tie_aware(np, self.ids, acc, k)

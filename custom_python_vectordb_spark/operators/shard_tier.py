@@ -15,6 +15,8 @@ persist-it-next-to-the-vectors (``vectordb_optimized.py:271-331``,
   JSON meta record in an ``.npz``, written atomically and read without
   pickle.
 - :func:`clear`: drop every entry (tests).
+- :class:`EmptyShardSetError`: the one signal that a shard set holds no
+  rows to build a handle over.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ import json
 import os
 import sys
 import threading
+import types
 from collections import OrderedDict
 
 import numpy as np
@@ -41,6 +44,11 @@ _building: dict = {}
 _resident = 0
 
 
+class EmptyShardSetError(ValueError):
+    """The shard files hold no rows, so there is no index to build or
+    serve; serving facades answer with empty results."""
+
+
 def _stat_key(paths: tuple) -> tuple:
     return tuple((p, st.st_mtime_ns, st.st_size) for p, st in ((p, os.stat(p)) for p in paths))
 
@@ -48,7 +56,8 @@ def _stat_key(paths: tuple) -> tuple:
 def _nbytes(obj, seen: set) -> int:
     """RAM held by a built value: each array buffer once, however many
     views share it (a memory map counts as none: the page cache holds
-    it), plus containers and their elements."""
+    it), plus containers and their elements, and the attributes of plain
+    objects (a handle's code arrays)."""
     if isinstance(obj, np.ndarray):
         while isinstance(obj.base, np.ndarray):
             obj = obj.base
@@ -64,7 +73,20 @@ def _nbytes(obj, seen: set) -> int:
         return sys.getsizeof(obj) + sum(
             _nbytes(k, seen) + _nbytes(v, seen) for k, v in obj.items()
         )
-    return sys.getsizeof(obj)
+    if isinstance(obj, types.ModuleType) or id(obj) in seen:
+        return 0
+    slots: list = []
+    for c in type(obj).__mro__:
+        sl = c.__dict__.get("__slots__", ())
+        slots += [sl] if isinstance(sl, str) else list(sl)
+    attrs = getattr(obj, "__dict__", None)
+    if not slots and not isinstance(attrs, dict):
+        return sys.getsizeof(obj)
+    seen.add(id(obj))
+    vals = [getattr(obj, s, None) for s in slots]
+    if isinstance(attrs, dict):
+        vals += attrs.values()
+    return sys.getsizeof(obj) + sum(_nbytes(v, seen) for v in vals)
 
 
 def resolve(kind: str, paths, params: tuple, build_fn):
@@ -108,6 +130,17 @@ def resolve(kind: str, paths, params: tuple, build_fn):
             del _building[key]
         done.set()
     return value
+
+
+def resident(kind: str, paths, params: tuple):
+    """The value :func:`resolve` would return for ``(kind, paths, params)``
+    when it is resident and fresh, else None. Builds nothing and leaves
+    the LRU order alone: a read-only view for status reports."""
+    paths = tuple(sorted(paths))
+    sk = _stat_key(paths)
+    with _lock:
+        ent = _entries.get((kind, paths, params))
+    return ent[1] if ent is not None and ent[0] == sk else None
 
 
 def load_vectors(paths, id_col: str, dtype: str, sort_ids: bool = False):

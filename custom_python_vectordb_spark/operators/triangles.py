@@ -134,15 +134,6 @@ def triangles_from_adjacency(adj: DataFrame) -> DataFrame:
     )
 
 
-def triangles_from_oriented(oriented: DataFrame) -> DataFrame:
-    """One row (n_triangles,) from a degree-ordered oriented edge set.
-    Kept for callers holding an oriented set; builds the adjacency lazily
-    and defers to :func:`triangles_from_adjacency`."""
-    return triangles_from_adjacency(
-        adjacency_from_oriented(oriented, materialize=False)
-    )
-
-
 def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     """Count triangles in the undirected simple graph given as distinct
     edges (one row per edge; endpoint order irrelevant, self-loops must be

@@ -13,16 +13,3 @@ from pyspark.sql import DataFrame
 
 def plan_of(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
-def assert_in_plan(df: DataFrame, *fragments: str) -> str:
-    plan = plan_of(df)
-    missing = [f for f in fragments if f not in plan]
-    if missing:
-        raise AssertionError(f"plan missing {missing}; plan:\n{plan}")
-    return plan
-
-
-def scan_read_schema(df: DataFrame) -> str:
-    """The ReadSchema line(s) of the Parquet scan — column-pruning check."""
-    return "\n".join(l for l in plan_of(df).splitlines() if "ReadSchema" in l)

@@ -55,6 +55,7 @@ uvicorn server; ``--workers N`` runs N such processes on one port.
 
 from __future__ import annotations
 
+import glob
 import io
 import json
 import os
@@ -69,6 +70,7 @@ from concurrent.futures import ThreadPoolExecutor
 from http.server import BaseHTTPRequestHandler
 
 from custom_python_vectordb_spark.api import VectorDB
+from custom_python_vectordb_spark.operators import shard_tier
 
 # Request threads of a Spark-backed worker. A plan-backed route holds its
 # thread in py4j for up to seconds; the other threads keep /health and the
@@ -443,25 +445,64 @@ def _routes(
     # snapshot-backed sharded indexes (r13): {name: root_dir} where
     # root_dir/*/ivfpq_index.npz are per-executor save_index outputs —
     # serves corpora that never fit one process's BUILD (e.g. the 100M
-    # probe tier) from a spark-less worker. Lazy-loaded + memoized: boot
-    # stays fast, first query pays the code-tier load once. nprobe is
-    # fixed at load (a per-request mutation would race concurrent
+    # probe tier) from a spark-less worker. Lazy-loaded through the shard
+    # tier, keyed on those .npz files: boot stays fast, the first query
+    # pays the code-tier load once, a re-saved directory is loaded fresh
+    # and the loaded codes count against the tier's byte budget. nprobe
+    # is fixed at load (a per-request mutation would race concurrent
     # handler threads); k/fetch_k stay per-request query-time knobs.
     snapshots = snapshots or {}
-    _snap_loaded: dict = {}
-    _snap_lock = threading.Lock()
+
+    def _snapshot_key(name: str) -> tuple:
+        root = snapshots[name]
+        return ("ivfpq_snapshot", glob.glob(os.path.join(root, "*", "ivfpq_index.npz")), (root,))
 
     def _snapshot_index(name: str):
         from custom_python_vectordb_spark.operators.partitioned import (
             ShardedIvfPqIndex,
         )
 
-        with _snap_lock:
-            idx = _snap_loaded.get(name)
-            if idx is None:
-                idx = ShardedIvfPqIndex.discover(snapshots[name])
-                _snap_loaded[name] = idx
-        return idx
+        return shard_tier.resolve(
+            *_snapshot_key(name),
+            lambda paths, _sk: ShardedIvfPqIndex([os.path.dirname(p) for p in paths]),
+        )
+
+    def _accelerated(body: dict, kind: str) -> dict:
+        """The index parameters of an ``ann``/``ivfpq``/``bq`` query, checked
+        before any index is built: none takes a where-filter; n_cells (and,
+        for ann, assign_r) key a k-means retrain, so they must be in the
+        operator's allowed set (r13, ADVICE low) — the reference exposes
+        its index params per request too (ef/M in the hnswlib facade);
+        nprobe is query-time and free within [1, n_cells]."""
+        if body.get("where") is not None:
+            raise ValueError(f"{kind} queries do not support where-filters; use the exact path")
+        if kind == "bq":
+            return {"fetch_k": body.get("fetch_k")}
+        n_cells = int(body.get("n_cells", 64))
+        nprobe = int(body.get("nprobe", 8 if kind == "ann" else 6))
+        if kind == "ann":
+            params = {"assign_r": int(body.get("assign_r", 2))}
+            if (n_cells, params["assign_r"]) not in ann_geometries:
+                raise ValueError(
+                    f"index geometry (n_cells={n_cells}, assign_r="
+                    f"{params['assign_r']}) is not in this server's allowed set "
+                    f"{sorted(ann_geometries)}; n_cells/assign_r key a "
+                    "k-means retrain — ask the operator to add the "
+                    "geometry (make_server ann_geometries=...). "
+                    "nprobe is query-time and free within bounds."
+                )
+        else:
+            params = {"fetch_k": body.get("fetch_k")}
+            if n_cells not in ivfpq_cells:
+                raise ValueError(
+                    f"n_cells={n_cells} is not in this server's "
+                    f"allowed set {sorted(ivfpq_cells)}; it keys a "
+                    "k-means retrain — ask the operator to add it "
+                    "(make_server ann_geometries=...)"
+                )
+        if not (1 <= nprobe <= n_cells):
+            raise ValueError(f"nprobe must be in [1, n_cells={n_cells}], got {nprobe}")
+        return {"n_cells": n_cells, "nprobe": nprobe, **params}
 
     def handle(method: str, path: str, body: dict):
         from urllib.parse import parse_qs, urlparse
@@ -483,15 +524,13 @@ def _routes(
                 ]
             }
         if parts == ["snapshots"] and method == "GET":
-            return 200, {
-                "snapshots": {
-                    n: {"loaded": n in _snap_loaded,
-                        **({"rows": len(_snap_loaded[n]),
-                            "shards": len(_snap_loaded[n].shards)}
-                           if n in _snap_loaded else {})}
-                    for n in sorted(snapshots)
-                }
-            }
+            report = {}
+            for n in sorted(snapshots):
+                idx = shard_tier.resident(*_snapshot_key(n))
+                report[n] = {"loaded": idx is not None,
+                             **({"rows": len(idx), "shards": len(idx.shards)}
+                                if idx is not None else {})}
+            return 200, {"snapshots": report}
         if (len(parts) == 3 and parts[0] == "snapshots"
                 and parts[2] == "query" and method == "POST"):
             if parts[1] not in snapshots:
@@ -697,103 +736,23 @@ def _routes(
                 # round-trip; the dict filter becomes a NumPy mask over
                 # replica-resident metadata (the reference's P5 pattern).
                 # "ann": true routes to the IVF replica (api.ann_serve) —
-                # the accelerated tier, approximate by contract
-                if body.get("ann"):
-                    if body.get("where") is not None:
-                        raise ValueError(
-                            "ann queries do not support where-filters; "
-                            "use the exact path"
-                        )
-                    # optional index geometry, contract-validated like the
-                    # ivfpq route (r12): the reference exposes its index
-                    # params per request too (ef/M in the hnswlib facade)
-                    n_cells = int(body.get("n_cells", 64))
-                    nprobe = int(body.get("nprobe", 8))
-                    assign_r = int(body.get("assign_r", 2))
-                    if (n_cells, assign_r) not in ann_geometries:
-                        raise ValueError(
-                            f"index geometry (n_cells={n_cells}, assign_r="
-                            f"{assign_r}) is not in this server's allowed set "
-                            f"{sorted(ann_geometries)}; n_cells/assign_r key a "
-                            "k-means retrain — ask the operator to add the "
-                            "geometry (make_server ann_geometries=...). "
-                            "nprobe is query-time and free within bounds."
-                        )
-                    if not (1 <= nprobe <= n_cells):
-                        raise ValueError(
-                            f"nprobe must be in [1, n_cells={n_cells}], got {nprobe}"
-                        )
-                    return 200, {
-                        "results": coll.ann_serve(
-                            query_texts=body.get("query_texts"),
-                            query_embeddings=body.get("query_embeddings"),
-                            n_results=int(body.get("n_results", 10)),
-                            n_cells=n_cells,
-                            nprobe=nprobe,
-                            assign_r=assign_r,
-                        )
-                    }
-                # "ivfpq": true routes to the cell-pruned PQ replica
-                # (api.ivfpq_serve, round 11) — 32x resident compression
-                # AT cell-pruned latency; optional "fetch_k" adds the
+                # the accelerated tier, approximate by contract; "ivfpq":
+                # true to the cell-pruned PQ replica (api.ivfpq_serve,
+                # round 11), 32x resident compression at cell-pruned
+                # latency; "bq": true to the binary-quantized replica
+                # (api.bq_serve). ivfpq/bq take an optional "fetch_k"
                 # exact mmap rerank
-                if body.get("ivfpq"):
-                    if body.get("where") is not None:
-                        raise ValueError(
-                            "ivfpq queries do not support where-filters; "
-                            "use the exact path"
-                        )
-                    n_cells = int(body.get("n_cells", 64))
-                    nprobe = int(body.get("nprobe", 6))
-                    # contract-validate BEFORE index construction; n_cells
-                    # keys a retrain, so it faces the same operator
-                    # allowlist as the ann route (r13, ADVICE low)
-                    if n_cells not in ivfpq_cells:
-                        raise ValueError(
-                            f"n_cells={n_cells} is not in this server's "
-                            f"allowed set {sorted(ivfpq_cells)}; it keys a "
-                            "k-means retrain — ask the operator to add it "
-                            "(make_server ann_geometries=...)"
-                        )
-                    if not (1 <= nprobe <= n_cells):
-                        raise ValueError(
-                            f"nprobe must be in [1, n_cells={n_cells}], got {nprobe}"
-                        )
-                    return 200, {
-                        "results": coll.ivfpq_serve(
-                            query_texts=body.get("query_texts"),
-                            query_embeddings=body.get("query_embeddings"),
-                            n_results=int(body.get("n_results", 10)),
-                            n_cells=n_cells,
-                            nprobe=nprobe,
-                            fetch_k=body.get("fetch_k"),
-                        )
-                    }
-                # "bq": true routes to the binary-quantized replica
-                # (api.bq_serve) — the 32x-compression tier; optional
-                # "fetch_k" adds the exact rerank over coarse candidates
-                if body.get("bq"):
-                    if body.get("where") is not None:
-                        raise ValueError(
-                            "bq queries do not support where-filters; "
-                            "use the exact path"
-                        )
-                    return 200, {
-                        "results": coll.bq_serve(
-                            query_texts=body.get("query_texts"),
-                            query_embeddings=body.get("query_embeddings"),
-                            n_results=int(body.get("n_results", 10)),
-                            fetch_k=body.get("fetch_k"),
-                        )
-                    }
-                return 200, {
-                    "results": coll.query_serve(
-                        query_texts=body.get("query_texts"),
-                        query_embeddings=body.get("query_embeddings"),
-                        n_results=int(body.get("n_results", 10)),
-                        where=body.get("where"),
-                    )
+                common = {
+                    "query_texts": body.get("query_texts"),
+                    "query_embeddings": body.get("query_embeddings"),
+                    "n_results": int(body.get("n_results", 10)),
                 }
+                kind = ("ann" if body.get("ann") else "ivfpq" if body.get("ivfpq")
+                        else "bq" if body.get("bq") else None)
+                if kind is not None:
+                    serve = getattr(coll, f"{kind}_serve")
+                    return 200, {"results": serve(**common, **_accelerated(body, kind))}
+                return 200, {"results": coll.query_serve(**common, where=body.get("where"))}
             if len(parts) == 4 and parts[2] == "get" and method == "GET":
                 doc = coll.get(parts[3])
                 return (200, doc) if doc is not None else (404, {"error": f"id {parts[3]!r} not found"})

@@ -128,16 +128,6 @@ def process_linkage_batch(
     b.unpersist()
 
 
-def maintain_linkage_index(record_stream: DataFrame, index_root: str, **kwargs):
-    """foreachBatch writer keeping the linkage index current; start with
-    ``.start()`` after configuring trigger/checkpoint."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        process_linkage_batch(batch_df, batch_id, index_root, **kwargs)
-
-    return record_stream.writeStream.foreachBatch(write_batch)
-
-
 def load_linkage_pairs(spark: SparkSession, index_root: str) -> DataFrame:
     """All verified fuzzy pairs found so far (distinct across batches)."""
     return spark.read.parquet(_pairs_path(index_root)).drop("batch_id").distinct()

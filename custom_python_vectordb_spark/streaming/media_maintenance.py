@@ -151,16 +151,6 @@ def process_image_batch(
     sigs.unpersist()
 
 
-def maintain_image_hash_index(media_stream: DataFrame, index_root: str, **kwargs):
-    """foreachBatch writer keeping the image-hash index current; start
-    with ``.start()`` after configuring trigger/checkpoint."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        process_image_batch(batch_df, batch_id, index_root, **kwargs)
-
-    return media_stream.writeStream.foreachBatch(write_batch)
-
-
 def load_image_pairs(spark: SparkSession, index_root: str) -> DataFrame:
     """All verified perceptual near-dup pairs found so far (distinct
     across batches; a replayed batch overwrites its own partition)."""
@@ -275,15 +265,6 @@ def process_video_batch(
     _write(pairs, _video_pairs_path(index_root))
     _write(sigs, sig_dir)
     sigs.unpersist()
-
-
-def maintain_video_hash_index(media_stream: DataFrame, index_root: str, **kwargs):
-    """foreachBatch writer keeping the video frame-hash index current."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        process_video_batch(batch_df, batch_id, index_root, **kwargs)
-
-    return media_stream.writeStream.foreachBatch(write_batch)
 
 
 def load_video_pairs(spark: SparkSession, index_root: str) -> DataFrame:

@@ -109,18 +109,3 @@ def process_versioned_merge(
         extra={"stream_batch_id": batch_id},
     )
     return True
-
-
-def versioned_merge_sink(
-    stream_df: DataFrame,
-    root: str,
-    name: str,
-    on: str,
-    stats_cols: list[str] | None = None,
-):
-    """foreachBatch CDC writer: configure trigger/checkpoint then ``.start()``."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        process_versioned_merge(batch_df, batch_id, root, name, on, stats_cols)
-
-    return stream_df.writeStream.foreachBatch(write)

@@ -853,18 +853,126 @@ def test_snapshot_rest_route(spark, tmp_path):
         srv.shutdown()
 
 
+def test_snapshot_route_serves_a_resaved_directory(spark, tmp_path):
+    """A snapshot directory re-saved from other rows is served fresh
+    without a restart: the route resolves its sharded index through the
+    shard tier, keyed on the ``*/ivfpq_index.npz`` files, GET /snapshots
+    reports residency from the tier (a stale entry is not loaded), and
+    the tier counts the index's code arrays against its byte budget."""
+    import json
+    import os
+    import urllib.request
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from custom_python_vectordb_spark.api import VectorDB
+    from custom_python_vectordb_spark.operators import shard_tier
+    from custom_python_vectordb_spark.operators.partitioned import (
+        IvfPqReplicaHandle,
+        ShardedIvfPqIndex,
+    )
+    from custom_python_vectordb_spark.server import serve_background
+
+    rng = np.random.default_rng(17)
+    root = str(tmp_path / "snaps")
+
+    def save(first_id: int) -> None:
+        mat = rng.standard_normal((500, 8)).astype(np.float32)
+        p = str(tmp_path / f"c{first_id}.parquet")
+        pq.write_table(pa.table({"vec_id": np.arange(first_id, first_id + 500),
+                                 "embedding": list(mat)}), p)
+        IvfPqReplicaHandle([p], n_cells=4, nprobe=4, assign_r=1,
+                           num_subspaces=4).save_index(os.path.join(root, "sub-00"))
+
+    save(0)
+    srv, port = serve_background(
+        VectorDB(spark, str(tmp_path / "wh")), snapshots={"vecs": root},
+    )
+    try:
+        def call(method, path, body=None):
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{port}{path}",
+                data=json.dumps(body).encode() if body is not None else None,
+                method=method,
+                headers={"Content-Type": "application/json"} if body else {},
+            )
+            with urllib.request.urlopen(req, timeout=30) as r:
+                return json.loads(r.read())
+
+        body = {"query_embeddings": [[0.1] * 8], "n_results": 5}
+        first = [h["id"] for h in call("POST", "/snapshots/vecs/query", body)["results"][0]]
+        assert len(first) == 5 and all(i < 500 for i in first)
+        assert call("GET", "/snapshots")["snapshots"]["vecs"]["loaded"] is True
+        save(10_000)
+        assert call("GET", "/snapshots")["snapshots"]["vecs"] == {"loaded": False}
+        second = [h["id"] for h in call("POST", "/snapshots/vecs/query", body)["results"][0]]
+        assert len(second) == 5 and all(i >= 10_000 for i in second)
+        listed = call("GET", "/snapshots")["snapshots"]["vecs"]
+        assert listed == {"loaded": True, "rows": 500, "shards": 1}
+    finally:
+        srv.shutdown()
+    # the tier's byte budget sees the loaded code arrays, not only the
+    # size of the index object
+    idx = ShardedIvfPqIndex.discover(root)
+    codes = sum(c.nbytes for h in idx.shards for c in h.cell_codes)
+    assert shard_tier._nbytes(idx, set()) >= codes > 0
+
+
+def test_ivfpq_auto_subspaces_independent_of_first_nprobe(tmp_path):
+    """num_subspaces="auto" measures recall at the fixed probe width
+    ``_AUTO_M_NPROBE``: the chosen M depends only on the shards and the
+    build parameters (the tier key), never on the nprobe of whichever
+    handle built the entry first — nprobe is free per REST request. On
+    this corpus a 1-cell probe and an 8-cell probe pick different M, so a
+    caller-width probe makes the choice depend on arrival order. The
+    width is recorded in the snapshot."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from custom_python_vectordb_spark.operators import partitioned as P
+    from custom_python_vectordb_spark.operators import shard_tier
+
+    rng = np.random.default_rng(1)
+    n, dim = 4000, 32
+    mat = rng.standard_normal((1, dim)) * 5.0 + 0.7 * rng.standard_normal((n, dim))
+    p = str(tmp_path / "c.parquet")
+    pq.write_table(pa.table({"vec_id": np.arange(n), "embedding": list(mat)}), p)
+    chosen = {}
+    for order in ((1, 8), (8, 1)):
+        shard_tier.clear()
+        handles = [
+            P.IvfPqReplicaHandle([p], n_cells=16, nprobe=nprobe, assign_r=1,
+                                 num_subspaces="auto", num_centroids=16)
+            for nprobe in order
+        ]
+        chosen[order] = [h.chosen_m for h in handles]
+    assert chosen[(1, 8)] == chosen[(8, 1)][::-1], chosen
+    assert len({m for ms in chosen.values() for m in ms}) == 1, chosen
+    d = str(tmp_path / "snap")
+    handles[0].save_index(d)
+    assert shard_tier.load(d, "ivfpq_index")[1]["probe_nprobe"] == P._AUTO_M_NPROBE
+    shard_tier.clear()
+
+
 def test_ivf_probe_of_empty_cells_widens_to_k(tmp_path):
     """With assign_r=1, k-means can leave cells empty: the first rows are
     one repeated vector, so the duplicate seed centroids never win a row
     and stay where a query at that vector probes them first. search_one
-    (and the batch path, same rule) must keep probing nearest-first until
-    k rows are seen instead of returning fewer than k."""
+    (and the batch path and the IVF-PQ handle, same rule) must keep
+    probing nearest-first until k rows are seen instead of returning
+    fewer than k."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from custom_python_vectordb_spark.operators.partitioned import (
+        IvfPqReplicaHandle,
         IvfReplicaHandle,
         ivf_replica_serve,
     )
@@ -884,3 +992,10 @@ def test_ivf_probe_of_empty_cells_widens_to_k(tmp_path):
     batch = ivf_replica_serve([p], pd.DataFrame({"qid": [0], "qvec": [far]}), k=20, **kw)
     assert list(batch["vec_id"]) == list(ids)
     assert np.allclose(batch["dist"].to_numpy(), dists)
+    # the IVF-PQ handle takes the same probe rule
+    pq_ids, pq_d = IvfPqReplicaHandle(
+        [p], n_cells=16, nprobe=2, assign_r=1, num_subspaces=4
+    ).search_one(far, k=20)
+    assert len(pq_ids) == 20
+    assert set(range(16)) <= set(int(i) for i in pq_ids)
+    assert list(pq_d) == sorted(pq_d)

@@ -447,10 +447,8 @@ def test_sq_handle_two_phase_bit_identity():
     the chunk-geometry recompute)."""
     import glob
 
-    from custom_python_vectordb_spark.operators.quantization import (
-        SqReplicaHandle,
-        _topk_tie_aware,
-    )
+    from custom_python_vectordb_spark.operators.quantization import SqReplicaHandle
+    from custom_python_vectordb_spark.operators.topk import topk_tie_aware
 
     shard = "/root/testdata/sf0.01/embeddings.parquet"
     h = SqReplicaHandle([shard])
@@ -471,7 +469,7 @@ def test_sq_handle_two_phase_bit_identity():
         d2 += wb2
         np.maximum(d2, 0.0, out=d2)
         np.sqrt(d2, out=d2)
-        return _topk_tie_aware(np, h.ids, d2, k)
+        return topk_tie_aware(np, h.ids, d2, k)
 
     rng = np.random.default_rng(12)
     dim = h.codes.shape[1]
@@ -519,10 +517,8 @@ def test_sq_handle_envelope_scales_with_dimension(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from custom_python_vectordb_spark.operators.quantization import (
-        SqReplicaHandle,
-        _topk_tie_aware,
-    )
+    from custom_python_vectordb_spark.operators.quantization import SqReplicaHandle
+    from custom_python_vectordb_spark.operators.topk import topk_tie_aware
 
     rng = np.random.default_rng(5)
     dim, n = 2048, 3000
@@ -555,7 +551,7 @@ def test_sq_handle_envelope_scales_with_dimension(tmp_path):
         d2 += wb2
         np.maximum(d2, 0.0, out=d2)
         np.sqrt(d2, out=d2)
-        return _topk_tie_aware(np, h.ids, d2, k)
+        return topk_tie_aware(np, h.ids, d2, k)
 
     for q in [base[i] for i in range(0, 30, 3)]:
         ti, td = full_scan(q, 10)

@@ -204,6 +204,35 @@ def test_only_shard_tier_holds_caches_or_unpickles():
     assert not offenders, offenders
 
 
+# where a bare argpartition may stay: the shared top-k lives in
+# operators/topk.py; the IVF probe rule; the nearest-r cell assignment; and
+# the two Spark kernels whose outputs DuckDB oracles and snapshots pin
+ARGPARTITION_ALLOWED = {
+    "operators/knn.py": {"knn_batch_gemm"},
+    "operators/partitioned.py": {"_probe_cells", "_train_assign_cells", "knn_partitioned"},
+}
+
+
+def test_serving_top_k_goes_through_the_shared_top_k():
+    """Every NumPy top-k of the in-process tiers ranks by (dist, id)
+    through operators/topk.py: no argpartition outside the allowed
+    definitions of these modules (a bare argpartition breaks ties at the
+    k-th boundary arbitrarily)."""
+    pkg = pathlib.Path(custom_python_vectordb_spark.__file__).parent
+    offenders = []
+    for rel in ("operators/knn.py", "operators/quantization.py", "operators/partitioned.py",
+                "operators/bm25.py", "operators/mmr.py", "api.py"):
+        tree = ast.parse((pkg / rel).read_text(), filename=rel)
+        for top in tree.body:
+            name = getattr(top, "name", None)
+            for node in ast.walk(top):
+                used = (isinstance(node, ast.Attribute) and node.attr == "argpartition") or (
+                    isinstance(node, ast.Name) and node.id == "argpartition")
+                if used and name not in ARGPARTITION_ALLOWED.get(rel, ()):
+                    offenders.append(f"{rel}:{node.lineno} in {name}")
+    assert not offenders, offenders
+
+
 def test_ivfpq_serve_warm_request_reads_no_parquet_or_ids(tmp_path, monkeypatch):
     """api.ivfpq_serve resolves its handle through the tier: with the tier
     warm, a second identical request (rerank tier included) reads neither
