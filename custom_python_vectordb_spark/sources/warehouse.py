@@ -22,6 +22,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from custom_python_vectordb_spark.streaming import batch_store
+
 
 class Warehouse:
     """M8 — create/drop/list/load/save collections under a root dir."""
@@ -99,23 +101,13 @@ class Warehouse:
         if os.path.isdir(old):
             shutil.rmtree(old, ignore_errors=True)
 
-    def save_batch_partition(
-        self, name: str, df: DataFrame, batch_id: int, key: str = "batch_id"
-    ) -> None:
+    def save_batch_partition(self, name: str, df: DataFrame, batch_id: int) -> None:
         """Idempotent micro-batch append for foreachBatch writers: the batch
-        lands in its own ``{key}={batch_id}`` partition under dynamic
-        partition overwrite, so an at-least-once REPLAY of the same batch
-        overwrites its partition instead of appending duplicates —
-        exactly-once effect on the stored table without a commit log."""
-        from pyspark.sql import functions as F
-
-        (
-            df.withColumn(key, F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(key)
-            .parquet(self._path(name))
-        )
+        lands in its own ``batch_id=<n>`` partition of the collection
+        through the replay-safe batch store (`streaming/batch_store.py`), so
+        an at-least-once REPLAY of the same batch overwrites its partition
+        instead of appending duplicates."""
+        batch_store.write(df, self.root, name, batch_id)
 
     def save_bucketed(
         self, name: str, df: DataFrame, key: str = "id", buckets: int = 32

@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 from custom_python_vectordb_spark.operators.bm25 import B, K1, postings
 from custom_python_vectordb_spark.functions.text import tokenize_py
 from custom_python_vectordb_spark.functions.local_relation import local_df
+from custom_python_vectordb_spark.streaming import batch_store
 
 DOC_SCHEMA = StructType(
     [
@@ -70,11 +71,9 @@ def maintain_postings(doc_stream: DataFrame, warehouse, name: str = "postings"):
     batch_id. Append-only corpus ⇒ batches touch disjoint doc_ids ⇒ the
     union of per-batch postings IS the full rebuild (asserted in tests).
 
-    foreachBatch is AT-LEAST-ONCE, so the write must be replay-safe
-    (round-2 ADVICE): each batch overwrites its own ``batch_id=<n>``
-    partition (dynamic partition overwrite), making a post-failure replay
-    of the same batch a no-op instead of a silent tf/df/N inflation. The
-    serving reader drops the bookkeeping column."""
+    foreachBatch is AT-LEAST-ONCE, so the write goes through the
+    replay-safe batch store (`batch_store.py`): a post-failure replay of
+    the same batch is a no-op instead of a silent tf/df/N inflation."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         warehouse.save_batch_partition(name, postings(batch_df), batch_id)
@@ -84,7 +83,7 @@ def maintain_postings(doc_stream: DataFrame, warehouse, name: str = "postings"):
 
 def load_postings(warehouse, name: str = "postings") -> DataFrame:
     """The maintained postings relation, bookkeeping column stripped."""
-    return warehouse.load(name).drop("batch_id")
+    return batch_store.read(warehouse.spark, warehouse.root, name)
 
 
 def bm25_from_postings(

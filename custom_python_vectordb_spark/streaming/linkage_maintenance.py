@@ -12,8 +12,8 @@ INCREMENTAL — the same architecture as the streaming near-dup index
    the batch's own rows for within-batch matches),
 3. verifies candidates with JVM levenshtein (names live in the block
    index, so no second table read), and
-4. appends its own block rows and verified pairs replay-idempotently
-   (``batch_id=<n>`` partitions under dynamic partition overwrite).
+4. appends its own block rows and verified pairs through the replay-safe
+   batch store (`streaming/batch_store.py`).
 
 Block-size cap semantics: the cap is evaluated at PROBE time over
 history+batch — a block that only later outgrows the cap keeps its
@@ -26,18 +26,10 @@ whole block — same protection, applied monotonically.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _blocks_path(root: str) -> str:
-    return os.path.join(root, "blocks")
-
-
-def _pairs_path(root: str) -> str:
-    return os.path.join(root, "pairs")
+from custom_python_vectordb_spark.streaming import batch_store
 
 
 def _block_rows(records: DataFrame, id_col: str, name_col: str, length_band: int) -> DataFrame:
@@ -67,67 +59,40 @@ def process_linkage_batch(
     carry (id, name); ids globally unique across batches (ingest
     invariant, as in the other maintenance sinks)."""
     spark = batch_records.sparkSession
-    b = _block_rows(batch_records, id_col, name_col, length_band).persist()
-
-    blocks_dir = _blocks_path(index_root)
-    history_exists = os.path.isdir(blocks_dir) and any(
-        d.startswith("batch_id=") for d in os.listdir(blocks_dir)
-    )
-    if history_exists:
-        # exclude THIS batch's partition: a replay must not treat its own
-        # previous (about-to-be-overwritten) rows as history
-        history = (
-            spark.read.parquet(blocks_dir)
-            .filter(F.col("batch_id") != batch_id)
-            .drop("batch_id")
+    b = _block_rows(batch_records, id_col, name_col, length_band)
+    with batch_store.persisted(b):
+        history = batch_store.history(spark, index_root, "blocks", batch_id)
+        probe = b if history is None else history.unionByName(b)
+        # probe-time block cap over history+batch (see module docstring)
+        ok = (
+            probe.groupBy("tok0", "lb")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") <= max_block)
+            .select("tok0", "lb")
         )
-        probe = history.unionByName(b)
-    else:
-        probe = b
-    # probe-time block cap over history+batch (see module docstring)
-    ok = (
-        probe.groupBy("tok0", "lb")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= max_block)
-        .select("tok0", "lb")
-    )
-    pairs = (
-        b.join(ok, ["tok0", "lb"])
-        .select("tok0", "lb", F.col("id").alias("x"), F.col("name").alias("nx"))
-        .join(
-            probe.join(ok, ["tok0", "lb"]).select(
-                "tok0", "lb", F.col("id").alias("y"), F.col("name").alias("ny")
-            ),
-            ["tok0", "lb"],
+        pairs = (
+            b.join(ok, ["tok0", "lb"])
+            .select("tok0", "lb", F.col("id").alias("x"), F.col("name").alias("nx"))
+            .join(
+                probe.join(ok, ["tok0", "lb"]).select(
+                    "tok0", "lb", F.col("id").alias("y"), F.col("name").alias("ny")
+                ),
+                ["tok0", "lb"],
+            )
+            .filter(F.col("x") != F.col("y"))
+            .select(
+                F.least("x", "y").alias("a"),
+                F.greatest("x", "y").alias("b"),
+                F.levenshtein(
+                    F.least(F.col("nx"), F.col("ny")), F.greatest(F.col("nx"), F.col("ny"))
+                ).alias("d"),
+            )
+            .filter(F.col("d") <= max_distance)
+            .distinct()
         )
-        .filter(F.col("x") != F.col("y"))
-        .select(
-            F.least("x", "y").alias("a"),
-            F.greatest("x", "y").alias("b"),
-            F.levenshtein(
-                F.least(F.col("nx"), F.col("ny")), F.greatest(F.col("nx"), F.col("ny"))
-            ).alias("d"),
-        )
-        .filter(F.col("d") <= max_distance)
-        .distinct()
-    )
-
-    def _write(df: DataFrame, path: str) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    # ORDER MATTERS on replay: `pairs` lazily reads the blocks dir, so it
-    # must materialize before that dir's partition is overwritten
-    _write(pairs, _pairs_path(index_root))
-    _write(b, blocks_dir)
-    b.unpersist()
+        batch_store.commit(index_root, batch_id, {"pairs": pairs}, {"blocks": b})
 
 
 def load_linkage_pairs(spark: SparkSession, index_root: str) -> DataFrame:
     """All verified fuzzy pairs found so far (distinct across batches)."""
-    return spark.read.parquet(_pairs_path(index_root)).drop("batch_id").distinct()
+    return batch_store.read(spark, index_root, "pairs").distinct()

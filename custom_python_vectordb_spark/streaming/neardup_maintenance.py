@@ -13,9 +13,7 @@ run. At ingest scale the index must be INCREMENTAL: each micro-batch
 3. exact-verifies candidates with shingle Jaccard over just the candidate
    pairs' texts, and
 4. appends its own signatures/band keys (and its verified pairs) to the
-   index, replay-idempotently (``batch_id=<n>`` partitions under dynamic
-   partition overwrite — the pattern hardened by round-2 ADVICE in
-   `streaming/index_maintenance.py`).
+   index through the replay-safe batch store (`streaming/batch_store.py`).
 
 Within-batch duplicates are caught by the same probe (the batch's own
 band keys are unioned into the probe side with `a < b` dedup), so the
@@ -31,8 +29,6 @@ and overwrites its partition.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,14 +37,7 @@ from custom_python_vectordb_spark.operators.dedup import (
     lsh_band_keys,
     minhash_signatures_wide,
 )
-
-
-def _index_path(root: str) -> str:
-    return os.path.join(root, "bands")
-
-
-def _pairs_path(root: str) -> str:
-    return os.path.join(root, "pairs")
+from custom_python_vectordb_spark.streaming import batch_store
 
 
 def process_neardup_batch(
@@ -72,70 +61,37 @@ def process_neardup_batch(
     wide = minhash_signatures_wide(
         docs, num_hashes=num_hashes, shingle_n=shingle_n, id_col=id_col, text_col=text_col
     )
-    banded = lsh_band_keys(wide, bands=bands, rows_per_band=rows_per_band, id_col=id_col).persist()
-
-    bands_dir = _index_path(index_root)
-    history_exists = os.path.isdir(bands_dir) and any(
-        d.startswith("batch_id=") for d in os.listdir(bands_dir)
-    )
-    if history_exists:
-        # exclude THIS batch's partition: a replay must not treat its own
-        # previous (about-to-be-overwritten) rows as history
-        history = (
-            spark.read.parquet(bands_dir)
-            .filter(F.col("batch_id") != batch_id)
-            .drop("batch_id")
+    banded = lsh_band_keys(wide, bands=bands, rows_per_band=rows_per_band, id_col=id_col)
+    with batch_store.persisted(banded):
+        history = batch_store.history(spark, index_root, "bands", batch_id)
+        probe = banded if history is None else history.unionByName(banded)
+        cands = (
+            banded.select(F.col(id_col).alias("__new"), "band", "band_key")
+            .join(
+                probe.select(F.col(id_col).alias("__other"), "band", "band_key"),
+                ["band", "band_key"],
+            )
+            .filter(F.col("__new") != F.col("__other"))
+            .select(
+                F.least("__new", "__other").alias("a"), F.greatest("__new", "__other").alias("b")
+            )
+            .distinct()
         )
-        probe = history.unionByName(banded)
-    else:
-        probe = banded
-    cands = (
-        banded.select(F.col(id_col).alias("__new"), "band", "band_key")
-        .join(probe.select(F.col(id_col).alias("__other"), "band", "band_key"), ["band", "band_key"])
-        .filter(F.col("__new") != F.col("__other"))
-        .select(
-            F.least("__new", "__other").alias("a"), F.greatest("__new", "__other").alias("b")
+        # the band index stores no text: verification reads the stored docs
+        # table (the one source of truth) plus this batch's texts
+        docs_hist = batch_store.history(spark, index_root, "docs", batch_id)
+        docs_all = docs if docs_hist is None else docs_hist.unionByName(docs)
+        verified = jaccard_pairs(
+            docs_all.dropDuplicates([id_col]),
+            threshold=threshold,
+            shingle_n=shingle_n,
+            id_col=id_col,
+            text_col=text_col,
+            restrict_pairs=cands,
         )
-        .distinct()
-    )
-    # exact verify needs both sides' texts: batch texts + previously stored
-    # pair-partner texts are all reachable from the caller's corpus table;
-    # here we verify against the batch ∪ history TEXTS snapshot the caller
-    # passes via closure-free storage — the signatures table stores no text,
-    # so verification reads the docs table (the one source of truth).
-    docs_dir = os.path.join(index_root, "docs")
-    docs_all = (
-        spark.read.parquet(docs_dir).drop("batch_id") if os.path.isdir(docs_dir) else docs
-    )
-    verified = jaccard_pairs(
-        docs_all.unionByName(docs).dropDuplicates([id_col]),
-        threshold=threshold,
-        shingle_n=shingle_n,
-        id_col=id_col,
-        text_col=text_col,
-        restrict_pairs=cands,
-    )
-
-    # idempotent writes: each batch owns its batch_id partition
-    def _write(df: DataFrame, path: str) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
+        batch_store.commit(
+            index_root, batch_id, {"pairs": verified}, {"bands": banded, "docs": docs}
         )
-
-    # ORDER MATTERS on replay: `verified` lazily reads the bands/docs dirs,
-    # so it must fully materialize (its write is the action) BEFORE those
-    # dirs' partitions are overwritten — writing bands/docs first would
-    # yank files out from under the still-unexecuted verify plan. After
-    # the verified write, `banded` is persisted+materialized and `docs`
-    # derives from the batch source only, so neither re-reads the index.
-    _write(verified, _pairs_path(index_root))
-    _write(banded, bands_dir)
-    _write(docs, os.path.join(index_root, "docs"))
-    banded.unpersist()
 
 
 def maintain_neardup_index(doc_stream: DataFrame, index_root: str, **kwargs):
@@ -152,6 +108,4 @@ def load_neardup_pairs(spark: SparkSession, index_root: str) -> DataFrame:
     """All verified near-dup pairs found so far (distinct across batches —
     a pair discovered when its second member arrived is recorded once by
     that batch; a pair re-discovered by a replay overwrites in place)."""
-    return (
-        spark.read.parquet(_pairs_path(index_root)).drop("batch_id").distinct()
-    )
+    return batch_store.read(spark, index_root, "pairs").distinct()

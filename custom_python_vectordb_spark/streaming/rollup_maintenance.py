@@ -2,11 +2,12 @@
 
 A dashboard aggregate (counts/sums by key) over an append-only stream
 should not re-scan history per refresh. The standard incremental design,
-in the same replay-idempotent style as the other maintenance sinks here:
+on the replay-safe batch store (`batch_store.py`) like the other
+maintenance sinks here:
 
 - each micro-batch writes its PARTIAL aggregate (key, cnt, sum) under a
-  ``batch_id=<n>`` partition with dynamic partition overwrite — a replay
-  overwrites its own partition, so the view never double-counts;
+  ``batch_id=<n>`` partition — a replay overwrites its own partition, so
+  the view never double-counts;
 - the VIEW READ is one groupBy-sum over the stored partials — cost is
   O(batches × keys-per-batch) small rows, never the raw stream; compact
   the partials with the same groupBy whenever batch count grows
@@ -34,9 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _partials_path(root: str, name: str) -> str:
-    return os.path.join(root, name)
+from custom_python_vectordb_spark.streaming import batch_store
 
 
 def hist_partial_expr(value_col: str, bins: int, lo: float, hi: float) -> F.Column:
@@ -130,14 +129,7 @@ def process_rollup_batch(
         aggs.append(F.hll_sketch_agg(distinct_col).alias("hll"))
     if quantile_col is not None:
         aggs.append(hist_partial_expr(quantile_col, bins, lo, hi).alias("hist"))
-    partial = batch_df.groupBy(*keys).agg(*aggs)
-    (
-        partial.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(_partials_path(root, name))
-    )
+    batch_store.write(batch_df.groupBy(*keys).agg(*aggs), root, name, batch_id)
 
 
 def maintain_rollup(
@@ -182,8 +174,7 @@ def read_rollup(
     [, p<q> ...]) merged across all partials — one small aggregate, the
     raw stream is never re-read. Sketch columns appear when the partials
     carry them."""
-    partials = spark.read.parquet(_partials_path(root, name))
-    out = _merged(partials, keys, bins).withColumn(
+    out = _merged(batch_store.read(spark, root, name), keys, bins).withColumn(
         "avg", F.col("total") / F.col("cnt")
     )
     if "hll" in out.columns:
@@ -208,11 +199,8 @@ def compact_rollup(
     contract as the other maintenance sinks)."""
     import shutil
 
-    path = _partials_path(root, name)
-    folded = _merged(spark.read.parquet(path), keys, bins)
-    staged = path + ".compact"
-    folded.withColumn("batch_id", F.lit(-1)).write.mode("overwrite").partitionBy(
-        "batch_id"
-    ).parquet(staged)
+    folded = _merged(batch_store.read(spark, root, name), keys, bins)
+    batch_store.write(folded, root, f"{name}.compact", -1)
+    path = os.path.join(root, name)
     shutil.rmtree(path)
-    os.rename(staged, path)
+    os.rename(path + ".compact", path)

@@ -18,8 +18,7 @@ index must be INCREMENTAL, mirroring `neardup_maintenance.py`:
    the newcomer has the SMALLER id — then the historical partner is the
    loser);
 4. appends its (vec_id, cluster, embedding) rows and its loser ids
-   replay-idempotently (``batch_id=<n>`` partitions under dynamic
-   partition overwrite).
+   through the replay-safe batch store (`streaming/batch_store.py`).
 
 Convergence to the batch operator's keep set over the union of all
 batches — including cross-batch near-duplicates and replays — is
@@ -36,20 +35,11 @@ feeds both.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_python_vectordb_spark.operators.similarity import assign_cells_gemm
-
-
-def _cells_path(root: str) -> str:
-    return os.path.join(root, "cells")
-
-
-def _losers_path(root: str) -> str:
-    return os.path.join(root, "losers")
+from custom_python_vectordb_spark.streaming import batch_store
 
 
 def process_semdedup_batch(
@@ -72,71 +62,44 @@ def process_semdedup_batch(
     # O(rows·cells·dim) interpreter steps
     assigned = assign_cells_gemm(
         batch_vecs.select(id_col, vec_col), centroids, id_col=id_col, vec_col=vec_col
-    ).persist()
-
-    cells_dir = _cells_path(index_root)
-    history_exists = os.path.isdir(cells_dir) and any(
-        d.startswith("batch_id=") for d in os.listdir(cells_dir)
     )
-    if history_exists:
-        # exclude THIS batch's partition: a replay must not treat its own
-        # about-to-be-overwritten rows as history
-        history = (
-            spark.read.parquet(cells_dir)
-            .filter(F.col("batch_id") != batch_id)
-            .drop("batch_id")
-        )
-        probe = history.withColumn("__new", F.lit(False)).unionByName(
-            assigned.withColumn("__new", F.lit(True))
-        )
-    else:
+    with batch_store.persisted(assigned):
+        history = batch_store.history(spark, index_root, "cells", batch_id)
         probe = assigned.withColumn("__new", F.lit(True))
+        if history is not None:
+            probe = history.withColumn("__new", F.lit(False)).unionByName(probe)
 
-    # per-cell GEMM of all members against the NEW subset (the batch
-    # path's within_cell_neardup_losers shape, restricted to pairs that
-    # involve at least one new member — history-history pairs were
-    # resolved when their second member arrived). Vectorized BLAS on the
-    # cluster-keyed shuffle; the declarative join's per-pair array folds
-    # are interpreter-bound.
-    def find(pdf):
-        import numpy as np
-        import pandas as pd
+        # per-cell GEMM of all members against the NEW subset (the batch
+        # path's within_cell_neardup_losers shape, restricted to pairs that
+        # involve at least one new member — history-history pairs were
+        # resolved when their second member arrived). Vectorized BLAS on the
+        # cluster-keyed shuffle; the declarative join's per-pair array folds
+        # are interpreter-bound.
+        def find(pdf):
+            import numpy as np
+            import pandas as pd
 
-        ids = pdf[id_col].to_numpy()
-        newm = pdf["__new"].to_numpy(dtype=bool)
-        if len(ids) < 2 or not newm.any():
-            return pd.DataFrame({id_col: np.empty(0, dtype=np.int64)})
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.where(nrm == 0, 1.0, nrm)
-        sims = mat @ mat[newm].T  # (members, new)
-        nid = ids[newm]
-        mi, bj = np.nonzero(sims >= threshold)
-        keep = ids[mi] != nid[bj]
-        losers = np.unique(np.maximum(ids[mi[keep]], nid[bj[keep]]))
-        return pd.DataFrame({id_col: losers})
+            ids = pdf[id_col].to_numpy()
+            newm = pdf["__new"].to_numpy(dtype=bool)
+            if len(ids) < 2 or not newm.any():
+                return pd.DataFrame({id_col: np.empty(0, dtype=np.int64)})
+            mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            nrm = np.linalg.norm(mat, axis=1, keepdims=True)
+            mat = mat / np.where(nrm == 0, 1.0, nrm)
+            sims = mat @ mat[newm].T  # (members, new)
+            nid = ids[newm]
+            mi, bj = np.nonzero(sims >= threshold)
+            keep = ids[mi] != nid[bj]
+            losers = np.unique(np.maximum(ids[mi[keep]], nid[bj[keep]]))
+            return pd.DataFrame({id_col: losers})
 
-    losers = (
-        probe.select("cluster", id_col, vec_col, "__new")
-        .groupBy("cluster")
-        .applyInPandas(find, schema=f"{id_col} long")
-        .distinct()
-    )
-
-    def _write(df: DataFrame, path: str) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
+        losers = (
+            probe.select("cluster", id_col, vec_col, "__new")
+            .groupBy("cluster")
+            .applyInPandas(find, schema=f"{id_col} long")
+            .distinct()
         )
-
-    # losers first: its plan lazily reads the cells dir, which the cells
-    # write below overwrites (same replay-ordering rule as neardup)
-    _write(losers, _losers_path(index_root))
-    _write(assigned, cells_dir)
-    assigned.unpersist()
+        batch_store.commit(index_root, batch_id, {"losers": losers}, {"cells": assigned})
 
 
 def maintain_semdedup_index(
@@ -157,13 +120,11 @@ def load_semdedup_keep(
     """(vec_id, cluster) kept so far: everything ingested minus recorded
     losers — converges to `semdedup_keep`'s batch semantics over the
     union of all batches."""
-    cells = spark.read.parquet(_cells_path(index_root)).drop("batch_id")
-    losers_dir = _losers_path(index_root)
-    kept = cells.select(id_col, "cluster")
-    if os.path.isdir(losers_dir):
-        losers = spark.read.parquet(losers_dir).select(id_col).distinct()
-        kept = kept.join(losers, id_col, "left_anti")
-    return kept
+    kept = batch_store.read(spark, index_root, "cells").select(id_col, "cluster")
+    losers = batch_store.history(spark, index_root, "losers", None)
+    if losers is None:
+        return kept
+    return kept.join(losers.select(id_col).distinct(), id_col, "left_anti")
 
 
 def load_balanced_sample(

@@ -14,8 +14,7 @@ each micro-batch
    ``spans_from_matches`` plan) and records pairs with a run >=
    `min_span`;
 4. appends its grams / per-gram document frequencies / found pairs
-   replay-idempotently (``batch_id=<n>`` partitions under dynamic
-   partition overwrite).
+   through the replay-safe batch store (`streaming/batch_store.py`).
 
 Boilerplate capping is incremental too: per-batch gram document
 frequencies are stored as deltas (document ids never repeat across
@@ -34,8 +33,6 @@ and overwrites its own partition.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,22 +40,7 @@ from custom_python_vectordb_spark.operators.spans import (
     positional_gram_hashes,
     spans_from_matches,
 )
-
-
-def _grams_path(root: str) -> str:
-    return os.path.join(root, "grams")
-
-
-def _df_path(root: str) -> str:
-    return os.path.join(root, "gramdf")
-
-
-def _spans_path(root: str) -> str:
-    return os.path.join(root, "spans")
-
-
-def _has_batches(path: str) -> bool:
-    return os.path.isdir(path) and any(d.startswith("batch_id=") for d in os.listdir(path))
+from custom_python_vectordb_spark.streaming import batch_store
 
 
 def process_span_batch(
@@ -77,79 +59,50 @@ def process_span_batch(
     `index_maintenance.maintain_postings`)."""
     spark = batch_docs.sparkSession
     docs = batch_docs.select(id_col, text_col)
-    grams_b = positional_gram_hashes(docs, n=n, id_col=id_col, text_col=text_col).persist()
-
-    # cumulative per-gram document frequency = stored deltas + this batch
-    df_b = grams_b.groupBy("gram_h").agg(F.count_distinct("doc_id").alias("df"))
-    if _has_batches(_df_path(index_root)):
-        df_hist = (
-            spark.read.parquet(_df_path(index_root))
-            .filter(F.col("batch_id") != batch_id)  # replay: own rows aren't history
-            .drop("batch_id")
+    grams_b = positional_gram_hashes(docs, n=n, id_col=id_col, text_col=text_col)
+    with batch_store.persisted(grams_b):
+        # cumulative per-gram document frequency = stored deltas + this batch
+        df_b = grams_b.groupBy("gram_h").agg(F.count_distinct("doc_id").alias("df"))
+        df_hist = batch_store.history(spark, index_root, "gramdf", batch_id)
+        df_all = df_b if df_hist is None else df_hist.unionByName(df_b)
+        hot = (
+            df_all.groupBy("gram_h")
+            .agg(F.sum("df").alias("df"))
+            .filter(F.col("df") > max_df)
+            .select("gram_h")
         )
-        df_all = df_hist.unionByName(df_b)
-    else:
-        df_all = df_b
-    hot = (
-        df_all.groupBy("gram_h")
-        .agg(F.sum("df").alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("gram_h")
-    )
+        history = batch_store.history(spark, index_root, "grams", batch_id)
+        probe = grams_b if history is None else history.unionByName(grams_b)
 
-    if _has_batches(_grams_path(index_root)):
-        history = (
-            spark.read.parquet(_grams_path(index_root))
-            .filter(F.col("batch_id") != batch_id)
-            .drop("batch_id")
+        new_side = grams_b.join(hot, "gram_h", "left_anti").select(
+            F.col("doc_id").alias("doc_n"), F.col("pos").alias("pos_n"), "gram_h"
         )
-        probe = history.unionByName(grams_b)
-    else:
-        probe = grams_b
-
-    new_side = grams_b.join(hot, "gram_h", "left_anti").select(
-        F.col("doc_id").alias("doc_n"), F.col("pos").alias("pos_n"), "gram_h"
-    )
-    probe_side = probe.join(hot, "gram_h", "left_anti").select(
-        F.col("doc_id").alias("doc_o"), F.col("pos").alias("pos_o"), "gram_h"
-    )
-    # normalize roles to (doc_a < doc_b); a both-new pair matches in both
-    # directions and normalizes to identical rows — distinct() restores the
-    # duplicate-free contract spans_from_matches requires
-    matches = (
-        new_side.join(probe_side, "gram_h")
-        .filter(F.col("doc_n") != F.col("doc_o"))
-        .select(
-            F.least("doc_n", "doc_o").alias("doc_a"),
-            F.greatest("doc_n", "doc_o").alias("doc_b"),
-            F.when(F.col("doc_n") < F.col("doc_o"), F.col("pos_n"))
-            .otherwise(F.col("pos_o"))
-            .alias("pos_a"),
-            (
-                F.when(F.col("doc_n") < F.col("doc_o"), F.col("pos_n") - F.col("pos_o"))
-                .otherwise(F.col("pos_o") - F.col("pos_n"))
-            ).alias("diag"),
+        probe_side = probe.join(hot, "gram_h", "left_anti").select(
+            F.col("doc_id").alias("doc_o"), F.col("pos").alias("pos_o"), "gram_h"
         )
-        .distinct()
-    )
-    found = spans_from_matches(matches, n, min_span)
-
-    def _write(df: DataFrame, path: str) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
+        # normalize roles to (doc_a < doc_b); a both-new pair matches in both
+        # directions and normalizes to identical rows — distinct() restores the
+        # duplicate-free contract spans_from_matches requires
+        matches = (
+            new_side.join(probe_side, "gram_h")
+            .filter(F.col("doc_n") != F.col("doc_o"))
+            .select(
+                F.least("doc_n", "doc_o").alias("doc_a"),
+                F.greatest("doc_n", "doc_o").alias("doc_b"),
+                F.when(F.col("doc_n") < F.col("doc_o"), F.col("pos_n"))
+                .otherwise(F.col("pos_o"))
+                .alias("pos_a"),
+                (
+                    F.when(F.col("doc_n") < F.col("doc_o"), F.col("pos_n") - F.col("pos_o"))
+                    .otherwise(F.col("pos_o") - F.col("pos_n"))
+                ).alias("diag"),
+            )
+            .distinct()
         )
-
-    # ORDER MATTERS on replay: `found` lazily reads the grams/gramdf dirs —
-    # materialize it (its write is the action) BEFORE overwriting the
-    # partitions it reads (same discipline as neardup_maintenance)
-    _write(found, _spans_path(index_root))
-    _write(grams_b, _grams_path(index_root))
-    _write(df_b, _df_path(index_root))
-    grams_b.unpersist()
+        found = spans_from_matches(matches, n, min_span)
+        batch_store.commit(
+            index_root, batch_id, {"spans": found}, {"grams": grams_b, "gramdf": df_b}
+        )
 
 
 def maintain_span_index(doc_stream: DataFrame, index_root: str, **kwargs):
@@ -167,8 +120,7 @@ def load_span_pairs(spark: SparkSession, index_root: str) -> DataFrame:
     ingested its later member (or the batch holding both); replays
     overwrite in place, so a max-aggregate per pair is a no-op dedup."""
     return (
-        spark.read.parquet(_spans_path(index_root))
-        .drop("batch_id")
+        batch_store.read(spark, index_root, "spans")
         .groupBy("doc_a", "doc_b")
         .agg(
             F.max("max_span_tokens").alias("max_span_tokens"),

@@ -13,12 +13,10 @@ directory partition. Readers need no coordination:
   on shard (path, mtime, size), so a refreshed glob of the layout picks
   up new batch files on the next request automatically.
 
-Replay safety (the reference's realtime layer has no durable index; this
-follows the postings-index pattern from `streaming/index_maintenance.py`,
-hardened by round-2 ADVICE): foreachBatch is at-least-once, so each
-micro-batch writes under dynamic partition overwrite into its own
-``batch_id=<n>`` sub-partitions — a post-failure replay overwrites
-instead of duplicating vectors.
+Replay safety (the reference's realtime layer has no durable index)
+comes from the batch store (`streaming/batch_store.py`): each
+micro-batch owns its ``batch_id=<n>`` sub-partitions, so a post-failure
+replay overwrites instead of duplicating vectors.
 
 Scale: assignment is the broadcast-argmin projection (corpus never
 shuffles); the write's one shuffle clusters files by cell. State on the
@@ -28,9 +26,9 @@ streaming side is zero — idempotence lives in the directory layout.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from custom_python_vectordb_spark.operators.similarity import with_ivf_cluster
+from custom_python_vectordb_spark.streaming import batch_store
 
 
 def write_ivf_batch(
@@ -42,17 +40,10 @@ def write_ivf_batch(
     vec_col: str = "embedding",
 ) -> None:
     """Assign the micro-batch to cells and land it in the layout,
-    replay-idempotent (``cluster=<c>/batch_id=<n>/`` partitions under
-    dynamic partition overwrite)."""
-    (
-        with_ivf_cluster(batch_df, centroids, id_col, vec_col)
-        .withColumn("batch_id", F.lit(batch_id))
-        .repartition("cluster")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cluster", "batch_id")
-        .parquet(path)
-    )
+    replay-idempotent (``cluster=<c>/batch_id=<n>/`` partitions; the
+    layout is `path` itself, hence the empty table name)."""
+    assigned = with_ivf_cluster(batch_df, centroids, id_col, vec_col).repartition("cluster")
+    batch_store.write(assigned, path, "", batch_id, "cluster")
 
 
 def maintain_ivf_layout(
@@ -74,4 +65,4 @@ def maintain_ivf_layout(
 def load_ivf_layout(spark, path: str) -> DataFrame:
     """The maintained layout, bookkeeping column stripped; `cluster` stays
     (it is the probe/prune key)."""
-    return spark.read.parquet(path).drop("batch_id")
+    return batch_store.read(spark, path, "")

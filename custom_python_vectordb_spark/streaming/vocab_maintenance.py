@@ -5,8 +5,8 @@ feeding BPE tokenizer (re)training without re-reading the corpus.
 training — is a word-count aggregate, which is ADDITIVE: per-batch
 partials merge by sum. So the maintenance sink is the rollup pattern
 (`rollup_maintenance.py`): each micro-batch writes its own word-count
-partial under a ``batch_id=<n>`` partition (dynamic partition overwrite →
-replay-idempotent), and the merged view is one groupBy-sum over partials
+partial under a ``batch_id=<n>`` partition of the replay-safe batch
+store (`batch_store.py`), and the merged view is one groupBy-sum over partials
 whose size is O(batches × distinct-words-per-batch), never the raw text.
 Retraining the tokenizer after more data lands is then merge-rounds-only
 work on the maintained table: `train_bpe(load_word_counts(...))`.
@@ -18,16 +18,11 @@ asserted in tests, including after a replay.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_python_vectordb_spark.functions.text import tokenize
-
-
-def _partials_path(root: str) -> str:
-    return os.path.join(root, "vocab")
+from custom_python_vectordb_spark.streaming import batch_store
 
 
 def process_vocab_batch(
@@ -44,13 +39,7 @@ def process_vocab_batch(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    (
-        partial.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(_partials_path(root))
-    )
+    batch_store.write(partial, root, "vocab", batch_id)
 
 
 def maintain_vocab(doc_stream: DataFrame, root: str, **kwargs):
@@ -73,7 +62,7 @@ def load_word_counts(
     freq-desc, word-asc cap) as `operators/bpe.word_counts`, so
     `train_bpe` consumes either interchangeably."""
     w = (
-        spark.read.parquet(_partials_path(root))
+        batch_store.read(spark, root, "vocab")
         .groupBy("word")
         .agg(F.sum("freq").alias("freq"))
         .filter(F.col("freq") >= min_freq)

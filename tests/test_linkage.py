@@ -99,27 +99,28 @@ def test_streaming_linkage_converges_to_batch(spark, tmp_path):
         (7, "blue belt"), (8, "red goar"),
     ]
     batches = [rows[:3], rows[3:6], rows[6:]]
-    root = str(tmp_path / "lnk")
-    for i, chunk in enumerate(batches):
-        df = spark.createDataFrame(chunk, "id long, name string")
-        process_linkage_batch(df, i, root, max_distance=2)
-
-    got = {
-        (r["a"], r["b"], r["d"]) for r in load_linkage_pairs(spark, root).collect()
-    }
     full = spark.createDataFrame(rows, "id long, name string")
     want = {
         (r["a"], r["b"], r["d"])
         for r in fuzzy_pairs(full, "id", "name", max_distance=2).collect()
     }
-    assert got == want and len(want) > 0
-    # cross-batch pair really exists (1 in batch 0, 4 in batch 1)
-    assert any({a, b} == {1, 4} for a, b, _ in got)
+    # a plain path and a file:// URI, the local stand-in for an HDFS/S3 root
+    for root in (str(tmp_path / "lnk"), (tmp_path / "lnk_uri").as_uri()):
+        for i, chunk in enumerate(batches):
+            df = spark.createDataFrame(chunk, "id long, name string")
+            process_linkage_batch(df, i, root, max_distance=2)
 
-    # replay batch 1: same final state
-    df1 = spark.createDataFrame(batches[1], "id long, name string")
-    process_linkage_batch(df1, 1, root, max_distance=2)
-    again = {
-        (r["a"], r["b"], r["d"]) for r in load_linkage_pairs(spark, root).collect()
-    }
-    assert again == want
+        got = {
+            (r["a"], r["b"], r["d"]) for r in load_linkage_pairs(spark, root).collect()
+        }
+        assert got == want and len(want) > 0
+        # cross-batch pair really exists (1 in batch 0, 4 in batch 1)
+        assert any({a, b} == {1, 4} for a, b, _ in got)
+
+        # replay batch 1: same final state
+        df1 = spark.createDataFrame(batches[1], "id long, name string")
+        process_linkage_batch(df1, 1, root, max_distance=2)
+        again = {
+            (r["a"], r["b"], r["d"]) for r in load_linkage_pairs(spark, root).collect()
+        }
+        assert again == want
