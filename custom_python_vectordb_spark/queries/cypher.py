@@ -1,5 +1,5 @@
-"""Cypher-subset queries (SURVEY.md §2.11) — the translator compiled
-against the graph view, oracle-checked with plain SQL joins / recursive
+"""Cypher-subset queries (SURVEY.md §2.11) — each compiled to one Spark SQL
+text over the graph view, oracle-checked with plain SQL joins / recursive
 CTEs over the same pattern semantics."""
 
 from __future__ import annotations
@@ -215,7 +215,7 @@ def cypher_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate RETURN with Cypher's implicit grouping: non-aggregate
     items become group keys, count(o) counts matched bindings.
 
-    The oracle states the translator's documented SET semantics explicitly
+    The oracle states the compiler's documented SET semantics explicitly
     (round-2 ADVICE): DISTINCT (c, o) bindings with o label-checked as
     :Order — equivalent on this dataset's unique well-typed edges, but now
     equivalent by construction, consistent with cypher_count_all."""
@@ -268,7 +268,7 @@ FROM (SELECT DISTINCT e.src, e.dst FROM edges e WHERE e.type = 'CONTAINS')
 """)
 def cypher_count_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global count(*) — no group keys, one row. SET-semantic: the
-    translator's documented contract dedups identical variable bindings
+    compiler's documented contract dedups identical variable bindings
     (plans/cypher.py header), so parallel CONTAINS edges between the same
     (order, part) pair count once — unlike reference Cypher's
     per-relationship matches; the oracle states the same distinct count."""

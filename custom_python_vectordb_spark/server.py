@@ -841,9 +841,10 @@ def _graph_routes(graph: GraphStore, method: str, parts: list[str], body: dict, 
         h = graph.get_hyperedge(sub[1])
         return (200, h) if h else (404, {"error": f"hyperedge {sub[1]!r} not found"})
     if sub == ["query"] and method == "POST":
-        # Cypher over HTTP (server_full.py:567-574) — compile the query
-        # against the expanded property-column view and run the same
-        # translator the batch cypher_* queries use
+        # Cypher over HTTP (server_full.py:567-574) — compile the query to
+        # one Spark SQL text over the expanded property-column view, as the
+        # batch cypher_* queries do; its literals are bound as parameters,
+        # and a bad query (unknown property, bad bounds) is a ValueError: 400
         from custom_python_vectordb_spark.plans.cypher import cypher
 
         nodes, edges = graph.dfs(expand_props=True)

@@ -425,6 +425,35 @@ def test_graph_edges_hyperedges_and_cypher_over_http(served):
     assert len(call(port, "GET", "/graph/edges")[1]["edges"]) == 1
 
 
+def test_graph_query_binds_literals_and_answers_400_for_bad_queries(served):
+    """POST /graph/query compiles user text: a quote in a property value
+    is data, never SQL; a property the view lacks or var-length bounds
+    outside 1 <= min <= max answer 400, not 500."""
+    port = served
+    tricky = "o'brien \\ -- x"  # a quote, a backslash and a SQL comment
+    for nid, name in [("a", "ann"), ("t", tricky), ("o", "o")]:
+        assert call(port, "POST", "/graph/nodes", {"id": nid, "labels": ["P"], "props": {"name": name}})[0] == 201
+    assert call(port, "POST", "/graph/edges", {"src": "a", "dst": "t", "type": "K"})[0] == 201
+
+    st, out = call(port, "POST", "/graph/query",
+                   {"query": """MATCH (n:P {name: "x' OR '1'='1"}) RETURN n"""})
+    assert (st, out["rows"]) == (200, [])
+    st, out = call(port, "POST", "/graph/query",
+                   {"query": 'MATCH (n:P {name: "%s"}) RETURN n, n.name' % tricky})
+    assert (st, out["rows"]) == (200, [{"n_id": "t", "n_name": tricky}])
+    st, out = call(port, "POST", "/graph/query",
+                   {"query": 'MATCH (a)-[:K]->(n) WHERE n.name = "%s" RETURN a' % tricky})
+    assert (st, out["rows"]) == (200, [{"a_id": "a"}])
+
+    for bad in ("MATCH (n:P) WHERE n.height > 3 RETURN n",
+                "MATCH (n:P) RETURN n.height",
+                "MATCH (n:P) WHERE n.name = '%s' RETURN n" % tricky,  # unbalanced quotes
+                "MATCH (a)-[*0..2]->(b) RETURN a, b",
+                "MATCH (a)-[*3..2]->(b) RETURN a, b"):
+        st, out = call(port, "POST", "/graph/query", {"query": bad})
+        assert st == 400 and out["error"], bad
+
+
 def test_collection_info_route(served):
     port = served
     call(port, "POST", "/collections", {"name": "kb", "dimensions": 32})
