@@ -62,92 +62,6 @@ VEC100K_DIM = 128
 VEC100K_SHARDS = 32
 
 
-def _java_child_pids() -> list[int]:
-    """PIDs of java children of this process — the local-mode Spark JVM
-    the py4j gateway launched. /proc scan, no psutil dependency."""
-    me = os.getpid()
-    pids = []
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat") as fh:
-                parts = fh.read().rsplit(")", 1)
-            comm = parts[0].split("(", 1)[1]
-            ppid = int(parts[1].split()[1])
-        except (OSError, IndexError, ValueError):
-            continue
-        if ppid == me and "java" in comm:
-            pids.append(int(d))
-    return pids
-
-
-def _core_layout() -> dict | None:
-    """Disjoint core sets for the serving sections (r14, VERDICT r13 #1):
-    server workers, client processes, and the Spark JVM + driver python
-    each get their own cores, so the serving rows stop depending on what
-    the (idle but thready) JVM and the load generator are scheduled over.
-    None (= no pinning) when the box is too small, the platform lacks
-    sched_setaffinity, or SPARK_GRAFT_PIN=0 — the rows then measure the
-    legacy shared layout."""
-    if os.environ.get("SPARK_GRAFT_PIN", "1") != "1":
-        return None
-    if not hasattr(os, "sched_getaffinity"):
-        return None
-    cores = sorted(os.sched_getaffinity(0))
-    if len(cores) < 12:
-        return None
-    return {
-        "jvm": set(cores[-2:]),           # idle during serving sections
-        "cli": set(cores[-10:-2]),        # 8 client cores (~950 q/s each)
-        "srv": set(cores[:-10]),          # pool workers
-        "kernel": set(cores[:-2]),        # in-process numpy kernels
-        "all": set(cores),
-    }
-
-
-class _quarantine_jvm:
-    """Context manager: pin the Spark JVM to `jvm_set` and this process to
-    `self_set` for the duration; restore both on exit. Used around the
-    pure in-process serving kernels and the REST soak (guide §1 — isolate
-    what you measure). No-op when _core_layout() is None."""
-
-    def __init__(self, layout: dict | None, self_key: str = "kernel"):
-        self.layout = layout
-        self.self_key = self_key
-        self.saved_self = None
-        self.saved_jvm = {}
-
-    def __enter__(self):
-        if self.layout is None:
-            return self
-        try:
-            self.saved_self = os.sched_getaffinity(0)
-            os.sched_setaffinity(0, self.layout[self.self_key])
-        except OSError:
-            self.saved_self = None
-        for pid in _java_child_pids():
-            try:
-                self.saved_jvm[pid] = os.sched_getaffinity(pid)
-                os.sched_setaffinity(pid, self.layout["jvm"])
-            except OSError:
-                self.saved_jvm.pop(pid, None)
-        return self
-
-    def __exit__(self, *exc):
-        if self.saved_self is not None:
-            try:
-                os.sched_setaffinity(0, self.saved_self)
-            except OSError:
-                pass
-        for pid, s in self.saved_jvm.items():
-            try:
-                os.sched_setaffinity(pid, s)
-            except OSError:
-                pass
-        return False
-
-
 def _disp(values, nd: int = 4) -> dict:
     """{n, min, med} dispersion record (r8 VERDICT #6: single-shot serving
     rows made real regressions indistinguishable from co-tenant noise
@@ -400,12 +314,6 @@ def _bench_knn_100k(spark) -> dict[str, float]:
             )
 
             shards = sorted(_glob.glob(os.path.join(path, "part-*.parquet")))
-            # r14: the replica/SQ/BQ/PQ kernels below are pure in-process
-            # NumPy — quarantine the idle JVM to 2 cores and pin this
-            # process for the duration (restored before the Spark-path
-            # rows). Explicit enter/exit keeps the indentation history.
-            _q_kernels = _quarantine_jvm(_core_layout())
-            _q_kernels.__enter__()
             knn_replica_serve(shards, sub, k=10, dtype="float32")  # warm (decode)
             dt, pdf = _best_of(
                 lambda: knn_replica_serve(shards, sub, k=10, dtype="float32")
@@ -515,7 +423,6 @@ def _bench_knn_100k(spark) -> dict[str, float]:
             hits = sum(1 for q, v in zip(pdf["qid"], pdf["vec_id"]) if v in tl2.get(q, ()))
             out["knn_batch20_100k_pq_rerank_recall_at10"] = round(hits / len(exact_l2), 4)
 
-            _q_kernels.__exit__()
             # distributed shard-resident path (the multi-node story). Floor
             # measured round 5: ANY Python-stage Spark job costs ~140 ms
             # (no-op scalar pandas_udf over range(1); JVM-only 32 ms), so
@@ -584,10 +491,6 @@ def _bench_knn_100k(spark) -> dict[str, float]:
     # cell-major resident blocks, centroid pre-prune, per-cell GEMM over
     # probing queries only; no Spark job on the hot path. Recall measured
     # against the exact truth above, never assumed.
-    # r14: everything from here to the mem-bw anchor is in-process NumPy —
-    # JVM quarantined, self pinned (see _quarantine_jvm).
-    _q_tiers = _quarantine_jvm(_core_layout())
-    _q_tiers.__enter__()
     from custom_python_vectordb_spark.operators.partitioned import ivf_replica_serve
 
     import glob as _glob
@@ -715,7 +618,6 @@ def _bench_knn_100k(spark) -> dict[str, float]:
     # what their latencies normalize against across rounds (co-tenant
     # memory traffic moves it 10-16 GB/s on this box, and p50 follows)
     out["mem_bw_gbps"] = _mem_bw_gbps()
-    _q_tiers.__exit__()
 
     sharded.unpersist()
     corpus.unpersist()
@@ -723,18 +625,6 @@ def _bench_knn_100k(spark) -> dict[str, float]:
 
 
 def _bench_rest_soak(spark) -> dict:
-    """r14 wrapper: quarantine the idle Spark JVM for the whole soak and
-    guarantee restoration on every exit path (the sections after the soak
-    are Spark-bound — a leaked 2-core JVM would wreck them)."""
-    _q = _quarantine_jvm(_core_layout(), self_key="all")
-    _q.__enter__()
-    try:
-        return _bench_rest_soak_inner(spark)
-    finally:
-        _q.__exit__()
-
-
-def _bench_rest_soak_inner(spark) -> dict:
     """Concurrent REST serving soak (r12, VERDICT r11 task 7): N=8 client
     threads with persistent keep-alive connections against the IVF replica
     tier over HTTP, measured from a SEPARATE client process
@@ -782,14 +672,11 @@ def _bench_rest_soak_inner(spark) -> dict:
     body = ('{"ann": true, "n_results": 10, "n_cells": 384, '
             '"nprobe": 3, "assign_r": 1}')
 
-    layout = _core_layout()
-
     def run(port: int, streams: int, n: int, distinct: bool = False) -> dict:
         # one client PROCESS per stream: the load generator must not be
         # the GIL ceiling it is measuring (a single 8-thread client tops
-        # out ~1-1.5k q/s regardless of the server). r14: clients pinned
-        # to their own cores; --distinct-workers places each stream on a
-        # distinct pool worker (least-connections emulation — without it
+        # out ~1-1.5k q/s regardless of the server). --distinct-workers
+        # places each stream on a distinct pool worker (least-connections emulation — without it
         # the SO_REUSEPORT hash convoys colliding streams on one GIL and
         # the row is a ~2x bimodal lottery, the r12/r13 artifact noise).
         cmd = [sys.executable, os.path.join(here, "tools", "soak_client.py"),
@@ -798,10 +685,7 @@ def _bench_rest_soak_inner(spark) -> dict:
                "--threads", "1", "--n", str(n), "--body", body]
         if distinct:
             cmd.append("--distinct-workers")
-        kw = {}
-        if layout is not None:
-            kw["preexec_fn"] = lambda: os.sched_setaffinity(0, layout["cli"])
-        r = subprocess.run(cmd, capture_output=True, text=True, timeout=300, **kw)
+        r = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
         return json.loads(r.stdout.strip().splitlines()[-1])
 
     def best_cell(port: int, streams: int, n: int, distinct: bool = False,
@@ -862,11 +746,6 @@ def _bench_rest_soak_inner(spark) -> dict:
         s.bind(("127.0.0.1", 0))
         wport = s.getsockname()[1]
         s.close()
-        pool_kw = {}
-        if layout is not None:
-            # workers inherit the spawner's affinity: the whole pool lives
-            # on the server cores, disjoint from clients and the JVM
-            pool_kw["preexec_fn"] = lambda: os.sched_setaffinity(0, layout["srv"])
         pool = subprocess.Popen(
             [sys.executable, "-m", "custom_python_vectordb_spark.server",
              wh_root, str(wport), "--workers", str(n_workers), "--serving-only",
@@ -875,7 +754,6 @@ def _bench_rest_soak_inner(spark) -> dict:
             start_new_session=True,  # teardown kills the GROUP — no orphan
             # worker survives a parent that dies between spawn and its
             # SIGTERM-forwarding handler registration
-            **pool_kw,
         )
         try:
             deadline = time.perf_counter() + 90

@@ -29,6 +29,7 @@ import socket
 import urllib.error
 import urllib.request
 from typing import Any, Iterator
+from urllib.parse import quote, urlencode
 
 
 class ClientError(RuntimeError):
@@ -46,17 +47,19 @@ class Collection:
     def __init__(self, client: "Client", name: str):
         self._client = client
         self.name = name
+        # ids and names are quoted whole, "/" included: one path segment each
+        self._path = f"/collections/{quote(name, safe='')}"
 
     # -- reads ------------------------------------------------------------
     def count(self) -> int:
-        return self._client._request("GET", f"/collections/{self.name}/count")["count"]
+        return self._client._request("GET", f"{self._path}/count")["count"]
 
     def __len__(self) -> int:
         return self.count()
 
     def get(self, id: str) -> dict | None:
         try:
-            return self._client._request("GET", f"/collections/{self.name}/get/{id}")
+            return self._client._request("GET", f"{self._path}/get/{quote(str(id), safe='')}")
         except ClientError as e:
             if e.status == 404:
                 return None
@@ -65,12 +68,10 @@ class Collection:
     def peek(self, limit: int = 10, version: int | None = None) -> list[dict]:
         """First rows; `version` pins a past snapshot (time travel —
         versioned stores only, 400 otherwise)."""
-        q = f"limit={int(limit)}"
+        q = {"limit": int(limit)}
         if version is not None:
-            q += f"&version={int(version)}"
-        return self._client._request(
-            "GET", f"/collections/{self.name}/peek?{q}"
-        )["rows"]
+            q["version"] = int(version)
+        return self._client._request("GET", f"{self._path}/peek?{urlencode(q)}")["rows"]
 
     # -- writes -----------------------------------------------------------
     def add(
@@ -84,7 +85,7 @@ class Collection:
         if metadatas is not None:
             body["metadatas"] = metadatas
         return self._client._request(
-            "POST", f"/collections/{self.name}/add", body
+            "POST", f"{self._path}/add", body
         )["added"]
 
     def upsert(
@@ -97,7 +98,7 @@ class Collection:
         if metadatas is not None:
             body["metadatas"] = metadatas
         return self._client._request(
-            "POST", f"/collections/{self.name}/upsert", body
+            "POST", f"{self._path}/upsert", body
         )["upserted"]
 
     def update(self, ids: list[str], metadatas: list[dict]) -> int:
@@ -105,7 +106,7 @@ class Collection:
         (the reference's update semantics, fastpyvectordb/client.py:357-394)."""
         return self._client._request(
             "POST",
-            f"/collections/{self.name}/update",
+            f"{self._path}/update",
             {"ids": ids, "metadatas": metadatas},
         )["updated"]
 
@@ -113,14 +114,14 @@ class Collection:
         if isinstance(ids, str):
             ids = [ids]
         return self._client._request(
-            "POST", f"/collections/{self.name}/delete", {"ids": ids}
+            "POST", f"{self._path}/delete", {"ids": ids}
         )["deleted"]
 
     def delete_by_filter(self, where: dict) -> int:
         """Delete every row matching the predicate dict (same operator
         grammar as query `where`); returns the number deleted."""
         return self._client._request(
-            "POST", f"/collections/{self.name}/delete_by_filter", {"where": where}
+            "POST", f"{self._path}/delete_by_filter", {"where": where}
         )["deleted"]
 
     # -- search -----------------------------------------------------------
@@ -170,13 +171,13 @@ class Collection:
         if (bq or ivfpq) and fetch_k is not None:
             body["fetch_k"] = int(fetch_k)
         return self._client._request(
-            "POST", f"/collections/{self.name}/query", body
+            "POST", f"{self._path}/query", body
         )["results"]
 
     def keyword_search(self, query: str, n_results: int = 10) -> list[dict]:
         return self._client._request(
             "POST",
-            f"/collections/{self.name}/keyword",
+            f"{self._path}/keyword",
             {"query": query, "n_results": n_results},
         )["results"]
 
@@ -184,21 +185,21 @@ class Collection:
         """Exact-adjacency phrase matching (positional index)."""
         return self._client._request(
             "POST",
-            f"/collections/{self.name}/phrase",
+            f"{self._path}/phrase",
             {"query": phrase, "n_results": n_results},
         )["results"]
 
     def hybrid(self, query: str, n_results: int = 10, alpha: float = 0.5) -> list[dict]:
         return self._client._request(
             "POST",
-            f"/collections/{self.name}/hybrid",
+            f"{self._path}/hybrid",
             {"query": query, "n_results": n_results, "alpha": alpha},
         )["results"]
 
     # -- versioned-store admin (400 unless the server store is versioned) --
     def history(self) -> list[dict]:
         """Commit log of this collection (versioned stores only)."""
-        return self._client._request("GET", f"/collections/{self.name}/history")["versions"]
+        return self._client._request("GET", f"{self._path}/history")["versions"]
 
     def optimize(
         self,
@@ -210,14 +211,14 @@ class Collection:
         the committed version."""
         return self._client._request(
             "POST",
-            f"/collections/{self.name}/optimize",
+            f"{self._path}/optimize",
             {"cluster_by": cluster_by, "zorder_by": zorder_by, "target_file_mb": target_file_mb},
         )["version"]
 
     def clone(self, dst: str, version: int | None = None) -> "Collection":
         """Zero-copy shallow clone into a new collection `dst`."""
         self._client._request(
-            "POST", f"/collections/{self.name}/clone", {"dst": dst, "version": version}
+            "POST", f"{self._path}/clone", {"dst": dst, "version": version}
         )
         return Collection(self._client, dst)
 
@@ -226,7 +227,8 @@ class Collection:
         only): rows with `_change` ∈ insert/update_postimage/delete."""
         return self._client._request(
             "GET",
-            f"/collections/{self.name}/diff?from={v_from}&to={v_to}&on={on}&limit={limit}",
+            f"{self._path}/diff?"
+            + urlencode({"from": v_from, "to": v_to, "on": on, "limit": limit}),
         )["changes"]
 
     def merge(
@@ -242,7 +244,7 @@ class Collection:
         committed version."""
         return self._client._request(
             "POST",
-            f"/collections/{self.name}/merge",
+            f"{self._path}/merge",
             {
                 "rows": rows,
                 "on": on,
@@ -261,10 +263,8 @@ class Collection:
         """SSE subscription: yields mutation events (replayed history first
         when ``replay`` > 0, then live) until the socket times out or the
         caller breaks out of the loop."""
-        path = f"/collections/{self.name}/events?replay={int(replay)}"
-        if types:
-            path += "&types=" + ",".join(types)
-        req = urllib.request.Request(self._client.base_url + path)
+        q = {"replay": int(replay), **({"types": ",".join(types)} if types else {})}
+        req = urllib.request.Request(f"{self._client.base_url}{self._path}/events?{urlencode(q)}")
         with urllib.request.urlopen(req, timeout=timeout) as resp:
             try:
                 for raw in resp:
@@ -324,7 +324,7 @@ class Client:
         return self.create_collection(name, dimensions)
 
     def delete_collection(self, name: str) -> bool:
-        return self._request("DELETE", f"/collections/{name}")["deleted"]
+        return self._request("DELETE", f"/collections/{quote(name, safe='')}")["deleted"]
 
     def reset(self) -> bool:
         """Delete ALL collections (``fastpyvectordb/client.py:698-708``).

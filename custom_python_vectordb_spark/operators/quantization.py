@@ -16,9 +16,10 @@ Reference semantics (``quantization.py``), re-expressed as DataFrame plans:
 - **PQ** (M×uint8): per-subspace nearest-centroid encode (``:510-539``),
   asymmetric LUT distance ``sqrt(Σ_m lut[m][code])`` (``:541-578``).
   Codebook *quality* comes from k-means (``:480-508``) — nondeterministic
-  in the reference (np.random); here MLlib KMeans with a fixed seed is the
-  production trainer, while a deterministic first-K-vectors sample codebook
-  is used for oracle-checked encode/distance queries (the operator under
+  in the reference (np.random); here the production trainer is a
+  deterministic driver-side Lloyd run on a bounded sample
+  (:func:`pq_train_lloyd`), while a first-K-vectors sample codebook is
+  used for oracle-checked encode/distance queries (the operator under
   test is encode/ADC, not Lloyd's).
 - **K5 rerank**: quantized scan → candidate top-C → exact distance on
   candidates → top-k (``parallel_search.py:895-947``).
@@ -200,7 +201,7 @@ def pq_sample_codebook(
 ) -> DataFrame:
     """Deterministic codebook: centroid c of subspace m = subvector m of the
     c-th lowest-id vector. (dim-order slice as in ``quantization.py:466-471``;
-    kmeans *quality* is supplied by :func:`pq_train_kmeans` instead.)
+    kmeans *quality* is supplied by :func:`pq_train_lloyd` instead.)
     Returns (m, code, centroid array<double>)."""
     dim_df = vectors.orderBy(id_col).limit(num_centroids)
     # the window only ever sees the limit(num_centroids) rows above (≤256),
@@ -269,35 +270,6 @@ def pq_adc_distances(codes: DataFrame, lut: DataFrame, id_col: str = "vec_id") -
     )
 
 
-def pq_train_kmeans(
-    vectors: DataFrame,
-    num_subspaces: int,
-    num_centroids: int,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-) -> DataFrame:
-    """A6 — production codebook via MLlib KMeans per subspace (seeded).
-    Returns (m, code, centroid array<double>)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = vectors.sparkSession
-    out = []
-    dim = len(vectors.select(vec_col).first()[0])
-    sub_dim = dim // num_subspaces
-    for m in range(num_subspaces):
-        sliced = vectors.select(
-            array_to_vector(
-                F.transform(F.slice(vec_col, m * sub_dim + 1, sub_dim), lambda x: x.cast("double"))
-            ).alias("features")
-        )
-        km = KMeans(k=num_centroids, seed=seed, maxIter=max_iter).fit(sliced)
-        for code, center in enumerate(km.clusterCenters()):
-            out.append((m, code, [float(x) for x in center]))
-    return local_df(spark, out, "m int, code int, centroid array<double>")
-
-
 def pq_train_lloyd(
     vectors: DataFrame,
     num_subspaces: int,
@@ -310,15 +282,13 @@ def pq_train_lloyd(
     """A6 codebook via the deterministic driver-side Lloyd kernel
     (`operators/similarity.lloyd_kmeans`) on a bounded hash-stride sample.
 
-    Replaces :func:`pq_train_kmeans`'s per-subspace MLlib fits for the
-    declared recall query (r14, VERDICT r13 #4): M fits × maxIter
-    distributed passes over the full corpus collapse into ONE bounded
-    collect (`_stride_sample`: ≤ sample_cap rows regardless of corpus
-    size — the same driver-matrix bound as the IVF coarse trainer) plus
-    pure NumPy. RNG-free and id-sort-deterministic, so the trained
-    sf0.01 codebook freezes as snapshot literals exactly like the MLlib
-    one did (`queries/_pq_snapshot.py`; the retrain-equality test pins
-    it). Returns (m, code, centroid array<double>)."""
+    One bounded collect (`_stride_sample`: ≤ sample_cap rows regardless
+    of corpus size — the same driver-matrix bound as the IVF coarse
+    trainer) plus pure NumPy, where per-subspace MLlib fits would make M
+    fits × maxIter distributed passes over the full corpus. RNG-free and
+    id-sort-deterministic, so the trained sf0.01 codebook freezes as
+    snapshot literals (`queries/_pq_snapshot.py`; the retrain-equality
+    test pins it). Returns (m, code, centroid array<double>)."""
     import numpy as np
 
     from custom_python_vectordb_spark.operators.similarity import (

@@ -8,8 +8,8 @@ candidates. Both accelerators here are pure DataFrame plans:
   (the partition/bucketing key at scale: write the corpus partitioned by
   `cluster` and probing prunes whole files); query probes `nprobe` nearest
   cells, exact top-k within. Deterministic sample centroids keep the plan
-  oracle-checkable; KMeans (operators/quantization.pq_train_kmeans pattern)
-  drops in for quality.
+  oracle-checkable; Lloyd k-means (`lloyd_kmeans`, as
+  operators/quantization.pq_train_lloyd trains) drops in for quality.
 - **LSH**: random-hyperplane sign bits → bucket id; candidates = same
   bucket. Hyperplanes are data rows (deterministic, engine-independent);
   at scale use multiple tables (bands) to trade recall vs candidates.

@@ -40,7 +40,10 @@ Parameter binding: every literal of the query text (labels, edge types,
 property values, WHERE operands, LIMIT) is a named marker ``:pN`` bound
 through ``spark.sql(args=…)``, and every identifier is backtick-quoted,
 so user text (``POST /graph/query``) never becomes SQL.  A property or
-variable the views lack fails analysis and raises ValueError.
+variable the views lack fails analysis and raises ValueError.  A quoted
+value may hold any character but its own quote mark: the literals are
+masked before the structural parse, so a comma, brace or keyword inside
+one is data.
 
 Aggregate RETURN uses Cypher's implicit grouping (non-aggregate items are
 the group keys, named as below; counts are `count_{var}` / `count_all`)
@@ -122,9 +125,22 @@ class _Clause:
     pre: list[tuple[str, str, str, str]]  # WHERE conds filtering the clause itself
 
 
+def _mask(query: str) -> str:
+    """The query with each quoted literal replaced by the hex of its text in
+    single quotes, so no comma, brace, quote or keyword inside a value
+    reaches the structural regexes; :func:`_parse_value` restores it."""
+
+    def hexed(m: re.Match) -> str:
+        if len(m.group()) == 1:
+            raise ValueError(f"unbalanced quote in {query!r}")
+        return "'" + m.group()[1:-1].encode().hex() + "'"
+
+    return re.sub(r"'[^']*'|\"[^\"]*\"|['\"]", hexed, query)
+
+
 def _parse_value(v: str):
-    if len(v) >= 2 and v[0] in "'\"" and v[-1] == v[0]:
-        return v[1:-1]
+    if v[0] == "'":  # a literal masked by _mask
+        return bytes.fromhex(v[1:-1]).decode()
     return float(v) if "." in v else int(v)
 
 
@@ -215,7 +231,8 @@ def _chain_sql(c: _Clause, depths: tuple, select: str, param) -> str:
 
 def cypher(nodes: DataFrame, edges: DataFrame, query: str) -> DataFrame:
     """Compile a Cypher-subset query to one SQL text and run it."""
-    starts = list(_MATCH_RE.finditer(query))
+    masked = _mask(query)
+    starts = list(_MATCH_RE.finditer(masked))
     if not starts:
         raise ValueError(f"unparseable MATCH clause in {query!r}")
 
@@ -224,7 +241,7 @@ def cypher(nodes: DataFrame, edges: DataFrame, query: str) -> DataFrame:
     bound: dict[str, dict[str, None]] = {}  # var → referenced props (ordered)
     for m in starts:
         optional = bool(m.group(1))
-        npats, epats, pos = _parse_pattern(query, m.end())
+        npats, epats, pos = _parse_pattern(masked, m.end())
         clause_vars = [p.var for p in npats]
         if len(set(clause_vars)) < len(clause_vars):
             raise ValueError(f"a variable is repeated within one MATCH clause in {query!r}")
@@ -239,7 +256,7 @@ def cypher(nodes: DataFrame, edges: DataFrame, query: str) -> DataFrame:
         # OPTIONAL MATCH predicate semantics); everything else filters the
         # joined rows
         pre: list[tuple[str, str, str, str]] = []
-        wm = _WHERE_AT_RE.match(query, pos)
+        wm = _WHERE_AT_RE.match(masked, pos)
         if wm:
             if not _CONDS_RE.fullmatch(wm.group(1)):
                 raise ValueError(f"unparseable WHERE clause in {query!r}")
@@ -249,7 +266,7 @@ def cypher(nodes: DataFrame, edges: DataFrame, query: str) -> DataFrame:
         clauses.append(_Clause(optional, npats, epats, shared, pre))
         bound.update((v, {}) for v in clause_vars if v not in bound)
 
-    r = _RETURN_RE.search(query)
+    r = _RETURN_RE.search(masked)
     if not r:
         raise ValueError(f"missing RETURN clause in {query!r}")
 

@@ -14,7 +14,6 @@ from custom_python_vectordb_spark.operators.quantization import (
     pq_encode,
     pq_lut,
     pq_sample_codebook,
-    pq_train_kmeans,
     pq_train_lloyd,
     quantized_rerank,
     sq_encode,

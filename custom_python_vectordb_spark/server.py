@@ -3,40 +3,13 @@
 The reference ships FastAPI servers (``server.py:182-438``,
 ``server_full.py:201-722``) that delegate to the engine; this is the same
 delegation surface on the stdlib HTTP server (FastAPI isn't in this
-runtime), so a reference user's REST workflow ports 1:1:
+runtime), so a reference user's REST workflow ports 1:1. Like a FastAPI
+app, every route is declared once: the table ``_routes`` returns is the
+list of the worker's routes, each with the preconditions it needs (a
+collection, a Spark session, a versioned store).
 
-    GET    /collections                     list
-    POST   /collections                     {"name", "dimensions"}
-    DELETE /collections/<name>
-    GET    /collections/<name>/count
-    POST   /collections/<name>/add          {"ids", "documents"[, "metadatas"]}
-    POST   /collections/<name>/upsert       same body; replaces same-id rows
-    POST   /collections/<name>/update       {"ids", "metadatas"} metadata merge
-    POST   /collections/<name>/delete_by_filter  {"where": {...}}
-    GET    /collections/<name>/peek?limit=N
-    POST   /collections/<name>/query        {"query_texts"|"query_embeddings",
-                                             "n_results", "where"}
-    GET    /collections/<name>/events       Server-Sent-Events push stream
-           ?types=add,delete&replay=N       (live mutations + ring replay)
-    GET    /health · /graph/stats · /embeddings/info
-    POST   /graph/nodes · /graph/edges · /graph/hyperedges
-                                            node/edge/hyperedge create (+
-           GET/DELETE /graph/nodes/<id> · /graph/edges/<id>, cascade node
-           delete, GET /graph/edges?type=&limit=, GET /graph/hyperedges/<id>)
-    GET    /graph/neighbors/<id>            both-direction neighbor ids
-    POST   /graph/traverse · /graph/shortest-path · /graph/find
-                                            run the batch Spark graph
-                                            operators over the store
-    POST   /graph/query                     {"query": "MATCH …"} — the Cypher
-                                            subset compiled over the store's
-                                            expanded property-column view
-    POST   /embeddings/embed                {"texts": [...]} → mock vectors
-    GET    /collections/<name>/ws           WebSocket push stream (RFC 6455):
-                                            client sends {"action":"subscribe",
-                                            "types":[...],"replay":N}, server
-                                            acks then pushes JSON text frames
-
-Both streams carry the reference's realtime subscription semantics
+Both streams (``/events`` SSE, ``/ws`` WebSocket, each also scoped to one
+collection) carry the reference's realtime subscription semantics
 (``realtime.py:449-510``: subscribe with event-type filter, receive pushed
 mutation events, replay up to N missed events on connect). The WS endpoint
 keeps the reference's client→server subscribe message; SSE moves it into
@@ -67,7 +40,10 @@ import time
 import traceback
 from collections import deque
 from concurrent.futures import ThreadPoolExecutor
+from email.utils import formatdate
 from http.server import BaseHTTPRequestHandler
+from typing import Callable, NamedTuple
+from urllib.parse import parse_qs, unquote
 
 from custom_python_vectordb_spark.api import VectorDB
 from custom_python_vectordb_spark.operators import shard_tier
@@ -79,20 +55,8 @@ POOL_THREADS = 8
 # Framing limits: the most of one request the loop will buffer.
 MAX_HEADER_BYTES = 64 * 1024
 MAX_BODY_BYTES = 64 * 1024 * 1024
-
-
-# /collections/<name>/<route> routes that run a Spark plan ("info" is
-# GET /collections/<name>, whose count is a plan); the replica routes
-# (query, keyword, phrase, hybrid) serve without one
-_SPARK_ROUTES = frozenset({
-    "info", "count", "peek", "get", "add", "upsert", "update", "delete",
-    "delete_by_filter", "merge", "diff", "optimize", "clone",
-})
-
-
-class SparkUnavailable(RuntimeError):
-    """A route that runs a Spark plan, asked of a worker started without a
-    session (``--serving-only``); the server answers 503."""
+# An event stream idle this long sends a keepalive (SSE comment, WS ping).
+KEEPALIVE_S = 15.0
 
 
 class EventBus:
@@ -104,9 +68,8 @@ class EventBus:
 
     def __init__(self, history: int = 1000):
         self._ring: deque[dict] = deque(maxlen=history)
-        self._subs: dict[int, _queue.Queue] = {}
+        self._subs: set[_queue.Queue] = set()
         self._lock = threading.Lock()
-        self._next_id = 0
         self._seq = 0
 
     def publish(self, event: dict) -> dict:
@@ -114,26 +77,38 @@ class EventBus:
             self._seq += 1
             event = {"seq": self._seq, "ts": time.time(), **event}
             self._ring.append(event)
-            queues = list(self._subs.values())
+            queues = list(self._subs)
         for q in queues:
             q.put(event)
         return event
 
-    def subscribe(self, replay: int = 0) -> tuple[int, _queue.Queue, list[dict]]:
-        """Returns (subscriber id, live queue, replayed events). Replay and
-        registration are atomic, so no event is missed or duplicated
-        between the ring snapshot and the first live push."""
+    def follow(self, replay: int, opened: Callable, deliver: Callable) -> None:
+        """The push loop of every event stream. Subscribes, taking the last
+        `replay` events in the same step, so none is missed or duplicated
+        between them and the first live push; calls ``opened(n, queue)``
+        with the number of replayed events and the live queue (another
+        thread may put its own items on it, in line with the events); then
+        hands ``deliver`` each replayed event marked ``replayed``, then each
+        live item, and None whenever ``KEEPALIVE_S`` pass without one, until
+        ``deliver`` returns False. Always unsubscribes."""
         q: _queue.Queue = _queue.Queue()
         with self._lock:
-            sid = self._next_id
-            self._next_id += 1
-            self._subs[sid] = q
+            self._subs.add(q)
             replayed = list(self._ring)[-replay:] if replay > 0 else []
-        return sid, q, replayed
-
-    def unsubscribe(self, sid: int) -> None:
-        with self._lock:
-            self._subs.pop(sid, None)
+        try:
+            opened(len(replayed), q)
+            for ev in replayed:
+                deliver({**ev, "replayed": True})
+            while True:
+                try:
+                    item = q.get(timeout=KEEPALIVE_S)
+                except _queue.Empty:
+                    item = None
+                if deliver(item) is False:
+                    return
+        finally:
+            with self._lock:
+                self._subs.discard(q)
 
 
 def sub_match(ev: dict, collection: str, types: set | None, meta: dict | None) -> bool:
@@ -314,10 +289,6 @@ class GraphStore:
         column (first-non-null type, reserved names skipped) — the shape
         `plans/cypher.cypher` binds `{prop: value}` patterns and
         `var.prop` projections against."""
-        if self.spark is None:
-            raise SparkUnavailable(
-                "graph reads run Spark operators; this worker has no Spark session"
-            )
         # ONE lock acquisition snapshots everything (copied labels/props):
         # pool threads handle requests concurrently, so re-acquiring
         # the lock later and dereferencing self._nodes for previously-seen
@@ -413,13 +384,38 @@ def _texts_df(db: VectorDB, ids: list, documents: list, metadatas: list | None =
     return embed_column(df, "_document", "embedding", dims)
 
 
+def _collection_name(name) -> str:
+    """A collection name taken from a request: one path segment, and never
+    ``.`` or ``..``, because the store joins it onto its root directory."""
+    if not isinstance(name, str) or not name or name in (".", "..") or "/" in name:
+        raise ValueError(f"invalid collection name {name!r}")
+    return name
+
+
+class _Route(NamedTuple):
+    """One row of the route table: the function that serves the route, and
+    the preconditions :meth:`_RouteTable.call` checks first, in this order."""
+
+    run: Callable  # (handler, *path params) -> (status, payload), or a push function
+    collection: bool = False  # the {name} collection must exist, else 404
+    spark: bool = False  # runs a Spark plan: 503 on a --serving-only worker
+    # needs a versioned store, else 400: always (True), or when the
+    # request's query string has this key
+    versioned: bool | str = False
+    stream: bool = False  # a push stream: its socket leaves the loop
+
+
 def _routes(
     db: VectorDB,
-    bus: EventBus | None = None,
-    graph: GraphStore | None = None,
+    bus: EventBus,
+    graph: GraphStore,
     ann_geometries: frozenset | None = None,
     snapshots: dict | None = None,
-):
+) -> dict[str, _Route]:
+    """Every route of a worker, as ``"METHOD /path/{param}"`` → :class:`_Route`.
+    A route function takes the request's handler ``r``, with ``r.body``,
+    ``r.query`` and, on a collection route, ``r.coll`` set, then the
+    path parameters; it returns (status, JSON payload)."""
     # Build-affecting index geometry a request may select. nprobe is a
     # query-time knob (free within bounds, like hnswlib's ef); n_cells and
     # assign_r key a k-means retrain + corpus re-layout, so an arbitrary
@@ -431,16 +427,8 @@ def _routes(
         ann_geometries = frozenset({(64, 2)})
     ivfpq_cells = frozenset(g[0] for g in ann_geometries)
 
-    def need_spark(route: str) -> None:
-        if db.spark is None:
-            raise SparkUnavailable(
-                f"the {route!r} route runs a Spark plan; this worker was started "
-                "--serving-only and has no Spark session"
-            )
-
     def publish(collection: str, event_type: str, **data):
-        if bus is not None:
-            bus.publish({"collection": collection, "event_type": event_type, **data})
+        bus.publish({"collection": collection, "event_type": event_type, **data})
 
     # snapshot-backed sharded indexes (r13): {name: root_dir} where
     # root_dir/*/ivfpq_index.npz are per-executor save_index outputs —
@@ -504,343 +492,276 @@ def _routes(
             raise ValueError(f"nprobe must be in [1, n_cells={n_cells}], got {nprobe}")
         return {"n_cells": n_cells, "nprobe": nprobe, **params}
 
-    def handle(method: str, path: str, body: dict):
-        from urllib.parse import parse_qs, urlparse
+    def found(what: str, key: str, item):
+        """200 with `item`, or 404 naming the missing `what` when it is None."""
+        return (200, item) if item is not None else (404, {"error": f"{what} {key!r} not found"})
 
-        u = urlparse(path)
-        qs = {k: v[0] for k, v in parse_qs(u.query).items()}
-        parts = [p for p in u.path.split("/") if p]
-        if parts == ["health"] and method == "GET":
-            return 200, {"status": "ok", "collections": len(db.list_collections())}
-        if parts == ["embeddings", "info"] and method == "GET":
-            return 200, {"provider": "mock", "dimensions": 64}
-        if parts == ["embeddings", "embed"] and method == "POST":
-            from custom_python_vectordb_spark.functions.embeddings import mock_embed_one
+    # ------------------------------------------------------------ service
+    def embed(r):
+        from custom_python_vectordb_spark.functions.embeddings import mock_embed_one
 
-            dims = int(body.get("dimensions", 64))
-            return 200, {
-                "embeddings": [
-                    [float(x) for x in mock_embed_one(t, dims)] for t in body["texts"]
-                ]
-            }
-        if parts == ["snapshots"] and method == "GET":
-            report = {}
-            for n in sorted(snapshots):
-                idx = shard_tier.resident(*_snapshot_key(n))
-                report[n] = {"loaded": idx is not None,
-                             **({"rows": len(idx), "shards": len(idx.shards)}
-                                if idx is not None else {})}
-            return 200, {"snapshots": report}
-        if (len(parts) == 3 and parts[0] == "snapshots"
-                and parts[2] == "query" and method == "POST"):
-            if parts[1] not in snapshots:
-                return 404, {"error": f"no snapshot {parts[1]!r}"}
-            idx = _snapshot_index(parts[1])
-            k = int(body.get("n_results", 10))
-            if not (1 <= k <= 1000):
-                raise ValueError(f"n_results must be in [1, 1000], got {k}")
-            fk = body.get("fetch_k")
-            out = []
-            for v in body["query_embeddings"]:
-                ids, dists = idx.search_one(
-                    [float(x) for x in v], k=k,
-                    fetch_k=(int(fk) if fk is not None else None),
-                )
-                out.append(
-                    # numpy scalars -> native; string ids pass through
-                    [{"id": (i.item() if hasattr(i, "item") else i),
-                      "dist": float(d)}
-                     for i, d in zip(ids, dists)]
-                )
-            return 200, {"results": out}
-        if graph is not None and parts and parts[0] == "graph":
-            return _graph_routes(graph, method, parts, body, qs)
-        if parts == ["reset"] and method == "POST":
-            # Client.reset parity (fastpyvectordb/client.py:698-708): drop
-            # every collection; destructive, cannot be undone
-            names = list(db.list_collections())
-            for name in names:
-                db.delete_collection(name)
-                publish(name, "drop_collection")
-            return 200, {"reset": True, "dropped": len(names)}
-        if parts == ["collections"]:
-            if method == "GET":
-                return 200, {"collections": db.list_collections()}
-            if method == "POST":
-                need_spark("create")
-                db.create_collection(body["name"], int(body.get("dimensions", 64)))
-                publish(body["name"], "create_collection")
-                return 201, {"created": body["name"]}
-        if len(parts) >= 2 and parts[0] == "collections":
-            name = parts[1]
-            if len(parts) == 2 and method == "DELETE":
-                deleted = db.delete_collection(name)
-                publish(name, "drop_collection")
-                return 200, {"deleted": deleted}
+        dims = int(r.body.get("dimensions", 64))
+        return 200, {
+            "embeddings": [
+                [float(x) for x in mock_embed_one(t, dims)] for t in r.body["texts"]
+            ]
+        }
+
+    def list_snapshots(r):
+        report = {}
+        for n in sorted(snapshots):
+            idx = shard_tier.resident(*_snapshot_key(n))
+            report[n] = {"loaded": idx is not None,
+                         **({"rows": len(idx), "shards": len(idx.shards)}
+                            if idx is not None else {})}
+        return 200, {"snapshots": report}
+
+    def query_snapshot(r, name):
+        if name not in snapshots:
+            return 404, {"error": f"no snapshot {name!r}"}
+        idx = _snapshot_index(name)
+        k = int(r.body.get("n_results", 10))
+        if not (1 <= k <= 1000):
+            raise ValueError(f"n_results must be in [1, 1000], got {k}")
+        fk = r.body.get("fetch_k")
+        out = []
+        for v in r.body["query_embeddings"]:
+            ids, dists = idx.search_one(
+                [float(x) for x in v], k=k,
+                fetch_k=(int(fk) if fk is not None else None),
+            )
+            out.append(
+                # numpy scalars -> native; string ids pass through
+                [{"id": (i.item() if hasattr(i, "item") else i),
+                  "dist": float(d)}
+                 for i, d in zip(ids, dists)]
+            )
+        return 200, {"results": out}
+
+    def reset(r):
+        # Client.reset parity (fastpyvectordb/client.py:698-708): drop
+        # every collection; destructive, cannot be undone
+        names = list(db.list_collections())
+        for name in names:
+            db.delete_collection(name)
+            publish(name, "drop_collection")
+        return 200, {"reset": True, "dropped": len(names)}
+
+    # ------------------------------------------------------------ collections
+    def create(r):
+        name = _collection_name(r.body["name"])
+        db.create_collection(name, int(r.body.get("dimensions", 64)))
+        publish(name, "create_collection")
+        return 201, {"created": name}
+
+    def drop(r, name):
+        deleted = db.delete_collection(_collection_name(name))
+        publish(name, "drop_collection")
+        return 200, {"deleted": deleted}
+
+    def info(r, name):
+        # collection info (server_full.py:259-272)
+        return 200, {"name": name, "dimensions": r.coll.dimensions, "count": r.coll.count()}
+
+    def history(r, name):
+        return 200, {
+            "versions": [
+                {
+                    "version": m.get("version"),
+                    "parent": m.get("parent"),
+                    "mode": m.get("mode"),
+                    "committed_at": m.get("committed_at"),
+                    "n_dirs": len(m["dirs"]),
+                    "n_deletes": len(m.get("deletes") or []),
+                }
+                for m in db.warehouse.history(name)
+            ]
+        }
+
+    def optimize(r, name):
+        v = db.warehouse.optimize(
+            name,
+            cluster_by=r.body.get("cluster_by"),
+            zorder_by=r.body.get("zorder_by"),
+            target_file_mb=float(r.body.get("target_file_mb", 128)),
+        )
+        publish(name, "optimize", version=v)
+        return 200, {"optimized": name, "version": v}
+
+    def clone(r, name):
+        dst = r.body.get("dst")
+        if not dst or not isinstance(dst, str):
+            return 400, {"error": "clone requires a string 'dst' body field"}
+        ver = r.body.get("version")
+        if ver is not None:
             try:
-                coll = db.get_collection(name)
-            except FileNotFoundError:
-                return 404, {"error": f"collection {name!r} not found"}
-            route = parts[2] if len(parts) > 2 else "info"
-            if route in _SPARK_ROUTES:
-                need_spark(route)
-            if len(parts) == 2 and method == "GET":
-                # collection info (server_full.py:259-272)
-                return 200, {
-                    "name": name,
-                    "dimensions": coll.dimensions,
-                    "count": coll.count(),
-                }
-            if parts[2:] == ["count"] and method == "GET":
-                return 200, {"count": coll.count()}
-            versioned = hasattr(db.warehouse, "history")
-            if parts[2:] == ["history"] and method == "GET":
-                if not versioned:
-                    return 400, {"error": "collection store is not versioned"}
-                return 200, {
-                    "versions": [
-                        {
-                            "version": m.get("version"),
-                            "parent": m.get("parent"),
-                            "mode": m.get("mode"),
-                            "committed_at": m.get("committed_at"),
-                            "n_dirs": len(m["dirs"]),
-                            "n_deletes": len(m.get("deletes") or []),
-                        }
-                        for m in db.warehouse.history(name)
-                    ]
-                }
-            if parts[2:] == ["optimize"] and method == "POST":
-                if not versioned:
-                    return 400, {"error": "collection store is not versioned"}
-                v = db.warehouse.optimize(
-                    name,
-                    cluster_by=body.get("cluster_by"),
-                    zorder_by=body.get("zorder_by"),
-                    target_file_mb=float(body.get("target_file_mb", 128)),
-                )
-                publish(name, "optimize", version=v)
-                return 200, {"optimized": name, "version": v}
-            if parts[2:] == ["clone"] and method == "POST":
-                if not versioned:
-                    return 400, {"error": "collection store is not versioned"}
-                dst = body.get("dst")
-                if not dst or not isinstance(dst, str):
-                    return 400, {"error": "clone requires a string 'dst' body field"}
-                ver = body.get("version")
-                if ver is not None:
-                    try:
-                        ver = int(ver)
-                    except (TypeError, ValueError):
-                        return 400, {"error": f"version must be an integer, got {ver!r}"}
-                v = db.warehouse.clone(name, dst, version=ver)
-                publish(dst, "clone", source=name, version=v)
-                return 201, {"cloned": dst, "version": v}
-            if parts[2:] == ["diff"] and method == "GET":
-                if not versioned:
-                    return 400, {"error": "collection store is not versioned"}
-                try:
-                    v_from = int(qs["from"])
-                    v_to = int(qs["to"])
-                except (KeyError, TypeError, ValueError):
-                    return 400, {"error": "diff requires integer 'from' and 'to' params"}
-                on = qs.get("on", "id")
-                rows = (
-                    db.warehouse.diff(name, v_from, v_to, on)
-                    .drop("embedding")
-                    .limit(int(qs.get("limit", 1000)))
-                    .collect()
-                )
-                return 200, {"changes": [r.asDict(recursive=True) for r in rows]}
-            if parts[2:] == ["merge"] and method == "POST":
-                if not versioned:
-                    return 400, {"error": "collection store is not versioned"}
-                on = body.get("on")
-                rows = body.get("rows")
-                if not on or not isinstance(rows, list) or not rows:
-                    return 400, {"error": "merge requires 'on' and non-empty 'rows'"}
-                src = _texts_df(
-                    db,
-                    [r["id"] for r in rows],
-                    [r.get("document", "") for r in rows],
-                    [
-                        {k: v for k, v in r.items() if k not in ("id", "document")}
-                        for r in rows
-                    ],
-                    coll.dimensions,
-                )
-                v = db.warehouse.merge_into(
-                    name,
-                    src,
-                    on,
-                    when_matched=body.get("when_matched", "update"),
-                    when_not_matched=body.get("when_not_matched", "insert"),
-                )
-                publish(name, "merge", version=v, n_rows=len(rows))
-                return 200, {"merged": name, "version": v}
-            if parts[2:] == ["add"] and method == "POST":
-                coll.insert_batch(
-                    _texts_df(db, body["ids"], body["documents"], body.get("metadatas"), coll.dimensions)
-                )
-                publish(name, "add", ids=list(body["ids"]),
-                        metadatas=body.get("metadatas"))
-                return 201, {"added": len(body["ids"])}
-            if parts[2:] == ["upsert"] and method == "POST":
-                coll.upsert(
-                    _texts_df(db, body["ids"], body["documents"], body.get("metadatas"), coll.dimensions)
-                )
-                publish(name, "upsert", ids=list(body["ids"]),
-                        metadatas=body.get("metadatas"))
-                return 200, {"upserted": len(body["ids"])}
-            if parts[2:] == ["update"] and method == "POST":
-                ids, metas = list(body["ids"]), list(body["metadatas"])
-                if len(ids) != len(metas):
-                    raise ValueError("ids and metadatas must be the same length")
-                changes = _rows_df(db, [{"id": i, **m} for i, m in zip(ids, metas)])
-                coll.update_metadata(changes)
-                publish(name, "update", ids=ids)
-                return 200, {"updated": len(ids)}
-            if parts[2:] == ["delete_by_filter"] and method == "POST":
-                from custom_python_vectordb_spark.functions.filters import Filter
+                ver = int(ver)
+            except (TypeError, ValueError):
+                return 400, {"error": f"version must be an integer, got {ver!r}"}
+        v = db.warehouse.clone(name, _collection_name(dst), version=ver)
+        publish(dst, "clone", source=name, version=v)
+        return 201, {"cloned": dst, "version": v}
 
-                pred = Filter.from_dict(body["where"]).column
-                import pyspark.sql.functions as _F
+    def diff(r, name):
+        try:
+            v_from = int(r.query["from"])
+            v_to = int(r.query["to"])
+        except (KeyError, ValueError):
+            return 400, {"error": "diff requires integer 'from' and 'to' params"}
+        rows = (
+            db.warehouse.diff(name, v_from, v_to, r.query.get("on", "id"))
+            .drop("embedding")
+            .limit(int(r.query.get("limit", 1000)))
+            .collect()
+        )
+        return 200, {"changes": [row.asDict(recursive=True) for row in rows]}
 
-                matched = coll.df().filter(_F.coalesce(pred, _F.lit(False))).count()
-                coll.delete_by_filter(pred)
-                publish(name, "delete_by_filter", where=body["where"], deleted=matched)
-                return 200, {"deleted": matched}
-            if parts[2:] == ["peek"] and method == "GET":
-                if qs.get("version") is not None:
-                    # time-travel read (versioned stores only): pin the
-                    # manifest instead of the head snapshot
-                    if not versioned:
-                        return 400, {"error": "collection store is not versioned"}
-                    try:
-                        pin = int(qs["version"])
-                    except (TypeError, ValueError):
-                        return 400, {
-                            "error": f"version must be an integer, got {qs['version']!r}"
-                        }
-                    df = db.warehouse.load(name, version=pin)
-                    rows = (
-                        df.drop("embedding").limit(int(qs.get("limit", 10))).collect()
-                    )
-                    return 200, {"rows": [r.asDict(recursive=True) for r in rows]}
-                rows = coll.peek(int(qs.get("limit", 10))).drop("embedding").collect()
-                return 200, {"rows": [r.asDict(recursive=True) for r in rows]}
-            if parts[2:] == ["query"] and method == "POST":
-                # both unfiltered and dict-filtered queries take the
-                # in-process replica path (api.query_serve) — same results
-                # as the declarative plan (asserted in tests), no job
-                # round-trip; the dict filter becomes a NumPy mask over
-                # replica-resident metadata (the reference's P5 pattern).
-                # "ann": true routes to the IVF replica (api.ann_serve) —
-                # the accelerated tier, approximate by contract; "ivfpq":
-                # true to the cell-pruned PQ replica (api.ivfpq_serve,
-                # round 11), 32x resident compression at cell-pruned
-                # latency; "bq": true to the binary-quantized replica
-                # (api.bq_serve). ivfpq/bq take an optional "fetch_k"
-                # exact mmap rerank
-                common = {
-                    "query_texts": body.get("query_texts"),
-                    "query_embeddings": body.get("query_embeddings"),
-                    "n_results": int(body.get("n_results", 10)),
-                }
-                kind = ("ann" if body.get("ann") else "ivfpq" if body.get("ivfpq")
-                        else "bq" if body.get("bq") else None)
-                if kind is not None:
-                    serve = getattr(coll, f"{kind}_serve")
-                    return 200, {"results": serve(**common, **_accelerated(body, kind))}
-                return 200, {"results": coll.query_serve(**common, where=body.get("where"))}
-            if len(parts) == 4 and parts[2] == "get" and method == "GET":
-                doc = coll.get(parts[3])
-                return (200, doc) if doc is not None else (404, {"error": f"id {parts[3]!r} not found"})
-            if parts[2:] == ["delete"] and method == "POST":
-                coll.delete(list(body["ids"]))
-                publish(name, "delete", ids=list(body["ids"]))
-                return 200, {"deleted": len(body["ids"])}
-            if parts[2:] == ["keyword"] and method == "POST":
-                # in-process BM25 replica (api.keyword_serve) — same ranking
-                # as the declarative plan, no job round-trip
-                return 200, {
-                    "results": coll.keyword_serve(
-                        body["query"], k=int(body.get("n_results", 10))
-                    )
-                }
-            if parts[2:] == ["phrase"] and method == "POST":
-                # in-process positional index (api.phrase_serve) — exact
-                # adjacency matching, no job round-trip
-                return 200, {
-                    "results": coll.phrase_serve(
-                        body["query"], k=int(body.get("n_results", 10))
-                    )
-                }
-            if parts[2:] == ["hybrid"] and method == "POST":
-                # full in-process fusion (api.hybrid_serve): vector replica +
-                # keyword replica + numpy fusion, no job round-trip
-                return 200, {
-                    "results": coll.hybrid_serve(
-                        body["query"], k=int(body.get("n_results", 10)),
-                        alpha=float(body.get("alpha", 0.5)),
-                    )
-                }
-        return 404, {"error": f"no route {method} {path}"}
+    def merge(r, name):
+        on = r.body.get("on")
+        rows = r.body.get("rows")
+        if not on or not isinstance(rows, list) or not rows:
+            return 400, {"error": "merge requires 'on' and non-empty 'rows'"}
+        src = _texts_df(
+            db,
+            [row["id"] for row in rows],
+            [row.get("document", "") for row in rows],
+            [
+                {k: v for k, v in row.items() if k not in ("id", "document")}
+                for row in rows
+            ],
+            r.coll.dimensions,
+        )
+        v = db.warehouse.merge_into(
+            name,
+            src,
+            on,
+            when_matched=r.body.get("when_matched", "update"),
+            when_not_matched=r.body.get("when_not_matched", "insert"),
+        )
+        publish(name, "merge", version=v, n_rows=len(rows))
+        return 200, {"merged": name, "version": v}
 
-    return handle
+    def add(r, name):
+        b = r.body
+        r.coll.insert_batch(
+            _texts_df(db, b["ids"], b["documents"], b.get("metadatas"), r.coll.dimensions)
+        )
+        publish(name, "add", ids=list(b["ids"]), metadatas=b.get("metadatas"))
+        return 201, {"added": len(b["ids"])}
 
+    def upsert(r, name):
+        b = r.body
+        r.coll.upsert(
+            _texts_df(db, b["ids"], b["documents"], b.get("metadatas"), r.coll.dimensions)
+        )
+        publish(name, "upsert", ids=list(b["ids"]), metadatas=b.get("metadatas"))
+        return 200, {"upserted": len(b["ids"])}
 
-def _graph_routes(graph: GraphStore, method: str, parts: list[str], body: dict, qs: dict | None = None):
-    """/graph/* — reference parity (``server_full.py:430-620``): node/edge
-    CRUD mutates the store; neighbors/traverse/shortest-path/find run the
-    batch Spark operators over the store's DataFrame view."""
-    from custom_python_vectordb_spark.operators.graph import (
-        find_nodes,
-        neighbors,
-        shortest_path,
-        traverse_paths,
-    )
-    from pyspark.sql import functions as F
+    def update(r, name):
+        ids, metas = list(r.body["ids"]), list(r.body["metadatas"])
+        if len(ids) != len(metas):
+            raise ValueError("ids and metadatas must be the same length")
+        r.coll.update_metadata(_rows_df(db, [{"id": i, **m} for i, m in zip(ids, metas)]))
+        publish(name, "update", ids=ids)
+        return 200, {"updated": len(ids)}
 
-    sub = parts[1:]
-    if sub == ["stats"] and method == "GET":
-        return 200, graph.stats()
-    if sub == ["nodes"] and method == "POST":
-        graph.add_node(body["id"], body.get("labels", []), body.get("props", {}))
-        return 201, {"created": body["id"]}
-    if len(sub) == 2 and sub[0] == "nodes" and method == "GET":
-        n = graph.get_node(sub[1])
-        return (200, n) if n else (404, {"error": f"node {sub[1]!r} not found"})
-    if len(sub) == 2 and sub[0] == "nodes" and method == "DELETE":
-        return 200, {"deleted": graph.delete_node(sub[1])}
-    if sub == ["edges"] and method == "POST":
+    def delete_by_filter(r, name):
+        import pyspark.sql.functions as F
+
+        from custom_python_vectordb_spark.functions.filters import Filter
+
+        pred = Filter.from_dict(r.body["where"]).column
+        matched = r.coll.df().filter(F.coalesce(pred, F.lit(False))).count()
+        r.coll.delete_by_filter(pred)
+        publish(name, "delete_by_filter", where=r.body["where"], deleted=matched)
+        return 200, {"deleted": matched}
+
+    def peek(r, name):
+        limit = int(r.query.get("limit", 10))
+        if "version" in r.query:
+            # time-travel read: pin the manifest instead of the head snapshot
+            try:
+                pin = int(r.query["version"])
+            except ValueError:
+                return 400, {"error": f"version must be an integer, got {r.query['version']!r}"}
+            df = db.warehouse.load(name, version=pin).limit(limit)
+        else:
+            df = r.coll.peek(limit)
+        return 200, {"rows": [row.asDict(recursive=True) for row in df.drop("embedding").collect()]}
+
+    def query(r, name):
+        # both unfiltered and dict-filtered queries take the in-process
+        # replica path (api.query_serve) — same results as the declarative
+        # plan (asserted in tests), no job round-trip; the dict filter
+        # becomes a NumPy mask over replica-resident metadata (the
+        # reference's P5 pattern). "ann": true routes to the IVF replica
+        # (api.ann_serve) — the accelerated tier, approximate by contract;
+        # "ivfpq": true to the cell-pruned PQ replica (api.ivfpq_serve),
+        # 32x resident compression at cell-pruned latency; "bq": true to
+        # the binary-quantized replica (api.bq_serve). ivfpq/bq take an
+        # optional "fetch_k" exact mmap rerank
+        b = r.body
+        common = {
+            "query_texts": b.get("query_texts"),
+            "query_embeddings": b.get("query_embeddings"),
+            "n_results": int(b.get("n_results", 10)),
+        }
+        kind = ("ann" if b.get("ann") else "ivfpq" if b.get("ivfpq")
+                else "bq" if b.get("bq") else None)
+        if kind is not None:
+            serve = getattr(r.coll, f"{kind}_serve")
+            return 200, {"results": serve(**common, **_accelerated(b, kind))}
+        return 200, {"results": r.coll.query_serve(**common, where=b.get("where"))}
+
+    def delete(r, name):
+        r.coll.delete(list(r.body["ids"]))
+        publish(name, "delete", ids=list(r.body["ids"]))
+        return 200, {"deleted": len(r.body["ids"])}
+
+    # in-process text replicas (api.keyword_serve: BM25, api.phrase_serve:
+    # exact adjacency over a positional index, api.hybrid_serve: vector +
+    # keyword replicas fused in numpy) — no job round-trip
+    def keyword(r, name):
+        return 200, {"results": r.coll.keyword_serve(
+            r.body["query"], k=int(r.body.get("n_results", 10)))}
+
+    def phrase(r, name):
+        return 200, {"results": r.coll.phrase_serve(
+            r.body["query"], k=int(r.body.get("n_results", 10)))}
+
+    def hybrid(r, name):
+        return 200, {"results": r.coll.hybrid_serve(
+            r.body["query"], k=int(r.body.get("n_results", 10)),
+            alpha=float(r.body.get("alpha", 0.5)))}
+
+    # ------------------------------------------------------------ graph
+    # reference parity (server_full.py:430-620): node/edge CRUD mutates the
+    # store; neighbors/traverse/shortest-path/find/query run the batch
+    # Spark operators over the store's DataFrame view
+    def add_node(r):
+        graph.add_node(r.body["id"], r.body.get("labels", []), r.body.get("props", {}))
+        return 201, {"created": r.body["id"]}
+
+    def add_edge(r):
+        b = r.body
         eid = graph.add_edge(
-            body["src"], body["dst"], body.get("type", "RELATED"),
-            edge_id=body.get("id"), props=body.get("props"),
+            b["src"], b["dst"], b.get("type", "RELATED"),
+            edge_id=b.get("id"), props=b.get("props"),
         )
         return (201, {"created": eid}) if eid else (404, {"error": "missing endpoint node"})
-    if len(sub) == 2 and sub[0] == "edges" and method == "GET":
-        e = graph.get_edge(sub[1])
-        return (200, e) if e else (404, {"error": f"edge {sub[1]!r} not found"})
-    if len(sub) == 2 and sub[0] == "edges" and method == "DELETE":
-        return 200, {"deleted": graph.delete_edge(sub[1])}
-    if sub == ["edges"] and method == "GET":
-        qs = qs or {}
-        return 200, {
-            "edges": graph.find_edges(
-                edge_type=qs.get("type") or body.get("type"),
-                limit=int(qs.get("limit") or body.get("limit", 100)),
-            )
-        }
-    if sub == ["hyperedges"] and method == "POST":
+
+    def find_edges(r):
+        edge_type = r.query.get("type") or r.body.get("type")
+        limit = int(r.query.get("limit") or r.body.get("limit", 100))
+        return 200, {"edges": graph.find_edges(edge_type=edge_type, limit=limit)}
+
+    def add_hyperedge(r):
         hid = graph.add_hyperedge(
-            list(body["nodes"]), body.get("type", "RELATED"), hyper_id=body.get("id")
+            list(r.body["nodes"]), r.body.get("type", "RELATED"), hyper_id=r.body.get("id")
         )
         return (201, {"created": hid}) if hid else (404, {"error": "missing member node"})
-    if len(sub) == 2 and sub[0] == "hyperedges" and method == "GET":
-        h = graph.get_hyperedge(sub[1])
-        return (200, h) if h else (404, {"error": f"hyperedge {sub[1]!r} not found"})
-    if sub == ["query"] and method == "POST":
+
+    def graph_query(r):
         # Cypher over HTTP (server_full.py:567-574) — compile the query to
         # one Spark SQL text over the expanded property-column view, as the
         # batch cypher_* queries do; its literals are bound as parameters,
@@ -848,31 +769,45 @@ def _graph_routes(graph: GraphStore, method: str, parts: list[str], body: dict, 
         from custom_python_vectordb_spark.plans.cypher import cypher
 
         nodes, edges = graph.dfs(expand_props=True)
-        rows = cypher(nodes, edges, body["query"]).limit(1000).collect()
-        return 200, {"rows": [r.asDict(recursive=True) for r in rows]}
-    if len(sub) == 2 and sub[0] == "neighbors" and method == "GET":
+        rows = cypher(nodes, edges, r.body["query"]).limit(1000).collect()
+        return 200, {"rows": [row.asDict(recursive=True) for row in rows]}
+
+    def graph_neighbors(r, node_id):
+        from custom_python_vectordb_spark.operators.graph import neighbors
+
         nodes, edges = graph.dfs()
-        rows = neighbors(nodes, edges, sub[1], direction="both").collect()
-        return 200, {"neighbors": sorted(r["id"] for r in rows)}
-    if sub == ["traverse"] and method == "POST":
+        rows = neighbors(nodes, edges, node_id, direction="both").collect()
+        return 200, {"neighbors": sorted(row["id"] for row in rows)}
+
+    def traverse(r):
+        from custom_python_vectordb_spark.operators.graph import traverse_paths
+
         _, edges = graph.dfs()
         rows = traverse_paths(
-            edges, body["start"],
-            max_depth=int(body.get("max_hops", 3)),
-            direction=body.get("direction", "out"),
-            edge_type=body.get("type"),
+            edges, r.body["start"],
+            max_depth=int(r.body.get("max_hops", 3)),
+            direction=r.body.get("direction", "out"),
+            edge_type=r.body.get("type"),
         ).collect()
-        return 200, {"paths": [list(r["path"]) for r in rows]}
-    if sub == ["shortest-path"] and method == "POST":
+        return 200, {"paths": [list(row["path"]) for row in rows]}
+
+    def shortest(r):
+        from custom_python_vectordb_spark.operators.graph import shortest_path
+
         _, edges = graph.dfs()
         rows = shortest_path(
-            edges, body["src"], body["dst"], direction=body.get("direction", "out")
+            edges, r.body["src"], r.body["dst"], direction=r.body.get("direction", "out")
         ).collect()
         return 200, {"path": rows[0]["path_str"].split("->") if rows else None}
-    if sub == ["find"] and method == "POST":
+
+    def find(r):
+        from pyspark.sql import functions as F
+
+        from custom_python_vectordb_spark.operators.graph import find_nodes
+
         nodes, _ = graph.dfs()
         flt = None
-        for k, v in (body.get("props") or {}).items():
+        for k, v in (r.body.get("props") or {}).items():
             # get_json_object returns the JSON TEXT of the value (strings
             # unquoted) — Python str() diverges for bool (str(True)='True'
             # vs 'true'), None, and nested objects (round-2 ADVICE), so
@@ -882,20 +817,277 @@ def _graph_routes(graph: GraphStore, method: str, parts: list[str], body: dict, 
             want = v if isinstance(v, str) else json.dumps(v, separators=(",", ":"))
             cond = F.get_json_object(F.col("props"), f"$.{k}") == want
             flt = cond if flt is None else (flt & cond)
-        rows = find_nodes(nodes, labels=body.get("labels"), prop_filter=flt).collect()
-        return 200, {"ids": sorted(r["id"] for r in rows)}
-    return 404, {"error": f"no route {method} /" + "/".join(parts)}
+        rows = find_nodes(nodes, labels=r.body.get("labels"), prop_filter=flt).collect()
+        return 200, {"ids": sorted(row["id"] for row in rows)}
+
+    # ------------------------------------------------------------ streams
+    def sse(r, name=None):
+        """GET /collections/<name>/events?types=a,b&replay=N&meta={…}, or
+        GET /events?collection=…&… for the all-collections stream (the
+        reference's ``/ws`` wildcard analog): replay up to N buffered
+        events matching the subscription, then push live events until the
+        client disconnects. `meta` is a JSON dict of metadata equality
+        constraints (``Subscription.filter``)."""
+        name = name or r.query.get("collection", "*")
+        types = set(r.query["types"].split(",")) if r.query.get("types") else None
+        meta = json.loads(r.query["meta"]) if r.query.get("meta") else None
+        replay = int(r.query.get("replay", 0))
+
+        def opened(n, q):
+            r.send_response(200)
+            r.send_header("Content-Type", "text/event-stream")
+            r.send_header("Cache-Control", "no-cache")
+            r.end_headers()
+            r.wfile.flush()
+
+        def deliver(ev):
+            if ev is None:
+                r.wfile.write(b": keepalive\n\n")  # SSE comment
+            elif sub_match(ev, name, types, meta):
+                r.wfile.write(f"id: {ev['seq']}\ndata: {json.dumps(ev)}\n\n".encode())
+            r.wfile.flush()
+
+        return lambda: bus.follow(replay, opened, deliver)
+
+    def ws(r, name="*"):
+        """GET /collections/<name>/ws, or GET /ws for the all-collections
+        stream (the reference's global WS endpoint, realtime.py:467-487):
+        RFC 6455 upgrade, then the reference's subscribe flow
+        (realtime.py:449-510 / server_full.py WS endpoint). The client's
+        first text frame is {"action": "subscribe", "types": [...],
+        "replay": N}; the server acks, replays, then pushes live JSON text
+        frames. A later subscribe frame replaces the filters (the
+        reference's update_subscription, realtime.py:171-183) in line with
+        the events: one published before the frame meets the old filter.
+        Ping frames get pongs; a close frame (or EOF) ends the
+        subscription."""
+        key = r.headers.get("Sec-WebSocket-Key")
+        if not key or (r.headers.get("Upgrade") or "").lower() != "websocket":
+            return 400, {"error": "a WebSocket stream needs 'Upgrade: websocket' "
+                                  "and a Sec-WebSocket-Key"}
+
+        def push():
+            r.send_response(101)
+            r.send_header("Upgrade", "websocket")
+            r.send_header("Connection", "Upgrade")
+            r.send_header("Sec-WebSocket-Accept", ws_accept_key(key))
+            r.end_headers()
+            r.wfile.flush()
+            wlock = threading.Lock()
+
+            def send(payload: bytes, opcode: int = 0x1):
+                with wlock:
+                    r.wfile.write(ws_encode_frame(payload, opcode))
+                    r.wfile.flush()
+
+            frame = ws_read_frame(r.rfile)
+            if frame is None or frame[0] != 0x1:
+                return
+            try:
+                sub = json.loads(frame[1] or b"{}")
+            except json.JSONDecodeError:
+                sub = {}
+            state = {"collection": name}  # the live filter
+            closed = object()
+
+            def subscribe(upd: dict) -> None:
+                state["collection"] = upd.get("collection", state["collection"])
+                state["types"] = set(upd["types"]) if upd.get("types") else None
+                state["meta"] = upd.get("filter")
+
+            def reader(q):  # pong pings, queue subscribe frames, end on close/EOF
+                try:
+                    while True:
+                        f = ws_read_frame(r.rfile)
+                        if f is None or f[0] == 0x8:  # EOF / close
+                            break
+                        if f[0] == 0x9:  # ping
+                            send(f[1], opcode=0xA)
+                        elif f[0] == 0x1:  # text: update_subscription
+                            try:
+                                upd = json.loads(f[1] or b"{}")
+                            except json.JSONDecodeError:
+                                continue
+                            if upd.get("action") == "subscribe":
+                                q.put(("subscribe", upd))
+                except (OSError, ValueError):
+                    pass
+                q.put(closed)
+
+            def opened(n, q):
+                threading.Thread(target=reader, args=(q,), daemon=True).start()
+                send(json.dumps({"subscribed": name, "replay": n}).encode())
+
+            def deliver(ev):
+                if ev is closed:
+                    return False
+                if ev is None:
+                    send(b"", opcode=0x9)  # keepalive ping
+                elif isinstance(ev, tuple):  # ("subscribe", frame) from the reader
+                    subscribe(ev[1])
+                    send(json.dumps({"subscribed": state["collection"]}).encode())
+                elif sub_match(ev, state["collection"], state["types"], state["meta"]):
+                    send(json.dumps(ev).encode())
+
+            subscribe(sub)
+            bus.follow(int(sub.get("replay", 0)), opened, deliver)
+            send(b"", opcode=0x8)  # close handshake reply
+
+        return push
+
+    return {
+        "GET /health": _Route(lambda r: (200, {"status": "ok", "collections": len(db.list_collections())})),
+        "GET /embeddings/info": _Route(lambda r: (200, {"provider": "mock", "dimensions": 64})),
+        "POST /embeddings/embed": _Route(embed),
+        "GET /snapshots": _Route(list_snapshots),
+        "POST /snapshots/{name}/query": _Route(query_snapshot),
+        "POST /reset": _Route(reset),
+        "GET /collections": _Route(lambda r: (200, {"collections": db.list_collections()})),
+        "POST /collections": _Route(create, spark=True),
+        "DELETE /collections/{name}": _Route(drop),
+        "GET /collections/{name}": _Route(info, collection=True, spark=True),
+        "GET /collections/{name}/count": _Route(
+            lambda r, name: (200, {"count": r.coll.count()}), collection=True, spark=True),
+        "GET /collections/{name}/history": _Route(history, collection=True, versioned=True),
+        "POST /collections/{name}/optimize": _Route(optimize, collection=True, spark=True, versioned=True),
+        "POST /collections/{name}/clone": _Route(clone, collection=True, spark=True, versioned=True),
+        "GET /collections/{name}/diff": _Route(diff, collection=True, spark=True, versioned=True),
+        "POST /collections/{name}/merge": _Route(merge, collection=True, spark=True, versioned=True),
+        "POST /collections/{name}/add": _Route(add, collection=True, spark=True),
+        "POST /collections/{name}/upsert": _Route(upsert, collection=True, spark=True),
+        "POST /collections/{name}/update": _Route(update, collection=True, spark=True),
+        "POST /collections/{name}/delete_by_filter": _Route(delete_by_filter, collection=True, spark=True),
+        "GET /collections/{name}/peek": _Route(peek, collection=True, spark=True, versioned="version"),
+        "POST /collections/{name}/query": _Route(query, collection=True),
+        "GET /collections/{name}/get/{id}": _Route(
+            lambda r, name, i: found("id", i, r.coll.get(i)), collection=True, spark=True),
+        "POST /collections/{name}/delete": _Route(delete, collection=True, spark=True),
+        "POST /collections/{name}/keyword": _Route(keyword, collection=True),
+        "POST /collections/{name}/phrase": _Route(phrase, collection=True),
+        "POST /collections/{name}/hybrid": _Route(hybrid, collection=True),
+        "GET /graph/stats": _Route(lambda r: (200, graph.stats())),
+        "POST /graph/nodes": _Route(add_node),
+        "GET /graph/nodes/{id}": _Route(lambda r, i: found("node", i, graph.get_node(i))),
+        "DELETE /graph/nodes/{id}": _Route(lambda r, i: (200, {"deleted": graph.delete_node(i)})),
+        "POST /graph/edges": _Route(add_edge),
+        "GET /graph/edges": _Route(find_edges),
+        "GET /graph/edges/{id}": _Route(lambda r, i: found("edge", i, graph.get_edge(i))),
+        "DELETE /graph/edges/{id}": _Route(lambda r, i: (200, {"deleted": graph.delete_edge(i)})),
+        "POST /graph/hyperedges": _Route(add_hyperedge),
+        "GET /graph/hyperedges/{id}": _Route(lambda r, i: found("hyperedge", i, graph.get_hyperedge(i))),
+        "POST /graph/query": _Route(graph_query, spark=True),
+        "GET /graph/neighbors/{id}": _Route(graph_neighbors, spark=True),
+        "POST /graph/traverse": _Route(traverse, spark=True),
+        "POST /graph/shortest-path": _Route(shortest, spark=True),
+        "POST /graph/find": _Route(find, spark=True),
+        "GET /events": _Route(sse, stream=True),
+        "GET /collections/{name}/events": _Route(sse, stream=True),
+        "GET /ws": _Route(ws, stream=True),
+        "GET /collections/{name}/ws": _Route(ws, stream=True),
+    }
 
 
-def _stream_route(path: str) -> str | None:
-    """Which push stream a GET of `path` opens: "sse", "ws" or None."""
-    parts = [p for p in path.split("?")[0].split("/") if p]
-    scoped = len(parts) == 3 and parts[0] == "collections"
-    if parts == ["events"] or (scoped and parts[2] == "events"):
-        return "sse"
-    if parts == ["ws"] or (scoped and parts[2] == "ws"):
-        return "ws"
-    return None
+class _RouteTable:
+    """A worker's routes (:func:`_routes`), keyed on (method, path shape).
+    A path's shape is its segments with the parameter positions of its
+    first segment blanked (so no route may put a literal where another with
+    its first segment has a parameter), and matching a request costs one
+    split, one percent-decode per segment and one dict lookup; the query
+    string is parsed only when there is one. :meth:`call` checks the
+    matched route's preconditions, then runs it."""
+
+    def __init__(self, db: VectorDB, routes: dict[str, _Route]):
+        self.db = db
+        self.routes = routes
+        split = {key: (key.split()[0], key.split()[1].strip("/").split("/")) for key in routes}
+        self._params: dict[str, frozenset[int]] = {}  # first segment -> parameter positions
+        for _, parts in split.values():
+            at = {i for i, p in enumerate(parts) if p[0] == "{"}
+            self._params[parts[0]] = self._params.get(parts[0], frozenset()) | at
+        self._shapes: dict[tuple, _Route] = {}
+        for key, (method, parts) in split.items():
+            at = self._params[parts[0]]
+            shape = tuple("{}" if i in at else p for i, p in enumerate(parts))
+            self._shapes[method, shape] = routes[key]
+
+    def match(self, method: str, target: str) -> tuple[_Route, list[str], dict] | None:
+        """(route, path parameters, query) for a request line's method and
+        target, or None when no route has its shape."""
+        path, _, qs = target.partition("?")
+        parts = [unquote(p) for p in path.split("/") if p]
+        at = self._params.get(parts[0], ()) if parts else ()
+        route = self._shapes.get((method, tuple("{}" if i in at else p for i, p in enumerate(parts))))
+        if route is None:
+            return None
+        query = {k: v[0] for k, v in parse_qs(qs).items()} if qs else {}
+        return route, [p for i, p in enumerate(parts) if i in at], query
+
+    def call(self, r: _Handler):
+        """Serve the request the handler ``r`` has parsed: (status, JSON
+        payload), or for a stream route the function that pushes it."""
+        n = int(r.headers.get("Content-Length") or 0)
+        r.body = json.loads(r.rfile.read(n)) if n else {}
+        if not isinstance(r.body, dict):
+            raise ValueError("the request body must be a JSON object")
+        if r.match is None:
+            return 404, {"error": f"no route {r.command} {r.path}"}
+        route, params, r.query = r.match
+        if route.stream:
+            r.close_connection = True  # the stream's thread closes the socket
+        if route.collection:
+            try:
+                r.coll = self.db.get_collection(_collection_name(params[0]))
+            except FileNotFoundError:
+                return 404, {"error": f"collection {params[0]!r} not found"}
+        if route.spark and self.db.spark is None:
+            return 503, {"error": f"{r.command} {r.path.partition('?')[0]} runs a Spark "
+                                  "plan; this worker was started --serving-only and "
+                                  "has no Spark session"}
+        needs_versions = route.versioned is True or (
+            route.versioned and route.versioned in r.query)
+        if needs_versions and not hasattr(self.db.warehouse, "history"):
+            return 400, {"error": "collection store is not versioned"}
+        return route.run(r, *params)
+
+
+class _Handler(BaseHTTPRequestHandler):
+    """One request: the stdlib parser reads its request line and headers,
+    then the route table serves it. :class:`LoopServer` runs one request
+    per instance over the (rfile, wfile, route match) it passes as
+    `request`, then reads the reply and close_connection back."""
+
+    # WS clients reject a "HTTP/1.0 101" status line; every JSON route
+    # sends Content-Length, so 1.1 keep-alive semantics are safe.
+    protocol_version = "HTTP/1.1"
+
+    def setup(self):
+        self.rfile, self.wfile, self.match = self.request
+
+    def handle(self):
+        self.handle_one_request()
+
+    def finish(self):
+        self.wfile.flush()
+
+    def _serve(self):
+        try:  # encoding the reply included: a payload json refuses is a route fault
+            out = self.server.routes.call(self)
+            reply = None if callable(out) else _respond(*out, close=self.close_connection)
+        except (KeyError, ValueError) as e:
+            reply = _respond(400, {"error": str(e)}, close=self.close_connection)
+        except Exception as e:  # a route bug answers 500; the connection lives on
+            traceback.print_exc()
+            reply = _respond(500, {"error": str(e), "type": type(e).__name__},
+                             close=self.close_connection)
+        if reply is None:
+            out()  # a push stream: runs until the client goes away
+        else:
+            self.wfile.write(reply)
+
+    do_GET = do_POST = do_DELETE = _serve
+
+    def log_message(self, *a):  # keep test output quiet
+        pass
 
 
 def _header_end(buf: bytearray) -> int:
@@ -912,15 +1104,19 @@ def _header_end(buf: bytearray) -> int:
     return min(ends) if ends else -1
 
 
-def _json_reply(status: int, payload: dict) -> bytes:
-    """A complete JSON reply that closes the connection, for requests the
-    loop answers without the handler (framing refusals, handler faults)."""
+def _respond(status: int, payload, close: bool = False) -> bytes:
+    """The bytes of one JSON reply, the routes' and the loop's refusals
+    alike: the one place a reply's status line and headers are written.
+    ``X-Worker`` names the worker process: SO_REUSEPORT pools balance per
+    connection by kernel hash, so a client that cares about placement (a
+    least-connections balancer, the soak's --distinct-workers mode) needs
+    it. ``Connection: close`` says the connection ends after the reply."""
     body = json.dumps(payload).encode()
-    reason = BaseHTTPRequestHandler.responses[status][0]
     return (
-        f"HTTP/1.1 {status} {reason}\r\nContent-Type: application/json\r\n"
-        f"Content-Length: {len(body)}\r\nX-Worker: {os.getpid()}\r\n"
-        "Connection: close\r\n\r\n"
+        f"HTTP/1.1 {status} {BaseHTTPRequestHandler.responses[status][0]}\r\n"
+        f"Content-Type: application/json\r\nContent-Length: {len(body)}\r\n"
+        f"Date: {formatdate(usegmt=True)}\r\nX-Worker: {os.getpid()}\r\n"
+        + ("Connection: close\r\n\r\n" if close else "\r\n")
     ).encode() + body
 
 
@@ -968,10 +1164,10 @@ class LoopServer:
     replies without blocking. A partial write waits in its connection's
     buffer, so a client that stops reading stalls no other connection.
 
-    Each framed request runs through ``handler_cls`` (a
-    ``BaseHTTPRequestHandler`` whose ``setup`` takes ``(rfile, wfile)``)
-    over in-memory files: inline on the loop when ``pool_threads`` is 0,
-    else on a thread pool that hands the reply bytes back to the loop.
+    Each framed request is matched against ``routes`` (a
+    :class:`_RouteTable`) and runs through :class:`_Handler` over
+    in-memory files: inline on the loop when ``pool_threads`` is 0, else
+    on a thread pool that hands the reply bytes back to the loop.
     A connection has one request in flight; the next pipelined one runs
     once the reply before it has been written, so replies keep request
     order. SSE and WebSocket requests take their socket off the loop and
@@ -982,9 +1178,9 @@ class LoopServer:
     ``MAX_BODY_BYTES`` 413 (the body is not buffered), a malformed one 400
     and any ``Transfer-Encoding`` 411; each then ends the connection."""
 
-    def __init__(self, address, handler_cls, *, reuse_port: bool = False,
+    def __init__(self, address, routes: _RouteTable, *, reuse_port: bool = False,
                  pool_threads: int = 0):
-        self.RequestHandlerClass = handler_cls
+        self.routes = routes
         self.socket = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
         try:
             self.socket.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
@@ -1092,15 +1288,16 @@ class LoopServer:
             if framed is None:
                 break
             req, request_line = framed
-            words = request_line.split()
-            if len(words) >= 2 and words[0] == b"GET" and _stream_route(words[1].decode("latin-1")):
-                self._detach(conn, req)
+            words = request_line.decode("latin-1").split()
+            match = self.routes.match(words[0], words[1]) if len(words) >= 2 else None
+            if match is not None and match[0].stream:
+                self._detach(conn, req, match)
                 return
             if self._pool is None:
-                self._send(conn, *self._run(req, conn.addr))
+                self._send(conn, *self._run(req, conn.addr, match))
             else:
                 conn.busy = True
-                self._pool.submit(self._run_pooled, conn, req)
+                self._pool.submit(self._run_pooled, conn, req, match)
         if conn.sock is None:
             return
         if conn.eof and not (conn.busy or conn.outbuf):
@@ -1162,21 +1359,21 @@ class LoopServer:
         could lose the reply."""
         conn.inbuf.clear()
         conn.discard = MAX_BODY_BYTES
-        self._send(conn, _json_reply(status, {"error": message}), False)
+        self._send(conn, _respond(status, {"error": message}, close=True), False)
 
-    def _run(self, req: bytes, addr) -> tuple[bytes, bool]:
+    def _run(self, req: bytes, addr, match) -> tuple[bytes, bool]:
         """One request through the handler over in-memory files: (reply
         bytes, whether the connection closes after it)."""
         out = io.BytesIO()
         try:
-            h = self.RequestHandlerClass((io.BytesIO(req), out), addr, self)
+            h = _Handler((io.BytesIO(req), out, match), addr, self)
         except Exception as e:  # the worker boundary: a fault is a 500, never a dead loop
             traceback.print_exc()
-            return _json_reply(500, {"error": str(e), "type": type(e).__name__}), True
+            return _respond(500, {"error": str(e), "type": type(e).__name__}, close=True), True
         return out.getvalue(), h.close_connection
 
-    def _run_pooled(self, conn: _Conn, req: bytes) -> None:
-        self._done.append((conn, *self._run(req, conn.addr)))
+    def _run_pooled(self, conn: _Conn, req: bytes, match) -> None:
+        self._done.append((conn, *self._run(req, conn.addr, match)))
         self._wake()
 
     def _wake(self) -> None:
@@ -1229,7 +1426,7 @@ class LoopServer:
         self._conns.discard(conn)
 
     # ------------------------------------------------------------ streams
-    def _detach(self, conn: _Conn, req: bytes) -> None:
+    def _detach(self, conn: _Conn, req: bytes, match) -> None:
         """Take a push-stream connection off the loop; a thread of its own
         runs the handler on the blocking socket, with the bytes the loop
         had already read in front."""
@@ -1239,15 +1436,15 @@ class LoopServer:
         conn.mask = 0
         conn.sock = None
         self._conns.discard(conn)
-        threading.Thread(target=self._stream, args=(sock, conn.addr, head), daemon=True).start()
+        threading.Thread(
+            target=self._stream, args=(sock, conn.addr, head, match), daemon=True
+        ).start()
 
-    def _stream(self, sock: socket.socket, addr, head: bytes) -> None:
+    def _stream(self, sock: socket.socket, addr, head: bytes, match) -> None:
         sock.setblocking(True)
         try:
             with sock, sock.makefile("wb") as wfile:
-                self.RequestHandlerClass(
-                    (io.BufferedReader(_Prefixed(sock, head)), wfile), addr, self
-                )
+                _Handler((io.BufferedReader(_Prefixed(sock, head)), wfile, match), addr, self)
         except OSError:
             pass  # client went away
 
@@ -1261,8 +1458,8 @@ def make_server(
     snapshots: dict | None = None,
 ) -> LoopServer:
     """Build (not start) one worker's server; port 0 picks a free port. The
-    server carries an EventBus (`srv.bus`) publishing every mutation route
-    and the graph store (`srv.graph`).
+    server carries an EventBus (`srv.bus`) publishing every mutation route,
+    the graph store (`srv.graph`) and its route table (`srv.routes`).
 
     A worker is one :class:`LoopServer`: one selector loop serves all of
     the process's connections. Without a Spark session (``VectorDB(None,
@@ -1282,235 +1479,13 @@ def make_server(
     benchmark runs)."""
     bus = EventBus()
     graph = GraphStore(db.spark)
-    handle = _routes(
+    routes = _RouteTable(db, _routes(
         db, bus, graph,
         ann_geometries=frozenset(ann_geometries) if ann_geometries else None,
         snapshots=snapshots,
-    )
-
-    class Handler(BaseHTTPRequestHandler):
-        # WS clients reject a "HTTP/1.0 101" status line; every JSON route
-        # sends Content-Length, so 1.1 keep-alive semantics are safe.
-        protocol_version = "HTTP/1.1"
-
-        # LoopServer runs one request per instance over the (rfile, wfile)
-        # pair it passes as `request`, then reads the reply and
-        # close_connection back
-        def setup(self):
-            self.rfile, self.wfile = self.request
-
-        def handle(self):
-            self.handle_one_request()
-
-        def finish(self):
-            self.wfile.flush()
-
-        def _reply(self, method):
-            try:
-                length = int(self.headers.get("Content-Length") or 0)
-                body = json.loads(self.rfile.read(length) or b"{}") if length else {}
-                status, payload = handle(method, self.path, body)
-                data = json.dumps(payload).encode()
-            except SparkUnavailable as e:
-                status, data = 503, json.dumps({"error": str(e)}).encode()
-            except (KeyError, ValueError) as e:
-                status, data = 400, json.dumps({"error": str(e)}).encode()
-            except Exception as e:  # a route bug answers 500; the connection lives on
-                traceback.print_exc()
-                status = 500
-                data = json.dumps({"error": str(e), "type": type(e).__name__}).encode()
-            self.send_response(status)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(data)))
-            # which worker PROCESS served this connection: SO_REUSEPORT
-            # pools balance per-connection by kernel hash, so a client
-            # that cares about collision-free placement (a least-
-            # connections balancer, or the soak's --distinct-workers
-            # mode) needs the worker identity observable (r14)
-            self.send_header("X-Worker", str(os.getpid()))
-            self.end_headers()
-            self.wfile.write(data)
-
-        def _sse(self):
-            """GET /collections/<name>/events?types=a,b&replay=N
-            (or GET /events?collection=…&… for the all-collections stream,
-            the reference's ``/ws`` wildcard analog): replay up to N
-            buffered events matching the subscription, then push live
-            events until the client disconnects. `meta` is a JSON dict of
-            metadata equality constraints (``Subscription.filter``)."""
-            from urllib.parse import parse_qs, urlparse
-
-            u = urlparse(self.path)
-            parts = [p for p in u.path.split("/") if p]
-            qs = parse_qs(u.query)
-            name = qs.get("collection", ["*"])[0] if parts == ["events"] else parts[1]
-            types = set(qs["types"][0].split(",")) if qs.get("types") else None
-            meta = json.loads(qs["meta"][0]) if qs.get("meta") else None
-            replay = int(qs.get("replay", ["0"])[0])
-
-            def wanted(ev):
-                return sub_match(ev, name, types, meta)
-
-            sid, q, replayed = bus.subscribe(replay=replay)
-            try:
-                self.send_response(200)
-                self.send_header("Content-Type", "text/event-stream")
-                self.send_header("Cache-Control", "no-cache")
-                self.end_headers()
-                for ev in replayed:
-                    if wanted(ev):
-                        self._send_event(ev, replayed=True)
-                while True:
-                    try:
-                        ev = q.get(timeout=15.0)
-                    except _queue.Empty:
-                        self.wfile.write(b": keepalive\n\n")  # SSE comment
-                        self.wfile.flush()
-                        continue
-                    if wanted(ev):
-                        self._send_event(ev)
-            except (BrokenPipeError, ConnectionResetError, OSError):
-                pass  # client went away
-            finally:
-                bus.unsubscribe(sid)
-
-        def _ws(self):
-            """GET /collections/<name>/ws — RFC 6455 upgrade, then the
-            reference's subscribe flow (realtime.py:449-510 /
-            server_full.py WS endpoint): the client's first text frame is
-            {"action": "subscribe", "types": [...], "replay": N}; the
-            server acks, replays, then pushes live JSON text frames.
-            Ping frames get pongs; a close frame (or EOF) ends the
-            subscription."""
-            key = self.headers.get("Sec-WebSocket-Key")
-            upgrade = (self.headers.get("Upgrade") or "").lower()
-            if not key or upgrade != "websocket":
-                self.send_response(400)
-                self.end_headers()
-                return
-            parts = [p for p in self.path.split("?")[0].split("/") if p]
-            # /ws = all-collections stream (the reference's global WS
-            # endpoint, realtime.py:467-487); /collections/<name>/ws scopes
-            name = "*" if parts == ["ws"] else parts[1]
-
-            self.send_response(101)
-            self.send_header("Upgrade", "websocket")
-            self.send_header("Connection", "Upgrade")
-            self.send_header("Sec-WebSocket-Accept", ws_accept_key(key))
-            self.end_headers()
-            self.wfile.flush()
-
-            wlock = threading.Lock()
-
-            def send(payload: bytes, opcode: int = 0x1):
-                with wlock:
-                    self.wfile.write(ws_encode_frame(payload, opcode))
-                    self.wfile.flush()
-
-            frame = ws_read_frame(self.rfile)
-            if frame is None or frame[0] != 0x1:
-                return
-            try:
-                sub = json.loads(frame[1] or b"{}")
-            except json.JSONDecodeError:
-                sub = {}
-            types = set(sub["types"]) if sub.get("types") else None
-            replay = int(sub.get("replay", 0))
-            # live filter state, replaceable mid-stream by a later subscribe
-            # frame (the reference's update_subscription,
-            # realtime.py:171-183). The reader queues the frame and the push
-            # loop applies it in queue order, so an event published before
-            # the frame arrived still meets the old filter.
-            state = {
-                "collection": sub.get("collection", name),
-                "types": types,
-                "meta": sub.get("filter"),
-            }
-
-            def wanted(ev):
-                return sub_match(ev, state["collection"], state["types"], state["meta"])
-
-            sid, q, replayed = bus.subscribe(replay=replay)
-            _close = {"__close__": True}
-
-            def reader():
-                """Drain client frames: pong the pings, queue re-subscribe
-                frames (filter update mid-stream) for the push loop, turn
-                close/EOF into a queue sentinel so the push loop exits."""
-                try:
-                    while True:
-                        f = ws_read_frame(self.rfile)
-                        if f is None or f[0] == 0x8:  # EOF / close
-                            break
-                        if f[0] == 0x9:  # ping
-                            send(f[1], opcode=0xA)
-                        elif f[0] == 0x1:  # text: update_subscription
-                            try:
-                                upd = json.loads(f[1] or b"{}")
-                            except json.JSONDecodeError:
-                                continue
-                            if upd.get("action") == "subscribe":
-                                q.put(("subscribe", upd))
-                except (OSError, ValueError):
-                    pass
-                q.put(_close)
-
-            threading.Thread(target=reader, daemon=True).start()
-            try:
-                send(json.dumps({"subscribed": name, "replay": len(replayed)}).encode())
-                for ev in replayed:
-                    if wanted(ev):
-                        send(json.dumps({**ev, "replayed": True}).encode())
-                while True:
-                    try:
-                        ev = q.get(timeout=15.0)
-                    except _queue.Empty:
-                        send(b"", opcode=0x9)  # keepalive ping
-                        continue
-                    if ev is _close:
-                        break
-                    if isinstance(ev, tuple):  # ("subscribe", frame) from the reader
-                        upd = ev[1]
-                        state["collection"] = upd.get("collection", state["collection"])
-                        state["types"] = set(upd["types"]) if upd.get("types") else None
-                        state["meta"] = upd.get("filter")
-                        send(json.dumps({"subscribed": state["collection"]}).encode())
-                        continue
-                    if wanted(ev):
-                        send(json.dumps(ev).encode())
-                send(b"", opcode=0x8)  # close handshake reply
-            except (BrokenPipeError, ConnectionResetError, OSError):
-                pass  # client went away
-            finally:
-                bus.unsubscribe(sid)
-
-        def _send_event(self, ev: dict, replayed: bool = False):
-            payload = {**ev, **({"replayed": True} if replayed else {})}
-            self.wfile.write(
-                f"id: {ev['seq']}\ndata: {json.dumps(payload)}\n\n".encode()
-            )
-            self.wfile.flush()
-
-        def do_GET(self):
-            stream = _stream_route(self.path)
-            if stream == "sse":
-                self._sse()  # /events is the all-collections stream
-            elif stream == "ws":
-                self._ws()  # /ws is the all-collections stream
-            else:
-                self._reply("GET")
-
-        def do_POST(self):
-            self._reply("POST")
-
-        def do_DELETE(self):
-            self._reply("DELETE")
-
-        def log_message(self, *a):  # keep test output quiet
-            pass
-
+    ))
     srv = LoopServer(
-        ("127.0.0.1", port), Handler, reuse_port=reuse_port,
+        ("127.0.0.1", port), routes, reuse_port=reuse_port,
         pool_threads=0 if db.spark is None else POOL_THREADS,
     )
     srv.bus = bus  # exposed for embedding/tests

@@ -99,6 +99,46 @@ def test_var_length_bounds_outside_one_to_max_raise(toy, bounds):
         cypher(*toy, f"MATCH (s)-[{bounds}]->(t) RETURN s, t")
 
 
+
+# stored values that hold a comma, a brace, or a keyword of the grammar
+QUOTED = ["a, b", "OPTIONAL MATCH x", "a}b", "x RETURN y"]
+
+
+@pytest.fixture(scope="module")
+def quoted_graph(spark, tmp_path_factory):
+    """(nodes, edges, post): the QUOTED names plus "a", as DataFrames and on a server."""
+    import json
+    import urllib.request
+
+    from custom_python_vectordb_spark.api import VectorDB
+    from custom_python_vectordb_spark.server import serve_background
+
+    rows = [(f"q{i}", ["Q"], v) for i, v in enumerate(QUOTED + ["a"])]
+    srv, port = serve_background(VectorDB(spark, str(tmp_path_factory.mktemp("wh"))))
+
+    def post(path, body):
+        req = urllib.request.Request(f"http://127.0.0.1:{port}{path}", json.dumps(body).encode())
+        with urllib.request.urlopen(req, timeout=120) as resp:
+            return json.loads(resp.read())
+
+    for node_id, labels, name in rows:
+        post("/graph/nodes", {"id": node_id, "labels": labels, "props": {"name": name}})
+    yield (local_df(spark, rows, "id string, labels array<string>, name string"),
+           local_df(spark, EDGES, "src string, dst string, type string"), post)
+    srv.shutdown()
+    srv.server_close()
+
+
+@pytest.mark.parametrize("form", ["MATCH (n:Q {{name: '{v}'}}) RETURN n",
+                                  "MATCH (n:Q) WHERE n.name = '{v}' RETURN n"])
+@pytest.mark.parametrize("value", QUOTED)
+def test_a_quoted_value_is_data(quoted_graph, form, value):
+    nodes, edges, post = quoted_graph
+    query, want = form.format(v=value), [f"q{QUOTED.index(value)}"]
+    assert [r["n_id"] for r in cypher(nodes, edges, query).collect()] == want
+    assert [r["n_id"] for r in post("/graph/query", {"query": query})["rows"]] == want
+
+
 def _persistent_rdd_ids(spark) -> set[int]:
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
