@@ -2,8 +2,9 @@
 
 The reference ships FastAPI servers (``server.py:182-438``,
 ``server_full.py:201-722``) that delegate to the engine; this is the same
-delegation surface on the stdlib HTTP server (FastAPI isn't in this
-runtime), so a reference user's REST workflow ports 1:1. Like a FastAPI
+delegation surface on the stdlib's HTTP request parser and a ``selectors``
+loop, with ``orjson`` as its JSON codec (FastAPI isn't in this runtime),
+so a reference user's REST workflow ports 1:1. Like a FastAPI
 app, every route is declared once: the table ``_routes`` returns is the
 list of the worker's routes, each with the preconditions it needs (a
 collection, a Spark session, a versioned store).
@@ -24,6 +25,20 @@ deployment would put this behind Spark Connect instead of one driver.
 Each worker process serves every connection from one ``selectors`` loop
 (:class:`LoopServer`), the single-threaded shape of the reference's
 uvicorn server; ``--workers N`` runs N such processes on one port.
+
+The wire format is one JSON codec, :func:`loads` / :func:`dumps` on
+``orjson`` (a server requirement, with no stdlib fallback), for every
+request body, reply, SSE ``data:`` line and WS text frame:
+
+- replies are compact raw UTF-8; NaN and ±Inf are written as ``null``;
+  NumPy scalars and arrays serialize, and non-string dict keys become
+  strings;
+- request bodies are strict RFC 8259: ``NaN``/``Infinity`` literals, a
+  number that overflows a double (``1e400``) and a non-UTF-8 (e.g.
+  UTF-16) body answer 400; an integer beyond 64 bits decodes as a float;
+- a JSON route's body must be an object, and reading a field it lacks is
+  a 400 naming the field and the route; an error body echoes the
+  request's ``X-Request-Id`` header as ``request_id``.
 """
 
 from __future__ import annotations
@@ -45,6 +60,8 @@ from http.server import BaseHTTPRequestHandler
 from typing import Callable, NamedTuple
 from urllib.parse import parse_qs, unquote
 
+import orjson
+
 from custom_python_vectordb_spark.api import VectorDB
 from custom_python_vectordb_spark.operators import shard_tier
 
@@ -57,6 +74,18 @@ MAX_HEADER_BYTES = 64 * 1024
 MAX_BODY_BYTES = 64 * 1024 * 1024
 # An event stream idle this long sends a keepalive (SSE comment, WS ping).
 KEEPALIVE_S = 15.0
+
+# The one codec of the wire. Without these options orjson refuses NumPy
+# scalars and non-string dict keys, which route payloads carry.
+_DUMPS_OPTIONS = orjson.OPT_SERIALIZE_NUMPY | orjson.OPT_NON_STR_KEYS
+# bytes (or str) -> object; orjson.JSONDecodeError is a ValueError: a 400
+loads = orjson.loads
+
+
+def dumps(obj) -> bytes:
+    """Compact UTF-8 JSON of ``obj``; NaN and ±Inf become null. What it
+    cannot encode raises orjson.JSONEncodeError, a TypeError: a 500."""
+    return orjson.dumps(obj, option=_DUMPS_OPTIONS)
 
 
 class EventBus:
@@ -392,6 +421,21 @@ def _collection_name(name) -> str:
     return name
 
 
+class _Body(dict):
+    """A request's JSON object body. Reading a field it lacks as
+    ``body[name]`` is a 400 (a ValueError) that names the field and the
+    request; a KeyError raised further in is left as it is."""
+
+    __slots__ = ("request",)
+
+    def __init__(self, fields: dict, request: str):
+        super().__init__(fields)
+        self.request = request  # "METHOD /path"
+
+    def __missing__(self, name):
+        raise ValueError(f"missing field {name!r} in {self.request} body")
+
+
 class _Route(NamedTuple):
     """One row of the route table: the function that serves the route, and
     the preconditions :meth:`_RouteTable.call` checks first, in this order."""
@@ -413,9 +457,11 @@ def _routes(
     snapshots: dict | None = None,
 ) -> dict[str, _Route]:
     """Every route of a worker, as ``"METHOD /path/{param}"`` → :class:`_Route`.
-    A route function takes the request's handler ``r``, with ``r.body``,
-    ``r.query`` and, on a collection route, ``r.coll`` set, then the
-    path parameters; it returns (status, JSON payload)."""
+    A route function takes the request's handler ``r``, with ``r.body`` (a
+    :class:`_Body`), ``r.query`` and, on a collection route, ``r.coll``
+    set, then the path parameters; it returns (status, JSON payload). It
+    reads its required fields as ``r.body[name]`` before any work, so a
+    request that lacks one costs nothing but the 400."""
     # Build-affecting index geometry a request may select. nprobe is a
     # query-time knob (free within bounds, like hnswlib's ef); n_cells and
     # assign_r key a k-means retrain + corpus re-layout, so an arbitrary
@@ -519,13 +565,14 @@ def _routes(
     def query_snapshot(r, name):
         if name not in snapshots:
             return 404, {"error": f"no snapshot {name!r}"}
-        idx = _snapshot_index(name)
+        queries = r.body["query_embeddings"]
         k = int(r.body.get("n_results", 10))
         if not (1 <= k <= 1000):
             raise ValueError(f"n_results must be in [1, 1000], got {k}")
         fk = r.body.get("fetch_k")
+        idx = _snapshot_index(name)
         out = []
-        for v in r.body["query_embeddings"]:
+        for v in queries:
             ids, dists = idx.search_one(
                 [float(x) for x in v], k=k,
                 fetch_k=(int(fk) if fk is not None else None),
@@ -768,8 +815,9 @@ def _routes(
         # and a bad query (unknown property, bad bounds) is a ValueError: 400
         from custom_python_vectordb_spark.plans.cypher import cypher
 
+        text = r.body["query"]
         nodes, edges = graph.dfs(expand_props=True)
-        rows = cypher(nodes, edges, r.body["query"]).limit(1000).collect()
+        rows = cypher(nodes, edges, text).limit(1000).collect()
         return 200, {"rows": [row.asDict(recursive=True) for row in rows]}
 
     def graph_neighbors(r, node_id):
@@ -782,9 +830,10 @@ def _routes(
     def traverse(r):
         from custom_python_vectordb_spark.operators.graph import traverse_paths
 
+        start = r.body["start"]
         _, edges = graph.dfs()
         rows = traverse_paths(
-            edges, r.body["start"],
+            edges, start,
             max_depth=int(r.body.get("max_hops", 3)),
             direction=r.body.get("direction", "out"),
             edge_type=r.body.get("type"),
@@ -794,9 +843,10 @@ def _routes(
     def shortest(r):
         from custom_python_vectordb_spark.operators.graph import shortest_path
 
+        src, dst = r.body["src"], r.body["dst"]
         _, edges = graph.dfs()
         rows = shortest_path(
-            edges, r.body["src"], r.body["dst"], direction=r.body.get("direction", "out")
+            edges, src, dst, direction=r.body.get("direction", "out")
         ).collect()
         return 200, {"path": rows[0]["path_str"].split("->") if rows else None}
 
@@ -830,7 +880,7 @@ def _routes(
         constraints (``Subscription.filter``)."""
         name = name or r.query.get("collection", "*")
         types = set(r.query["types"].split(",")) if r.query.get("types") else None
-        meta = json.loads(r.query["meta"]) if r.query.get("meta") else None
+        meta = loads(r.query["meta"]) if r.query.get("meta") else None
         replay = int(r.query.get("replay", 0))
 
         def opened(n, q):
@@ -844,7 +894,7 @@ def _routes(
             if ev is None:
                 r.wfile.write(b": keepalive\n\n")  # SSE comment
             elif sub_match(ev, name, types, meta):
-                r.wfile.write(f"id: {ev['seq']}\ndata: {json.dumps(ev)}\n\n".encode())
+                r.wfile.write(b"id: %d\ndata: %b\n\n" % (ev["seq"], dumps(ev)))
             r.wfile.flush()
 
         return lambda: bus.follow(replay, opened, deliver)
@@ -884,8 +934,8 @@ def _routes(
             if frame is None or frame[0] != 0x1:
                 return
             try:
-                sub = json.loads(frame[1] or b"{}")
-            except json.JSONDecodeError:
+                sub = loads(frame[1] or b"{}")
+            except orjson.JSONDecodeError:
                 sub = {}
             state = {"collection": name}  # the live filter
             closed = object()
@@ -905,8 +955,8 @@ def _routes(
                             send(f[1], opcode=0xA)
                         elif f[0] == 0x1:  # text: update_subscription
                             try:
-                                upd = json.loads(f[1] or b"{}")
-                            except json.JSONDecodeError:
+                                upd = loads(f[1] or b"{}")
+                            except orjson.JSONDecodeError:
                                 continue
                             if upd.get("action") == "subscribe":
                                 q.put(("subscribe", upd))
@@ -916,7 +966,7 @@ def _routes(
 
             def opened(n, q):
                 threading.Thread(target=reader, args=(q,), daemon=True).start()
-                send(json.dumps({"subscribed": name, "replay": n}).encode())
+                send(dumps({"subscribed": name, "replay": n}))
 
             def deliver(ev):
                 if ev is closed:
@@ -925,9 +975,9 @@ def _routes(
                     send(b"", opcode=0x9)  # keepalive ping
                 elif isinstance(ev, tuple):  # ("subscribe", frame) from the reader
                     subscribe(ev[1])
-                    send(json.dumps({"subscribed": state["collection"]}).encode())
+                    send(dumps({"subscribed": state["collection"]}))
                 elif sub_match(ev, state["collection"], state["types"], state["meta"]):
-                    send(json.dumps(ev).encode())
+                    send(dumps(ev))
 
             subscribe(sub)
             bus.follow(int(sub.get("replay", 0)), opened, deliver)
@@ -1026,9 +1076,10 @@ class _RouteTable:
         """Serve the request the handler ``r`` has parsed: (status, JSON
         payload), or for a stream route the function that pushes it."""
         n = int(r.headers.get("Content-Length") or 0)
-        r.body = json.loads(r.rfile.read(n)) if n else {}
-        if not isinstance(r.body, dict):
+        body = loads(r.rfile.read(n)) if n else {}
+        if not isinstance(body, dict):
             raise ValueError("the request body must be a JSON object")
+        r.body = _Body(body, f"{r.command} {r.path.partition('?')[0]}")
         if r.match is None:
             return 404, {"error": f"no route {r.command} {r.path}"}
         route, params, r.query = r.match
@@ -1070,19 +1121,26 @@ class _Handler(BaseHTTPRequestHandler):
         self.wfile.flush()
 
     def _serve(self):
-        try:  # encoding the reply included: a payload json refuses is a route fault
+        try:  # encoding the reply included: a payload the codec refuses is a route fault
             out = self.server.routes.call(self)
-            reply = None if callable(out) else _respond(*out, close=self.close_connection)
+            reply = None if callable(out) else self._reply(*out)
         except (KeyError, ValueError) as e:
-            reply = _respond(400, {"error": str(e)}, close=self.close_connection)
+            reply = self._reply(400, {"error": str(e)})
         except Exception as e:  # a route bug answers 500; the connection lives on
             traceback.print_exc()
-            reply = _respond(500, {"error": str(e), "type": type(e).__name__},
-                             close=self.close_connection)
+            reply = self._reply(500, {"error": str(e), "type": type(e).__name__})
         if reply is None:
             out()  # a push stream: runs until the client goes away
         else:
             self.wfile.write(reply)
+
+    def _reply(self, status: int, payload) -> bytes:
+        """The route's reply; an error body echoes the request's
+        ``X-Request-Id`` header, when it has one, as ``request_id``."""
+        rid = self.headers.get("X-Request-Id") if status >= 400 else None
+        if rid is not None and isinstance(payload, dict):
+            payload = {**payload, "request_id": rid}
+        return _respond(status, payload, close=self.close_connection)
 
     do_GET = do_POST = do_DELETE = _serve
 
@@ -1111,7 +1169,7 @@ def _respond(status: int, payload, close: bool = False) -> bytes:
     connection by kernel hash, so a client that cares about placement (a
     least-connections balancer, the soak's --distinct-workers mode) needs
     it. ``Connection: close`` says the connection ends after the reply."""
-    body = json.dumps(payload).encode()
+    body = dumps(payload)
     return (
         f"HTTP/1.1 {status} {BaseHTTPRequestHandler.responses[status][0]}\r\n"
         f"Content-Type: application/json\r\nContent-Length: {len(body)}\r\n"

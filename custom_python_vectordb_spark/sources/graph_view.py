@@ -135,12 +135,17 @@ def edges_layout_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     since r3). Untyped traversals read all partitions of the SAME data —
     one pre-computed parquet scan instead of re-deriving the 6-branch
     union + id-concat per query. Session-scoped index state like
-    ``copurchase_pairs``: lives in _VIEW_MEMO, not the plan memos."""
+    ``copurchase_pairs``: lives in _VIEW_MEMO, not the plan memos. Its
+    temporary directory is removed when the process exits."""
 
     def build() -> DataFrame:
+        import atexit
+        import shutil
         import tempfile
 
         root = tempfile.mkdtemp(prefix="edge_layout_")
+        # the layout lives as long as the process that wrote it
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
         _edges_df(spark, sf_dir).write.mode("overwrite").partitionBy("type").parquet(root)
         return spark.read.parquet(root)
 

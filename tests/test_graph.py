@@ -7,6 +7,11 @@
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -418,3 +423,26 @@ def test_edges_layout_parity_and_pruning(spark):
     # partition pruning is visible in the scan: the type filter appears as
     # a PartitionFilter, and no data-column filter on `type` remains
     assert "PartitionFilters" in plan and "CONTAINS" in plan
+
+
+def test_edges_layout_directory_is_removed_at_exit(tmp_path, sf_small):
+    """A process that builds the edge layout leaves no directory behind."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    script = (
+        "import glob, json, os, tempfile\n"
+        "from custom_python_vectordb_spark.session import get_spark\n"
+        "from custom_python_vectordb_spark.sources.graph_view import edges_layout_df\n"
+        "spark = get_spark('edge-layout-exit')\n"
+        f"assert edges_layout_df(spark, {sf_small!r}).count() > 0\n"
+        "print(json.dumps(glob.glob(os.path.join(tempfile.gettempdir(), 'edge_layout_*'))))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp), "PYTHONPATH": repo,
+           "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run([sys.executable, "-c", script], env=env, cwd=str(tmp_path),
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    built = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(built) == 1 and built[0].startswith(str(tmp))
+    assert not os.path.exists(built[0])

@@ -1,7 +1,7 @@
 """The REST worker's route table (server._routes) on the wire: every route
 is reachable, every Spark route answers 503 on a worker without Spark,
-path segments are percent-decoded, and a request body must be a JSON
-object."""
+path segments are percent-decoded, a request body must be a JSON object,
+and a missing required body field answers 400 naming the field."""
 
 from __future__ import annotations
 
@@ -22,6 +22,37 @@ from custom_python_vectordb_spark.server import serve_background
 # ids that are not plain path segments
 ODD_IDS = ["a b", "a/b", "a?b", "50%"]
 
+# the required body fields of each route that has any, in the order the
+# route reads them, with a value of the right shape
+REQUIRED = {
+    "POST /embeddings/embed": {"texts": ["a"]},
+    "POST /snapshots/{name}/query": {"query_embeddings": [[0.0] * 8]},
+    "POST /collections": {"name": "made"},
+    "POST /collections/{name}/add": {"ids": ["x"], "documents": ["d"]},
+    "POST /collections/{name}/upsert": {"ids": ["x"], "documents": ["d"]},
+    "POST /collections/{name}/update": {"ids": ["x"], "metadatas": [{}]},
+    "POST /collections/{name}/delete_by_filter": {"where": {"id": "x"}},
+    "POST /collections/{name}/delete": {"ids": ["x"]},
+    "POST /collections/{name}/keyword": {"query": "q"},
+    "POST /collections/{name}/phrase": {"query": "q"},
+    "POST /collections/{name}/hybrid": {"query": "q"},
+    "POST /graph/nodes": {"id": "n"},
+    "POST /graph/edges": {"src": "n", "dst": "n"},
+    "POST /graph/hyperedges": {"nodes": ["n"]},
+    "POST /graph/query": {"query": "MATCH (n) RETURN n"},
+    "POST /graph/traverse": {"start": "n"},
+    "POST /graph/shortest-path": {"src": "n", "dst": "n"},
+}
+
+
+def _path(key: str) -> tuple[str, str]:
+    method, pattern = key.split()
+    return method, pattern.replace("{name}", "vecs").replace("{id}", "v0")
+
+
+def _missing(key: str, field: str) -> str:
+    return f"missing field {field!r} in {' '.join(_path(key))} body"
+
 
 @pytest.fixture()
 def serving_only(tmp_path):
@@ -36,7 +67,8 @@ def serving_only(tmp_path):
         }),
         str(cdir / "part-0.parquet"),
     )
-    srv, port = serve_background(VectorDB(None, str(tmp_path / "wh")), ann_geometries={(4, 1)})
+    srv, port = serve_background(VectorDB(None, str(tmp_path / "wh")), ann_geometries={(4, 1)},
+                                 snapshots={"vecs": str(tmp_path / "snap")})
     yield srv, port, tmp_path
     srv.shutdown()
     srv.server_close()
@@ -61,8 +93,7 @@ def test_every_route_is_reachable_and_spark_routes_are_503(serving_only):
     last = ("POST /reset", "DELETE /collections/{name}")
     for key in sorted(table, key=lambda k: k in last):
         route = table[key]
-        method, pattern = key.split()
-        path = pattern.replace("{name}", "vecs").replace("{id}", "v0")
+        method, path = _path(key)
         status, out = _call(port, method, path, b"{}" if method != "GET" else None, route.stream)
         if route.stream:
             # SSE opens; a WS request without upgrade headers is refused
@@ -72,7 +103,42 @@ def test_every_route_is_reachable_and_spark_routes_are_503(serving_only):
         assert status != 500 and not (status == 404 and out["error"].startswith("no route")), key
         if route.spark:
             assert status == 503 and "Spark" in out["error"], (key, status, out)
+        elif key in REQUIRED:  # the first field the route reads is named
+            assert (status, out) == (400, {"error": _missing(key, next(iter(REQUIRED[key])))})
+        else:
+            assert not out.get("error", "").startswith("missing field"), (key, out)
     assert _call(port, "GET", "/collections/vecs/count/extra")[1]["error"].startswith("no route")
+
+
+def test_every_required_field_is_named_when_missing(spark, tmp_path):
+    """Each required field, left out of an otherwise complete body, is a 400
+    that names it and the request, before the route does any work."""
+    db = VectorDB(spark, str(tmp_path / "wh"))
+    db.create_collection("vecs", 8)
+    srv, port = serve_background(db, snapshots={"vecs": str(tmp_path / "snap")})
+    try:
+        assert set(REQUIRED) <= set(srv.routes.routes)
+        for key, fields in REQUIRED.items():
+            method, path = _path(key)
+            for field in fields:
+                body = json.dumps({k: v for k, v in fields.items() if k != field}).encode()
+                status, out = _call(port, method, path, body)
+                assert (status, out) == (400, {"error": _missing(key, field)}), key
+        assert srv.graph.stats() == {"nodes": 0, "edges": 0, "hyperedges": 0}
+        assert db.get_collection("vecs").count() == 0
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_a_key_error_inside_a_route_is_not_a_missing_field(serving_only):
+    srv, port, _ = serving_only
+
+    def add_node(*a):
+        raise KeyError("deep")
+
+    srv.graph.add_node = add_node
+    assert _call(port, "POST", "/graph/nodes", b'{"id": "n"}') == (400, {"error": "'deep'"})
 
 
 @pytest.mark.parametrize("method,path,body", [

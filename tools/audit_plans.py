@@ -11,29 +11,33 @@ execution) and records the scale-relevant markers per plan:
 - Exchange / BroadcastExchange counts (shuffle structure)
 - PushedFilters presence on parquet scans
 
-Writes PLAN_AUDIT_r13.jsonl (one record per query) and prints a summary of
-flagged queries. Used to prove the optimization round examined EVERY
+Writes artifacts/PLAN_AUDIT.jsonl under the checkout (one record per
+query) unless --out names another file, and prints a summary of flagged
+queries. Used to prove the optimization round examined EVERY
 operator, not just the bench headline.
 
-Usage: python tools/audit_plans.py [sf_dir] [--out PLAN_AUDIT_r13.jsonl]
+Usage: python tools/audit_plans.py [sf_dir] [--out PLAN_AUDIT.jsonl]
 """
 
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 
 def main() -> None:
     args = [a for a in sys.argv[1:]]
-    out_path = "/root/repo/PLAN_AUDIT_r13.jsonl"
+    out_path = os.path.join(_REPO, "artifacts", "PLAN_AUDIT.jsonl")
     if "--out" in args:
         i = args.index("--out")
         out_path = args[i + 1]
         del args[i : i + 2]
+    os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
     from custom_python_vectordb_spark import registry

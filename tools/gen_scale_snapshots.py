@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # queries whose output is deterministic at every scale (scan-order-free:
 # either per-row pure functions of ids or seeded fixed-order reductions)

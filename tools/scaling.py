@@ -13,14 +13,12 @@ Usage: python tools/scaling.py
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import os
-
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 # 4th column (round 6): locally generated sf1-equivalent (tools/gen_sf1.py,
 # deterministic seed-42 mimic of the driver tables at 10x sf0.1) extends
 # the spread to 1000x so the steep alphas show their true exponent instead
@@ -268,7 +266,7 @@ def main() -> None:
     # 500K-doc probe, the 1M-vector probe, any future axis probe) across
     # sweep rewrites — r11 nearly lost the VEC1M block to a hardcoded
     # single-marker list
-    md = "/root/repo/SCALING.md"
+    md = os.path.join(_REPO, "SCALING.md")
     if os.path.exists(md):
         import re as _re
 
